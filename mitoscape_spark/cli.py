@@ -17,8 +17,9 @@ entry points at ``MTClassifierModel.scala:187-288``).
 Deliberate differences from the reference CLI:
   * ``--threads`` is optional — the session master comes from
     spark-submit on a cluster (the reference hard-codes local[threads]);
-  * inputs are alignment parquet (sources.bam.ALIGNMENT_SCHEMA); BAM
-    ingest is the pysam-gated path in sources.bam;
+  * inputs are ``.bam`` (the pure-Python reader in sources.bam),
+    ``.sam`` or alignment parquet; ``classify`` releases the pipeline's
+    pins before it returns;
   * ``train``/``evaluate`` are reachable from the CLI (the reference
     ships them as dead library code, SURVEY.md §3.2-3.3).
 """
@@ -38,8 +39,7 @@ def load_numts(spark: SparkSession, path: str) -> DataFrame:
     and broadcastable instead of driver-side I/O."""
     return (
         spark.read.options(sep="\t", header="false")
-        .csv(path)
-        .toDF("chrom", "start", "end", "score")
+        .csv(path, schema="chrom string, start string, end string, score string")
         .select(
             "chrom",
             F.col("start").cast("int").alias("start"),
@@ -101,7 +101,7 @@ def cmd_classify(args: argparse.Namespace, spark: SparkSession) -> int:
         result.alignments.write.mode("overwrite").parquet(args.out)
     n = result.survivors.count()
     print(f"classify: {n} surviving reads -> {args.out}")
-    result.features.unpersist()
+    result.unpersist()
     return 0
 
 

@@ -2,21 +2,22 @@
 ``MTClassify.scala:131-213``; stage trace in SURVEY.md §3.1).
 
 Differences from the reference, all deliberate:
-  * feature DataFrame is cached once — the reference recomputes the
-    whole BAM parse for every isEmpty/fit/transform action
-    (SURVEY.md §4.1);
+  * a pass decodes each input once and scores the RF once: ``classify``
+    pins the decoded alignments, feature table and survivors — the
+    reference re-parses the BAMs for every action (SURVEY.md §4.1);
   * the LD/NUMT dimensions stay distributed and broadcast-join
     (no driver collect);
   * inner join on Read matches the reference's actual (not commented)
     semantics (SURVEY.md §8 Q2);
-  * output is a parquet sink of surviving alignments (BAM writeback
-    lives behind sources.bam's optional pysam path).
+  * the surviving MT alignments go to parquet or, through the
+    pure-Python BAM sink in sources.bam, to a single-file BAM.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -37,6 +38,12 @@ class ClassifyResult:
     features: DataFrame  # joined + normalized feature table
     survivors: DataFrame  # read names classified MT at threshold
     alignments: DataFrame  # original MT alignments, filtered
+    pinned: tuple[DataFrame, ...] = ()  # inputs this pass cached
+
+    def unpersist(self) -> None:
+        """Release every cache the pass holds."""
+        for df in (self.features, self.survivors, *self.pinned):
+            df.unpersist()
 
 
 def build_feature_table(
@@ -50,8 +57,8 @@ def build_feature_table(
 ) -> DataFrame:
     """``MTClassifierModel.DF`` (``MTClassifierModel.scala:71-87``):
     MT features ⋈ NT features on Read (inner), literal label, pooled
-    MapQ z-normalization. Returns an EMPTY cached DF early if the MT
-    side is empty (reference exits; ``MTClassifierModel.scala:77-80``).
+    MapQ z-normalization, cached. An empty MT side gives an empty table
+    (the reference exits; ``MTClassifierModel.scala:77-80``).
     """
     mt = pairwise_ld_score(mt_features(mt_aln, genome_relative), ld)
     nt = nt_features(nt_aln, numts, compat_chrom_sum=compat_chrom_sum)
@@ -77,7 +84,14 @@ def classify(
 
     ``model``: a fitted PipelineModel; if None, ``training`` (labeled
     feature table) is required and an RF is trained on the fly.
+    Uncached inputs are pinned before the feature table is planned;
+    release the pins with ``ClassifyResult.unpersist``.
     """
+    pinned = tuple(
+        df.persist()
+        for df in (mt_aln, nt_aln)
+        if df.storageLevel == StorageLevel.NONE
+    )
     features = build_feature_table(
         mt_aln, nt_aln, ld, numts, genome_relative=genome_relative
     )
@@ -96,6 +110,7 @@ def classify(
             probs.where(F.col("MaxProb") >= prob)
             .where(F.col("Prediction") == MT_LABEL)
             .select("Read")
+            .persist()
         )
 
     filtered = mt_aln.join(
@@ -103,6 +118,4 @@ def classify(
         mt_aln["read_name"] == survivors["Read"],
         "left_semi",
     )
-    return ClassifyResult(
-        features=features, survivors=survivors, alignments=filtered
-    )
+    return ClassifyResult(features, survivors, filtered, pinned)

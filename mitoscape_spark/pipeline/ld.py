@@ -32,10 +32,8 @@ def ld_scores_table(
     mitomap.ld has no header line, yet ``LD.scala:41-44`` reads it with
     header=true and silently eats the first pair (SURVEY.md §8 Q4).
     """
-    raw = (
-        spark.read.options(sep="\t", header=str(header).lower())
-        .csv(path)
-        .toDF("variant1", "variant2", "r")
+    raw = spark.read.options(sep="\t", header=str(header).lower()).csv(
+        path, schema="variant1 string, variant2 string, r string"
     )
     return normalize_ld(raw.withColumn("r", F.col("r").cast("double")))
 

@@ -7,7 +7,9 @@ z-score both. The reference pulls the one-row stats to the driver with
 driver round-trip, and the fact table streams through a map stage.
 
 Empty input reproduces the reference's guard
-(``MTClassifierModel.scala:121-124``): null-typed double columns.
+(``MTClassifierModel.scala:121-124``) with no extra action: the stats
+row of an empty input is null, so both columns come out as empty
+doubles.
 """
 
 from __future__ import annotations
@@ -22,13 +24,6 @@ def normalize_mapq(
     nt_col: str = "NTMapQ",
 ) -> DataFrame:
     """Replace mt_col/nt_col with pooled z-scores (both as double)."""
-    if joined.isEmpty():
-        return joined.withColumns(
-            {
-                mt_col: F.lit(None).cast("double"),
-                nt_col: F.lit(None).cast("double"),
-            }
-        )
     pooled = joined.select(F.col(mt_col).alias("MapQ")).unionAll(
         joined.select(F.col(nt_col).alias("MapQ"))
     )

@@ -87,7 +87,7 @@ def mito_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     mt, nt, ld, numts = _fixture_dfs(spark)
     result = classify(mt, nt, ld, numts, model=_fixture_model(spark), prob=0.5)
     out = result.survivors.orderBy("Read")
-    result.features.unpersist()
+    result.unpersist()
     return out
 
 

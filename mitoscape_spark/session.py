@@ -21,9 +21,20 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Defaults sized for the local[32] test harness; on a real cluster the
-# submitter overrides master/memory and AQE re-plans partition counts.
-_LOCAL_CORES = os.environ.get("SPARK_GRAFT_CPUS", "32")
+# Local defaults fit the box: every core this process may run on and a
+# driver heap of half the physical memory (local mode runs the driver
+# and all task threads in that one JVM). SPARK_GRAFT_CPUS and
+# SPARK_GRAFT_DRIVER_MEM override them; on a real cluster the submitter
+# sets master/memory and AQE re-plans partition counts.
+_LOCAL_CORES = os.environ.get(
+    "SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0)))
+)
+
+
+def default_driver_memory() -> str:
+    """Half the physical memory, to the nearest GiB (at least 1g)."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, round(phys / 2 / 2**30))}g"
 
 
 def get_spark(
@@ -67,13 +78,14 @@ def get_spark(
         # Test/bench default; spark-submit on a cluster sets its own master
         # and this branch is skipped via the env flag.
         builder = builder.master(f"local[{_LOCAL_CORES}]")
-        # local mode = one JVM for driver + all 32 task threads; the 1 GiB
-        # default heap OOMs on legitimately sized task state (e.g. packed
-        # GEMM blocks). Only applied to the local harness — clusters size
-        # executors via spark-submit. No effect if a JVM already exists.
+        # the 1 GiB default heap OOMs on legitimately sized task state
+        # (e.g. packed GEMM blocks), and a heap above physical memory
+        # gets the JVM OOM-killed. Only applied to the local harness —
+        # clusters size executors via spark-submit. No effect if a JVM
+        # already exists.
         builder = builder.config(
             "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
         )
 
     n_shuffle = shuffle_partitions or int(

@@ -53,38 +53,25 @@ def read_alignments_parquet(spark: SparkSession, path: str) -> DataFrame:
 def plan_bam_splits(
     spark: SparkSession, paths: list[str], records_per_split: int = 10_000
 ) -> list[tuple[str, int, int]]:
-    """Distributed split planning: one indexing task per file streams
-    its BGZF blocks once and emits record-boundary virtual offsets at
-    ``records_per_split`` spacing (sources.bamcodec). The collected
-    plan is tiny (two longs per split) — the data itself never moves.
+    """Distributed split planning, one job with no shuffle: one indexing
+    task per file streams its BGZF blocks once and emits record-boundary
+    virtual offsets at ``records_per_split`` spacing
+    (sources.bamcodec). The collected plan is tiny (two longs per
+    split), in input-file order — the data itself never moves.
     """
-    from pyspark.sql import functions as F  # noqa: F401
 
-    files_df = spark.createDataFrame(
-        [(p,) for p in paths], "bam_path: string"
-    ).repartition(len(paths))
-
-    def index(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def index(path: str) -> list[tuple[str, int, int]]:
         from mitoscape_spark.sources.bamcodec import index_record_voffsets
 
-        for pdf in batches:
-            for p in pdf["bam_path"]:
-                checkpoints, end = index_record_voffsets(
-                    p, every_n=records_per_split
-                )
-                bounds = checkpoints + [end]
-                yield pd.DataFrame(
-                    {
-                        "bam_path": p,
-                        "vstart": bounds[:-1],
-                        "vend": bounds[1:],
-                    }
-                )
+        checkpoints, end = index_record_voffsets(path, every_n=records_per_split)
+        bounds = checkpoints + [end]
+        return [(path, a, b) for a, b in zip(bounds[:-1], bounds[1:])]
 
-    plan = files_df.mapInPandas(
-        index, "bam_path: string, vstart: long, vend: long"
+    return (
+        spark.sparkContext.parallelize(paths, max(len(paths), 1))
+        .flatMap(index)
+        .collect()
     )
-    return [(r.bam_path, r.vstart, r.vend) for r in plan.collect()]
 
 
 def read_alignments_bam(

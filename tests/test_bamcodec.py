@@ -107,18 +107,36 @@ def test_spark_bam_scan_end_to_end(spark, tmp_path):
         plan_bam_splits,
         read_alignments_bam,
     )
-    from mitoscape_spark.sources.bamcodec import write_bam
+    from mitoscape_spark.sources.bamcodec import (
+        index_record_voffsets,
+        write_bam,
+    )
 
     paths = []
-    for f in range(2):
-        recs, _ = _mk_records(300)
+    for f, n in enumerate((300, 300, 100)):
+        recs, _ = _mk_records(n)
         p = str(tmp_path / f"s{f}.bam")
         write_bam(p, [("chrM", 16569), ("chr1", 1000)], recs, 1024)
         paths.append(p)
+    # planning is one Spark job (no shuffle), splits in input-file order
+    # with exactly the record-boundary bounds of the index pass
+    sc = spark.sparkContext
+    sc.setJobGroup("plan_bam_splits_probe", "plan_bam_splits_probe")
+    try:
+        splits = plan_bam_splits(spark, paths, records_per_split=100)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("plan_bam_splits_probe")
+    assert len(jobs) == 1, f"expected one job, saw {len(jobs)}"
+    expected = []
+    for p in paths:
+        checkpoints, end = index_record_voffsets(p, every_n=100)
+        bounds = checkpoints + [end]
+        expected += [(p, a, b) for a, b in zip(bounds[:-1], bounds[1:])]
+    assert splits == expected
+    assert len(splits) == 7  # 3 + 3 + 1 — intra-file parallelism
 
-    splits = plan_bam_splits(spark, paths, records_per_split=100)
-    assert len(splits) == 6  # 3 per file — intra-file parallelism
-    df = read_alignments_bam(spark, paths, records_per_split=100)
+    df = read_alignments_bam(spark, paths[:2], records_per_split=100)
     assert df.count() == 600
     assert df.select("read_name").distinct().count() == 300
     # downstream contract: the MD parser consumes this scan directly

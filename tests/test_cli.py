@@ -4,10 +4,15 @@ the survivor parquet."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from mitoscape_spark.cli import load_numts, main
 from mitoscape_spark.pipeline import fixtures
+from mitoscape_spark.sources.bam import ALIGNMENT_SCHEMA, write_alignments_bam
+
+ALIGNMENT_COLUMNS = [f.name for f in ALIGNMENT_SCHEMA.fields]
 
 
 def _as_alignment_schema(df):
@@ -36,6 +41,10 @@ def cli_inputs(spark, tmp_path_factory):
     )
     mt.write.parquet(str(root / "sample_MT.parquet"))
     nt.write.parquet(str(root / "sample_NT.parquet"))
+    # the same alignments as the BAM pair the reference consumes
+    refs = [("chrM", 16569)] + [(c, 10**9) for c in fixtures.CHROMS]
+    write_alignments_bam(mt, str(root / "sample_MT.bam"), refs)
+    write_alignments_bam(nt, str(root / "sample_NT.bam"), refs)
 
     fixtures.ld_scores_pdf(2000).to_csv(
         root / "ld.tsv", sep="\t", header=False, index=False
@@ -125,6 +134,100 @@ def test_cli_classify_single_file_bam_out(spark, cli_inputs):
     assert {r.read_name for r in bam.select("read_name").collect()} == {
         r.read_name for r in pq.select("read_name").collect()
     }
+
+
+def test_cli_classify_bam_pass_releases_its_pins(spark, cli_inputs):
+    """A classify pass from a BAM pair leaves no cached data behind: a
+    leftover pin would let the next pass reuse a stale decode."""
+    root = cli_inputs
+    assert (root / "model").is_dir(), "train test must run first"
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    assert cache.isEmpty()
+    argv = [
+        "classify",
+        "--mt", str(root / "sample_MT.bam"),
+        "--nt", str(root / "sample_NT.bam"),
+        "--ld", str(root / "ld.tsv"),
+        "--numt", str(root / "numts.tsv"),
+        "--model", str(root / "model"),
+        "--out", str(root / "from_bam.parquet"),
+        "--prob", "0.5",
+    ]
+    assert main(argv, spark=spark) == 0
+    assert cache.isEmpty(), "classify left cached data in the session"
+    # BAM ingest scores the same reads as the parquet copies
+    got = spark.read.parquet(str(root / "from_bam.parquet"))
+    want = spark.read.parquet(str(root / "survivors.parquet"))
+    assert {r.read_name for r in got.select("read_name").collect()} == {
+        r.read_name for r in want.select("read_name").collect()
+    }
+
+
+def _plan_children(node) -> list:
+    """A physical plan node's children, looking through adaptive plans,
+    query stages and cached relations."""
+    name = node.nodeName()
+    if name == "AdaptiveSparkPlan":
+        return [node.executedPlan()]
+    if name.endswith("QueryStage"):
+        return [node.plan()]
+    if name == "InMemoryTableScan":
+        return [node.relation()]
+    if name == "InMemoryRelation":
+        return [node.cachedPlan()]
+    kids = node.children()
+    return [kids.apply(i) for i in range(kids.size())]
+
+
+def _bam_scan_parents(node, parent=None) -> list[str]:
+    """For every BAM decode (``MapInPandas scan``) under ``node``, its
+    nearest ancestor that is an operator, not a code-gen, adaptive or
+    query-stage wrapper."""
+    name = node.nodeName()
+    found = []
+    if name == "MapInPandas" and "scan(" in node.simpleString(5):
+        found.append(parent.simpleString(len(ALIGNMENT_COLUMNS)))
+    wrapper = name.endswith("QueryStage") or name.startswith(
+        ("AdaptiveSparkPlan", "WholeStageCodegen", "InputAdapter")
+    )
+    for child in _plan_children(node):
+        found += _bam_scan_parents(child, parent if wrapper else node)
+    return found
+
+
+def test_classify_decodes_each_bam_once(spark, cli_inputs):
+    """Every BAM decode in the executed plans of a classify pass sits
+    directly under the pinned decode's InMemoryRelation, so each input
+    is decoded once however many actions and self-joins read it."""
+    from mitoscape_spark.pipeline.classify import classify
+    from mitoscape_spark.pipeline.ld import ld_scores_table
+    from mitoscape_spark.pipeline.ml import load_pipeline_model
+    from mitoscape_spark.sources.bam import read_alignments_bam
+
+    root = cli_inputs
+    assert (root / "model").is_dir(), "train test must run first"
+    result = classify(
+        read_alignments_bam(spark, str(root / "sample_MT.bam")),
+        read_alignments_bam(spark, str(root / "sample_NT.bam")),
+        ld_scores_table(spark, str(root / "ld.tsv")),
+        load_numts(spark, str(root / "numts.tsv")),
+        model=load_pipeline_model(str(root / "model")),
+    )
+    try:
+        pinned = "InMemoryRelation [" + ", ".join(ALIGNMENT_COLUMNS) + "]"
+        for name in ("features", "survivors", "alignments"):
+            df = getattr(result, name)
+            df.count()
+            parents = _bam_scan_parents(df._jdf.queryExecution().executedPlan())
+            assert parents, f"{name}: no BAM scan in the plan"
+            for parent in parents:
+                # attribute ids ("read_name#12") vary; strip them
+                assert re.sub(r"#\d+L?", "", parent).startswith(pinned), (
+                    f"{name}: a BAM scan runs outside its pin, under {parent[:120]}"
+                )
+    finally:
+        result.unpersist()
 
 
 def test_cli_evaluate_accuracy_threshold(spark, cli_inputs):

@@ -181,7 +181,7 @@ def main() -> int:
         def run():
             res = classify(mt, nt, ld, numts, model=model, prob=0.5)
             res.survivors.write.format("noop").mode("overwrite").save()
-            res.features.unpersist()
+            res.unpersist()
 
         run()  # warm
         t0 = time.perf_counter()
