@@ -19,7 +19,16 @@ Deliberate differences from the reference CLI:
     spark-submit on a cluster (the reference hard-codes local[threads]);
   * inputs are ``.bam`` (the pure-Python reader in sources.bam),
     ``.sam`` or alignment parquet; ``classify`` releases the pipeline's
-    pins before it returns;
+    pins before it returns, also when it fails;
+  * ``classify`` loads the model and plans the NT splits on worker
+    threads while the driver reads the MT input, and the pipeline waits
+    for the model only once the feature table is materialised (the
+    reference loads it before reading any input); the threads inherit
+    the caller's job group and tags;
+  * a ``.bam`` output takes its reference dictionary from a ``.bam``
+    MT input's header, as the reference's ``saveAsSam`` writes the
+    input's sequence dictionary; parquet and SAM inputs carry no
+    header, so the dictionary is derived from the surviving reads;
   * ``train``/``evaluate`` are reachable from the CLI (the reference
     ships them as dead library code, SURVEY.md §3.2-3.3).
 """
@@ -28,9 +37,11 @@ from __future__ import annotations
 
 import argparse
 import sys
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 
 def load_numts(spark: SparkSession, path: str) -> DataFrame:
@@ -76,32 +87,42 @@ def cmd_classify(args: argparse.Namespace, spark: SparkSession) -> int:
         )
     mt_path = args.mt or f"{args.prefix}_MT.parquet"
     nt_path = args.nt or f"{args.prefix}_NT.parquet"
-    mt = _read_alignments(spark, mt_path)
-    nt = _read_alignments(spark, nt_path)
-    ld = ld_scores_table(spark, args.ld)
-    numts = load_numts(spark, args.numt) if args.numt else None
-    model = load_pipeline_model(args.model)
 
-    result = classify(
-        mt,
-        nt,
-        ld,
-        numts,
-        model=model,
-        prob=args.prob,
-        genome_relative=not args.read_relative,
-    )
-    if args.out.endswith(".bam"):
-        # reference parity: saveAsSam(out, asSingleFile=true)
-        # (MTClassify.scala:204) — single-file BAM writeback
-        from mitoscape_spark.sources.bam import write_alignments_bam
+    # wrapped on the caller's thread: each worker gets its own copy of
+    # the caller's job group, local properties and tags
+    load_model = inheritable_thread_target(spark)(load_pipeline_model)
+    read_nt = inheritable_thread_target(spark)(_read_alignments)
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        model = pool.submit(load_model, args.model)
+        nt_future = pool.submit(read_nt, spark, nt_path)
+        mt = _read_alignments(spark, mt_path)
+        nt = nt_future.result()
+        ld = ld_scores_table(spark, args.ld)
+        numts = load_numts(spark, args.numt) if args.numt else None
+        result = classify(
+            mt,
+            nt,
+            ld,
+            numts,
+            model=model,
+            prob=args.prob,
+            genome_relative=not args.read_relative,
+        )
+    try:
+        if args.out.endswith(".bam"):
+            # reference parity: saveAsSam(out, asSingleFile=true)
+            # (MTClassify.scala:204) — single-file BAM writeback
+            from mitoscape_spark.sources.bam import write_alignments_bam
+            from mitoscape_spark.sources.bamcodec import read_refs
 
-        write_alignments_bam(result.alignments, args.out)
-    else:
-        result.alignments.write.mode("overwrite").parquet(args.out)
-    n = result.survivors.count()
+            refs = read_refs(mt_path)[0] if mt_path.endswith(".bam") else None
+            write_alignments_bam(result.alignments, args.out, refs=refs)
+        else:
+            result.alignments.write.mode("overwrite").parquet(args.out)
+        n = result.survivors.count()
+    finally:
+        result.unpersist()
     print(f"classify: {n} surviving reads -> {args.out}")
-    result.unpersist()
     return 0
 
 

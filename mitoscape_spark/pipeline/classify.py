@@ -4,17 +4,24 @@
 Differences from the reference, all deliberate:
   * a pass decodes each input once and scores the RF once: ``classify``
     pins the decoded alignments, feature table and survivors — the
-    reference re-parses the BAMs for every action (SURVEY.md §4.1);
+    reference re-parses the BAMs for every action (SURVEY.md §4.1) —
+    and releases those pins itself if the pass fails;
+  * the model may be passed as a ``concurrent.futures.Future``: the
+    reference loads the RF before it reads any input, while ``classify``
+    waits for the load only once the feature table is materialised;
   * the LD/NUMT dimensions stay distributed and broadcast-join
     (no driver collect);
   * inner join on Read matches the reference's actual (not commented)
     semantics (SURVEY.md §8 Q2);
   * the surviving MT alignments go to parquet or, through the
-    pure-Python BAM sink in sources.bam, to a single-file BAM.
+    pure-Python BAM sink in sources.bam, to a single-file BAM; from a
+    BAM input the CLI writes that input's own reference dictionary,
+    as the reference's ``saveAsSam`` does.
 """
 
 from __future__ import annotations
 
+from concurrent.futures import Future
 from dataclasses import dataclass
 
 from pyspark import StorageLevel
@@ -82,36 +89,50 @@ def classify(
     """Stages 1–3 of ``MTClassify.main``: features → model scoring →
     MaxProb/prediction filters → semi-join back onto the alignments.
 
-    ``model``: a fitted PipelineModel; if None, ``training`` (labeled
-    feature table) is required and an RF is trained on the fly.
-    Uncached inputs are pinned before the feature table is planned;
-    release the pins with ``ClassifyResult.unpersist``.
+    ``model``: a fitted PipelineModel, or a ``Future`` of one that is
+    resolved only once the feature table is materialised, so a load
+    submitted before the call runs beside the decode; if None,
+    ``training`` (labeled feature table) is required and an RF is
+    trained on the fly. Uncached inputs are pinned before the feature
+    table is planned; release the pins with ``ClassifyResult.unpersist``.
+    If the pass fails, everything it pinned is released before the
+    error propagates.
     """
+    if model is None and training is None:
+        raise ValueError("provide a fitted model or a training DataFrame")
     pinned = tuple(
         df.persist()
         for df in (mt_aln, nt_aln)
         if df.storageLevel == StorageLevel.NONE
     )
-    features = build_feature_table(
-        mt_aln, nt_aln, ld, numts, genome_relative=genome_relative
-    )
-    if model is None:
-        if training is None:
-            raise ValueError("provide a fitted model or a training DataFrame")
-        model = train_rf(training)
-
-    if features.isEmpty() or prob <= 0:
-        # reference skips classification entirely (MTClassify.scala:161)
-        survivors = features.select("Read")
-    else:
-        predictions = model.transform(features)
-        probs = max_probability(predictions)
-        survivors = (
-            probs.where(F.col("MaxProb") >= prob)
-            .where(F.col("Prediction") == MT_LABEL)
-            .select("Read")
-            .persist()
+    held = list(pinned)
+    try:
+        features = build_feature_table(
+            mt_aln, nt_aln, ld, numts, genome_relative=genome_relative
         )
+        held.append(features)
+        skip = features.isEmpty() or prob <= 0
+        if isinstance(model, Future):
+            model = model.result()
+        if model is None:
+            model = train_rf(training)
+
+        if skip:
+            # reference skips classification entirely (MTClassify.scala:161)
+            survivors = features.select("Read")
+        else:
+            predictions = model.transform(features)
+            probs = max_probability(predictions)
+            survivors = (
+                probs.where(F.col("MaxProb") >= prob)
+                .where(F.col("Prediction") == MT_LABEL)
+                .select("Read")
+                .persist()
+            )
+    except BaseException:
+        for df in held:
+            df.unpersist()
+        raise
 
     filtered = mt_aln.join(
         survivors,

@@ -26,6 +26,9 @@ from mitoscape_spark.sources.bgzf import iter_blocks, write_bgzf
 
 MAGIC = b"BAM\x01"
 SEQ_CODE = "=ACMGRSVTWYHKDBN"
+_SEQ_INDEX = {base: code for code, base in enumerate(SEQ_CODE)}
+# packed byte -> its two bases (high nibble first)
+_SEQ_PAIRS = [hi + lo for hi in SEQ_CODE for lo in SEQ_CODE]
 _FIXED = struct.Struct("<iiBBHHHiiii")  # per-record fixed fields
 
 FLAG_PAIRED = 0x1
@@ -55,11 +58,10 @@ def encode_record(
     tags: dict[str, int | str] | None = None,
 ) -> bytes:
     name_b = read_name.encode() + b"\x00"
-    seq_nibbles = bytearray()
-    for i in range(0, len(seq), 2):
-        hi = SEQ_CODE.index(seq[i])
-        lo = SEQ_CODE.index(seq[i + 1]) if i + 1 < len(seq) else 0
-        seq_nibbles.append((hi << 4) | lo)
+    codes = [_SEQ_INDEX[base] for base in seq]
+    if len(codes) % 2:
+        codes.append(0)
+    seq_nibbles = bytes(hi << 4 | lo for hi, lo in zip(codes[::2], codes[1::2]))
     tag_b = bytearray()
     for tag, val in (tags or {}).items():
         if isinstance(val, int):
@@ -81,7 +83,7 @@ def encode_record(
             0,  # tlen
         )
         + name_b
-        + bytes(seq_nibbles)
+        + seq_nibbles
         + b"\xff" * len(seq)  # qual: unavailable
         + bytes(tag_b)
     )
@@ -188,12 +190,7 @@ def decode_record(body: bytes, refs: list[str]) -> dict:
     read_name = body[off : off + l_name - 1].decode()
     off += l_name + 4 * n_cigar
     seq_b = body[off : off + (l_seq + 1) // 2]
-    seq = "".join(
-        SEQ_CODE[(b >> 4) if i % 2 == 0 else (b & 0xF)]
-        for i, b in enumerate(
-            seq_b[j // 2] for j in range(l_seq)
-        )
-    )
+    seq = "".join([_SEQ_PAIRS[b] for b in seq_b])[:l_seq]
     off += (l_seq + 1) // 2 + l_seq
     ints, md = _decode_tags(body[off:])
     return {
@@ -268,8 +265,9 @@ class _Stream:
             self._block_map = self._block_map[keep_from:]
 
 
-def read_refs(path: str) -> tuple[list[str], int]:
-    """Reference names + absolute end position of the header."""
+def read_refs(path: str) -> tuple[list[tuple[str, int]], int]:
+    """Reference dictionary — (name, length) in header order — plus the
+    absolute end position of the header."""
     st = _Stream(path)
     st.ensure(0, 12)
     if st.view(0, 4) != MAGIC:
@@ -284,7 +282,9 @@ def read_refs(path: str) -> tuple[list[str], int]:
         st.ensure(pos, 4)
         l_name = struct.unpack("<i", st.view(pos, 4))[0]
         st.ensure(pos + 4, l_name + 4)
-        refs.append(st.view(pos + 4, l_name - 1).decode())
+        name = st.view(pos + 4, l_name - 1).decode()
+        length = struct.unpack("<i", st.view(pos + 4 + l_name, 4))[0]
+        refs.append((name, length))
         pos += 4 + l_name + 4
     return refs, pos
 
@@ -295,7 +295,7 @@ def index_record_voffsets(
     """One streaming pass: virtual offsets of record boundaries at
     ``every_n`` spacing (first record always included) plus the end
     virtual offset. Consecutive checkpoint pairs are the split plan."""
-    refs, pos = read_refs(path)
+    _, pos = read_refs(path)
     st = _Stream(path)
     st.ensure(pos, 0)
     checkpoints: list[int] = []
@@ -317,7 +317,7 @@ def decode_range(path: str, vstart: int, vend: int) -> Iterator[dict]:
     """Decode records whose start voffset is in [vstart, vend) — exact,
     non-overlapping when the bounds come from index_record_voffsets.
     Seeks straight to vstart's block: tasks read only their slice."""
-    refs, _ = read_refs(path)
+    refs = [name for name, _ in read_refs(path)[0]]
     coffset, uoffset = vstart >> 16, vstart & 0xFFFF
     st = _Stream(path, from_coffset=coffset)
     pos = uoffset

@@ -9,6 +9,8 @@ split ranges decodes to exactly the whole file, no dupes, no gaps.
 from __future__ import annotations
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from tests.conftest import *  # noqa: F401,F403 - spark fixture
 
@@ -148,6 +150,65 @@ def test_spark_bam_scan_end_to_end(spark, tmp_path):
         "variants", md_variants_udf(F.col("md"), F.col("seq"), F.lit(0))
     )
     assert with_variants.where("size(variants) >= 1").count() == 600
+
+
+_REFS = ["chrM", "chr1", "chr2"]
+_FLAGS = {
+    "read_paired": 0x1,
+    "proper_pair": 0x2,
+    "mate_unmapped": 0x8,
+    "secondary": 0x100,
+    "supplementary": 0x800,
+}
+
+
+@settings(max_examples=300, deadline=None)
+@given(
+    read_name=st.text(
+        st.characters(min_codepoint=0x21, max_codepoint=0x7E), min_size=1, max_size=60
+    ),
+    ref_id=st.integers(-1, len(_REFS) - 1),
+    pos0=st.integers(-1, 2**31 - 2),
+    mapq=st.integers(0, 255),
+    flags=st.sets(st.sampled_from(sorted(_FLAGS))),
+    # every nibble code, odd/even/empty lengths
+    seq=st.text(st.sampled_from("=ACMGRSVTWYHKDBN"), max_size=41),
+    int_tags=st.dictionaries(
+        st.text(st.sampled_from("ABCDEFGHIJKLNOPQRSTUVWXYZ"), min_size=2, max_size=2),
+        st.integers(-(2**31), 2**31 - 1),
+        max_size=4,
+    ),
+    md=st.none() | st.from_regex(r"[0-9]{1,3}(\^?[ACGT][0-9]{1,3}){0,4}", fullmatch=True),
+)
+def test_record_encode_decode_roundtrip(
+    read_name, ref_id, pos0, mapq, flags, seq, int_tags, md
+):
+    """decode_record inverts encode_record on every field the engine
+    keeps: the sequence's 4-bit packing at odd, even and zero lengths
+    over all 16 codes, int tags and the MD string."""
+    from mitoscape_spark.sources.bamcodec import decode_record, encode_record
+
+    tags = dict(int_tags)
+    if md is not None:
+        tags["MD"] = md
+    flag = sum(_FLAGS[f] for f in flags)
+    rec = encode_record(read_name, ref_id, pos0, mapq, flag, seq, tags)
+    assert int.from_bytes(rec[:4], "little", signed=True) == len(rec) - 4
+    got = decode_record(rec[4:], _REFS)
+    assert got == {
+        "read_name": read_name,
+        "chrom": _REFS[ref_id] if ref_id >= 0 else None,
+        "start": pos0 + 1,
+        "mapq": mapq,
+        "attributes": " ".join(f"{t}:i:{v}" for t, v in sorted(int_tags.items())),
+        "seq": seq or None,
+        "md": md,
+        "primary_alignment": "secondary" not in flags,
+        "read_paired": "read_paired" in flags,
+        "proper_pair": "proper_pair" in flags,
+        "mate_mapped": "mate_unmapped" not in flags,
+        "supplementary": "supplementary" in flags,
+    }
 
 
 def test_bam_bad_magic_raises(tmp_path):

@@ -5,6 +5,7 @@ the survivor parquet."""
 from __future__ import annotations
 
 import re
+from collections import Counter
 
 import pytest
 
@@ -136,6 +137,19 @@ def test_cli_classify_single_file_bam_out(spark, cli_inputs):
     }
 
 
+def _bam_pair_argv(root, out, model="model"):
+    return [
+        "classify",
+        "--mt", str(root / "sample_MT.bam"),
+        "--nt", str(root / "sample_NT.bam"),
+        "--ld", str(root / "ld.tsv"),
+        "--numt", str(root / "numts.tsv"),
+        "--model", str(root / model),
+        "--out", str(root / out),
+        "--prob", "0.5",
+    ]
+
+
 def test_cli_classify_bam_pass_releases_its_pins(spark, cli_inputs):
     """A classify pass from a BAM pair leaves no cached data behind: a
     leftover pin would let the next pass reuse a stale decode."""
@@ -144,17 +158,7 @@ def test_cli_classify_bam_pass_releases_its_pins(spark, cli_inputs):
     cache = spark._jsparkSession.sharedState().cacheManager()
     spark.catalog.clearCache()
     assert cache.isEmpty()
-    argv = [
-        "classify",
-        "--mt", str(root / "sample_MT.bam"),
-        "--nt", str(root / "sample_NT.bam"),
-        "--ld", str(root / "ld.tsv"),
-        "--numt", str(root / "numts.tsv"),
-        "--model", str(root / "model"),
-        "--out", str(root / "from_bam.parquet"),
-        "--prob", "0.5",
-    ]
-    assert main(argv, spark=spark) == 0
+    assert main(_bam_pair_argv(root, "from_bam.parquet"), spark=spark) == 0
     assert cache.isEmpty(), "classify left cached data in the session"
     # BAM ingest scores the same reads as the parquet copies
     got = spark.read.parquet(str(root / "from_bam.parquet"))
@@ -162,6 +166,72 @@ def test_cli_classify_bam_pass_releases_its_pins(spark, cli_inputs):
     assert {r.read_name for r in got.select("read_name").collect()} == {
         r.read_name for r in want.select("read_name").collect()
     }
+
+
+def test_cli_classify_failed_pass_releases_its_pins(spark, cli_inputs):
+    """A missing model fails the pass only once the inputs and the
+    feature table are pinned (the load runs beside them); the pins must
+    still be released before the error reaches the caller."""
+    root = cli_inputs
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    with pytest.raises(Exception, match="no_such_model"):
+        main(_bam_pair_argv(root, "never.parquet", "no_such_model"), spark=spark)
+    assert cache.isEmpty(), "a failed classify left cached data in the session"
+
+
+def test_cli_classify_jobs_keep_callers_job_group(spark, cli_inputs):
+    """Every job a classify pass submits, from the worker threads that
+    load the model and plan the NT splits too, carries the caller's job
+    group, so cancelling or attributing work by group reaches all of it."""
+    root = cli_inputs
+    assert (root / "model").is_dir(), "train test must run first"
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def in_group(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            return fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+    def marker_job_id():
+        in_group("job_id_marker", lambda: sc.parallelize([0], 1).count())
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return max(tracker.getJobIdsForGroup("job_id_marker"))
+
+    first = marker_job_id()
+    argv = _bam_pair_argv(root, "grouped.parquet")
+    assert in_group("g", lambda: main(argv, spark=spark)) == 0
+    last = marker_job_id()
+    during = set(range(first + 1, last))
+    assert during, "the pass ran no jobs"
+    orphaned = during - set(tracker.getJobIdsForGroup("g"))
+    assert not orphaned, f"jobs outside the caller's job group: {sorted(orphaned)}"
+
+
+def test_cli_classify_bam_out_keeps_input_header(spark, cli_inputs):
+    """A BAM-to-BAM pass writes the MT input's reference dictionary
+    (names, lengths, order), as the reference's saveAsSam does, and its
+    records decode to the same survivors as the parquet-out pass."""
+    from mitoscape_spark.sources.bam import read_alignments_bam
+    from mitoscape_spark.sources.bamcodec import read_refs
+
+    root = cli_inputs
+    assert (root / "from_bam.parquet").is_dir(), "parquet-out pass must run first"
+    assert main(_bam_pair_argv(root, "from_bam.bam"), spark=spark) == 0
+    header = [("chrM", 16569)] + [(c, 10**9) for c in fixtures.CHROMS]
+    assert read_refs(str(root / "sample_MT.bam"))[0] == header
+    assert read_refs(str(root / "from_bam.bam"))[0] == header
+
+    def rows(df):
+        return Counter(tuple(r) for r in df.select(*ALIGNMENT_COLUMNS).collect())
+
+    got = rows(read_alignments_bam(spark, str(root / "from_bam.bam")))
+    assert got
+    assert got == rows(spark.read.parquet(str(root / "from_bam.parquet")))
 
 
 def _plan_children(node) -> list:
