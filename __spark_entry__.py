@@ -2,7 +2,8 @@
 
 ``entry(spark)`` — flagship query smoke check on sf0.001.
 ``queries()``   — every implemented operator (SURVEY.md §2) as
-                  callable(spark, sf_dir) -> DataFrame.
+                  callable(spark, sf_dir) -> DataFrame, in plain
+                  declaration order.
 ``oracle_sql()``— matching DuckDB SQL per query name; names omitted
                   here get a rows-only check (non-SQL-expressible ops).
 """
@@ -71,206 +72,12 @@ def _wrap(fn) -> Callable[[SparkSession, str], DataFrame]:
     return run
 
 
-def _verdict_history(here: str | None = None) -> dict[str, tuple[int, dict]]:
-    """name -> (latest driver round, result dict) from CORRECTNESS_r*.json.
-
-    Rounds are ordered by the PARSED round number, not the filename —
-    lexicographic sort only works while round files stay zero-padded
-    (r01..r09); an unpadded r10 would misorder and could resurrect a
-    stale verdict (round-6 advice item 4).
-    """
-    import glob
-    import json
-    import os
-    import re
-
-    if here is None:
-        here = os.path.dirname(os.path.abspath(__file__))
-    rounds: list[tuple[int, dict]] = []
-    for path in glob.glob(os.path.join(here, "CORRECTNESS_r*.json")):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", os.path.basename(path))
-        if m is None:
-            continue
-        try:
-            with open(path) as fh:
-                report = json.load(fh)
-        except Exception:  # malformed report — ignore, order is best-effort
-            continue
-        if isinstance(report, dict):
-            rounds.append((int(m.group(1)), report))
-    latest: dict[str, tuple[int, dict]] = {}
-    for rnd, report in sorted(rounds, key=lambda t: t[0]):
-        for name, res in report.items():
-            if isinstance(res, dict):
-                latest[name] = (rnd, res)  # later round supersedes
-    return latest
-
-
-# Hand-override rotation pins (round-7 verdict item 4 demoted this from
-# THE list to an override): names to re-verify that the mechanical
-# derivation in mitoscape_spark/rotation.py cannot see — e.g. a
-# semantic change routed through config or an external artifact rather
-# than package code, or a broad re-check after a UBIQUITOUS entry
-# change (derive_pins surfaces those via __ubiquitous_dropped__; the
-# adjudication gate in tests/test_rotation.py forces the call to be
-# made consciously). The derived set is the primary source: a name is
-# pinned iff its statically-derived code path (function + intra-file
-# helpers + oracle SQL + transitively imported operator modules, minus
-# ubiquitous infra) changed after its OWN latest driver verdict's
-# round-boundary commit. Every name here must exist in QUERIES —
-# queries() raises loudly otherwise (round-7 advice item 4).
-#
-# EMPTY since round 10: the round-9 staleness backlog (37 r01/r03
-# names) was driver-re-recorded in CORRECTNESS_r09, which self-retired
-# every pin; the list itself was then deleted (round-9 verdict item 3).
-_ROTATION_PINS: frozenset[str] = frozenset()
-
-# Tier-5 staleness ceiling (round-10 verdict item 1): a rows-only name
-# whose latest driver verdict is this many rounds (or more) behind the
-# newest round in the history is promoted into tier 4 regardless of the
-# one-per-round drip, so no record — oracle or rows-only — can age past
-# the tier-4 freshness ledger indefinitely.
-_TIER5_MAX_LAG = 5
-
-
-def _rotation_pins() -> frozenset[str]:
-    """Union of hand overrides and the mechanically derived stale set;
-    falls back to the hand list alone if derivation fails (no git,
-    shallow clone, parse error — rotation degrades, never breaks)."""
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """Every declared query, in declaration order: Q01–Q15, then the
+    extensions, then the domain (MitoScape) queries."""
     from mitoscape_spark.queries import QUERIES
 
-    dangling = _ROTATION_PINS - set(QUERIES)
-    if dangling:
-        # ValueError, not assert: the fail-loudly-on-typo contract
-        # (round-7 advice item 4) must survive `python -O`, which
-        # strips asserts (round-8 advice item 3)
-        raise ValueError(
-            f"_ROTATION_PINS names not in QUERIES (typo/rename?): "
-            f"{sorted(dangling)}"
-        )
-    latest_round = {n: rnd for n, (rnd, _res) in _verdict_history().items()}
-    try:
-        from mitoscape_spark.rotation import derive_pins
-
-        derived = derive_pins(latest_round, QUERIES)
-    except Exception:  # noqa: BLE001 — fail-open to the hand list
-        derived = None
-    if derived is None:
-        import sys
-
-        print(
-            "rotation: pin derivation unavailable (no git history / parse "
-            "error) — ordering falls back to hand pins + oldest-first",
-            file=sys.stderr,
-        )
-        return _ROTATION_PINS
-    return _ROTATION_PINS | derived
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Declared queries, ordered so the driver's capped prefix lands on
-    the names that most need a fresh driver-recorded verdict.
-
-    Tiers (round-6 verdict items 1-2; pin derivation automated in
-    round 8 — verdict item 4):
-      0. never driver-checked;
-      1. latest verdict is a hard ERROR — the fix needs a real re-check
-         (round-5: ext_bpe_tokens);
-      2. latest verdict is rows-only (``no_oracle``) but the name NOW
-         declares a DuckDB oracle — the conversion postdates the stale
-         record, so re-record it as oracle-green;
-      3. rotation pins — mechanically derived (mitoscape_spark/
-         rotation.py): the name's static code path changed after the
-         round-boundary commit of its OWN latest verdict, so the
-         recorded green predates the code now running. Ordered oldest
-         verdict first, and the per-name boundary makes pins CARRY
-         OVER: a pinned name the cap misses this round is still pinned
-         next round, until a fresh record lands — the stale backlog
-         burns down monotonically at cap-rate.
-      4. everything else, oldest driver verdict first. With per-name
-         change detection this tier's STATIC code path is unchanged
-         since its green — but that is not an absolute freshness
-         proof: changes to UBIQUITOUS modules (>50% of query paths)
-         are deliberately excluded from pin derivation (they would
-         flood the cap while discriminating nothing), so a semantic
-         change there reaches tier-4 names only at cap-rate.
-         derive_pins surfaces any such dropped module on stderr /
-         explain["__ubiquitous_dropped__"] so it can be hand-pinned
-         consciously (round-8 advice item 1), and a test gate requires
-         every surfaced drop to be adjudicated in COVERAGE.md
-         (round-9 verdict item 4). Tier 4 also remains the safety net
-         for what static analysis can't see (driver harness changes,
-         testdata regeneration, dynamic dispatch);
-      5. rows-only names with no declared oracle whose code path is
-         unchanged (not pinned): a fresh driver record of these mostly
-         re-stamps ``no_oracle``, so they must not displace
-         oracle-checkable re-records from the cap (round-9 verdict
-         item 5). But a re-run DOES prove "still executes" — the
-         tier-4 safety net the docstring above promises — so the tier
-         is a DRIP-FEED, not a freezer: each round the single
-         oldest-verdict tier-5 name is promoted back into tier 4's
-         oldest-first rotation (round-10 review finding 2; ~12 such
-         names → each re-executed roughly once per dozen rounds),
-         PLUS every tier-5 name whose verdict has fallen
-         ``_TIER5_MAX_LAG`` or more rounds behind the latest driver
-         round (round-10 verdict item 1: the one-per-round drip alone
-         gives a ~12-round worst-case lag, so rows-only names were the
-         only records that could outlive the tier-4 freshness ledger —
-         the ceiling bounds EVERY name's staleness at cap-irrelevant
-         cost, ~16 tier-5 names / 5 rounds ≈ 3 slots per round in
-         steady state). NB a promotion competes in tier 4 at its OWN
-         verdict age — it never displaces strictly-older tier-4
-         records — so while the tier-4 backlog is older than the drip
-         name, the drip defers and is re-selected next round
-         (rotation_report.py tags each promotion IN-slice / outside
-         cap); the ceiling names are by construction among the oldest,
-         so they always land. A code change (tier 3 pin) or a gained
-         oracle (tier 2) promotes immediately regardless.
-    """
-    from mitoscape_spark.queries import ORACLE, QUERIES
-
-    latest = _verdict_history()
-    pins = _rotation_pins()
-
-    # intersect with QUERIES: a name removed/renamed after recording a
-    # no_oracle verdict would otherwise become a permanent min-key drip
-    # (its round never advances), silently disabling the drip-feed for
-    # every REAL tier-5 name (round-10 advice item 1)
-    tier5 = {
-        name
-        for name, (rnd, res) in latest.items()
-        if name in QUERIES
-        and res.get("err") == "no_oracle"
-        and name not in ORACLE
-        and name not in pins
-    }
-    latest_round = max((rnd for rnd, _res in latest.values()), default=0)
-    overdue = {
-        n for n in tier5 if latest_round - latest[n][0] >= _TIER5_MAX_LAG
-    }
-    drip_pool = tier5 - overdue
-    drip = (
-        min(drip_pool, key=lambda n: (latest[n][0], n)) if drip_pool else None
-    )
-    promoted = overdue | ({drip} if drip else set())
-
-    def order_key(name: str) -> tuple[int, int, str]:
-        if name not in latest:
-            return (0, 0, name)
-        rnd, res = latest[name]
-        err = res.get("err")
-        if err and err != "no_oracle":
-            return (1, rnd, name)
-        if err == "no_oracle" and name in ORACLE:
-            return (2, rnd, name)
-        if name in pins:
-            return (3, rnd, name)
-        if name in tier5 and name not in promoted:
-            return (5, rnd, name)
-        return (4, rnd, name)
-
-    ordered = sorted(QUERIES, key=order_key)
-    return {name: _wrap(QUERIES[name]) for name in ordered}
+    return {name: _wrap(fn) for name, fn in QUERIES.items()}
 
 
 def oracle_sql() -> dict[str, str]:

@@ -5,13 +5,8 @@
 
 Names without an ORACLE entry are non-SQL-expressible ops; the driver
 records a weaker rows-only check for those (see __spark_entry__.py).
-
-Ordering: the grading driver verifies queries in dict order and caps
-how many it checks per round (round 1 stopped at 50 of 89). To get
-every query driver-verified across rounds, entries WITHOUT a prior
-driver check come first — that is, anything not in the round-1
-CORRECTNESS set (which automatically front-loads newly added queries
-too), then the headline relational set, then the rest.
+Both dicts are in declaration order: relational (Q01–Q15), then
+extensions, then domain.
 """
 
 from __future__ import annotations
@@ -23,42 +18,7 @@ from mitoscape_spark.queries.extensions import QUERIES as _EXT_QUERIES
 from mitoscape_spark.queries.domain import ORACLE as _DOM_ORACLE
 from mitoscape_spark.queries.domain import QUERIES as _DOM_QUERIES
 
-_ALL = {**_REL_QUERIES, **_EXT_QUERIES, **_DOM_QUERIES}
+QUERIES = {**_REL_QUERIES, **_EXT_QUERIES, **_DOM_QUERIES}
 ORACLE = {**_REL_ORACLE, **_EXT_ORACLE, **_DOM_ORACLE}
-
-# Names the round-1 driver run verified green (CORRECTNESS_r01.json).
-_R1_CHECKED = frozenset(
-    {
-        "q01", "q02", "q03", "q04", "q05", "q06", "q07", "q08", "q09",
-        "q10", "q11", "q12", "q13", "q14", "q15",
-        "ext_window_rank", "ext_sliding_sum", "ext_dedup_exact",
-        "ext_topk_cosine", "ext_tokenize", "ext_minhash_sig",
-        "ext_minhash_pairs", "ext_ngram_jaccard", "ext_dedup_near",
-        "ext_fuzzy_match", "ext_simhash", "ext_embedding_neardup",
-        "ext_lang_id", "ext_quality", "ext_repetition", "ext_fingerprint",
-        "ext_chunk_documents", "ext_term_freq", "ext_prep_pipeline",
-        "ext_session_window", "ext_sql_pricing_summary",
-        "ext_sql_lateral_topn", "ext_sql_recursive_cte",
-        "ext_sql_pipe_syntax", "ext_sql_shipping_priority",
-        "ext_sql_local_supplier_volume", "ext_sql_returned_items",
-        "ext_sql_volume_shipping", "ext_sql_order_priority",
-        "ext_sql_disjunctive_filter", "ext_asof_join", "ext_anti_join",
-        "ext_outer_join", "ext_set_ops", "ext_pivot",
-    }
-)
-
-QUERIES = {
-    # round-2 priority: not-yet-driver-verified first (includes new ones)
-    **{n: f for n, f in _ALL.items() if n not in _R1_CHECKED},
-    # then the headline relational set (bench gate — keep them re-checked)
-    **{n: f for n, f in _ALL.items() if n in _REL_QUERIES},
-    # then the already-green extension tail
-    **{
-        n: f
-        for n, f in _ALL.items()
-        if n in _R1_CHECKED and n not in _REL_QUERIES
-    },
-}
-assert len(QUERIES) == len(_ALL)
 
 __all__ = ["QUERIES", "ORACLE"]

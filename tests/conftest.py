@@ -42,6 +42,17 @@ def pytest_runtest_setup(item):
 
 
 @pytest.fixture(scope="session")
+def query_sweep(spark):
+    """Each declared query built and checked once per run, shared by
+    test_extensions.py, test_plan_audit.py and test_relational.py."""
+    from query_sweep import QuerySweep
+
+    sweep = QuerySweep(spark)
+    yield sweep
+    sweep.close()
+
+
+@pytest.fixture(scope="session")
 def sf_smoke() -> str:
     return SF_SMOKE
 

@@ -1,33 +1,17 @@
 """Extension queries vs DuckDB oracles at sf0.001 (fast mirror of the
-driver's t2 run; relational Q-series covered in test_relational)."""
+driver's t2 run; relational Q-series covered in test_relational). Each
+query is built and checked once per run, in query_sweep.py."""
 
 from __future__ import annotations
 
 import pytest
 
-from mitoscape_spark.queries.extensions import ORACLE, QUERIES
-from mitoscape_spark.verify import compare_query, duckdb_connection
-
-SF = "/root/testdata/sf0.001"
-
-
-@pytest.fixture(scope="module")
-def con():
-    c = duckdb_connection(SF)
-    yield c
-    c.close()
+from mitoscape_spark.queries.extensions import QUERIES
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
-def test_extension_matches_oracle(spark, con, name):
-    fn = QUERIES[name]
-    if name not in ORACLE:
-        assert fn(spark, SF).count() >= 0
-        return
-    res = compare_query(spark, con, name, fn, ORACLE[name], SF)
-    assert res.spark_rows == res.oracle_rows, res
-    assert res.cols_match, res
-    assert res.hash_match, res
+def test_extension_matches_oracle(query_sweep, name):
+    query_sweep.oracle(name)
 
 
 def test_time_rollup_integer_mean_identity_matches_half_up():

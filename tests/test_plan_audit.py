@@ -1,97 +1,20 @@
 """Repo-wide physical-plan audit: EVERY declared query's plan is
-checked for scale anti-patterns, so a future query can't quietly ship
-a cartesian product or a row-at-a-time Python UDF. The targeted plan
-tests (test_plans.py) pin specific *positive* properties; this sweep
-pins the *negative* space across the whole inventory.
-
-Whitelists are explicit and commented — an entry here is a documented
-engineering decision, not an exemption without reason.
+checked for scale anti-patterns (nested output columns, row-at-a-time
+Python UDFs, cartesian products). The checks and their whitelists live
+in query_sweep.py, which builds each query once per run for this audit
+and its oracle comparison.
 """
 
 from __future__ import annotations
 
-import contextlib
-import io
-
 import pytest
 
 from mitoscape_spark.queries import QUERIES
-
-SF = "/root/testdata/sf0.001"
-
-# Queries whose RESULT is produced by driver-side materialization
-# (snapshot-table lifecycles collect inside a TemporaryDirectory) —
-# their plan is a LocalTableScan of already-computed rows; the real
-# plans behind them are audited by their own suites.
-MATERIALIZED = {
-    "ext_time_travel",
-    "ext_table_changes",
-    "ext_delete_vectors",
-    "ext_snapshot_format",
-    "ext_incremental_agg",
-    "ext_merge_upsert",
-    "ext_zorder",
-    "ext_stream_embedding_dedup",  # runs a streaming job, returns rows
-    "ext_stream_text_dedup",
-}
-
-# Deliberate cross-join shapes: 1-row corpus-stats broadcasts (cost =
-# |fact|), k-row pair matrices over sketch state, and the documented
-# brute-force baselines whose block pairs ARE the algorithm.
-CARTESIAN_OK = {
-    "q07",  # 1-row global-stats broadcast (A4)
-    "q08",
-    "ext_bm25_search",  # 1-row (n_docs, avgdl) broadcast
-    "ext_theta_overlap",  # |types|² sketch-pair matrix, k rows total
-    "ext_embedding_neardup",  # blocked-GEMM block-pair cross join
-    "ext_dedup_embedding",
-    "ext_tfidf_pairs",
-    "ext_histogram",  # 1-row min/max broadcast for bin edges
-    "ext_gapfill",  # date-spine × key-set build (both tiny dims)
-    "ext_ewma",
-    "ext_topk_cosine",  # brute-force baseline, documented
-    "ext_semantic_dedup",  # 1-row stats broadcast inside keep-set
-}
-
-# Arrow-vectorized Python is the sanctioned boundary; row-at-a-time
-# BatchEvalPython is never acceptable.
-ROW_PYTHON = "BatchEvalPython"
-
-
-def _plan(df) -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
+from query_sweep import MATERIALIZED
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
-def test_declared_query_plan_has_no_antipatterns(spark, name):
+def test_declared_query_plan_has_no_antipatterns(query_sweep, name):
     if name in MATERIALIZED:
         pytest.skip("driver-materialized lifecycle query")
-    df = QUERIES[name](spark, SF)
-    # driver-harness contract: the correctness driver canonicalizes
-    # results through pandas sort_values, which throws on array/map/
-    # struct cells (round-5's ext_bpe_tokens was the red cell) —
-    # declared queries must emit scalar columns only; operators keep
-    # returning rich types for library callers
-    nested = [
-        f.name
-        for f in df.schema.fields
-        if f.dataType.typeName() in ("array", "map", "struct")
-    ]
-    assert not nested, (
-        f"{name}: nested-typed output columns {nested} break the "
-        "driver's pandas canonicalizer — emit a joined string/JSON "
-        "in the declared query instead (keep the rich type in the "
-        "operator)"
-    )
-    plan = _plan(df)
-    assert ROW_PYTHON not in plan, (
-        f"{name}: row-at-a-time Python UDF in the plan\n{plan}"
-    )
-    if name not in CARTESIAN_OK:
-        assert "CartesianProduct" not in plan, (
-            f"{name}: cartesian product — whitelist only with a "
-            f"documented reason\n{plan}"
-        )
+    query_sweep.audit(name)

@@ -1,4 +1,6 @@
-"""t2 mirror: every declared query hash-matches its DuckDB oracle.
+"""t2 mirror: every declared query hash-matches its DuckDB oracle, and
+its physical plan is audited for scale anti-patterns, from one build
+(see query_sweep.py).
 
 Runs at sf0.001 (fast inner loop); the driver runs the same contract at
 sf0.01. mitoscape_spark.verify can be run standalone at any sf.
@@ -6,33 +8,80 @@ sf0.01. mitoscape_spark.verify can be run standalone at any sf.
 
 from __future__ import annotations
 
+import ast
+import itertools
+import subprocess
+from pathlib import Path
+
 import pytest
 
+import mitoscape_spark.queries as registry
 from mitoscape_spark.queries import ORACLE, QUERIES
-from mitoscape_spark.verify import compare_query, duckdb_connection
-
-SF_SMOKE = "/root/testdata/sf0.001"
-
-
-@pytest.fixture(scope="module")
-def con():
-    c = duckdb_connection(SF_SMOKE)
-    yield c
-    c.close()
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
-def test_query_matches_oracle(spark, con, name):
-    fn = QUERIES[name]
-    if name not in ORACLE:
-        # non-SQL-expressible: rows-only smoke (driver does the same)
-        df = fn(spark, SF_SMOKE)
-        assert df.count() >= 0
-        return
-    res = compare_query(spark, con, name, fn, ORACLE[name], SF_SMOKE)
-    assert res.spark_rows == res.oracle_rows, res
-    assert res.cols_match, res
-    assert res.hash_match, res
+def test_query_matches_oracle(query_sweep, name):
+    query_sweep.audit(name)
+    query_sweep.oracle(name)
+
+
+def test_registry_is_the_disjoint_union_in_declaration_order(monkeypatch):
+    """The single sweep above checks each name once only if the package
+    registry is exactly the three query files' dicts, disjoint and in
+    declaration order, and the driver contract serves that registry
+    as-is without shelling out."""
+    import __spark_entry__ as e
+    from mitoscape_spark.queries import domain, extensions, relational
+
+    parts = (relational, extensions, domain)
+    for attr in ("QUERIES", "ORACLE"):
+        for a, b in itertools.combinations(parts, 2):
+            shared = set(getattr(a, attr)) & set(getattr(b, attr))
+            assert not shared, (a.__name__, b.__name__, attr, shared)
+    assert list(QUERIES) == [n for m in parts for n in m.QUERIES]
+    assert QUERIES == {n: f for m in parts for n, f in m.QUERIES.items()}
+    assert ORACLE == {n: s for m in parts for n, s in m.ORACLE.items()}
+    assert (len(QUERIES), len(ORACLE)) == (251, 234)
+    assert set(ORACLE) <= set(QUERIES)
+
+    spawned = []
+
+    def refuse(*args, **kwargs):
+        spawned.append(args)
+        raise OSError("queries() must not run a subprocess")
+
+    monkeypatch.setattr(subprocess, "run", refuse)
+    monkeypatch.setattr(subprocess, "Popen", refuse)
+    assert list(e.queries()) == list(QUERIES)
+    assert e.oracle_sql() == ORACLE
+    assert not spawned, spawned
+
+
+def test_query_files_never_import_each_other():
+    """Style contract: query files stay import-disjoint; shared helpers
+    belong in operators/."""
+    files = sorted(
+        p
+        for p in Path(registry.__file__).parent.glob("*.py")
+        if p.name != "__init__.py"
+    )
+    qmods = {f"{registry.__name__}.{p.stem}" for p in files}
+    for path in files:
+        tree = ast.parse(path.read_text())
+        for node in ast.walk(tree):
+            targets: list[str] = []
+            if isinstance(node, ast.Import):
+                targets = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom) and node.module:
+                targets = [node.module] + [
+                    f"{node.module}.{a.name}" for a in node.names
+                ]
+            for t in targets:
+                assert t not in qmods, (
+                    f"{path.name} imports query file {t}: query files "
+                    "stay import-disjoint — move the helper into an "
+                    "operators/ module instead"
+                )
 
 
 def test_entry_smoke(spark):
@@ -42,24 +91,6 @@ def test_entry_smoke(spark):
     rows = df.collect()
     assert len(rows) >= 0
     assert df.columns == ["n_name", "n_orders", "revenue"]
-
-
-def test_verdict_history_sorts_rounds_numerically(tmp_path):
-    """An unpadded CORRECTNESS_r10.json must supersede r2, not sort
-    before it lexicographically (round-6 advice item 4)."""
-    import json
-
-    import __spark_entry__ as e
-
-    (tmp_path / "CORRECTNESS_r2.json").write_text(
-        json.dumps({"q": {"err": "boom", "rows_match": False}})
-    )
-    (tmp_path / "CORRECTNESS_r10.json").write_text(
-        json.dumps({"q": {"err": None, "hash_match": True}})
-    )
-    latest = e._verdict_history(here=str(tmp_path))
-    assert latest["q"][0] == 10
-    assert latest["q"][1]["hash_match"] is True
 
 
 def test_q13_interval_join_counts_subsecond_pairs(spark):
