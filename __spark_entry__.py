@@ -6,6 +6,9 @@
                   declaration order.
 ``oracle_sql()``— matching DuckDB SQL per query name; names omitted
                   here get a rows-only check (non-SQL-expressible ops).
+
+Both read ``mitoscape_spark.queries``, where each query file declares a
+query and its oracle together (see that package's docstring).
 """
 
 from __future__ import annotations

@@ -40,6 +40,10 @@ DEFAULT_SHINGLE = 3
 
 _INTEGRAL_TYPES = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
 
+# estimated driver-process peak above which connected_components takes
+# the distributed star rounds instead of the driver union-find finisher
+CC_DRIVER_MAX_BYTES = 640 * 1024 * 1024
+
 
 def _require_integral_id(df: DataFrame, col: str, op: str) -> None:
     """The blocked-GEMM paths block rows by ``pmod(id, n_blocks)`` and
@@ -886,8 +890,9 @@ def connected_components(
     ``driver_finish_max_edges`` rows AND its estimated PYTHON-PROCESS
     peak (~300 B/edge for integral ids — measured, see below; octet
     length × 4 plus the same 300 B/edge object overhead for strings)
-    is under 640 MiB — both read from one aggregate job that also
-    materializes the checkpoint the loop needed anyway — the edges
+    is under ``CC_DRIVER_MAX_BYTES`` (640 MiB) — both read from one
+    aggregate job that also materializes the checkpoint the loop
+    needed anyway — the edges
     collect to the driver and union-find labels them in milliseconds,
     skipping ~11 star rounds of pure per-round scheduling floor (~70%
     of wall on toy graphs, PERF.md §23). The byte estimate models the
@@ -946,7 +951,7 @@ def connected_components(
         if n_edges is not None and integral:
             if (
                 n_edges <= driver_finish_max_edges
-                and n_edges * 300 <= 640 * 1024 * 1024
+                and n_edges * 300 <= CC_DRIVER_MAX_BYTES
             ):
                 return _driver_union_find_labels(edges)
             # certified too big: fall through to the star rounds with
@@ -975,7 +980,7 @@ def connected_components(
             ).first()
             if (
                 probe["n"] <= driver_finish_max_edges
-                and probe["b"] <= 640 * 1024 * 1024
+                and probe["b"] <= CC_DRIVER_MAX_BYTES
             ):
                 return _driver_union_find_labels(edges)
     prev_sig: tuple | None = None

@@ -62,11 +62,13 @@ def funnel_counts(
     """
     if not steps:
         raise ValueError("funnel needs at least one step")
+    # an event without a user belongs to no funnel: drop it at entry
+    # rather than rely on the NULL-key join and count semantics
     ev = events.select(
         F.col(user_col).alias("u"),
         F.col(ts_col).alias("t"),
         F.col(type_col).alias("s"),
-    )
+    ).where(F.col("u").isNotNull())
     # stage 0: earliest occurrence of the first step per user.
     # Per-stage §20 pin: each stage's count branch plus the next
     # stage's join consume `state` — unpinned, stage i re-executes
@@ -144,7 +146,7 @@ def funnel_counts_windowed(
         F.col(user_col).alias("u"),
         F.col(ts_col).alias("t"),
         F.col(type_col).alias("s"),
-    )
+    ).where(F.col("u").isNotNull())  # as in funnel_counts
     span = F.expr(f"INTERVAL {int(max_span_seconds)} SECONDS")
     # per-stage §20 pins + one-action stage counts, exactly as in
     # funnel_counts above (counts here are per-stage DISTINCT users —

@@ -11,8 +11,9 @@ from pyspark.sql import functions as F
 
 from mitoscape_spark.pins import pin
 
-# tiny built-in stopword profiles; deterministic, embedded identically
-# in the DuckDB oracle SQL (queries.extensions)
+# tiny built-in stopword profiles; deterministic, restated identically
+# as the _STOP_SQL lists at the top of queries/extensions.py, which the
+# DuckDB oracles embed
 LANG_PROFILES: dict[str, tuple[str, ...]] = {
     "en": ("the", "a", "of", "and", "to", "in", "is", "for"),
     "fr": ("le", "la", "de", "et", "un", "une", "est", "pour"),

@@ -11,11 +11,7 @@ model persistence (same parquet+JSON layout the reference's
 from __future__ import annotations
 
 from pyspark.ml import Pipeline, PipelineModel
-from pyspark.ml.classification import (
-    GBTClassifier,
-    RandomForestClassificationModel,
-    RandomForestClassifier,
-)
+from pyspark.ml.classification import GBTClassifier, RandomForestClassifier
 from pyspark.ml.evaluation import MulticlassClassificationEvaluator
 from pyspark.ml.feature import RFormula
 from pyspark.ml.functions import vector_to_array
@@ -33,15 +29,6 @@ FORMULA = (
     " + MTNumAlignments + NTNumAlignments"
 )
 NUM_TREES = 128  # MTClassifierModel.scala:38
-
-
-def prepare_features(df: DataFrame) -> DataFrame:
-    """RFormula fit+transform → features vector + label column
-    (``MTClassifierModel.scala:179-184``)."""
-    formula = RFormula(
-        formula=FORMULA, featuresCol="features", labelCol="label"
-    )
-    return formula.fit(df).transform(df)
 
 
 def _strip_summary(model: PipelineModel, model_path: str | None) -> PipelineModel:
@@ -101,12 +88,6 @@ def train_gbt(
 
 def load_pipeline_model(model_path: str) -> PipelineModel:
     return PipelineModel.load(model_path)
-
-
-def load_rf_model(model_path: str) -> RandomForestClassificationModel:
-    """Load a bare RF model dir — API-compatible with the reference's
-    persisted artifact (``MTClassifierModel.scala:288``)."""
-    return RandomForestClassificationModel.load(model_path)
 
 
 def max_probability(predictions: DataFrame) -> DataFrame:

@@ -6,7 +6,12 @@
 Names without an ORACLE entry are non-SQL-expressible ops; the driver
 records a weaker rows-only check for those (see __spark_entry__.py).
 Both dicts are in declaration order: relational (Q01–Q15), then
-extensions, then domain.
+extensions, then domain. Each of those files declares a query once: a
+function whose name is the query name (``qNN``, ``ext_*``, ``mito_*``),
+followed directly by its ``ORACLE[name] = ...`` SQL; the file's
+``QUERIES`` is derived from those function names at its end.
+``extensions`` also declares its pure-SQL queries as one name → SQL
+table whose text is both the Spark query and the oracle.
 """
 
 from __future__ import annotations

@@ -91,11 +91,8 @@ def mito_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-QUERIES = {
-    "mito_md_parse": mito_md_parse,
-    "mito_feature_table": mito_feature_table,
-    "mito_classify": mito_classify,
-}
+# the declared queries: every mito_* function above, in definition order
+QUERIES = {n: f for n, f in globals().items() if n.startswith("mito_")}
 
 # no ORACLE entries: fixture tables aren't in the DuckDB corpus and the
 # MD parse / RF scoring aren't SQL-expressible → rows-only checks.

@@ -1,8 +1,15 @@
 """E-series + training-data-pipeline queries (SURVEY.md §2.9 E-series;
 BASELINE.json north star: dedup, similarity search, text analysis).
 
-Every entry with an ORACLE string is hash-checked against DuckDB at
-sf0.01 by the driver; entries without one (approximate ANN, multimodal
+Each query is declared in one place: an ``ext_*`` function, followed
+directly by its ``ORACLE["ext_*"]`` DuckDB SQL if it has one. Queries
+that are pure SQL text are one ``_SQL_TEXT`` entry each; that text is
+both what Spark runs and the oracle. ``QUERIES`` is built at the end of
+the module from the ``ext_*`` functions, in definition order, then the
+``_SQL_TEXT`` entries.
+
+Every query with an ORACLE string is hash-checked against DuckDB at
+sf0.01 by the driver; queries without one (approximate ANN, multimodal
 plumbing) get rows-only checks. Hashing portability: md5 hex strings
 are identical across engines; min-of-md5 is the MinHash; bit
 extraction is integer arithmetic (floor(v / 2^k) % 2) in both dialects.
@@ -10,15 +17,45 @@ extraction is integer arithmetic (floor(v / 2^k) % 2) in both dialects.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mitoscape_spark.catalog import load_table, register_views
+from mitoscape_spark.functions.textnorm import TEXTNORM_SQL
+from mitoscape_spark.operators.textstats import BPE_SPLIT_PATTERN
 from mitoscape_spark.pins import pin
 
-from mitoscape_spark.catalog import load_table
-from mitoscape_spark.functions.textnorm import TEXTNORM_SQL
+ORACLE: dict[str, str] = {}
 
+# SQL fragments the oracles below share
 _TEXTNORM = TEXTNORM_SQL.format(col="text")
+
+_BPE_PAT_SQL = BPE_SPLIT_PATTERN.replace("'", "''")
+
+_STOP_SQL = {
+    "en": "['the','a','of','and','to','in','is','for']",
+    "fr": "['le','la','de','et','un','une','est','pour']",
+    "de": "['der','die','das','und','ein','ist','für','von']",
+    "es": "['el','la','de','y','un','una','es','para']",
+}
+
+# Shared DuckDB CTEs: tokens with 0-based pos, 3-token shingles
+_TOKS = """
+toks AS (
+    SELECT doc_id, string_split(lower(text), ' ') AS t FROM documents
+)
+"""
+
+_SHINGLES3 = """
+sh AS (
+    SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS shingle
+    FROM toks, UNNEST(range(1, greatest(len(t) - 1, 1))) AS r(i)
+    WHERE len(t) >= 3
+)
+"""
+
 
 # ---------------------------------------------------------------- E01
 def ext_window_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -37,6 +74,18 @@ def ext_window_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("rn") <= 3)
         .orderBy("o_custkey", "rn")
     )
+
+
+ORACLE["ext_window_rank"] = """
+        SELECT o_custkey, o_orderkey, rn FROM (
+            SELECT o_custkey, o_orderkey,
+                   ROW_NUMBER() OVER (
+                       PARTITION BY o_custkey
+                       ORDER BY o_totalprice DESC, o_orderkey
+                   ) AS rn
+            FROM orders
+        ) WHERE rn <= 3 ORDER BY o_custkey, rn
+    """
 
 
 # ---------------------------------------------------------------- E02
@@ -61,6 +110,17 @@ def ext_sliding_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+ORACLE["ext_sliding_sum"] = """
+        SELECT user_id, event_id,
+               ROUND(SUM(value) OVER (
+                   PARTITION BY user_id
+                   ORDER BY CAST(ts AS TIMESTAMP), event_id
+                   ROWS BETWEEN 3 PRECEDING AND CURRENT ROW
+               ), 4) AS sliding_sum
+        FROM events ORDER BY user_id, event_id
+    """
+
+
 # ---------------------------------------------------------------- E03
 def ext_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup (hash distinct) on a projection with real duplicates."""
@@ -70,6 +130,11 @@ def ext_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return exact_dedup(docs.select("lang", "source")).orderBy(
         "lang", "source"
     )
+
+
+ORACLE["ext_dedup_exact"] = """
+        SELECT DISTINCT lang, source FROM documents ORDER BY lang, source
+    """
 
 
 # ---------------------------------------------------------------- E04
@@ -84,6 +149,20 @@ def ext_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     return topk_cosine(emb.where(F.col("vec_id") != 0), list(query), k=10)
 
 
+ORACLE["ext_topk_cosine"] = """
+        WITH q AS (
+            SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings
+            WHERE vec_id = 0
+        )
+        SELECT vec_id AS id,
+               ROUND(list_cosine_similarity(
+                   CAST(embedding AS DOUBLE[]), q.qv), 6) AS cos
+        FROM embeddings, q
+        WHERE vec_id != 0
+        ORDER BY cos DESC, id LIMIT 10
+    """
+
+
 # ---------------------------------------------------------------- E05
 def ext_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting: whitespace tokens + BPE-ish length estimate."""
@@ -93,6 +172,14 @@ def ext_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     return token_counts(docs).orderBy("doc_id")
 
 
+ORACLE["ext_tokenize"] = """
+        SELECT doc_id,
+               len(string_split(text, ' ')) AS n_ws_tokens,
+               CAST(CEIL(length(text) / 4.0) AS BIGINT) AS n_bpe_est
+        FROM documents ORDER BY doc_id
+    """
+
+
 # ------------------------------------------------------------- dedup
 def ext_minhash_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash signatures: 8 seeded min-md5 hashes over 3-token shingles."""
@@ -100,6 +187,15 @@ def ext_minhash_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     return minhash_signatures(docs).orderBy("doc_id", "seed")
+
+
+ORACLE["ext_minhash_sig"] = f"""
+        WITH {_TOKS}, {_SHINGLES3}
+        SELECT doc_id, seed,
+               MIN(md5(concat(CAST(seed AS VARCHAR), '|', shingle))) AS minhash
+        FROM sh, UNNEST([0,1,2,3,4,5,6,7]) AS s(seed)
+        GROUP BY doc_id, seed ORDER BY doc_id, seed
+    """
 
 
 def ext_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -115,6 +211,27 @@ def ext_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+ORACLE["ext_minhash_pairs"] = f"""
+        WITH {_TOKS}, {_SHINGLES3},
+        sig AS (
+            SELECT doc_id, seed,
+                   MIN(md5(concat(CAST(seed AS VARCHAR), '|', shingle))) AS minhash
+            FROM sh, UNNEST([0,1,2,3,4,5,6,7]) AS s(seed)
+            GROUP BY doc_id, seed
+        ),
+        bands AS (
+            SELECT doc_id, seed // 2 AS band,
+                   string_agg(minhash, ',' ORDER BY seed) AS band_key
+            FROM sig GROUP BY doc_id, seed // 2
+        )
+        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+        FROM bands a JOIN bands b
+          ON a.band = b.band AND a.band_key = b.band_key
+         AND a.doc_id < b.doc_id
+        ORDER BY doc_a, doc_b
+    """
+
+
 def ext_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact 3-gram Jaccard ≥ 0.1 via inverted-index join."""
     from mitoscape_spark.operators.dedup import ngram_jaccard_pairs
@@ -123,6 +240,25 @@ def ext_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ngram_jaccard_pairs(docs, threshold=0.1).orderBy(
         "doc_a", "doc_b"
     )
+
+
+ORACLE["ext_ngram_jaccard"] = f"""
+        WITH {_TOKS}, {_SHINGLES3},
+        sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
+        inter AS (
+            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS i
+            FROM sh a JOIN sh b
+              ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+            GROUP BY a.doc_id, b.doc_id
+        )
+        SELECT doc_a, doc_b,
+               ROUND(i / (sa.n + sb.n - i), 6) AS jaccard
+        FROM inter
+        JOIN sizes sa ON sa.doc_id = doc_a
+        JOIN sizes sb ON sb.doc_id = doc_b
+        WHERE i / (sa.n + sb.n - i) >= 0.1
+        ORDER BY doc_a, doc_b
+    """
 
 
 def ext_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -150,6 +286,47 @@ def ext_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+ORACLE["ext_dedup_near"] = f"""
+        WITH RECURSIVE {_TOKS}, {_SHINGLES3},
+        sig AS (
+            SELECT doc_id, seed,
+                   MIN(md5(concat(CAST(seed AS VARCHAR), '|', shingle))) AS minhash
+            FROM sh, UNNEST([0,1,2,3,4,5,6,7]) AS s(seed)
+            GROUP BY doc_id, seed
+        ),
+        bands AS (
+            SELECT doc_id, seed // 2 AS band,
+                   string_agg(minhash, ',' ORDER BY seed) AS band_key
+            FROM sig GROUP BY doc_id, seed // 2
+        ),
+        pairs AS (
+            SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+            FROM bands a JOIN bands b
+              ON a.band = b.band AND a.band_key = b.band_key
+             AND a.doc_id < b.doc_id
+        ),
+        edges AS (
+            SELECT doc_a AS s, doc_b AS d FROM pairs
+            UNION
+            SELECT doc_b, doc_a FROM pairs
+        ),
+        reach AS (
+            SELECT s, d FROM edges
+            UNION
+            SELECT r.s, e.d FROM reach r JOIN edges e ON r.d = e.s
+            WHERE r.s != e.d
+        ),
+        comp AS (
+            SELECT s AS id, LEAST(s, MIN(d)) AS component
+            FROM reach GROUP BY s
+        )
+        SELECT doc_id FROM documents d
+        LEFT JOIN comp c ON d.doc_id = c.id AND c.id != c.component
+        WHERE c.id IS NULL
+        ORDER BY doc_id
+    """
+
+
 def ext_fuzzy_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Record linkage: part names within edit distance 1–3, blocked on
     the first token (per-block equi-join, never a cross product), with
@@ -171,12 +348,52 @@ def ext_fuzzy_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     return fuzzy_pairs(part, "p_partkey", "p_name")
 
 
+ORACLE["ext_fuzzy_match"] = """
+        WITH b AS (
+            SELECT p_partkey, p_name,
+                   string_split(p_name, ' ')[1] AS blk
+            FROM part
+        )
+        SELECT a.p_partkey AS id_a, b2.p_partkey AS id_b,
+               levenshtein(a.p_name, b2.p_name) AS dist
+        FROM b a JOIN b b2
+          ON a.blk = b2.blk AND a.p_partkey < b2.p_partkey
+        WHERE levenshtein(a.p_name, b2.p_name) BETWEEN 1 AND 3
+        ORDER BY id_a, id_b
+    """
+
+
 def ext_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """16-bit SimHash fingerprints (majority vote over token md5 bits)."""
     from mitoscape_spark.operators.dedup import simhash
 
     docs = load_table(spark, sf_dir, "documents")
     return simhash(docs).orderBy("doc_id")
+
+
+ORACLE["ext_simhash"] = f"""
+        WITH {_TOKS},
+        tok AS (SELECT doc_id, unnest(t) AS tok FROM toks),
+        hv AS (
+            SELECT doc_id,
+                   (instr('0123456789abcdef', substring(md5(tok), 1, 1)) - 1) * 4096
+                 + (instr('0123456789abcdef', substring(md5(tok), 2, 1)) - 1) * 256
+                 + (instr('0123456789abcdef', substring(md5(tok), 3, 1)) - 1) * 16
+                 + (instr('0123456789abcdef', substring(md5(tok), 4, 1)) - 1) AS hval
+            FROM tok
+        ),
+        votes AS (
+            SELECT doc_id, b,
+                   SUM(CAST(FLOOR(hval / POW(2, b)) AS INT) % 2 * 2 - 1) AS vote
+            FROM hv, UNNEST(range(16)) AS r(b)
+            GROUP BY doc_id, b
+        )
+        SELECT doc_id,
+               CAST(SUM(CASE WHEN vote > 0
+                    THEN CAST(POW(2, b) AS BIGINT) ELSE 0 END) AS BIGINT)
+                   AS simhash
+        FROM votes GROUP BY doc_id ORDER BY doc_id
+    """
 
 
 def ext_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -191,6 +408,18 @@ def ext_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+ORACLE["ext_embedding_neardup"] = """
+        SELECT * FROM (
+            SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+                   ROUND(list_cosine_similarity(
+                       CAST(a.embedding AS DOUBLE[]),
+                       CAST(b.embedding AS DOUBLE[])), 6) AS cos
+            FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
+        ) WHERE cos >= 0.35
+        ORDER BY id_a, id_b
+    """
+
+
 # ------------------------------------------------------------ text
 def ext_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mitoscape_spark.operators.textstats import lang_id
@@ -199,11 +428,61 @@ def ext_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lang_id(docs).orderBy("doc_id")
 
 
+ORACLE["ext_lang_id"] = f"""
+        WITH {_TOKS},
+        scored AS (
+            SELECT doc_id, lang,
+                   len(list_intersect(t, stops)) AS hits
+            FROM toks, (VALUES
+                ('en', {_STOP_SQL['en']}),
+                ('fr', {_STOP_SQL['fr']}),
+                ('de', {_STOP_SQL['de']}),
+                ('es', {_STOP_SQL['es']})
+            ) AS p(lang, stops)
+        ),
+        best AS (
+            SELECT doc_id, lang, hits,
+                   ROW_NUMBER() OVER (
+                       PARTITION BY doc_id ORDER BY hits DESC, lang DESC
+                   ) AS rn
+            FROM scored
+        )
+        SELECT doc_id,
+               CASE WHEN hits > 0 THEN lang ELSE 'und' END AS lang_pred,
+               hits AS lang_hits
+        FROM best WHERE rn = 1 ORDER BY doc_id
+    """
+
+
 def ext_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mitoscape_spark.operators.textstats import quality_scores
 
     docs = load_table(spark, sf_dir, "documents")
     return quality_scores(docs).orderBy("doc_id")
+
+
+ORACLE["ext_quality"] = f"""
+        WITH base AS (
+            SELECT doc_id, text,
+                   len(string_split(lower(text), ' ')) AS n_tokens,
+                   length(text) - length(
+                       regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g')
+                   ) AS n_punct,
+                   len(list_intersect(
+                       string_split(lower(text), ' '),
+                       {_STOP_SQL['en']})) AS n_stopwords
+            FROM documents
+        )
+        SELECT doc_id, n_tokens,
+               ROUND((length(text) - n_tokens + 1.0) / n_tokens, 4)
+                   AS avg_word_len,
+               n_punct, n_stopwords,
+               ROUND(
+                   LEAST(n_tokens / 50.0, 1.0) * 0.4
+                   + (1 - LEAST(n_punct / GREATEST(length(text), 1) * 1.0, 1.0)) * 0.3
+                   + LEAST(n_stopwords / 5.0, 1.0) * 0.3, 4) AS quality
+        FROM base ORDER BY doc_id
+    """
 
 
 def ext_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -215,11 +494,48 @@ def ext_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     return repetition_scores(docs).orderBy("doc_id")
 
 
+ORACLE["ext_repetition"] = f"""
+        WITH {_TOKS},
+        base AS (
+            SELECT doc_id,
+                   ROUND(1.0 - len(list_distinct(t)) * 1.0 / len(t), 6)
+                       AS dup_token_frac
+            FROM toks
+        ),
+        big AS (
+            SELECT doc_id, t[i] || ' ' || t[i+1] AS bg
+            FROM toks, UNNEST(range(1, len(t))) AS r(i)
+        ),
+        bgc AS (
+            SELECT doc_id, bg, COUNT(*) AS c FROM big GROUP BY doc_id, bg
+        ),
+        bgm AS (
+            SELECT doc_id, MAX(c) * 1.0 / SUM(c) AS tbf
+            FROM bgc GROUP BY doc_id
+        )
+        SELECT b.doc_id, b.dup_token_frac,
+               ROUND(COALESCE(m.tbf, 0.0), 6) AS top_bigram_frac
+        FROM base b LEFT JOIN bgm m USING (doc_id) ORDER BY b.doc_id
+    """
+
+
 def ext_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mitoscape_spark.operators.textstats import fingerprints
 
     docs = load_table(spark, sf_dir, "documents")
     return fingerprints(docs).orderBy("doc_id")
+
+
+ORACLE["ext_fingerprint"] = f"""
+        WITH {_TOKS},
+        sh4 AS (
+            SELECT DISTINCT doc_id, array_to_string(t[i:i+3], ' ') AS shingle
+            FROM toks, UNNEST(range(1, greatest(len(t) - 2, 1))) AS r(i)
+            WHERE len(t) >= 4
+        )
+        SELECT doc_id, MIN(md5(shingle)) AS fingerprint
+        FROM sh4 GROUP BY doc_id ORDER BY doc_id
+    """
 
 
 def ext_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -240,6 +556,23 @@ def ext_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return weighted_sample_without_replacement(
         docs, "n_chars", k=10, id_col="doc_id", group_col="source"
     ).orderBy("source", "doc_id")
+
+
+ORACLE["ext_weighted_sample"] = """
+        WITH keyed AS (
+            SELECT source, doc_id, n_chars,
+                   LN((('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 13)
+                        )::BIGINT + 1.0) / 4503599627370497.0)
+                   / n_chars AS wk
+            FROM documents
+            WHERE n_chars IS NOT NULL AND n_chars > 0
+        )
+        SELECT source, doc_id, n_chars FROM keyed
+        QUALIFY ROW_NUMBER() OVER (
+            PARTITION BY source ORDER BY wk DESC, doc_id
+        ) <= 10
+        ORDER BY source, doc_id
+    """
 
 
 def ext_quantile_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -265,6 +598,26 @@ def ext_quantile_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+ORACLE["ext_quantile_norm"] = """
+        WITH pooled AS (
+            SELECT ROW_NUMBER() OVER (ORDER BY n_chars, doc_id) AS r,
+                   CAST(n_chars AS DOUBLE) AS v
+            FROM documents
+        ), pr AS (
+            SELECT doc_id, source, n_chars,
+                   CAST(FLOOR(
+                       PERCENT_RANK() OVER (
+                           PARTITION BY source ORDER BY n_chars, doc_id
+                       ) * (SELECT COUNT(*) - 1 FROM documents)
+                   ) AS BIGINT) + 1 AS k
+            FROM documents
+        )
+        SELECT p.doc_id, p.source, p.n_chars, l.v AS norm_score
+        FROM pr p JOIN pooled l ON p.k = l.r
+        ORDER BY p.doc_id
+    """
+
+
 def ext_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-level boilerplate signal
     (operators/textstats.py::boilerplate_fractions): per doc, the
@@ -278,6 +631,22 @@ def ext_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return boilerplate_fractions(docs, n=3, min_docs=3).orderBy("doc_id")
 
 
+ORACLE["ext_boilerplate"] = f"""
+        WITH {_TOKS}, {_SHINGLES3},
+        dfreq AS (
+            SELECT shingle, COUNT(*) AS df FROM sh GROUP BY shingle
+        )
+        SELECT s.doc_id,
+               COUNT(*) AS n_shingles,
+               CAST(SUM(CASE WHEN d.df >= 3 THEN 1 ELSE 0 END)
+                    AS BIGINT) AS n_common,
+               ROUND(SUM(CASE WHEN d.df >= 3 THEN 1 ELSE 0 END) * 1.0
+                     / COUNT(*), 6) AS boilerplate_frac
+        FROM sh s JOIN dfreq d USING (shingle)
+        GROUP BY s.doc_id ORDER BY s.doc_id
+    """
+
+
 def ext_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing fingerprint set (MOSS scheme): min 3-gram hash per
     4-window — local-match document fingerprinting, all JVM HOFs."""
@@ -285,6 +654,27 @@ def ext_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     return winnow_fingerprints(docs, k=3, window=4).orderBy("doc_id", "fp")
+
+
+ORACLE["ext_winnow_fingerprint"] = f"""
+        WITH {_TOKS},
+        grams AS (
+            SELECT doc_id, i,
+                   md5(array_to_string(t[i:i+2], ' ')) AS h
+            FROM toks, UNNEST(range(1, len(t) - 1)) AS r(i)
+            WHERE len(t) >= 3
+        ),
+        hs AS (
+            SELECT doc_id, list(h ORDER BY i) AS hl
+            FROM grams GROUP BY doc_id
+        ),
+        wins AS (
+            SELECT doc_id, list_min(hl[i:i+3]) AS fp
+            FROM hs, UNNEST(range(1, len(hl) - 2)) AS r(i)
+            WHERE len(hl) >= 4
+        )
+        SELECT DISTINCT doc_id, fp FROM wins ORDER BY doc_id, fp
+    """
 
 
 def ext_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -323,6 +713,32 @@ def ext_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+ORACLE["ext_winnow_pairs"] = f"""
+        WITH {_TOKS},
+        grams AS (
+            SELECT doc_id, i,
+                   md5(array_to_string(t[i:i+2], ' ')) AS h
+            FROM toks, UNNEST(range(1, len(t) - 1)) AS r(i)
+            WHERE len(t) >= 3
+        ),
+        hs AS (
+            SELECT doc_id, list(h ORDER BY i) AS hl
+            FROM grams GROUP BY doc_id
+        ),
+        wins AS (
+            SELECT DISTINCT doc_id, list_min(hl[i:i+3]) AS fp
+            FROM hs, UNNEST(range(1, len(hl) - 2)) AS r(i)
+            WHERE len(hl) >= 4
+        )
+        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+               CAST(COUNT(*) AS BIGINT) AS shared
+        FROM wins a JOIN wins b
+          ON a.fp = b.fp AND a.doc_id < b.doc_id
+        GROUP BY 1, 2 HAVING COUNT(*) >= 5
+        ORDER BY doc_a, doc_b
+    """
+
+
 def ext_cap_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source document cap (max 20 docs/source): deterministic
     md5-order rank within source — the mixture-balance primitive that
@@ -335,6 +751,18 @@ def ext_cap_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "source")
         .orderBy("doc_id")
     )
+
+
+ORACLE["ext_cap_per_source"] = """
+        SELECT doc_id, source FROM (
+            SELECT doc_id, source,
+                   ROW_NUMBER() OVER (
+                       PARTITION BY source
+                       ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id
+                   ) AS r
+            FROM documents
+        ) t WHERE r <= 20 ORDER BY doc_id
+    """
 
 
 def ext_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -358,6 +786,36 @@ def ext_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+ORACLE["ext_dedup_embedding"] = """
+        WITH RECURSIVE pairs AS (
+            SELECT a.vec_id AS doc_a, b.vec_id AS doc_b
+            FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
+            WHERE ROUND(list_cosine_similarity(
+                      CAST(a.embedding AS DOUBLE[]),
+                      CAST(b.embedding AS DOUBLE[])), 6) >= 0.35
+        ),
+        edges AS (
+            SELECT doc_a AS s, doc_b AS d FROM pairs
+            UNION
+            SELECT doc_b, doc_a FROM pairs
+        ),
+        reach AS (
+            SELECT s, d FROM edges
+            UNION
+            SELECT r.s, e.d FROM reach r JOIN edges e ON r.d = e.s
+            WHERE r.s != e.d
+        ),
+        comp AS (
+            SELECT s AS id, LEAST(s, MIN(d)) AS component
+            FROM reach GROUP BY s
+        )
+        SELECT vec_id FROM embeddings e
+        LEFT JOIN comp c ON e.vec_id = c.id AND c.id != c.component
+        WHERE c.id IS NULL
+        ORDER BY vec_id
+    """
+
+
 def ext_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet-style quality signal: per-doc mean NLL under an add-0.5
     bigram LM trained on the corpus itself (atypical word transitions
@@ -366,6 +824,32 @@ def ext_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     return bigram_lm_scores(docs).orderBy("doc_id")
+
+
+ORACLE["ext_lm_score"] = f"""
+        WITH {_TOKS},
+        bg AS (
+            SELECT doc_id, t[i] AS w1, t[i + 1] AS w2
+            FROM toks, UNNEST(range(1, len(t))) AS r(i)
+            WHERE len(t) >= 2
+        ),
+        bc AS (SELECT w1, w2, COUNT(*) AS cb FROM bg GROUP BY w1, w2),
+        uc AS (SELECT w1, COUNT(*) AS cu FROM bg GROUP BY w1),
+        v AS (
+            SELECT COUNT(DISTINCT x) AS nv
+            FROM toks, UNNEST(t) AS u(x)
+        )
+        SELECT g.doc_id,
+               COUNT(*) AS n_bigrams,
+               ROUND(AVG(-LN((bc.cb + 0.5) / (uc.cu + 0.5 * v.nv))), 4)
+                   AS nll
+        FROM bg g
+        JOIN bc USING (w1, w2)
+        JOIN uc USING (w1)
+        CROSS JOIN v
+        GROUP BY g.doc_id
+        ORDER BY g.doc_id
+    """
 
 
 def ext_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -380,6 +864,46 @@ def ext_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return common_span_removal(docs, n=4, min_docs=2).orderBy("doc_id")
 
 
+ORACLE["ext_substring_dedup"] = f"""
+        WITH {_TOKS},
+        grams AS (
+            SELECT doc_id, CAST(i AS INT) AS i,
+                   array_to_string(t[i:i+3], ' ') AS g
+            FROM toks, UNNEST(range(1, greatest(len(t) - 3, 0) + 1)) AS r(i)
+        ),
+        common AS (
+            SELECT g FROM grams GROUP BY g
+            HAVING COUNT(DISTINCT doc_id) >= 2
+        ),
+        covered AS (
+            SELECT DISTINCT doc_id, i + CAST(o AS INT) AS tokpos
+            FROM grams JOIN common USING (g)
+            CROSS JOIN UNNEST(range(4)) AS u(o)
+        ),
+        alltoks AS (
+            SELECT doc_id, CAST(j AS INT) AS tokpos, t[j] AS tok
+            FROM toks, UNNEST(range(1, len(t) + 1)) AS rr(j)
+        ),
+        kept AS (
+            SELECT a.doc_id, a.tokpos, a.tok FROM alltoks a
+            ANTI JOIN covered c
+            ON a.doc_id = c.doc_id AND a.tokpos = c.tokpos
+        ),
+        agg AS (
+            SELECT doc_id,
+                   string_agg(tok, ' ' ORDER BY tokpos) AS clean_text,
+                   COUNT(*) AS n_kept
+            FROM kept GROUP BY doc_id
+        )
+        SELECT d.doc_id,
+               COALESCE(a.clean_text, '') AS clean_text,
+               CAST(len(string_split(lower(d.text), ' '))
+                    - COALESCE(a.n_kept, 0) AS BIGINT) AS n_removed
+        FROM documents d LEFT JOIN agg a USING (doc_id)
+        ORDER BY d.doc_id
+    """
+
+
 def ext_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temperature-weighted source mixing (n_s^0.5 budget, 100-doc
     total): the multilingual-recipe sampler — head sources flattened,
@@ -392,6 +916,30 @@ def ext_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "source")
         .orderBy("doc_id")
     )
+
+
+ORACLE["ext_temperature_mix"] = """
+        WITH counts AS (
+            SELECT source, COUNT(*) AS n FROM documents GROUP BY source
+        ),
+        bud AS (
+            SELECT source,
+                   CAST(FLOOR(100.0 * POW(n, 0.5)
+                        / SUM(POW(n, 0.5)) OVER ()) AS BIGINT) AS b
+            FROM counts
+        ),
+        ranked AS (
+            SELECT doc_id, source,
+                   ROW_NUMBER() OVER (
+                       PARTITION BY source
+                       ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id
+                   ) AS rk
+            FROM documents
+        )
+        SELECT doc_id, source
+        FROM ranked JOIN bud USING (source)
+        WHERE rk <= b ORDER BY doc_id
+    """
 
 
 def ext_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -413,6 +961,40 @@ def ext_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "source", "quality")
         .orderBy("doc_id")
     )
+
+
+ORACLE["ext_quality_filter"] = f"""
+        WITH base AS (
+            SELECT doc_id, source, text,
+                   len(string_split(lower(text), ' ')) AS n_tokens,
+                   length(text) - length(
+                       regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g')
+                   ) AS n_punct,
+                   len(list_intersect(
+                       string_split(lower(text), ' '),
+                       {_STOP_SQL['en']})) AS n_stopwords
+            FROM documents
+        ),
+        scored AS (
+            SELECT doc_id, source,
+                   ROUND(
+                       LEAST(n_tokens / 50.0, 1.0) * 0.4
+                       + (1 - LEAST(n_punct / GREATEST(length(text), 1) * 1.0,
+                                    1.0)) * 0.3
+                       + LEAST(n_stopwords / 5.0, 1.0) * 0.3, 4) AS quality
+            FROM base
+        ),
+        ranked AS (
+            SELECT doc_id, source, quality,
+                   PERCENT_RANK() OVER (
+                       PARTITION BY source
+                       ORDER BY quality DESC, doc_id
+                   ) AS pr
+            FROM scored
+        )
+        SELECT doc_id, source, quality FROM ranked
+        WHERE pr <= 0.5 ORDER BY doc_id
+    """
 
 
 def ext_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -453,6 +1035,22 @@ def ext_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.createDataFrame(
         rows, "version int, n_docs bigint, sum_doc_id bigint"
     )
+
+
+ORACLE["ext_time_travel"] = """
+        WITH v1 AS (SELECT doc_id FROM documents WHERE doc_id % 5 < 2),
+        v2 AS (
+            SELECT doc_id FROM documents WHERE doc_id % 5 < 4
+        ),
+        v3 AS (SELECT doc_id FROM documents WHERE doc_id % 5 = 4)
+        SELECT 1 AS version, COUNT(*) AS n_docs,
+               CAST(SUM(doc_id) AS BIGINT) AS sum_doc_id FROM v1
+        UNION ALL
+        SELECT 2, COUNT(*), CAST(SUM(doc_id) AS BIGINT) FROM v2
+        UNION ALL
+        SELECT 3, COUNT(*), CAST(SUM(doc_id) AS BIGINT) FROM v3
+        ORDER BY version
+    """
 
 
 def ext_cluster_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -521,6 +1119,14 @@ def ext_cluster_balance_invariants(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
+ORACLE["ext_cluster_balance_invariants"] = """
+        SELECT CAST(COUNT(*) AS BIGINT) AS total_assigned,
+               1 AS k_ok,
+               1 AS quota_ok
+        FROM embeddings
+    """
+
+
 def ext_theta_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Set-EXPRESSION distinct counts via theta sketches (Spark 4
     DataSketches): per-event-type user sketches, then |A∩B| and |A∪B|
@@ -564,6 +1170,26 @@ def ext_theta_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+ORACLE["ext_theta_overlap"] = """
+        WITH u AS (
+            SELECT DISTINCT event_type, user_id FROM events
+        )
+        SELECT a.event_type AS type_a, b.event_type AS type_b,
+               CAST(COUNT(DISTINCT a.user_id) AS BIGINT) AS n_a,
+               CAST(COUNT(DISTINCT b.user_id) AS BIGINT) AS n_b,
+               CAST(COUNT(DISTINCT CASE WHEN a.user_id = b.user_id
+                    THEN a.user_id END) AS BIGINT) AS n_both,
+               CAST(COUNT(DISTINCT a.user_id)
+                    + COUNT(DISTINCT b.user_id)
+                    - COUNT(DISTINCT CASE WHEN a.user_id = b.user_id
+                          THEN a.user_id END) AS BIGINT) AS n_either
+        FROM u a CROSS JOIN u b
+        WHERE a.event_type < b.event_type
+        GROUP BY 1, 2
+        ORDER BY 1, 2
+    """
+
+
 def ext_sliding_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling 3-hour distinct users from MERGEABLE hourly THETA
     sketches: one sketch per hour (map-side partial agg), the rolling
@@ -605,6 +1231,23 @@ def ext_sliding_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+ORACLE["ext_sliding_distinct"] = """
+        WITH hours AS (
+            SELECT DISTINCT date_trunc('hour', ts) AS h FROM events
+        )
+        SELECT hours.h,
+               CAST(COUNT(DISTINCT e.user_id) AS BIGINT)
+                   AS n_users_3h
+        FROM hours
+        JOIN events e
+          ON date_trunc('hour', e.ts)
+             BETWEEN hours.h - INTERVAL 2 HOUR AND hours.h
+        GROUP BY hours.h
+        ORDER BY hours.h
+        LIMIT 500
+    """
+
+
 def ext_grouped_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic per-group MODE (most frequent event type per
     user, ties to the lexicographically smallest) via ``max_by`` over
@@ -629,6 +1272,26 @@ def ext_grouped_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+ORACLE["ext_grouped_mode"] = """
+        WITH counts AS (
+            SELECT user_id, event_type, COUNT(*) AS n
+            FROM events GROUP BY user_id, event_type
+        ),
+        ranked AS (
+            SELECT user_id, event_type, n,
+                   ROW_NUMBER() OVER (
+                       PARTITION BY user_id
+                       ORDER BY n DESC, event_type
+                   ) AS rk
+            FROM counts
+        )
+        SELECT user_id, event_type AS mode_type, n AS n_mode
+        FROM ranked WHERE rk = 1
+        ORDER BY user_id
+        LIMIT 1000
+    """
+
+
 def ext_row_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-free global row numbering (operators/packing.py::
     global_row_number): stable 0-based ids in orderkey order via the
@@ -645,6 +1308,16 @@ def ext_row_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("o_orderkey")
         .limit(1000)
     )
+
+
+ORACLE["ext_row_ids"] = """
+        SELECT o_orderkey,
+               CAST(ROW_NUMBER() OVER (ORDER BY o_orderkey) - 1
+                    AS BIGINT) AS row_id
+        FROM orders
+        ORDER BY o_orderkey
+        LIMIT 1000
+    """
 
 
 def ext_string_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -670,6 +1343,22 @@ def ext_string_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("c_custkey")
         .limit(500)
     )
+
+
+ORACLE["ext_string_funcs"] = """
+        SELECT c_custkey,
+               upper(c_name) AS u,
+               length(c_name) AS len,
+               lpad(c_name, 14, '_') AS padded,
+               substr(c_name, 1, 8) AS prefix,
+               regexp_replace(c_name, '[0-9]', '#', 'g') AS masked,
+               reverse(c_name) AS rev,
+               split_part(c_name, '_', 1) AS stem,
+               levenshtein(c_name, 'Customer_1') AS lev
+        FROM customer
+        ORDER BY c_custkey
+        LIMIT 500
+    """
 
 
 def ext_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -707,6 +1396,32 @@ def ext_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+ORACLE["ext_k_anonymity"] = """
+        WITH rare AS (
+            SELECT c_nationkey, c_mktsegment,
+                   COUNT(*) AS group_size
+            FROM customer
+            GROUP BY c_nationkey, c_mktsegment
+            HAVING COUNT(*) < 8
+        ),
+        kept AS (
+            SELECT COUNT(*) AS n
+            FROM customer c
+            WHERE NOT EXISTS (
+                SELECT 1 FROM rare r
+                WHERE r.c_nationkey = c.c_nationkey
+                  AND r.c_mktsegment = c.c_mktsegment
+            )
+        )
+        SELECT c_nationkey, c_mktsegment, group_size,
+               CAST(NULL AS BIGINT) AS n_kept_total
+        FROM rare
+        UNION ALL
+        SELECT NULL, NULL, NULL, n FROM kept
+        ORDER BY c_nationkey ASC NULLS LAST, c_mktsegment
+    """
+
+
 def ext_null_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Null-handling semantics surface: null-safe equality (`<=>` /
     IS NOT DISTINCT FROM), NULL-aware conditional aggregation, and
@@ -736,6 +1451,27 @@ def ext_null_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+ORACLE["ext_null_semantics"] = """
+        WITH ab AS (
+            SELECT event_id,
+                   CASE WHEN value < 20 THEN NULL
+                        ELSE event_type END AS ab,
+                   value
+            FROM events
+        )
+        SELECT ab,
+               COUNT(*) AS n,
+               COUNT(ab) AS n_nonnull_key,
+               CAST(SUM(CASE WHEN ab IS NOT DISTINCT FROM 'click'
+                        THEN 1 ELSE 0 END) AS BIGINT)
+                   AS n_nullsafe_click,
+               ROUND(AVG(value), 6) AS avg_value
+        FROM ab
+        GROUP BY ab
+        ORDER BY ab ASC NULLS FIRST
+    """
+
+
 def ext_datetime_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Datetime function breadth over event time: truncation to
     quarter, ISO parts, end-of-month, epoch arithmetic — restricted to
@@ -757,6 +1493,18 @@ def ext_datetime_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+ORACLE["ext_datetime_funcs"] = """
+        SELECT year(ts) AS y, quarter(ts) AS q, month(ts) AS m,
+               dayofmonth(ts) AS dom,
+               last_day(CAST(ts AS DATE)) AS eom,
+               COUNT(*) AS n
+        FROM events
+        GROUP BY 1, 2, 3, 4, 5
+        ORDER BY y, q, m, dom
+        LIMIT 200
+    """
+
+
 def ext_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style rule gate (operators/textstats.py::gopher_rules):
     five per-document quality rules + conjunction, all JVM column
@@ -765,6 +1513,88 @@ def ext_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     return gopher_rules(docs).orderBy("doc_id")
+
+
+ORACLE["ext_gopher_rules"] = """
+        WITH t AS (
+            SELECT doc_id,
+                   string_split(lower(text), ' ') AS toks,
+                   len(string_split(lower(text), ' ')) AS n,
+                   length(replace(text, ' ', ''))
+                       * 1.0 / len(string_split(lower(text), ' '))
+                       AS mean_len
+            FROM documents
+        ),
+        r AS (
+            SELECT doc_id,
+                   (n >= 20 AND n <= 1000) AS r_wordcount,
+                   (mean_len >= 2.0 AND mean_len <= 12.0) AS r_meanlen,
+                   (len(list_filter(toks,
+                        x -> regexp_matches(x, '^.*[a-z].*$')))
+                        * 1.0 / n >= 0.8) AS r_alpha,
+                   (len(list_intersect(list_distinct(toks),
+                        ['the','a','of','and','to','in','is','for']))
+                        >= 2) AS r_stopwords,
+                   (len(list_distinct(toks)) * 1.0 / n >= 0.2)
+                       AS r_repetition
+            FROM t
+        )
+        SELECT doc_id, r_wordcount, r_meanlen, r_alpha, r_stopwords,
+               r_repetition,
+               (r_wordcount AND r_meanlen AND r_alpha AND r_stopwords
+                AND r_repetition) AS passes
+        FROM r ORDER BY doc_id
+    """
+
+
+def _lpa_oracle_sql(n_iter: int = 5) -> str:
+    """Unrolled deterministic label propagation for ext_communities:
+    one materialized CTE per round restating EXACTLY the Spark update —
+    every node adopts its neighborhood's most frequent label (self-vote
+    weight 1), smallest label on ties. All-integer arithmetic, so the
+    match is exact; and because the Spark loop's early exit fires only
+    at a FIXED POINT of the update (changed==0 ⇒ further rounds are
+    identity), unrolling the full max_iter rounds here yields the
+    identical final state no matter when Spark stopped."""
+    its = []
+    for k in range(1, n_iter + 1):
+        its.append(f"""
+        it{k} AS MATERIALIZED (
+            SELECT node AS id, lbl FROM (
+                SELECT node, lbl,
+                       ROW_NUMBER() OVER (
+                           PARTITION BY node ORDER BY n DESC, lbl
+                       ) AS rn
+                FROM (
+                    SELECT node, lbl, COUNT(*) AS n FROM (
+                        SELECT e.a AS node, r.lbl
+                        FROM und e JOIN it{k - 1} r ON e.b = r.id
+                        UNION ALL
+                        SELECT id AS node, lbl FROM it{k - 1}
+                    ) GROUP BY node, lbl
+                )
+            ) WHERE rn = 1
+        )""")
+    return f"""
+        WITH ed AS MATERIALIZED (
+            SELECT DISTINCT l_suppkey AS s, l_partkey + 1000000 AS d
+            FROM lineitem WHERE l_quantity >= 48
+        ), und AS MATERIALIZED (
+            SELECT DISTINCT a, b FROM (
+                SELECT s AS a, d AS b FROM ed
+                UNION ALL
+                SELECT d AS a, s AS b FROM ed
+            )
+        ), it0 AS MATERIALIZED (
+            SELECT DISTINCT a AS id, a AS lbl FROM und
+        ),{",".join(its)}
+        SELECT lbl AS community,
+               CAST(COUNT(*) AS BIGINT) AS n_members
+        FROM it{n_iter}
+        GROUP BY lbl
+        ORDER BY n_members DESC, community
+        LIMIT 25
+    """
 
 
 def ext_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -794,6 +1624,9 @@ def ext_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.col("n_members").desc(), "community")
         .limit(25)
     )
+
+
+ORACLE["ext_communities"] = _lpa_oracle_sql()
 
 
 def ext_communities_cliques(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -835,6 +1668,18 @@ def ext_communities_cliques(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+ORACLE["ext_communities_cliques"] = """
+        SELECT CAST(MIN(n_nationkey) AS BIGINT) AS community,
+               CAST(COUNT(*) AS BIGINT) AS n_members
+        FROM nation WHERE n_nationkey <= 11
+        UNION ALL
+        SELECT CAST(MIN(n_nationkey) AS BIGINT),
+               CAST(COUNT(*) AS BIGINT)
+        FROM nation WHERE n_nationkey >= 12
+        ORDER BY community
+    """
+
+
 def ext_stream_embedding_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming embedding near-dedup service END-TO-END against a
     declarative oracle: the embeddings table streams in as two
@@ -864,6 +1709,91 @@ def ext_stream_embedding_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+ORACLE["ext_stream_embedding_dedup"] = ORACLE["ext_embedding_neardup"]
+
+
+def _stream_drift_oracle_sql() -> str:
+    """Per-batch drift reports restated from scratch: for each of the
+    two deterministic micro-batches (doc_id < 250 / >= 250), the
+    numeric-histogram PSI of n_chars and the categorical PSI of lang
+    against the full-corpus reference — the same bin/clamp/epsilon
+    arithmetic as the ext_drift_psi / ext_drift_categorical oracles,
+    parameterized by the batch predicate."""
+    blocks = []
+    for b, cond in ((0, "doc_id < 250"), (1, "doc_id >= 250")):
+        blocks.append(f"""
+        SELECT {b} AS batch_id, col_name, psi FROM (
+            WITH refm AS (
+                SELECT CAST(n_chars AS DOUBLE) AS value FROM documents
+                WHERE n_chars IS NOT NULL
+            ), edges AS (
+                SELECT MIN(value) AS lo, MAX(value) AS hi FROM refm
+            ), rb AS (
+                SELECT CASE WHEN (e.hi - e.lo) / 10 <= 0 THEN 0
+                            ELSE CAST(LEAST(GREATEST(FLOOR(
+                                (r.value - e.lo) / ((e.hi - e.lo) / 10)),
+                                0), 9) AS INT) END AS bin,
+                       COUNT(*) AS n_ref
+                FROM refm r CROSS JOIN edges e GROUP BY 1
+            ), cm AS (
+                SELECT CAST(n_chars AS DOUBLE) AS value FROM documents
+                WHERE ({cond}) AND n_chars IS NOT NULL
+            ), cb AS (
+                SELECT CASE WHEN (e.hi - e.lo) / 10 <= 0 THEN 0
+                            ELSE CAST(LEAST(GREATEST(FLOOR(
+                                (c.value - e.lo) / ((e.hi - e.lo) / 10)),
+                                0), 9) AS INT) END AS bin,
+                       COUNT(*) AS n_cur
+                FROM cm c CROSS JOIN edges e GROUP BY 1
+            ), j AS (
+                SELECT COALESCE(rb.bin, cb.bin) AS bin,
+                       COALESCE(n_ref, 0) AS n_ref,
+                       COALESCE(n_cur, 0) AS n_cur
+                FROM rb FULL OUTER JOIN cb ON rb.bin = cb.bin
+            ), t AS (
+                SELECT SUM(n_ref) AS tr, SUM(n_cur) AS tc FROM j
+            ), rc AS (
+                SELECT COALESCE(CAST(lang AS VARCHAR), ' __null__')
+                           AS value,
+                       COUNT(*) AS n_ref
+                FROM documents GROUP BY 1
+            ), cc AS (
+                SELECT COALESCE(CAST(lang AS VARCHAR), ' __null__')
+                           AS value,
+                       COUNT(*) AS n_cur
+                FROM documents WHERE ({cond}) GROUP BY 1
+            ), cj AS (
+                SELECT COALESCE(n_ref, 0) AS n_ref,
+                       COALESCE(n_cur, 0) AS n_cur
+                FROM rc FULL OUTER JOIN cc ON rc.value = cc.value
+            ), ct AS (
+                SELECT SUM(n_ref) AS tr, SUM(n_cur) AS tc FROM cj
+            )
+            SELECT 'n_chars' AS col_name,
+                   ROUND(SUM(
+                       (GREATEST(n_cur / t.tc, 1e-6)
+                        - GREATEST(n_ref / t.tr, 1e-6))
+                       * LN(GREATEST(n_cur / t.tc, 1e-6)
+                            / GREATEST(n_ref / t.tr, 1e-6))
+                   ), 6) AS psi
+            FROM j CROSS JOIN t
+            UNION ALL
+            SELECT 'lang',
+                   ROUND(SUM(
+                       (GREATEST(n_cur / ct.tc, 1e-6)
+                        - GREATEST(n_ref / ct.tr, 1e-6))
+                       * LN(GREATEST(n_cur / ct.tc, 1e-6)
+                            / GREATEST(n_ref / ct.tr, 1e-6))
+                   ), 6)
+            FROM cj CROSS JOIN ct
+        )""")
+    joined = " UNION ALL ".join(blocks)
+    return f"""
+        SELECT batch_id, col_name, psi FROM ({joined})
+        ORDER BY batch_id, col_name
+    """
+
+
 def ext_stream_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming drift-monitor service END-TO-END
     (streaming/sinks.py::stream_drift_monitor): documents stream in as
@@ -890,6 +1820,9 @@ def ext_stream_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda report: report.orderBy("batch_id", "col_name"),
         "batch_id long, col_name string, psi double",
     )
+
+
+ORACLE["ext_stream_drift"] = _stream_drift_oracle_sql()
 
 
 def _run_two_batch_stream_service(
@@ -967,6 +1900,9 @@ def ext_stream_text_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+ORACLE["ext_stream_text_dedup"] = ORACLE["ext_minhash_pairs"]
+
+
 def ext_incremental_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental embedding near-dup (operators/dedup.py::
     incremental_embedding_pairs): pairs ≥ 0.35 INVOLVING the new batch
@@ -985,6 +1921,20 @@ def ext_incremental_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("id_a", "id_b")
 
 
+ORACLE["ext_incremental_embedding"] = """
+        SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+               ROUND(list_cosine_similarity(
+                   CAST(a.embedding AS DOUBLE[]),
+                   CAST(b.embedding AS DOUBLE[])), 6) AS cos
+        FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
+        WHERE (a.vec_id >= 300 OR b.vec_id >= 300)
+          AND ROUND(list_cosine_similarity(
+                  CAST(a.embedding AS DOUBLE[]),
+                  CAST(b.embedding AS DOUBLE[])), 6) >= 0.35
+        ORDER BY id_a, id_b
+    """
+
+
 def ext_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact kNN JOIN (operators/similarity.py::knn_join): the top-5
     cosine neighbors for EVERY embedding row — the build-the-graph
@@ -1000,6 +1950,26 @@ def ext_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return knn_join(emb, k=5).orderBy(
         "id", F.col("cos").desc(), "nbr"
     )
+
+
+ORACLE["ext_knn_join"] = """
+        WITH pairs AS (
+            SELECT a.vec_id AS id, b.vec_id AS nbr,
+                   ROUND(list_cosine_similarity(
+                       CAST(a.embedding AS DOUBLE[]),
+                       CAST(b.embedding AS DOUBLE[])), 6) AS cos
+            FROM embeddings a JOIN embeddings b
+              ON a.vec_id <> b.vec_id
+        ), ranked AS (
+            SELECT id, nbr, cos,
+                   ROW_NUMBER() OVER (
+                       PARTITION BY id ORDER BY cos DESC, nbr
+                   ) AS rk
+            FROM pairs
+        )
+        SELECT id, nbr, cos FROM ranked WHERE rk <= 5
+        ORDER BY id, cos DESC, nbr
+    """
 
 
 def ext_knn_join_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1037,6 +2007,39 @@ def ext_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     return knn_classify(corpus, probes, k=10).orderBy("qid")
 
 
+ORACLE["ext_knn_classify"] = """
+        WITH q AS (
+            SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv
+            FROM embeddings WHERE vec_id % 10 = 0
+        ), c AS (
+            SELECT vec_id AS nbr, label,
+                   CAST(embedding AS DOUBLE[]) AS cv
+            FROM embeddings WHERE vec_id % 10 != 0
+        ), scored AS (
+            SELECT qid, nbr, label,
+                   ROUND(list_cosine_similarity(cv, qv), 6) AS cos
+            FROM q, c WHERE qid <> nbr
+        ), ranked AS (
+            SELECT qid, label,
+                   ROW_NUMBER() OVER (
+                       PARTITION BY qid ORDER BY cos DESC, nbr
+                   ) AS rk
+            FROM scored
+        ), votes AS (
+            SELECT qid, label, COUNT(*) AS votes
+            FROM ranked WHERE rk <= 10 GROUP BY qid, label
+        ), winner AS (
+            SELECT qid, label AS pred_label, votes,
+                   ROW_NUMBER() OVER (
+                       PARTITION BY qid ORDER BY votes DESC, label
+                   ) AS vr
+            FROM votes
+        )
+        SELECT qid, pred_label, votes FROM winner WHERE vr = 1
+        ORDER BY qid
+    """
+
+
 def ext_textnorm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet-style dedup-grade text normalization
     (functions/textnorm.py::normalize_for_dedup): lowercase →
@@ -1055,6 +2058,16 @@ def ext_textnorm(spark: SparkSession, sf_dir: str) -> DataFrame:
     return normed.orderBy("doc_id")
 
 
+# built from the module's own TEXTNORM_SQL constant — the single
+# source of truth the normalizer keeps adjacent to its Spark
+# expression; restating the regexes here would reintroduce the
+# drift the constant exists to prevent
+ORACLE["ext_textnorm"] = f"""
+        SELECT doc_id, {_TEXTNORM} AS norm_text
+        FROM documents ORDER BY doc_id
+    """
+
+
 def ext_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Asymmetric near-dup: shingle-set CONTAINMENT ≥ 0.8 pairs
     (operators/dedup.py::ngram_containment_pairs) — catches a short
@@ -1069,6 +2082,25 @@ def ext_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ngram_containment_pairs(docs, threshold=0.8).orderBy(
         "doc_a", "doc_b"
     )
+
+
+ORACLE["ext_containment"] = f"""
+        WITH {_TOKS}, {_SHINGLES3},
+        sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
+        inter AS (
+            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS i
+            FROM sh a JOIN sh b
+              ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+            GROUP BY a.doc_id, b.doc_id
+        )
+        SELECT doc_a, doc_b,
+               ROUND(i * 1.0 / LEAST(na.n, nb.n), 6) AS containment
+        FROM inter
+        JOIN sizes na ON na.doc_id = inter.doc_a
+        JOIN sizes nb ON nb.doc_id = inter.doc_b
+        WHERE ROUND(i * 1.0 / LEAST(na.n, nb.n), 6) >= 0.8
+        ORDER BY doc_a, doc_b
+    """
 
 
 def ext_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1123,6 +2155,14 @@ def ext_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stats.join(straddle, F.lit(True))
 
 
+ORACLE["ext_leakage_safe_split"] = """
+        SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
+               1 AS both_splits,
+               CAST(0 AS BIGINT) AS straddling_pairs
+        FROM documents
+    """
+
+
 def ext_pagerank_ring(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank against a SQL-stateable ground truth (round 4 — the
     driver-checkable companion to the rows-only ext_pagerank): on a
@@ -1148,6 +2188,12 @@ def ext_pagerank_ring(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("id")
     )
+
+
+ORACLE["ext_pagerank_ring"] = """
+        SELECT CAST(n_nationkey AS BIGINT) AS id, 0.04 AS rank
+        FROM nation ORDER BY id
+    """
 
 
 def ext_delete_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1187,6 +2233,25 @@ def ext_delete_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.createDataFrame(
         rows, "version int, n_docs bigint, sum_doc_id bigint"
     )
+
+
+ORACLE["ext_delete_vectors"] = """
+        WITH t AS (
+            SELECT 1 AS version, COUNT(*) AS n_docs,
+                   CAST(SUM(doc_id) AS BIGINT) AS sum_doc_id
+            FROM documents
+            UNION ALL
+            SELECT 2, COUNT(*), CAST(SUM(doc_id) AS BIGINT)
+            FROM documents WHERE doc_id % 7 <> 0
+            UNION ALL
+            SELECT 3, COUNT(*), CAST(SUM(doc_id) AS BIGINT)
+            FROM documents WHERE doc_id % 7 <> 0
+            UNION ALL
+            SELECT 4, COUNT(*), CAST(SUM(doc_id) AS BIGINT)
+            FROM documents WHERE doc_id % 7 <> 0
+        )
+        SELECT * FROM t ORDER BY version
+    """
 
 
 def ext_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1249,6 +2314,33 @@ def ext_table_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+ORACLE["ext_table_changes"] = """
+    WITH t AS (
+        SELECT 1 AS to_version, 'insert' AS _change_type,
+               COUNT(*) AS n_rows,
+               CAST(SUM(doc_id) AS BIGINT) AS sum_doc_id
+        FROM documents WHERE doc_id % 4 < 2
+        UNION ALL
+        SELECT 2, 'insert', COUNT(*), CAST(SUM(doc_id) AS BIGINT)
+        FROM documents WHERE doc_id % 4 = 2
+        UNION ALL
+        SELECT 3, 'delete', COUNT(*), CAST(SUM(doc_id) AS BIGINT)
+        FROM documents WHERE doc_id % 8 = 0
+    )
+    SELECT * FROM t ORDER BY to_version, _change_type
+"""
+
+
+def _zorder_oracle_expr(n_bits: int = 8) -> str:
+    """DuckDB bit-interleave expression mirroring layout.interleave_bits
+    (b1 = first column's bucket → odd bit positions)."""
+    terms = []
+    for i in range(n_bits):
+        terms.append(f"(((b1 >> {i}) & 1) << {2 * i + 1})")
+        terms.append(f"(((b2 >> {i}) & 1) << {2 * i})")
+    return " | ".join(terms)
+
+
 def ext_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Morton (z-order) clustering key over (o_custkey, o_totalprice):
     the multi-column data-skipping layout key, computed entirely as
@@ -1268,14 +2360,30 @@ def ext_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _zorder_oracle_expr(n_bits: int = 8) -> str:
-    """DuckDB bit-interleave expression mirroring layout.interleave_bits
-    (b1 = first column's bucket → odd bit positions)."""
-    terms = []
-    for i in range(n_bits):
-        terms.append(f"(((b1 >> {i}) & 1) << {2 * i + 1})")
-        terms.append(f"(((b2 >> {i}) & 1) << {2 * i})")
-    return " | ".join(terms)
+ORACLE["ext_zorder"] = f"""
+        WITH stats AS (
+            SELECT MIN(o_custkey) AS min1, MAX(o_custkey) AS max1,
+                   MIN(o_totalprice) AS min2, MAX(o_totalprice) AS max2
+            FROM orders
+        ),
+        b AS (
+            SELECT o_orderkey,
+                   LEAST(GREATEST(CAST(FLOOR(
+                       (CAST(o_custkey AS DOUBLE) - min1)
+                       / (CASE WHEN max1 - min1 > 0
+                               THEN CAST(max1 - min1 AS DOUBLE)
+                               ELSE 1.0 END) * 256) AS BIGINT),
+                       0), 255) AS b1,
+                   LEAST(GREATEST(CAST(FLOOR(
+                       (o_totalprice - min2)
+                       / (CASE WHEN max2 - min2 > 0
+                               THEN max2 - min2 ELSE 1.0 END) * 256)
+                       AS BIGINT), 0), 255) AS b2
+            FROM orders, stats
+        )
+        SELECT o_orderkey, CAST({_zorder_oracle_expr(8)} AS BIGINT) AS zval
+        FROM b ORDER BY zval, o_orderkey LIMIT 1000
+    """
 
 
 def ext_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1291,6 +2399,9 @@ def ext_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ngram_jaccard_pairs_prefix(docs, threshold=0.1).orderBy(
         "doc_a", "doc_b"
     )
+
+
+ORACLE["ext_jaccard_prefix"] = ORACLE["ext_ngram_jaccard"]
 
 
 def ext_user_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1315,6 +2426,22 @@ def ext_user_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("user_id")
     )
+
+
+ORACLE["ext_user_trend"] = """
+        WITH pts AS (
+            SELECT user_id,
+                   epoch(CAST(ts AS TIMESTAMP)) / 86400.0 AS x,
+                   value AS y
+            FROM events
+        )
+        SELECT user_id,
+               ROUND(regr_slope(y, x), 6) AS slope,
+               ROUND(regr_intercept(y, x), 4) AS intercept,
+               ROUND(regr_r2(y, x), 6) AS r2,
+               COUNT(*) AS n
+        FROM pts GROUP BY user_id ORDER BY user_id
+    """
 
 
 def ext_bpe_learned(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1356,6 +2483,36 @@ def ext_bpe_first_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+ORACLE["ext_bpe_first_merge"] = """
+        WITH words AS (
+            SELECT w, CAST(COUNT(*) AS BIGINT) AS n FROM (
+                SELECT UNNEST(regexp_split_to_array(lower(text), '\\s+'))
+                    AS w
+                FROM documents
+            ) WHERE w <> '' GROUP BY w
+            ORDER BY n DESC, w LIMIT 50000
+        ), prs AS (
+            -- word symbols are chars + an '</w>' end marker; adjacent
+            -- pair at position i pairs char i with char i+1 (or the
+            -- marker after the last char)
+            SELECT substr(w, i, 1) AS a,
+                   CASE WHEN i < len(w) THEN substr(w, i + 1, 1)
+                        ELSE '</w>' END AS b,
+                   n
+            FROM words, UNNEST(generate_series(1, len(w))) AS t(i)
+        )
+        SELECT a AS pair_a, b AS pair_b
+        FROM prs GROUP BY a, b
+        -- learner stopping rule: a pair seen fewer than twice is
+        -- memorization, not a merge (learn_merges breaks BEFORE
+        -- emitting it) — without this the oracle would return a row
+        -- on a no-repeats corpus where Spark returns none
+        HAVING SUM(n) >= 2
+        ORDER BY SUM(n) DESC, a DESC, b DESC
+        LIMIT 1
+    """
+
+
 def ext_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hypertable-style daily rollup with gap filling: per-user daily
     sums over the global date span, missing days zero-filled. The
@@ -1369,6 +2526,32 @@ def ext_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumnRenamed("key", "user_id")
         .orderBy("user_id", "day")
     )
+
+
+ORACLE["ext_gapfill"] = """
+        WITH bounds AS (
+            SELECT CAST(MIN(CAST(ts AS TIMESTAMP)) AS DATE) AS lo,
+                   CAST(MAX(CAST(ts AS TIMESTAMP)) AS DATE) AS hi
+            FROM events
+        ),
+        spine AS (
+            SELECT u.user_id, CAST(g.d AS DATE) AS day
+            FROM (SELECT DISTINCT user_id FROM events) u
+            CROSS JOIN bounds
+            CROSS JOIN UNNEST(generate_series(
+                CAST(lo AS TIMESTAMP), CAST(hi AS TIMESTAMP),
+                INTERVAL 1 DAY)) AS g(d)
+        ),
+        daily AS (
+            SELECT user_id, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
+                   ROUND(SUM(value), 4) AS total
+            FROM events GROUP BY 1, 2
+        )
+        SELECT s.user_id, s.day, COALESCE(d.total, 0.0) AS total
+        FROM spine s LEFT JOIN daily d
+        ON s.user_id = d.user_id AND s.day = d.day
+        ORDER BY s.user_id, s.day
+    """
 
 
 def ext_gapfill_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1385,6 +2568,61 @@ def ext_gapfill_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumnRenamed("key", "user_id")
         .orderBy("user_id", "day")
     )
+
+
+ORACLE["ext_gapfill_linear"] = """
+        WITH bounds AS (
+            SELECT CAST(MIN(CAST(ts AS TIMESTAMP)) AS DATE) AS lo,
+                   CAST(MAX(CAST(ts AS TIMESTAMP)) AS DATE) AS hi
+            FROM events
+        ),
+        spine AS (
+            SELECT u.user_id, CAST(g.d AS DATE) AS day
+            FROM (SELECT DISTINCT user_id FROM events) u
+            CROSS JOIN bounds
+            CROSS JOIN UNNEST(generate_series(
+                CAST(lo AS TIMESTAMP), CAST(hi AS TIMESTAMP),
+                INTERVAL 1 DAY)) AS g(d)
+        ),
+        daily AS (
+            SELECT user_id, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
+                   ROUND(SUM(value), 4) AS total
+            FROM events GROUP BY 1, 2
+        ),
+        j AS (
+            SELECT s.user_id, s.day, d.total
+            FROM spine s LEFT JOIN daily d
+            ON s.user_id = d.user_id AND s.day = d.day
+        ),
+        x AS (
+            SELECT user_id, day, total,
+                   last_value(total IGNORE NULLS) OVER (
+                       PARTITION BY user_id ORDER BY day
+                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
+                   ) AS pv,
+                   last_value(CASE WHEN total IS NOT NULL THEN day END
+                              IGNORE NULLS) OVER (
+                       PARTITION BY user_id ORDER BY day
+                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
+                   ) AS pd,
+                   first_value(total IGNORE NULLS) OVER (
+                       PARTITION BY user_id ORDER BY day
+                       ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING
+                   ) AS nv,
+                   first_value(CASE WHEN total IS NOT NULL THEN day END
+                               IGNORE NULLS) OVER (
+                       PARTITION BY user_id ORDER BY day
+                       ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING
+                   ) AS nd
+            FROM j
+        )
+        SELECT user_id, day,
+               CASE WHEN total IS NOT NULL THEN total
+                    ELSE ROUND(pv + (nv - pv)
+                               * date_diff('day', pd, day) * 1.0
+                               / date_diff('day', pd, nd), 4) END AS total
+        FROM x ORDER BY user_id, day
+    """
 
 
 def ext_audio_spectral(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1424,6 +2662,38 @@ def ext_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("step_idx")
 
 
+ORACLE["ext_funnel"] = """
+        WITH e AS (
+            SELECT user_id AS u, CAST(ts AS TIMESTAMP) AS t, event_type AS s
+            FROM events
+        ),
+        s0 AS (SELECT u, MIN(t) AS tp FROM e WHERE s = 'signup' GROUP BY u),
+        s1 AS (
+            SELECT e.u, MIN(e.t) AS tp FROM e JOIN s0 ON e.u = s0.u
+            WHERE e.s = 'view' AND e.t > s0.tp GROUP BY e.u
+        ),
+        s2 AS (
+            SELECT e.u, MIN(e.t) AS tp FROM e JOIN s1 ON e.u = s1.u
+            WHERE e.s = 'click' AND e.t > s1.tp GROUP BY e.u
+        ),
+        s3 AS (
+            SELECT e.u, MIN(e.t) AS tp FROM e JOIN s2 ON e.u = s2.u
+            WHERE e.s = 'purchase' AND e.t > s2.tp GROUP BY e.u
+        ),
+        counts AS (
+            SELECT 0 AS step_idx, 'signup' AS step,
+                   (SELECT COUNT(*) FROM s0) AS n_users
+            UNION ALL SELECT 1, 'view', (SELECT COUNT(*) FROM s1)
+            UNION ALL SELECT 2, 'click', (SELECT COUNT(*) FROM s2)
+            UNION ALL SELECT 3, 'purchase', (SELECT COUNT(*) FROM s3)
+        )
+        SELECT step_idx, step, n_users,
+               ROUND(n_users * 1.0 / FIRST_VALUE(n_users)
+                     OVER (ORDER BY step_idx), 6) AS frac_of_first
+        FROM counts ORDER BY step_idx
+    """
+
+
 def ext_funnel_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-bounded funnel (complete within 24h of entry): one chain
     per (user, entry event) — the semantics greedy-from-first gets
@@ -1434,6 +2704,41 @@ def ext_funnel_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     return funnel_counts_windowed(
         events, ["signup", "view", "click"], max_span_seconds=86400
     ).orderBy("step_idx")
+
+
+ORACLE["ext_funnel_windowed"] = """
+        WITH e AS (
+            SELECT user_id AS u, CAST(ts AS TIMESTAMP) AS t, event_type AS s
+            FROM events
+        ),
+        c0 AS (
+            SELECT u, t AS t0, t AS tp FROM e WHERE s = 'signup'
+        ),
+        c1 AS (
+            SELECT e.u, c0.t0, MIN(e.t) AS tp
+            FROM e JOIN c0 ON e.u = c0.u
+            WHERE e.s = 'view' AND e.t > c0.tp
+              AND e.t <= c0.t0 + INTERVAL 1 DAY
+            GROUP BY e.u, c0.t0
+        ),
+        c2 AS (
+            SELECT e.u, c1.t0, MIN(e.t) AS tp
+            FROM e JOIN c1 ON e.u = c1.u
+            WHERE e.s = 'click' AND e.t > c1.tp
+              AND e.t <= c1.t0 + INTERVAL 1 DAY
+            GROUP BY e.u, c1.t0
+        ),
+        counts AS (
+            SELECT 0 AS step_idx, 'signup' AS step,
+                   (SELECT COUNT(DISTINCT u) FROM c0) AS n_users
+            UNION ALL SELECT 1, 'view', (SELECT COUNT(DISTINCT u) FROM c1)
+            UNION ALL SELECT 2, 'click', (SELECT COUNT(DISTINCT u) FROM c2)
+        )
+        SELECT step_idx, step, n_users,
+               ROUND(n_users * 1.0 / FIRST_VALUE(n_users)
+                     OVER (ORDER BY step_idx), 6) AS frac_of_first
+        FROM counts ORDER BY step_idx
+    """
 
 
 def ext_dedup_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1454,6 +2759,121 @@ def ext_dedup_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_a", "doc_b"
     )
     return pair_metrics(predicted, truth)
+
+
+ORACLE["ext_dedup_eval"] = f"""
+        WITH {_TOKS}, {_SHINGLES3},
+        sig AS (
+            SELECT doc_id, seed,
+                   MIN(md5(concat(CAST(seed AS VARCHAR), '|', shingle))) AS minhash
+            FROM sh, UNNEST([0,1,2,3,4,5,6,7]) AS s(seed)
+            GROUP BY doc_id, seed
+        ),
+        bands AS (
+            SELECT doc_id, seed // 2 AS band,
+                   string_agg(minhash, ',' ORDER BY seed) AS band_key
+            FROM sig GROUP BY doc_id, seed // 2
+        ),
+        predicted AS (
+            SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+            FROM bands a JOIN bands b
+              ON a.band = b.band AND a.band_key = b.band_key
+             AND a.doc_id < b.doc_id
+        ),
+        sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
+        inter AS (
+            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS i
+            FROM sh a JOIN sh b
+              ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+            GROUP BY a.doc_id, b.doc_id
+        ),
+        truth AS (
+            SELECT doc_a, doc_b FROM inter
+            JOIN sizes sa ON sa.doc_id = doc_a
+            JOIN sizes sb ON sb.doc_id = doc_b
+            WHERE i * 1.0 / (sa.n + sb.n - i) >= 0.2
+        ),
+        hit AS (
+            SELECT doc_a, doc_b FROM predicted
+            INTERSECT SELECT doc_a, doc_b FROM truth
+        ),
+        c AS (
+            SELECT (SELECT COUNT(*) FROM predicted) AS n_predicted,
+                   (SELECT COUNT(*) FROM truth) AS n_truth,
+                   (SELECT COUNT(*) FROM hit) AS n_hit
+        )
+        SELECT n_predicted, n_truth, n_hit,
+               ROUND(n_hit * 1.0 / GREATEST(n_predicted, 1), 6) AS precision,
+               ROUND(n_hit * 1.0 / GREATEST(n_truth, 1), 6) AS recall,
+               ROUND(2 * (n_hit * 1.0 / GREATEST(n_predicted, 1))
+                       * (n_hit * 1.0 / GREATEST(n_truth, 1))
+                     / GREATEST(n_hit * 1.0 / GREATEST(n_predicted, 1)
+                                + n_hit * 1.0 / GREATEST(n_truth, 1),
+                                1e-12), 6) AS f1
+        FROM c
+    """
+
+
+def _pagerank_oracle_sql(n_iter: int = 30, damping: float = 0.85) -> str:
+    """Unrolled power iteration for ext_pagerank: one chained CTE per
+    round, each restating EXACTLY the Spark expression —
+    (1-d)/n + d*(inflow + dangling/n) with inflow = Σ rank/outdeg over
+    in-edges and dangling = rank mass of out-degree-0 nodes from the
+    PREVIOUS round. tol=0 on the Spark side fixes the iteration count,
+    so the two engines run the identical float recurrence (subtraction
+    written as ``1.0 - 0.85``, not ``0.15`` — Python computes the lit
+    the same way, and 1.0-0.85 != 0.15 in IEEE doubles)."""
+    its = []
+    for k in range(1, n_iter + 1):
+        its.append(f"""
+        it{k} AS MATERIALIZED (
+            SELECT nd.id,
+                   (1.0 - {damping})/nn.n
+                   + {damping} * (COALESCE(inf.inflow, 0.0) + dang.m/nn.n)
+                   AS rank
+            FROM nodes nd
+            CROSS JOIN nn
+            LEFT JOIN (
+                SELECT e.d AS id, SUM(r.rank / od.deg) AS inflow
+                FROM e JOIN it{k - 1} r ON e.s = r.id
+                       JOIN od ON od.s = e.s
+                GROUP BY e.d
+            ) inf ON inf.id = nd.id
+            CROSS JOIN (
+                SELECT COALESCE(SUM(r.rank), 0.0) AS m FROM it{k - 1} r
+                WHERE r.id NOT IN (SELECT s FROM od)
+            ) dang
+        )""")
+    return f"""
+        WITH seq AS MATERIALIZED (
+            SELECT user_id, event_type,
+                   LEAD(event_type) OVER (
+                       PARTITION BY user_id
+                       ORDER BY CAST(ts AS TIMESTAMP), event_id
+                   ) AS next_type
+            FROM events
+        ), e AS MATERIALIZED (
+            SELECT s, d FROM (
+                SELECT s, d, n, AVG(n) OVER () AS mean_n FROM (
+                    SELECT event_type AS s, next_type AS d,
+                           COUNT(*) AS n
+                    FROM seq WHERE next_type IS NOT NULL
+                    GROUP BY 1, 2
+                )
+            ) WHERE n > mean_n
+        ), nodes AS MATERIALIZED (
+            SELECT DISTINCT id FROM (
+                SELECT s AS id FROM e UNION ALL SELECT d FROM e
+            )
+        ), nn AS MATERIALIZED (
+            SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM nodes
+        ), od AS MATERIALIZED (
+            SELECT s, COUNT(*) AS deg FROM e GROUP BY s
+        ), it0 AS MATERIALIZED (
+            SELECT id, 1.0/nn.n AS rank FROM nodes CROSS JOIN nn
+        ),{",".join(its)}
+        SELECT id, ROUND(rank, 8) AS rank FROM it{n_iter} ORDER BY id
+    """
 
 
 def ext_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1497,6 +2917,9 @@ def ext_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pagerank(edges, max_iter=30, tol=0.0).orderBy("id")
 
 
+ORACLE["ext_pagerank"] = _pagerank_oracle_sql()
+
+
 def ext_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user EWMA of daily event totals, recursion-free: the decay
     sum factors into two cumulative window sums rescaled per row
@@ -1509,6 +2932,32 @@ def ext_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumnRenamed("key", "user_id")
         .orderBy("user_id", "day")
     )
+
+
+ORACLE["ext_ewma"] = """
+        WITH daily AS (
+            SELECT user_id AS key,
+                   CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
+                   ROUND(SUM(value), 4) AS total
+            FROM events GROUP BY 1, 2
+        ),
+        t AS (
+            SELECT key, day, total,
+                   CAST(datediff('day',
+                        MIN(day) OVER (PARTITION BY key), day) AS DOUBLE)
+                       AS tt
+            FROM daily
+        )
+        SELECT key AS user_id, day, total,
+               ROUND(
+                   (SUM(total * POW(0.9, -tt)) OVER w * POW(0.9, tt))
+                   / (SUM(POW(0.9, -tt)) OVER w * POW(0.9, tt)), 6)
+                   AS ewma
+        FROM t
+        WINDOW w AS (PARTITION BY key ORDER BY day
+                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+        ORDER BY user_id, day
+    """
 
 
 def ext_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1533,6 +2982,40 @@ def ext_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+ORACLE["ext_entity_resolution"] = """
+        WITH RECURSIVE b AS (
+            SELECT p_partkey, p_name,
+                   string_split(p_name, ' ')[1] AS blk
+            FROM part
+        ),
+        pairs AS (
+            SELECT a.p_partkey AS pa, b2.p_partkey AS pb
+            FROM b a JOIN b b2
+              ON a.blk = b2.blk AND a.p_partkey < b2.p_partkey
+            WHERE levenshtein(a.p_name, b2.p_name) BETWEEN 1 AND 3
+        ),
+        edges AS (
+            SELECT pa AS s, pb AS d FROM pairs
+            UNION
+            SELECT pb, pa FROM pairs
+        ),
+        reach AS (
+            SELECT s, d FROM edges
+            UNION
+            SELECT r.s, e.d FROM reach r JOIN edges e ON r.d = e.s
+            WHERE r.s != e.d
+        ),
+        comp AS (
+            SELECT s AS id, LEAST(s, MIN(d)) AS component
+            FROM reach GROUP BY s
+        )
+        SELECT p_partkey FROM part p
+        LEFT JOIN comp c ON p.p_partkey = c.id AND c.id != c.component
+        WHERE c.id IS NULL
+        ORDER BY p_partkey
+    """
+
+
 def ext_group_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Leakage-safe train/test split: events assigned by their USER's
     hash band (80/20), so no user straddles splits — the entity-level
@@ -1553,6 +3036,20 @@ def ext_group_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("split")
     )
+
+
+ORACLE["ext_group_split"] = """
+        WITH s AS (
+            SELECT user_id,
+                   CASE WHEN substr(md5(CAST(user_id AS VARCHAR)), 1, 4)
+                             < 'cccc'
+                        THEN 'train' ELSE 'test' END AS split
+            FROM events
+        )
+        SELECT split, COUNT(*) AS n_events,
+               CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users
+        FROM s GROUP BY split ORDER BY split
+    """
 
 
 def ext_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1601,6 +3098,38 @@ def ext_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+ORACLE["ext_ab_test"] = """
+        WITH per_user AS (
+            SELECT user_id,
+                   CASE WHEN SUM(CASE WHEN event_type = 'purchase'
+                                      THEN 1 ELSE 0 END) >= 14
+                        THEN 1 ELSE 0 END AS converted,
+                   CAST(user_id % 2 AS INT) AS variant
+            FROM events GROUP BY user_id
+        ),
+        by_variant AS (
+            SELECT variant, COUNT(*) AS n, SUM(converted) AS conv
+            FROM per_user GROUP BY variant
+        ),
+        wide AS (
+            SELECT
+                MAX(CASE WHEN variant = 0 THEN n END) AS n0,
+                MAX(CASE WHEN variant = 0 THEN conv END) AS c0,
+                MAX(CASE WHEN variant = 1 THEN n END) AS n1,
+                MAX(CASE WHEN variant = 1 THEN conv END) AS c1
+            FROM by_variant
+        )
+        SELECT n0 AS n_control, n1 AS n_treat,
+               ROUND(c0 * 1.0 / n0, 6) AS rate_control,
+               ROUND(c1 * 1.0 / n1, 6) AS rate_treat,
+               ROUND(((c1 * 1.0 / n1) - (c0 * 1.0 / n0))
+                     / SQRT(((c0 + c1) * 1.0 / (n0 + n1))
+                            * (1 - (c0 + c1) * 1.0 / (n0 + n1))
+                            * (1.0 / n0 + 1.0 / n1)), 6) AS z_score
+        FROM wide
+    """
+
+
 def ext_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Last-touch attribution: each purchase credits the user's most
     recent click strictly before it (one per-user ordered window with
@@ -1638,6 +3167,28 @@ def ext_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+ORACLE["ext_attribution"] = """
+        WITH e AS (
+            SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts,
+                   event_type
+            FROM events
+        ),
+        marked AS (
+            SELECT event_id, user_id, ts, event_type,
+                   LAST_VALUE(CASE WHEN event_type = 'click' THEN ts END
+                              IGNORE NULLS) OVER (
+                       PARTITION BY user_id ORDER BY ts, event_id
+                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
+                   ) AS click_ts
+            FROM e
+        )
+        SELECT event_id, user_id, ts AS purchase_ts, click_ts,
+               CASE WHEN click_ts IS NOT NULL
+                    THEN epoch(ts) - epoch(click_ts) END AS gap_seconds
+        FROM marked WHERE event_type = 'purchase' ORDER BY event_id
+    """
+
+
 def ext_top_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Most frequent 3-step event paths (two lead() windows + one
     count) — sequential pattern mining's workhorse query."""
@@ -1658,6 +3209,25 @@ def ext_top_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n"))
     )
     return paths.orderBy(F.col("n").desc(), F.col("path")).limit(20)
+
+
+ORACLE["ext_top_paths"] = """
+        WITH e AS (
+            SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts,
+                   event_type
+            FROM events
+        ),
+        seq AS (
+            SELECT event_type AS s1,
+                   LEAD(event_type, 1) OVER w AS s2,
+                   LEAD(event_type, 2) OVER w AS s3
+            FROM e
+            WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+        )
+        SELECT s1 || '>' || s2 || '>' || s3 AS path, COUNT(*) AS n
+        FROM seq WHERE s3 IS NOT NULL
+        GROUP BY 1 ORDER BY n DESC, path LIMIT 20
+    """
 
 
 def ext_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1688,6 +3258,20 @@ def ext_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+ORACLE["ext_histogram"] = """
+        WITH stats AS (
+            SELECT MIN(o_totalprice) AS lo, MAX(o_totalprice) AS hi
+            FROM orders
+        )
+        SELECT LEAST(GREATEST(CAST(FLOOR(
+                   (o_totalprice - lo) / ((hi - lo) / 20)) AS INT), 0), 19)
+                   AS bin,
+               COUNT(*) AS n
+        FROM orders, stats
+        GROUP BY 1 ORDER BY bin
+    """
+
+
 def ext_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-order Markov matrix of per-user event paths: one lead()
     window over the facts, probabilities computed on the tiny
@@ -1698,6 +3282,26 @@ def ext_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     return event_transitions(events).orderBy("from_type", "to_type")
 
 
+ORACLE["ext_event_transitions"] = """
+        WITH seq AS (
+            SELECT event_type AS from_type,
+                   LEAD(event_type) OVER (
+                       PARTITION BY user_id
+                       ORDER BY CAST(ts AS TIMESTAMP), event_id
+                   ) AS to_type
+            FROM events
+        ),
+        pairs AS (
+            SELECT from_type, to_type, COUNT(*) AS n
+            FROM seq WHERE to_type IS NOT NULL
+            GROUP BY from_type, to_type
+        )
+        SELECT from_type, to_type, n,
+               ROUND(n * 1.0 / SUM(n) OVER (PARTITION BY from_type), 6) AS p
+        FROM pairs ORDER BY from_type, to_type
+    """
+
+
 def ext_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cohort retention triangle: users grouped by first-seen week,
     counted distinct in each later week — two user-keyed shuffles
@@ -1706,6 +3310,26 @@ def ext_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     events = load_table(spark, sf_dir, "events")
     return cohort_retention(events).orderBy("cohort_week", "week_offset")
+
+
+ORACLE["ext_cohort_retention"] = """
+        WITH e AS (
+            SELECT user_id AS u,
+                   CAST(date_trunc('week', CAST(ts AS TIMESTAMP)) AS DATE)
+                       AS w
+            FROM events
+        ),
+        cohorts AS (
+            SELECT u, MIN(w) AS cohort_week FROM e GROUP BY u
+        )
+        SELECT cohort_week,
+               CAST(datediff('day', cohort_week, w) // 7 AS INT)
+                   AS week_offset,
+               CAST(COUNT(DISTINCT e.u) AS BIGINT) AS n_users
+        FROM e JOIN cohorts ON e.u = cohorts.u
+        GROUP BY cohort_week, week_offset
+        ORDER BY cohort_week, week_offset
+    """
 
 
 def ext_snapshot_format(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1736,6 +3360,13 @@ def ext_snapshot_format(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.createDataFrame(
         rows, "lang string, n bigint, sum_doc_id bigint"
     )
+
+
+ORACLE["ext_snapshot_format"] = """
+        SELECT lang, COUNT(*) AS n,
+               CAST(SUM(doc_id) AS BIGINT) AS sum_doc_id
+        FROM documents GROUP BY lang ORDER BY lang
+    """
 
 
 def ext_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1775,6 +3406,20 @@ def ext_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("o_orderpriority")
 
 
+ORACLE["ext_incremental_agg"] = """
+        WITH facts AS (
+            SELECT o_orderpriority,
+                   CAST(ROUND(o_totalprice * 100) AS BIGINT) AS cents
+            FROM orders
+            WHERE NOT (o_orderkey % 10 != 0 AND o_orderkey % 7 = 0)
+        )
+        SELECT o_orderpriority,
+               CAST(SUM(cents) AS BIGINT) AS sum_cents,
+               COUNT(*) AS n
+        FROM facts GROUP BY o_orderpriority ORDER BY o_orderpriority
+    """
+
+
 def ext_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Training-data chunking: overlapping 64-token windows, stride 48
     (generator + project, no shuffle, no Python)."""
@@ -1784,6 +3429,21 @@ def ext_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return chunk_documents(docs, chunk_size=64, overlap=16).orderBy(
         "doc_id", "chunk_idx"
     )
+
+
+ORACLE["ext_chunk_documents"] = """
+        WITH nc AS (
+            SELECT doc_id, t,
+                   GREATEST(CAST(CEIL((len(t) - 16.0) / 48.0) AS INT), 1)
+                       AS n_chunks
+            FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents)
+        )
+        SELECT doc_id, i AS chunk_idx,
+               array_to_string(t[i*48+1 : i*48+64], ' ') AS chunk,
+               len(t[i*48+1 : i*48+64]) AS n_tokens
+        FROM nc, UNNEST(range(n_chunks)) AS r(i)
+        ORDER BY doc_id, chunk_idx
+    """
 
 
 # ------------------------------------------------------- sessions
@@ -1798,14 +3458,45 @@ def ext_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+ORACLE["ext_session_window"] = """
+        WITH e AS (
+            SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, value FROM events
+        ),
+        flagged AS (
+            SELECT user_id, ts, value,
+                   CASE WHEN ts - LAG(ts) OVER w <= INTERVAL 5 MINUTE
+                        THEN 0 ELSE 1 END AS new_session
+            FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts)
+        ),
+        sessions AS (
+            SELECT user_id, ts, value,
+                   SUM(new_session) OVER (
+                       PARTITION BY user_id ORDER BY ts
+                       ROWS UNBOUNDED PRECEDING
+                   ) AS session_id
+            FROM flagged
+        )
+        SELECT user_id,
+               MIN(ts) AS session_start,
+               MAX(ts) + INTERVAL 5 MINUTE AS session_end,
+               COUNT(*) AS n_events,
+               ROUND(SUM(value), 4) AS sum_value
+        FROM sessions GROUP BY user_id, session_id
+        ORDER BY user_id, session_start
+    """
+
+
 # --------------------------------------------- SQL-path (spark.sql)
 # The reference has no query language (SURVEY §3: hard-wired DataFrame
-# programs); the rebuild gets a full SQL frontend from Spark. These run
-# THROUGH spark.sql over registered views — same Catalyst plans as the
-# DataFrame API, proving the SQL surface end-to-end. Shapes are TPC-H
-# Q1/Q3 analogs (the corpus lacks some TPC-H columns; filters adjusted).
-
-_PRICING_SUMMARY_SQL = """
+# programs); the rebuild gets a full SQL frontend from Spark. Each
+# _SQL_TEXT entry is one declared query: _run_sql registers the corpus
+# views and hands the text to spark.sql (same Catalyst plans as the
+# DataFrame API), and the same text is its DuckDB oracle, so both
+# engines run it by construction. Shapes are TPC-H analogs (the corpus
+# lacks some TPC-H columns; filters adjusted).
+_SQL_TEXT = {
+    # TPC-H Q1 shape: pricing summary, one grouped scan of the fact.
+    "ext_sql_pricing_summary": """
     SELECT l_returnflag, l_linestatus,
            ROUND(SUM(l_quantity), 2)                          AS sum_qty,
            ROUND(SUM(l_extendedprice), 2)                     AS sum_base,
@@ -1817,9 +3508,9 @@ _PRICING_SUMMARY_SQL = """
     WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
     GROUP BY l_returnflag, l_linestatus
     ORDER BY l_returnflag, l_linestatus
-"""
-
-_SHIPPING_PRIORITY_SQL = """
+""",
+    # TPC-H Q3 shape: customer ⋈ orders ⋈ lineitem, top-10 by revenue.
+    "ext_sql_shipping_priority": """
     SELECT o.o_orderkey,
            ROUND(SUM(l.l_extendedprice * (1 - l.l_discount)), 2) AS revenue,
            o.o_orderdate
@@ -1830,24 +3521,13 @@ _SHIPPING_PRIORITY_SQL = """
     GROUP BY o.o_orderkey, o.o_orderdate
     ORDER BY revenue DESC, o_orderkey
     LIMIT 10
-"""
-
-
-def ext_sql_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mitoscape_spark.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_PRICING_SUMMARY_SQL)
-
-
-def ext_sql_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mitoscape_spark.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_SHIPPING_PRIORITY_SQL)
-
-
-_RECURSIVE_SPINE_SQL = """
+""",
+    # Recursive CTE (Spark 4.1): a generated month spine LEFT-joined to
+    # the monthly order rollup — gap-filled time series without a
+    # calendar table, a shape every reporting pipeline needs. The spine
+    # recursion is driver-cheap (12 iterations over 1 row); the rollup is
+    # one ordinary hash agg. Same SQL verbatim on DuckDB.
+    "ext_sql_recursive_cte": """
     WITH RECURSIVE months(m) AS (
         SELECT 1
         UNION ALL
@@ -1865,41 +3545,13 @@ _RECURSIVE_SPINE_SQL = """
         GROUP BY EXTRACT(MONTH FROM o_orderdate)
     ) o ON months.m = o.m
     ORDER BY months.m
-"""
-
-
-def ext_sql_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recursive CTE (Spark 4.1): a generated month spine LEFT-joined to
-    the monthly order rollup — gap-filled time series without a
-    calendar table, a shape every reporting pipeline needs. The spine
-    recursion is driver-cheap (12 iterations over 1 row); the rollup is
-    one ordinary hash agg. Same SQL verbatim on DuckDB."""
-    from mitoscape_spark.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_RECURSIVE_SPINE_SQL)
-
-
-def ext_sql_pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SQL pipe syntax (Spark 4): linear ``|>`` operator chaining — the
-    readable form of nested subqueries. Catalyst plans it identically
-    to the classic formulation (the oracle states the same query in
-    standard SQL and must hash-match)."""
-    from mitoscape_spark.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(
-        """
-        FROM orders
-        |> WHERE o_totalprice > 100000
-        |> AGGREGATE COUNT(*) AS n, ROUND(SUM(o_totalprice), 2) AS rev
-           GROUP BY o_orderstatus
-        |> ORDER BY o_orderstatus
-        """
-    )
-
-
-_LATERAL_TOPN_SQL = """
+""",
+    # Correlated LATERAL subquery — top-2 orders per customer. Catalyst
+    # decorrelates the per-row LIMIT into a window-rank over one join (no
+    # per-customer re-execution); the same SQL runs verbatim on DuckDB.
+    # The declarative form of the top-n-per-group pattern every pipeline
+    # reinvents.
+    "ext_sql_lateral_topn": """
     SELECT c.c_custkey, t.o_orderkey, t.o_totalprice
     FROM customer c,
     LATERAL (
@@ -1908,23 +3560,11 @@ _LATERAL_TOPN_SQL = """
       ORDER BY o_totalprice DESC, o_orderkey LIMIT 2
     ) t
     ORDER BY c.c_custkey, t.o_totalprice DESC, t.o_orderkey
-"""
-
-
-def ext_sql_lateral_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Correlated LATERAL subquery — top-2 orders per customer. Catalyst
-    decorrelates the per-row LIMIT into a window-rank over one join (no
-    per-customer re-execution); the same SQL runs verbatim on DuckDB.
-    The declarative form of the top-n-per-group pattern every pipeline
-    reinvents."""
-    from mitoscape_spark.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_LATERAL_TOPN_SQL)
-
-
-
-_LOCAL_SUPPLIER_VOLUME_SQL = """
+""",
+    # TPC-H Q5 shape: 6-table join with a same-nation residual —
+    # exercises Catalyst join ordering + broadcast selection across the
+    # dimension chain (nation/region broadcast; fact joins shuffle).
+    "ext_sql_local_supplier_volume": """
     SELECT n.n_name,
            ROUND(SUM(l.l_extendedprice * (1 - l.l_discount)), 2) AS revenue
     FROM customer c
@@ -1937,18 +3577,424 @@ _LOCAL_SUPPLIER_VOLUME_SQL = """
     WHERE r.r_name = 'ASIA'
     GROUP BY n.n_name
     ORDER BY revenue DESC, n_name
-"""
+""",
+    # TPC-H Q10 shape: top customers by returned-item revenue — fact
+    # ⋈ fact ⋈ dim with a pushed-down flag filter and top-k.
+    "ext_sql_returned_items": """
+    SELECT c.c_custkey, c.c_name,
+           ROUND(SUM(l.l_extendedprice * (1 - l.l_discount)), 2) AS revenue,
+           ROUND(c.c_acctbal, 2) AS c_acctbal,
+           n.n_name
+    FROM customer c
+    JOIN orders o   ON c.c_custkey = o.o_custkey
+    JOIN lineitem l ON l.l_orderkey = o.o_orderkey
+    JOIN nation n   ON c.c_nationkey = n.n_nationkey
+    WHERE l.l_returnflag = 'R'
+    GROUP BY c.c_custkey, c.c_name, c.c_acctbal, n.n_name
+    ORDER BY revenue DESC, c_custkey
+    LIMIT 20
+""",
+    # TPC-H Q7 shape: bi-directional nation-pair trade volume by ship
+    # year. Two roles of the same dimension (nation joined twice) + a
+    # disjunctive cross-table predicate Catalyst can only apply post-join
+    # — the dimension joins broadcast, the two fact joins shuffle.
+    "ext_sql_volume_shipping": """
+    SELECT ns.n_name AS supp_nation, nc.n_name AS cust_nation,
+           CAST(EXTRACT(YEAR FROM l.l_shipdate) AS INT) AS l_year,
+           ROUND(SUM(l.l_extendedprice * (1 - l.l_discount)), 2) AS revenue
+    FROM supplier s
+    JOIN lineitem l ON s.s_suppkey = l.l_suppkey
+    JOIN orders o   ON o.o_orderkey = l.l_orderkey
+    JOIN customer c ON c.c_custkey = o.o_custkey
+    JOIN nation ns  ON s.s_nationkey = ns.n_nationkey
+    JOIN nation nc  ON c.c_nationkey = nc.n_nationkey
+    WHERE (ns.n_name = 'NATION_1' AND nc.n_name = 'NATION_2')
+       OR (ns.n_name = 'NATION_2' AND nc.n_name = 'NATION_1')
+    GROUP BY 1, 2, 3
+    ORDER BY 1, 2, 3
+""",
+    # TPC-H Q4 shape: correlated EXISTS with a non-equi residual
+    # (shipdate > orderdate + 60d) decorrelated by Catalyst into a left
+    # semi join — the SQL-frontend twin of the J2/J3 semi-join surface.
+    "ext_sql_order_priority": """
+    SELECT o.o_orderpriority, COUNT(*) AS n
+    FROM orders o
+    WHERE o.o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
+      AND o.o_orderdate <  TIMESTAMP '1997-01-01 00:00:00'
+      AND EXISTS (
+          SELECT 1 FROM lineitem l
+          WHERE l.l_orderkey = o.o_orderkey
+            AND l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY
+      )
+    GROUP BY o.o_orderpriority
+    ORDER BY o.o_orderpriority
+""",
+    # TPC-H Q19 shape: disjunction of conjunctive brand/size/quantity
+    # predicates spanning both join sides. Catalyst extracts the common
+    # per-table disjuncts (brand IN (...), quantity ranges) and pushes
+    # them below the join into the parquet scan; the full OR is applied
+    # as the post-join residual.
+    "ext_sql_disjunctive_filter": """
+    SELECT ROUND(SUM(l.l_extendedprice * (1 - l.l_discount)), 2) AS revenue
+    FROM lineitem l
+    JOIN part p ON p.p_partkey = l.l_partkey
+    WHERE (p.p_brand = 'Brand#13' AND p.p_size BETWEEN 1 AND 15
+           AND l.l_quantity BETWEEN 5 AND 30)
+       OR (p.p_brand = 'Brand#20' AND p.p_size BETWEEN 10 AND 30
+           AND l.l_quantity BETWEEN 10 AND 40)
+       OR (p.p_brand = 'Brand#9' AND p.p_size BETWEEN 20 AND 50
+           AND l.l_quantity BETWEEN 20 AND 50)
+""",
+    # TPC-H Q2 shape: correlated scalar subquery with an aggregate
+    # (cheapest part per brand). Catalyst decorrelates it into a
+    # per-brand MIN aggregate joined back on the correlation key — one
+    # extra scan + one shuffle, never a per-row subquery execution.
+    "ext_sql_correlated_min": """
+    SELECT p.p_partkey, p.p_name, p.p_brand,
+           ROUND(p.p_retailprice, 2) AS price
+    FROM part p
+    WHERE p.p_retailprice = (
+        SELECT MIN(p2.p_retailprice) FROM part p2
+        WHERE p2.p_brand = p.p_brand
+    )
+    ORDER BY p.p_partkey
+""",
+    # TPC-H Q18 shape: IN-subquery over a grouped HAVING — the
+    # classic large-volume-customer query. The subquery plans as an
+    # aggregate feeding a left semi join on the fact's own key; the semi
+    # side is small post-HAVING, so AQE converts it to broadcast.
+    "ext_sql_large_orders": """
+    SELECT c.c_name, c.c_custkey, o.o_orderkey,
+           ROUND(o.o_totalprice, 2) AS o_totalprice,
+           CAST(SUM(l.l_quantity) AS BIGINT) AS total_qty
+    FROM customer c
+    JOIN orders o   ON c.c_custkey = o.o_custkey
+    JOIN lineitem l ON o.o_orderkey = l.l_orderkey
+    WHERE o.o_orderkey IN (
+        SELECT l_orderkey FROM lineitem
+        GROUP BY l_orderkey HAVING SUM(l_quantity) > 250
+    )
+    GROUP BY c.c_name, c.c_custkey, o.o_orderkey, o.o_totalprice
+    ORDER BY o_totalprice DESC, o.o_orderkey
+""",
+    # TPC-H Q22 shape: uncorrelated scalar-average subquery (plans
+    # as a 1-row broadcast filter, no per-row execution) combined with a
+    # correlated NOT EXISTS (decorrelated to a left anti join).
+    "ext_sql_idle_rich_customers": """
+    SELECT c.c_nationkey,
+           COUNT(*) AS numcust,
+           ROUND(SUM(c.c_acctbal), 2) AS totacctbal
+    FROM customer c
+    WHERE c.c_acctbal > (
+        SELECT AVG(c2.c_acctbal) FROM customer c2 WHERE c2.c_acctbal > 0.0
+    )
+    AND NOT EXISTS (
+        SELECT 1 FROM orders o
+        WHERE o.o_custkey = c.c_custkey AND o.o_orderstatus = 'P'
+    )
+    GROUP BY c.c_nationkey
+    ORDER BY c.c_nationkey
+""",
+    # TPC-H Q12 shape: CASE-based conditional counts ride the single
+    # partial+final hash agg — one shuffle for both measures.
+    "ext_sql_shipmode_priority": """
+    SELECT l.l_linestatus AS shipmode,
+           CAST(SUM(CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH')
+                    THEN 1 ELSE 0 END) AS BIGINT) AS high_count,
+           CAST(SUM(CASE WHEN o.o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
+                    THEN 1 ELSE 0 END) AS BIGINT) AS low_count
+    FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
+    WHERE l.l_shipdate >= o.o_orderdate
+    GROUP BY l.l_linestatus
+    ORDER BY shipmode
+""",
+    # TPC-H Q14 shape: both conditional and total revenue in ONE agg
+    # pass (no second scan); part side broadcasts.
+    "ext_sql_promo_revenue": """
+    SELECT ROUND(
+        100.0 * SUM(CASE WHEN p.p_type = 'PROMO'
+                    THEN l.l_extendedprice * (1 - l.l_discount)
+                    ELSE 0 END)
+              / SUM(l.l_extendedprice * (1 - l.l_discount)), 4)
+        AS promo_pct
+    FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
+""",
+    # TPC-H Q16 shape: NOT IN decorrelates to a broadcast null-aware
+    # anti join; COUNT DISTINCT goes through the two-level Expand agg.
+    "ext_sql_parts_supplier": """
+    SELECT p.p_brand, p.p_type,
+           CAST(COUNT(DISTINCT l.l_suppkey) AS BIGINT) AS supplier_cnt
+    FROM part p JOIN lineitem l ON l.l_partkey = p.p_partkey
+    WHERE p.p_brand <> 'Brand#1'
+      AND l.l_suppkey NOT IN (
+          SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
+    GROUP BY p.p_brand, p.p_type
+    ORDER BY supplier_cnt DESC, p.p_brand, p.p_type
+""",
+    # TPC-H Q21 shape — the hardest decorrelation in the suite: a
+    # semi AND an anti existence join against the same fact table, then
+    # agg. Catalyst plans both as hash joins on l_orderkey.
+    "ext_sql_waiting_supplier": """
+    SELECT s.s_name, CAST(COUNT(*) AS BIGINT) AS numwait
+    FROM supplier s
+    JOIN lineitem l1 ON s.s_suppkey = l1.l_suppkey
+    JOIN orders o ON o.o_orderkey = l1.l_orderkey
+    WHERE o.o_orderstatus = 'F'
+      AND l1.l_returnflag = 'R'
+      AND EXISTS (
+          SELECT 1 FROM lineitem l2
+          WHERE l2.l_orderkey = l1.l_orderkey
+            AND l2.l_suppkey <> l1.l_suppkey)
+      AND NOT EXISTS (
+          SELECT 1 FROM lineitem l3
+          WHERE l3.l_orderkey = l1.l_orderkey
+            AND l3.l_suppkey <> l1.l_suppkey
+            AND l3.l_returnflag = 'R')
+    GROUP BY s.s_name
+    ORDER BY numwait DESC, s.s_name
+""",
+    # TPC-H Q9 shape: 5-way star join (fact ⋈ 2 dims ⋈ fact ⋈ dim)
+    # with a LIKE filter on the part dim and a (nation, year) rollup.
+    # Catalyst pushes the LIKE into the part scan, broadcasts the small
+    # dims, and reorders the join chain; at 100 TB the only big-big edge
+    # is lineitem⋈orders on the key both are naturally clustered by.
+    "ext_sql_profit_by_nation": """
+    SELECT n.n_name AS nation,
+           CAST(year(o.o_orderdate) AS INT) AS o_year,
+           ROUND(SUM(l.l_extendedprice * (1 - l.l_discount)), 2) AS profit
+    FROM lineitem l
+    JOIN supplier s ON s.s_suppkey = l.l_suppkey
+    JOIN nation n   ON n.n_nationkey = s.s_nationkey
+    JOIN orders o   ON o.o_orderkey = l.l_orderkey
+    JOIN part p     ON p.p_partkey = l.l_partkey
+    WHERE p.p_name LIKE '%bolt%'
+    GROUP BY n.n_name, CAST(year(o.o_orderdate) AS INT)
+    ORDER BY nation, o_year DESC
+""",
+    # TPC-H Q13 shape: outer-join histogram — per-customer order count
+    # (LEFT OUTER keeps zero-order customers), then the distribution of
+    # those counts. Two cascaded aggregations; the second input is one
+    # row per customer, so the heavy shuffle happens exactly once.
+    "ext_sql_cust_order_distribution": """
+    SELECT c_count, COUNT(*) AS custdist
+    FROM (
+        SELECT c.c_custkey, COUNT(o.o_orderkey) AS c_count
+        FROM customer c
+        LEFT OUTER JOIN orders o ON c.c_custkey = o.o_custkey
+        GROUP BY c.c_custkey
+    ) t
+    GROUP BY c_count
+    ORDER BY custdist DESC, c_count DESC
+""",
+    # TPC-H Q15 shape: CTE revenue view + scalar-MAX subquery over the
+    # same CTE. Revenue is rounded INSIDE the CTE so the max-equality
+    # compares identically across engines. The CTE is computed twice
+    # (once per reference) unless the engine reuses it — the rollup is
+    # one reduced row per supplier either way.
+    "ext_sql_top_supplier": """
+    WITH revenue AS (
+        SELECT l_suppkey AS supplier_no,
+               ROUND(SUM(l_extendedprice * (1 - l_discount)), 2)
+                   AS total_revenue
+        FROM lineitem
+        WHERE l_shipdate >= DATE '1995-01-01'
+          AND l_shipdate < DATE '1996-01-01'
+        GROUP BY l_suppkey
+    )
+    SELECT s.s_suppkey, s.s_name, r.total_revenue
+    FROM supplier s
+    JOIN revenue r ON s.s_suppkey = r.supplier_no
+    WHERE r.total_revenue = (SELECT MAX(total_revenue) FROM revenue)
+    ORDER BY s.s_suppkey
+""",
+    # TPC-H Q17 shape: correlated scalar-AVG subquery against the SAME
+    # fact table. Catalyst decorrelates into a per-partkey AVG aggregate
+    # joined back — the fact table is scanned twice but never per-row;
+    # the naive interpretation (subquery per row) would be O(n²).
+    "ext_sql_small_quantity_revenue": """
+    SELECT ROUND(SUM(l.l_extendedprice) / 7.0, 2) AS avg_yearly
+    FROM lineitem l
+    JOIN part p ON p.p_partkey = l.l_partkey
+    WHERE p.p_name LIKE '%bolt%'
+      AND l.l_quantity < (
+          SELECT 0.2 * AVG(l2.l_quantity)
+          FROM lineitem l2
+          WHERE l2.l_partkey = l.l_partkey
+      )
+""",
+    # TPC-H Q6 shape: every predicate reaches the parquet scan as a
+    # PushedFilter (range on shipdate/discount/quantity), then one
+    # partial+final agg — the query that exists to measure scan + filter
+    # throughput and predicate pushdown.
+    "ext_sql_forecast_revenue": """
+    SELECT ROUND(SUM(l_extendedprice * l_discount), 2) AS revenue
+    FROM lineitem
+    WHERE l_shipdate >= TIMESTAMP '1996-01-01'
+      AND l_shipdate < TIMESTAMP '1997-01-01'
+      AND l_discount BETWEEN 0.03 AND 0.07
+      AND l_quantity < 24
+""",
+    # TPC-H Q8 shape: six-table join tree with every dimension
+    # broadcastable; the nation table joins TWICE (customer side filters
+    # the region, supplier side labels the share) — alias-correctness
+    # under self-referencing dims, then a conditional ratio per year.
+    "ext_sql_market_share": """
+    SELECT o_year,
+           ROUND(SUM(CASE WHEN supp_nation = 'NATION_2'
+                     THEN volume ELSE 0 END) / SUM(volume), 6)
+               AS mkt_share
+    FROM (
+        SELECT year(o.o_orderdate) AS o_year,
+               l.l_extendedprice * (1 - l.l_discount) AS volume,
+               n2.n_name AS supp_nation
+        FROM lineitem l
+        JOIN orders o ON l.l_orderkey = o.o_orderkey
+        JOIN customer c ON o.o_custkey = c.c_custkey
+        JOIN nation n1 ON c.c_nationkey = n1.n_nationkey
+        JOIN region r ON n1.n_regionkey = r.r_regionkey
+        JOIN supplier s ON l.l_suppkey = s.s_suppkey
+        JOIN nation n2 ON s.s_nationkey = n2.n_nationkey
+        WHERE r.r_name = 'ASIA'
+          AND o.o_orderdate >= TIMESTAMP '1996-01-01'
+          AND o.o_orderdate < TIMESTAMP '1998-01-01'
+    ) shares
+    GROUP BY o_year
+    ORDER BY o_year
+""",
+    # TPC-H Q11 shape (partsupp stood in by lineitem value — the
+    # corpus has no partsupp table): grouped sum filtered by a SCALAR
+    # subquery computing a fraction of the global sum. Catalyst plans
+    # the subquery once (one extra agg over the same filtered scan) and
+    # broadcasts the 1-row threshold into the HAVING filter — never a
+    # per-group re-execution.
+    "ext_sql_important_volume": """
+    SELECT l.l_partkey,
+           ROUND(SUM(l.l_extendedprice * l.l_quantity), 2) AS value
+    FROM lineitem l
+    JOIN supplier s ON l.l_suppkey = s.s_suppkey
+    JOIN nation n ON s.s_nationkey = n.n_nationkey
+    WHERE n.n_name = 'NATION_3'
+    GROUP BY l.l_partkey
+    HAVING SUM(l.l_extendedprice * l.l_quantity) > (
+        SELECT 0.001 * SUM(l2.l_extendedprice * l2.l_quantity)
+        FROM lineitem l2
+        JOIN supplier s2 ON l2.l_suppkey = s2.s_suppkey
+        JOIN nation n2 ON s2.s_nationkey = n2.n_nationkey
+        WHERE n2.n_name = 'NATION_3'
+    )
+    ORDER BY value DESC, l.l_partkey
+""",
+    # TPC-H Q20 shape: a two-level IN-subquery chain (suppliers who
+    # moved >100 units of PROMO parts). Both INs decorrelate to
+    # semi-joins: part gates lineitem BEFORE its aggregation, the
+    # aggregated supplier set semi-joins the dimension — no correlated
+    # re-execution anywhere.
+    "ext_sql_promo_supplier": """
+    SELECT s.s_name, s.s_acctbal
+    FROM supplier s
+    JOIN nation n ON s.s_nationkey = n.n_nationkey
+    WHERE n.n_name = 'NATION_1'
+      AND s.s_suppkey IN (
+          SELECT l.l_suppkey
+          FROM lineitem l
+          WHERE l.l_partkey IN (
+              SELECT p_partkey FROM part WHERE p_type = 'PROMO'
+          )
+          GROUP BY l.l_suppkey
+          HAVING SUM(l.l_quantity) > 100
+      )
+    ORDER BY s.s_name
+""",
+    # Frequent-itemset first pass (market-basket 2-itemsets): part
+    # pairs co-occurring in >= 2 distinct orders. The (order, part)
+    # dedup BEFORE the self-join is what keeps the pair space basket-
+    # bounded (repeated lines of one part would square into the output);
+    # per-order pair fan-out is basket_size², the A-priori cost model.
+    # Identical SQL both engines.
+    "ext_copurchase_pairs": """
+    WITH op AS (
+        SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
+    )
+    SELECT a.l_partkey AS part_a, b.l_partkey AS part_b,
+           COUNT(*) AS support
+    FROM op a JOIN op b
+      ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+    GROUP BY a.l_partkey, b.l_partkey
+    HAVING COUNT(*) >= 2
+    ORDER BY support DESC, part_a, part_b
+    LIMIT 200
+""",
+    # Concentration (Lorenz/decile) report: customers ranked by total
+    # spend, split into revenue deciles, each decile's share of total —
+    # the who-are-the-whales query every revenue dashboard carries. One
+    # agg + one window over the AGGREGATED customer table (never the
+    # facts) + a 1-row total broadcast. Identical SQL both engines
+    # (deterministic NTILE tie-break by custkey).
+    "ext_revenue_concentration": """
+    WITH cust AS (
+        SELECT o_custkey, SUM(o_totalprice) AS rev
+        FROM orders GROUP BY o_custkey
+    ), ranked AS (
+        SELECT o_custkey, rev,
+               NTILE(10) OVER (ORDER BY rev DESC, o_custkey) AS decile
+        FROM cust
+    ), tot AS (SELECT SUM(rev) AS total FROM cust)
+    SELECT decile,
+           COUNT(*) AS n_customers,
+           ROUND(SUM(rev), 2) AS revenue,
+           ROUND(SUM(rev) / tot.total, 6) AS share
+    FROM ranked, tot
+    GROUP BY decile, tot.total
+    ORDER BY decile
+""",
+    # Explicit GROUPING SETS (the asymmetric subset cube/rollup can't
+    # state): three chosen set combinations in ONE pass via Catalyst's
+    # Expand — map-side ×3 replication, one shuffle, no per-set rescans.
+    # Identical SQL text runs on DuckDB.
+    "ext_sql_grouping_sets": """
+    SELECT COALESCE(l_returnflag, 'ALL') AS rf,
+           COALESCE(l_linestatus, 'ALL') AS ls,
+           COUNT(*) AS n,
+           ROUND(SUM(l_quantity), 2) AS qty
+    FROM lineitem
+    GROUP BY GROUPING SETS ((l_returnflag, l_linestatus),
+                            (l_returnflag), ())
+    ORDER BY rf, ls
+""",
+}
+ORACLE.update(_SQL_TEXT)
 
 
-def ext_sql_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q5 shape: 6-table join with a same-nation residual —
-    exercises Catalyst join ordering + broadcast selection across the
-    dimension chain (nation/region broadcast; fact joins shuffle)."""
-    from mitoscape_spark.catalog import register_views
-
+def _run_sql(sql: str, spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)
-    return spark.sql(_LOCAL_SUPPLIER_VOLUME_SQL)
+    return spark.sql(sql)
 
+
+def ext_sql_pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SQL pipe syntax (Spark 4): linear ``|>`` operator chaining — the
+    readable form of nested subqueries. Catalyst plans it identically
+    to the classic formulation (the oracle states the same query in
+    standard SQL and must hash-match)."""
+    register_views(spark, sf_dir)
+    return spark.sql(
+        """
+        FROM orders
+        |> WHERE o_totalprice > 100000
+        |> AGGREGATE COUNT(*) AS n, ROUND(SUM(o_totalprice), 2) AS rev
+           GROUP BY o_orderstatus
+        |> ORDER BY o_orderstatus
+        """
+    )
+
+
+ORACLE["ext_sql_pipe_syntax"] = """
+        SELECT o_orderstatus, COUNT(*) AS n,
+               ROUND(SUM(o_totalprice), 2) AS rev
+        FROM orders
+        WHERE o_totalprice > 100000
+        GROUP BY o_orderstatus
+        ORDER BY o_orderstatus
+    """
 
 
 def ext_term_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1971,186 +4017,18 @@ def ext_term_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-
-_RETURNED_ITEM_SQL = """
-    SELECT c.c_custkey, c.c_name,
-           ROUND(SUM(l.l_extendedprice * (1 - l.l_discount)), 2) AS revenue,
-           ROUND(c.c_acctbal, 2) AS c_acctbal,
-           n.n_name
-    FROM customer c
-    JOIN orders o   ON c.c_custkey = o.o_custkey
-    JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-    JOIN nation n   ON c.c_nationkey = n.n_nationkey
-    WHERE l.l_returnflag = 'R'
-    GROUP BY c.c_custkey, c.c_name, c.c_acctbal, n.n_name
-    ORDER BY revenue DESC, c_custkey
-    LIMIT 20
-"""
-
-
-def ext_sql_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q10 shape: top customers by returned-item revenue — fact
-    ⋈ fact ⋈ dim with a pushed-down flag filter and top-k."""
-    from mitoscape_spark.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_RETURNED_ITEM_SQL)
-
-
-
-_VOLUME_SHIPPING_SQL = """
-    SELECT ns.n_name AS supp_nation, nc.n_name AS cust_nation,
-           CAST(EXTRACT(YEAR FROM l.l_shipdate) AS INT) AS l_year,
-           ROUND(SUM(l.l_extendedprice * (1 - l.l_discount)), 2) AS revenue
-    FROM supplier s
-    JOIN lineitem l ON s.s_suppkey = l.l_suppkey
-    JOIN orders o   ON o.o_orderkey = l.l_orderkey
-    JOIN customer c ON c.c_custkey = o.o_custkey
-    JOIN nation ns  ON s.s_nationkey = ns.n_nationkey
-    JOIN nation nc  ON c.c_nationkey = nc.n_nationkey
-    WHERE (ns.n_name = 'NATION_1' AND nc.n_name = 'NATION_2')
-       OR (ns.n_name = 'NATION_2' AND nc.n_name = 'NATION_1')
-    GROUP BY 1, 2, 3
-    ORDER BY 1, 2, 3
-"""
-
-
-def ext_sql_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q7 shape: bi-directional nation-pair trade volume by ship
-    year. Two roles of the same dimension (nation joined twice) + a
-    disjunctive cross-table predicate Catalyst can only apply post-join
-    — the dimension joins broadcast, the two fact joins shuffle."""
-    from mitoscape_spark.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_VOLUME_SHIPPING_SQL)
-
-
-_ORDER_PRIORITY_SQL = """
-    SELECT o.o_orderpriority, COUNT(*) AS n
-    FROM orders o
-    WHERE o.o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-      AND o.o_orderdate <  TIMESTAMP '1997-01-01 00:00:00'
-      AND EXISTS (
-          SELECT 1 FROM lineitem l
-          WHERE l.l_orderkey = o.o_orderkey
-            AND l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY
-      )
-    GROUP BY o.o_orderpriority
-    ORDER BY o.o_orderpriority
-"""
-
-
-def ext_sql_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q4 shape: correlated EXISTS with a non-equi residual
-    (shipdate > orderdate + 60d) decorrelated by Catalyst into a left
-    semi join — the SQL-frontend twin of the J2/J3 semi-join surface."""
-    from mitoscape_spark.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_ORDER_PRIORITY_SQL)
-
-
-_DISJUNCTIVE_FILTER_SQL = """
-    SELECT ROUND(SUM(l.l_extendedprice * (1 - l.l_discount)), 2) AS revenue
-    FROM lineitem l
-    JOIN part p ON p.p_partkey = l.l_partkey
-    WHERE (p.p_brand = 'Brand#13' AND p.p_size BETWEEN 1 AND 15
-           AND l.l_quantity BETWEEN 5 AND 30)
-       OR (p.p_brand = 'Brand#20' AND p.p_size BETWEEN 10 AND 30
-           AND l.l_quantity BETWEEN 10 AND 40)
-       OR (p.p_brand = 'Brand#9' AND p.p_size BETWEEN 20 AND 50
-           AND l.l_quantity BETWEEN 20 AND 50)
-"""
-
-
-def ext_sql_disjunctive_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q19 shape: disjunction of conjunctive brand/size/quantity
-    predicates spanning both join sides. Catalyst extracts the common
-    per-table disjuncts (brand IN (...), quantity ranges) and pushes
-    them below the join into the parquet scan; the full OR is applied
-    as the post-join residual."""
-    from mitoscape_spark.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_DISJUNCTIVE_FILTER_SQL)
-
-
-_CORRELATED_MIN_SQL = """
-    SELECT p.p_partkey, p.p_name, p.p_brand,
-           ROUND(p.p_retailprice, 2) AS price
-    FROM part p
-    WHERE p.p_retailprice = (
-        SELECT MIN(p2.p_retailprice) FROM part p2
-        WHERE p2.p_brand = p.p_brand
-    )
-    ORDER BY p.p_partkey
-"""
-
-
-def ext_sql_correlated_min(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q2 shape: correlated scalar subquery with an aggregate
-    (cheapest part per brand). Catalyst decorrelates it into a
-    per-brand MIN aggregate joined back on the correlation key — one
-    extra scan + one shuffle, never a per-row subquery execution."""
-    from mitoscape_spark.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_CORRELATED_MIN_SQL)
-
-
-_LARGE_ORDERS_SQL = """
-    SELECT c.c_name, c.c_custkey, o.o_orderkey,
-           ROUND(o.o_totalprice, 2) AS o_totalprice,
-           CAST(SUM(l.l_quantity) AS BIGINT) AS total_qty
-    FROM customer c
-    JOIN orders o   ON c.c_custkey = o.o_custkey
-    JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-    WHERE o.o_orderkey IN (
-        SELECT l_orderkey FROM lineitem
-        GROUP BY l_orderkey HAVING SUM(l_quantity) > 250
-    )
-    GROUP BY c.c_name, c.c_custkey, o.o_orderkey, o.o_totalprice
-    ORDER BY o_totalprice DESC, o.o_orderkey
-"""
-
-
-def ext_sql_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q18 shape: IN-subquery over a grouped HAVING — the
-    classic large-volume-customer query. The subquery plans as an
-    aggregate feeding a left semi join on the fact's own key; the semi
-    side is small post-HAVING, so AQE converts it to broadcast."""
-    from mitoscape_spark.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_LARGE_ORDERS_SQL)
-
-
-_IDLE_RICH_CUSTOMERS_SQL = """
-    SELECT c.c_nationkey,
-           COUNT(*) AS numcust,
-           ROUND(SUM(c.c_acctbal), 2) AS totacctbal
-    FROM customer c
-    WHERE c.c_acctbal > (
-        SELECT AVG(c2.c_acctbal) FROM customer c2 WHERE c2.c_acctbal > 0.0
-    )
-    AND NOT EXISTS (
-        SELECT 1 FROM orders o
-        WHERE o.o_custkey = c.c_custkey AND o.o_orderstatus = 'P'
-    )
-    GROUP BY c.c_nationkey
-    ORDER BY c.c_nationkey
-"""
-
-
-def ext_sql_idle_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q22 shape: uncorrelated scalar-average subquery (plans
-    as a 1-row broadcast filter, no per-row execution) combined with a
-    correlated NOT EXISTS (decorrelated to a left anti join)."""
-    from mitoscape_spark.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_IDLE_RICH_CUSTOMERS_SQL)
+ORACLE["ext_term_freq"] = """
+        SELECT tok,
+               CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS df,
+               COUNT(*) AS tf
+        FROM (
+            SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok
+            FROM documents
+        )
+        GROUP BY tok
+        ORDER BY df DESC, tok
+        LIMIT 50
+    """
 
 
 def ext_window_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2178,6 +4056,20 @@ def ext_window_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("o_custkey", "o_orderkey")
     )
+
+
+ORACLE["ext_window_funcs"] = """
+        SELECT o_custkey, o_orderkey,
+               ROUND(LAG(o_totalprice) OVER w, 2)  AS prev_price,
+               ROUND(LEAD(o_totalprice) OVER w, 2) AS next_price,
+               ROUND(FIRST_VALUE(o_totalprice) OVER w, 2) AS first_price,
+               CAST(NTILE(4) OVER w AS INT)        AS quartile,
+               ROUND(PERCENT_RANK() OVER w, 4)     AS pct_rank,
+               ROUND(CUME_DIST() OVER w, 4)        AS cdist
+        FROM orders
+        WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
+        ORDER BY o_custkey, o_orderkey
+    """
 
 
 def ext_udtf_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2209,6 +4101,18 @@ def ext_udtf_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+ORACLE["ext_udtf_bigrams"] = """
+        WITH toks AS (
+            SELECT doc_id, string_split(lower(text), ' ') AS t
+            FROM documents
+        )
+        SELECT doc_id, t[i] || ' ' || t[i + 1] AS bigram
+        FROM toks, UNNEST(range(1, array_length(t))) AS r(i)
+        ORDER BY doc_id, bigram
+        LIMIT 1000
+    """
+
+
 def ext_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON functions over the events.props payload column: typed
     ``from_json`` parse (schema'd, JVM-side Jackson — not a UDF) then
@@ -2226,6 +4130,19 @@ def ext_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("event_type")
     )
+
+
+ORACLE["ext_json_extract"] = """
+        SELECT event_type, COUNT(*) AS n,
+               ROUND(AVG(k), 4) AS avg_k,
+               MAX(k) AS max_k
+        FROM (
+            SELECT event_type,
+                   CAST(json_extract_string(props, '$.k') AS INT) AS k
+            FROM events
+        )
+        GROUP BY event_type ORDER BY event_type
+    """
 
 
 def ext_array_hof(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2247,6 +4164,16 @@ def ext_array_hof(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("vec_id")
     )
+
+
+ORACLE["ext_array_hof"] = """
+        SELECT vec_id,
+               ROUND(list_sum(list_transform(embedding,
+                     x -> CAST(x AS DOUBLE) * x)), 4) AS sq_norm,
+               CAST(len(list_filter(embedding, x -> x > 0)) AS INT) AS n_pos,
+               ROUND(CAST(list_max(embedding) AS DOUBLE), 4) AS mx
+        FROM embeddings ORDER BY vec_id
+    """
 
 
 def ext_time_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2287,6 +4214,20 @@ def ext_time_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+ORACLE["ext_time_rollup"] = """
+        SELECT hr, event_type, n,
+               CAST((200 * cents + n) // (2 * n) AS DOUBLE) / 10000
+                   AS avg_value
+        FROM (
+            SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS hr,
+                   event_type, COUNT(*) AS n,
+                   CAST(SUM(CAST(ROUND(value * 100) AS BIGINT))
+                        AS BIGINT) AS cents
+            FROM events GROUP BY 1, 2
+        ) ORDER BY hr, event_type
+    """
+
+
 def ext_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UNPIVOT (melt): wide per-part numeric columns → (part, metric,
     value) long form — the inverse of ext_pivot. DataFrame ``unpivot``
@@ -2301,6 +4242,17 @@ def ext_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unpivot("p_partkey", ["size", "retailprice"], "metric", "value")
         .orderBy("p_partkey", "metric")
     )
+
+
+ORACLE["ext_unpivot"] = """
+        SELECT p_partkey, metric, value FROM (
+            SELECT p_partkey, 'size' AS metric,
+                   CAST(p_size AS DOUBLE) AS value FROM part
+            UNION ALL
+            SELECT p_partkey, 'retailprice' AS metric,
+                   CAST(p_retailprice AS DOUBLE) AS value FROM part
+        ) ORDER BY p_partkey, metric
+    """
 
 
 def ext_prep_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2333,6 +4285,39 @@ def ext_prep_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+ORACLE["ext_prep_pipeline"] = f"""
+        WITH q AS (
+            SELECT doc_id,
+                   LEAST(len(string_split(lower(text), ' ')) / 50.0, 1.0) * 0.4
+                   + (1 - LEAST((length(text) - length(
+                         regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g')))
+                         / GREATEST(length(text), 1) * 1.0, 1.0)) * 0.3
+                   + LEAST(len(list_intersect(
+                         string_split(lower(text), ' '),
+                         {_STOP_SQL['en']})) / 5.0, 1.0) * 0.3 AS quality
+            FROM documents
+        ),
+        kept AS (
+            SELECT d.doc_id, d.text FROM documents d
+            JOIN q ON d.doc_id = q.doc_id
+            WHERE ROUND(q.quality, 4) >= 0.5
+        ),
+        nc AS (
+            SELECT doc_id, string_split(text, ' ') AS t,
+                   GREATEST(CAST(CEIL((len(string_split(text, ' ')) - 8.0)
+                       / 24.0) AS INT), 1) AS n_chunks
+            FROM kept
+        ),
+        chunks AS (
+            SELECT doc_id, len(t[i*24+1 : i*24+32]) AS n_tokens
+            FROM nc, UNNEST(range(n_chunks)) AS r(i)
+        )
+        SELECT doc_id, COUNT(*) AS n_chunks,
+               CAST(SUM(n_tokens) AS BIGINT) AS total_chunk_tokens
+        FROM chunks GROUP BY doc_id ORDER BY doc_id
+    """
+
+
 # ------------------------------------------------ joins/set-ops surface
 def ext_pattern_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MATCH_RECOGNIZE-lite (operators/funnel.py::
@@ -2348,6 +4333,20 @@ def ext_pattern_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sequence_pattern_match(events, pat).orderBy("user_id")
 
 
+ORACLE["ext_pattern_match"] = """
+        WITH seqs AS (
+            SELECT user_id,
+                   string_agg(event_type, '>' ORDER BY ts, event_id)
+                       AS sequence
+            FROM events GROUP BY user_id
+        )
+        SELECT user_id, sequence FROM seqs
+        WHERE regexp_matches(sequence,
+            '(^|>)signup>((click|view|signup|purchase)>)*purchase(>|$)')
+        ORDER BY user_id
+    """
+
+
 def ext_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact phrase search through the positional inverted index
     (operators/bm25.py::phrase_search): postings prune to the phrase's
@@ -2361,6 +4360,14 @@ def ext_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     return phrase_search(docs, "vector join").orderBy("doc_id")
 
 
+ORACLE["ext_phrase_search"] = """
+        SELECT doc_id
+        FROM documents
+        WHERE (' ' || lower(text) || ' ') LIKE '% vector join %'
+        ORDER BY doc_id
+    """
+
+
 def ext_proximity_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NEAR/5 proximity retrieval (operators/bm25.py::proximity_search):
     'vector' and 'slow' within 5 tokens, closest gap reported — two
@@ -2372,6 +4379,26 @@ def ext_proximity_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     return proximity_search(docs, "vector", "slow", window=5).orderBy(
         "doc_id"
     )
+
+
+ORACLE["ext_proximity_search"] = """
+        WITH toks AS (
+            SELECT doc_id, string_split(lower(text), ' ') AS t
+            FROM documents
+        ), p AS (
+            SELECT doc_id, i AS pos, t[i + 1] AS token
+            FROM toks, UNNEST(range(len(t))) AS r(i)
+        ), a AS (
+            SELECT doc_id, pos FROM p WHERE token = 'vector'
+        ), b AS (
+            SELECT doc_id, pos FROM p WHERE token = 'slow'
+        )
+        SELECT a.doc_id, CAST(MIN(ABS(a.pos - b.pos)) AS INT) AS min_gap
+        FROM a JOIN b USING (doc_id)
+        WHERE ABS(a.pos - b.pos) <= 5
+        GROUP BY a.doc_id
+        ORDER BY a.doc_id
+    """
 
 
 def ext_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2401,6 +4428,23 @@ def ext_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(
         F.col("k").alias("user_id"), "o_orderkey", "event_id"
     ).orderBy("o_orderkey")
+
+
+ORACLE["ext_asof_forward"] = """
+        WITH ranked AS (
+            SELECT o.o_custkey AS user_id, o.o_orderkey, e.event_id,
+                   ROW_NUMBER() OVER (
+                       PARTITION BY o.o_orderkey
+                       ORDER BY e.ts ASC, e.event_id DESC
+                   ) AS rn
+            FROM orders o
+            LEFT JOIN events e
+              ON e.user_id = o.o_custkey
+             AND CAST(e.ts AS TIMESTAMP) >= o.o_orderdate
+        )
+        SELECT user_id, o_orderkey, event_id
+        FROM ranked WHERE rn = 1 ORDER BY o_orderkey
+    """
 
 
 def ext_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2434,6 +4478,26 @@ def ext_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey",
         F.round("o_totalprice", 2).alias("o_totalprice"),
     ).orderBy("event_id")
+
+
+ORACLE["ext_asof_join"] = """
+        WITH ranked AS (
+            SELECT e.event_id, e.user_id, o.o_orderkey,
+                   ROUND(o.o_totalprice, 2) AS o_totalprice,
+                   ROW_NUMBER() OVER (
+                       PARTITION BY e.event_id
+                       ORDER BY o.o_orderdate DESC, o.o_orderkey DESC
+                   ) AS rn
+            FROM events e
+            JOIN orders o
+              ON e.user_id = o.o_custkey
+             AND o.o_orderdate <= CAST(e.ts AS TIMESTAMP)
+        )
+        SELECT event_id, user_id, o_orderkey, o_totalprice
+        FROM ranked WHERE rn = 1 ORDER BY event_id
+    """
+
+
 def ext_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left anti join — customers with no 'P'-status orders
     (NOT EXISTS). The complement of the reference's semi-join writeback
@@ -2450,6 +4514,16 @@ def ext_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("c_custkey", "c_name")
         .orderBy("c_custkey")
     )
+
+
+ORACLE["ext_anti_join"] = """
+        SELECT c_custkey, c_name FROM customer c
+        WHERE NOT EXISTS (
+            SELECT 1 FROM orders o
+            WHERE o.o_custkey = c.c_custkey AND o.o_orderstatus = 'P'
+        )
+        ORDER BY c_custkey
+    """
 
 
 def ext_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2470,6 +4544,23 @@ def ext_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+ORACLE["ext_outer_join"] = """
+        WITH c AS (
+            SELECT c_nationkey, COUNT(*) AS nc FROM customer
+            GROUP BY c_nationkey
+        ),
+        s AS (
+            SELECT s_nationkey, COUNT(*) AS ns FROM supplier
+            GROUP BY s_nationkey
+        )
+        SELECT COALESCE(c_nationkey, s_nationkey) AS nationkey,
+               COALESCE(nc, 0) AS nc,
+               COALESCE(ns, 0) AS ns
+        FROM c FULL OUTER JOIN s ON c.c_nationkey = s.s_nationkey
+        ORDER BY nationkey
+    """
+
+
 def ext_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INTERSECT/EXCEPT (set semantics — absent from the reference,
     SURVEY §2.5): nation keys having customers but no suppliers, and
@@ -2483,6 +4574,22 @@ def ext_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     # leftover duplicate occurrences (bag semantics)
     only_c = c.subtract(s).withColumn("tag", F.lit("customers_only"))
     return both.unionAll(only_c).orderBy("tag", "nationkey")
+
+
+ORACLE["ext_set_ops"] = """
+        SELECT nationkey, 'both' AS tag FROM (
+            SELECT c_nationkey AS nationkey FROM customer
+            INTERSECT
+            SELECT s_nationkey FROM supplier
+        )
+        UNION ALL
+        SELECT nationkey, 'customers_only' AS tag FROM (
+            SELECT c_nationkey AS nationkey FROM customer
+            EXCEPT
+            SELECT s_nationkey FROM supplier
+        )
+        ORDER BY tag, nationkey
+    """
 
 
 def ext_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2511,6 +4618,18 @@ def ext_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+ORACLE["ext_pivot"] = """
+        SELECT n_name,
+               COUNT(*) FILTER (WHERE o_orderstatus = 'F') AS n_f,
+               COUNT(*) FILTER (WHERE o_orderstatus = 'O') AS n_o,
+               COUNT(*) FILTER (WHERE o_orderstatus = 'P') AS n_p
+        FROM orders o
+        JOIN customer c ON o.o_custkey = c.c_custkey
+        JOIN nation n   ON c.c_nationkey = n.n_nationkey
+        GROUP BY n_name ORDER BY n_name
+    """
+
+
 # ----------------------------------------------------- OLAP additions
 def ext_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hierarchical rollup (nation → ALL): grouping-sets aggregation,
@@ -2537,6 +4656,16 @@ def ext_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+ORACLE["ext_rollup"] = """
+        SELECT COALESCE(n_name, 'ALL') AS n_name,
+               COUNT(*) AS n,
+               ROUND(SUM(c_acctbal), 2) AS bal
+        FROM customer c JOIN nation nt ON c.c_nationkey = nt.n_nationkey
+        GROUP BY ROLLUP(n_name)
+        ORDER BY n_name
+    """
+
+
 def ext_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact interpolated percentiles per group (ordered-set
     aggregate): Spark `percentile` == DuckDB `quantile_cont`."""
@@ -2550,6 +4679,15 @@ def ext_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("l_returnflag")
     )
+
+
+ORACLE["ext_quantiles"] = """
+        SELECT l_returnflag,
+               ROUND(quantile_cont(l_quantity, 0.25), 4) AS p25,
+               ROUND(quantile_cont(l_quantity, 0.5), 4) AS p50,
+               ROUND(quantile_cont(l_quantity, 0.75), 4) AS p75
+        FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
+    """
 
 
 def ext_distinct_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2567,6 +4705,15 @@ def ext_distinct_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+ORACLE["ext_distinct_agg"] = """
+        SELECT l_returnflag,
+               CAST(COUNT(DISTINCT l_partkey) AS BIGINT) AS n_parts,
+               ROUND(SUM(DISTINCT l_quantity), 2) AS sdq,
+               COUNT(*) AS n
+        FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
+    """
+
+
 def ext_robust_z(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user robust z-score of event values (applyInPandas grouped
     map — two dependent medians per group, not a Catalyst aggregate).
@@ -2581,6 +4728,27 @@ def ext_robust_z(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("user_id", "event_id", "robust_z")
         .orderBy("user_id", "event_id")
     )
+
+
+ORACLE["ext_robust_z"] = """
+        WITH stats AS (
+            SELECT user_id, median(value) AS med
+            FROM events GROUP BY user_id
+        ),
+        mads AS (
+            SELECT e.user_id, median(abs(e.value - s.med)) AS mad
+            FROM events e JOIN stats s ON e.user_id = s.user_id
+            GROUP BY e.user_id
+        )
+        SELECT e.user_id, e.event_id,
+               CASE WHEN m.mad = 0 THEN NULL
+                    ELSE ROUND((e.value - s.med) / (1.4826 * m.mad), 4)
+               END AS robust_z
+        FROM events e
+        JOIN stats s ON e.user_id = s.user_id
+        JOIN mads m ON e.user_id = m.user_id
+        ORDER BY e.user_id, e.event_id
+    """
 
 
 # ---------------------------------------------------------- intervals
@@ -2622,6 +4790,18 @@ def ext_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+ORACLE["ext_interval_join"] = """
+        SELECT e1.event_id, COUNT(*) AS n
+        FROM events e1
+        JOIN events e2
+          ON e1.user_id = e2.user_id
+         AND CAST(e2.ts AS TIMESTAMP) > CAST(e1.ts AS TIMESTAMP)
+         AND CAST(e2.ts AS TIMESTAMP)
+             <= CAST(e1.ts AS TIMESTAMP) + INTERVAL 1 HOUR
+        GROUP BY e1.event_id ORDER BY e1.event_id
+    """
+
+
 # ------------------------------------------- approximate (rows-only)
 def ext_sketch_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sketch-based corpus stats per return flag — the O(1)-memory path
@@ -2650,6 +4830,17 @@ def ext_sketch_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("l_returnflag")
     )
+
+
+# exact below sketch capacity (see ext_sketch_stats docstring):
+# theta distinct == COUNT(DISTINCT), GK median == quantile_disc
+ORACLE["ext_sketch_stats"] = """
+        SELECT l_returnflag,
+               CAST(COUNT(DISTINCT l_partkey) AS BIGINT) AS nd_parts,
+               quantile_disc(l_quantity, 0.5) AS p50,
+               CAST(COUNT(*) AS BIGINT) AS n
+        FROM lineitem GROUP BY 1 ORDER BY 1
+    """
 
 
 def ext_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2691,6 +4882,66 @@ def ext_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     return idx.topk(index, list(query), k=10)
 
 
+def _ann_lsh_oracle_sql() -> str:
+    """DuckDB restatement of ext_ann_lsh — the one ANN family member
+    whose every parameter is data-INdependent: the sign-LSH hyperplanes
+    are pure functions of a seed (operators/similarity.py:343), so they
+    embed as SQL literals the way any operator constant would, and
+    DuckDB independently re-derives every sign bit, every bucket id
+    (for the corpus AND the query), the OR-of-tables candidate set, and
+    the final cosine top-k. Unlike IVF/PQ (k-means state = a function
+    of the data, so an oracle would have to embed numbers computed by
+    the system under test), this check is end-to-end independent.
+
+    Float caveat: sign(dot) could in principle disagree across engines
+    for a dot within ~1e-13 of zero; dots here are O(1)-scale sums of
+    64 standard-normal products, so the collision probability over the
+    ~32*(N+1) dots at sf0.01 is vanishingly small (and a flip would
+    fail the hash loudly, not silently)."""
+    from mitoscape_spark.operators.similarity import SignRandomProjectionLSH
+
+    lsh = SignRandomProjectionLSH(dim=64, n_planes=4, n_tables=8)
+    rows = []
+    for t in range(lsh.n_tables):
+        for p in range(lsh.n_planes):
+            lits = ", ".join(repr(float(x)) for x in lsh.planes[t, p])
+            rows.append(f"({t}, {1 << p}, CAST([{lits}] AS DOUBLE[]))")
+    values = ",\n            ".join(rows)
+    return f"""
+        WITH q AS (
+            SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings
+            WHERE vec_id = 0
+        ),
+        planes(t, bit, pl) AS (VALUES
+            {values}
+        ),
+        qb AS (
+            SELECT t, SUM(CASE WHEN list_dot_product(q.qv, pl) >= 0
+                               THEN bit ELSE 0 END) AS bucket
+            FROM planes, q GROUP BY t
+        ),
+        cb AS (
+            SELECT e.vec_id, planes.t,
+                   SUM(CASE WHEN list_dot_product(
+                           CAST(e.embedding AS DOUBLE[]), pl) >= 0
+                       THEN bit ELSE 0 END) AS bucket
+            FROM embeddings e, planes
+            WHERE e.vec_id != 0
+            GROUP BY e.vec_id, planes.t
+        ),
+        cand AS (
+            SELECT DISTINCT cb.vec_id
+            FROM cb JOIN qb ON cb.t = qb.t AND cb.bucket = qb.bucket
+        )
+        SELECT e.vec_id AS id,
+               ROUND(list_cosine_similarity(
+                   CAST(e.embedding AS DOUBLE[]), q.qv), 6) AS cos
+        FROM cand, embeddings e, q
+        WHERE e.vec_id = cand.vec_id
+        ORDER BY cos DESC, id LIMIT 10
+    """
+
+
 def ext_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate top-k cosine via sign-random-projection LSH.
 
@@ -2709,6 +4960,9 @@ def ext_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     lsh = SignRandomProjectionLSH(dim=64, n_planes=4, n_tables=8)
     return lsh.topk(emb.where(F.col("vec_id") != 0), list(query), k=10)
+
+
+ORACLE["ext_ann_lsh"] = _ann_lsh_oracle_sql()
 
 
 def ext_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2750,6 +5004,19 @@ def ext_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return contamination_report(train, bench).orderBy("doc_id")
 
 
+ORACLE["ext_decontaminate"] = f"""
+        WITH {_TOKS}, {_SHINGLES3},
+        bench AS (
+            SELECT DISTINCT shingle FROM sh WHERE doc_id % 20 = 0
+        )
+        SELECT s.doc_id, COUNT(*) AS n_shared
+        FROM sh s JOIN bench b ON s.shingle = b.shingle
+        WHERE s.doc_id % 20 != 0
+        GROUP BY s.doc_id
+        ORDER BY s.doc_id
+    """
+
+
 def ext_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sequence-packing plan: global prefix sum of token counts in
     doc_id order via the two-phase bucketed rewrite (operators/packing)
@@ -2767,6 +5034,27 @@ def ext_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
+ORACLE["ext_pack_sequences"] = """
+        WITH t AS (
+            SELECT doc_id,
+                   CAST(len(string_split(lower(text), ' ')) AS BIGINT)
+                       AS n_tokens
+            FROM documents
+        ),
+        offs AS (
+            SELECT doc_id, n_tokens,
+                   CAST(COALESCE(SUM(n_tokens) OVER (
+                       ORDER BY doc_id
+                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
+                   ), 0) AS BIGINT) AS start_offset
+            FROM t
+        )
+        SELECT doc_id, n_tokens, start_offset,
+               start_offset // 512 AS pack_id
+        FROM offs ORDER BY doc_id
+    """
+
+
 def ext_sample_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic data mixing: keep 25% of 'en', 50% of 'de', all of
     the rest, decided by md5(doc_id) — engine-portable (same rows in
@@ -2781,6 +5069,16 @@ def ext_sample_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "lang")
         .orderBy("doc_id")
     )
+
+
+ORACLE["ext_sample_mix"] = """
+        SELECT doc_id, lang FROM documents
+        WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) <
+              CASE WHEN lang = 'en' THEN '4000'
+                   WHEN lang = 'de' THEN '8000'
+                   ELSE 'g' END
+        ORDER BY doc_id
+    """
 
 
 def ext_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2803,6 +5101,29 @@ def ext_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_email").cast("long").alias("n_email"),
         F.col("n_phone").cast("long").alias("n_phone"),
     ).orderBy("doc_id")
+
+
+ORACLE["ext_redact"] = """
+        SELECT doc_id,
+               lower(trim(regexp_replace(
+                   regexp_replace(
+                       regexp_replace(
+                           regexp_replace(text,
+                               'https?://[A-Za-z0-9./_%?&=#-]+',
+                               '<URL>', 'g'),
+                           '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}',
+                           '<EMAIL>', 'g'),
+                       '\\+?[0-9][0-9()-]{6,}[0-9]', '<PHONE>', 'g'),
+                   '[ \t\n\r]+', ' ', 'g'))) AS clean,
+               len(regexp_extract_all(text,
+                   'https?://[A-Za-z0-9./_%?&=#-]+')) AS n_url,
+               len(regexp_extract_all(text,
+                   '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}'))
+                   AS n_email,
+               len(regexp_extract_all(text,
+                   '\\+?[0-9][0-9()-]{6,}[0-9]')) AS n_phone
+        FROM documents ORDER BY doc_id
+    """
 
 
 def ext_redact_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2844,6 +5165,56 @@ def ext_redact_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Luhn-validated CC redaction: same candidate regex, the Luhn lambda
+# with DuckDB's 1-BASED list_transform index (double on even i ↔
+# Spark's 0-based odd), and — since DuckDB 1.0 lacks list_reduce with
+# an init value — the literal-replace fold runs as a per-doc recursive
+# CTE over the validated candidate list. regexp_replace needs the 'g'
+# flag (DuckDB is first-match by default; Spark is global).
+ORACLE["ext_redact_cc"] = r"""
+    WITH RECURSIVE planted AS (
+        SELECT doc_id,
+               text || CASE
+                   WHEN doc_id % 7 = 0
+                       THEN ' card 4111-1111-1111-1111 thanks'
+                   WHEN doc_id % 11 = 0
+                       THEN ' ref 1234 5678 9012 3456 end'
+                   ELSE '' END AS text
+        FROM documents
+    ), base AS (
+        SELECT doc_id, text,
+               regexp_extract_all(text, '\b(?:\d[ -]?){12,18}\d\b') AS cands
+        FROM planted
+    ), judged AS (
+        SELECT doc_id, text, cands,
+               list_filter(cands, c ->
+                   list_sum(list_transform(
+                       string_split(reverse(
+                           regexp_replace(c, '[ -]', '', 'g')), ''),
+                       (ch, i) -> CASE WHEN i % 2 = 0 THEN
+                               CASE WHEN CAST(ch AS INT) * 2 > 9
+                                    THEN CAST(ch AS INT) * 2 - 9
+                                    ELSE CAST(ch AS INT) * 2 END
+                           ELSE CAST(ch AS INT) END
+                   )) % 10 = 0
+               ) AS valid
+        FROM base
+    ), fold AS (
+        SELECT doc_id, 0 AS k, text AS acc, valid FROM judged
+        UNION ALL
+        SELECT doc_id, k + 1, replace(acc, valid[k + 1], '<CC>'), valid
+        FROM fold WHERE k < len(valid)
+    )
+    SELECT j.doc_id,
+           CAST(len(j.cands) AS BIGINT) AS n_cc_candidates,
+           CAST(len(j.valid) AS BIGINT) AS n_cc,
+           f.acc AS cc_redacted
+    FROM judged j JOIN fold f
+      ON j.doc_id = f.doc_id AND f.k = len(j.valid)
+    ORDER BY j.doc_id
+"""
+
+
 def ext_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANALYZE-style per-column profile of orders — ONE aggregation job
     for all four columns (multi-COUNT-DISTINCT via Catalyst Expand),
@@ -2855,6 +5226,36 @@ def ext_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         orders,
         ["o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority"],
     ).orderBy("col_name")
+
+
+ORACLE["ext_profile"] = """
+        SELECT * FROM (
+            SELECT 'o_orderkey' AS col_name, COUNT(*) AS n_rows,
+                   COUNT(*) - COUNT(o_orderkey) AS n_nulls,
+                   COUNT(DISTINCT o_orderkey) AS n_distinct,
+                   CAST(MIN(o_orderkey) AS VARCHAR) AS min_val,
+                   CAST(MAX(o_orderkey) AS VARCHAR) AS max_val
+            FROM orders
+            UNION ALL
+            SELECT 'o_custkey', COUNT(*), COUNT(*) - COUNT(o_custkey),
+                   COUNT(DISTINCT o_custkey),
+                   CAST(MIN(o_custkey) AS VARCHAR),
+                   CAST(MAX(o_custkey) AS VARCHAR)
+            FROM orders
+            UNION ALL
+            SELECT 'o_orderstatus', COUNT(*),
+                   COUNT(*) - COUNT(o_orderstatus),
+                   COUNT(DISTINCT o_orderstatus),
+                   MIN(o_orderstatus), MAX(o_orderstatus)
+            FROM orders
+            UNION ALL
+            SELECT 'o_orderpriority', COUNT(*),
+                   COUNT(*) - COUNT(o_orderpriority),
+                   COUNT(DISTINCT o_orderpriority),
+                   MIN(o_orderpriority), MAX(o_orderpriority)
+            FROM orders
+        ) ORDER BY col_name
+    """
 
 
 def ext_data_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2875,6 +5276,33 @@ def ext_data_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
             (part, "l_partkey", "p_partkey"),
         ],
     ).orderBy("check_name")
+
+
+ORACLE["ext_data_quality"] = """
+        SELECT * FROM (
+            SELECT 'not_null:l_orderkey' AS check_name,
+                   COUNT(*) AS n_violations
+            FROM lineitem WHERE l_orderkey IS NULL
+            UNION ALL
+            SELECT 'not_null:l_quantity', COUNT(*)
+            FROM lineitem WHERE l_quantity IS NULL
+            UNION ALL
+            SELECT 'unique:l_orderkey,l_linenumber', COUNT(*) FROM (
+                SELECT 1 FROM lineitem
+                GROUP BY l_orderkey, l_linenumber HAVING COUNT(*) > 1
+            )
+            UNION ALL
+            SELECT 'fk:l_orderkey->o_orderkey', COUNT(*)
+            FROM lineitem l WHERE NOT EXISTS (
+                SELECT 1 FROM orders o WHERE o.o_orderkey = l.l_orderkey
+            )
+            UNION ALL
+            SELECT 'fk:l_partkey->p_partkey', COUNT(*)
+            FROM lineitem l WHERE NOT EXISTS (
+                SELECT 1 FROM part p WHERE p.p_partkey = l.l_partkey
+            )
+        ) ORDER BY check_name
+    """
 
 
 def ext_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2900,6 +5328,31 @@ def ext_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     return merged.orderBy("o_orderkey")
 
 
+ORACLE["ext_merge_upsert"] = """
+        WITH t AS (
+            SELECT o_orderkey,
+                   CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)
+                       AS price_cents
+            FROM orders
+        ),
+        src AS (
+            SELECT o_orderkey, price_cents * 11 // 10 AS price_cents
+            FROM t WHERE o_orderkey % 10 = 0
+            UNION ALL
+            SELECT o_orderkey + 100000000, price_cents
+            FROM t WHERE o_orderkey % 7 = 3
+        ),
+        merged AS (
+            SELECT * FROM src
+            UNION ALL
+            SELECT t.* FROM t WHERE NOT EXISTS (
+                SELECT 1 FROM src s WHERE s.o_orderkey = t.o_orderkey
+            )
+        )
+        SELECT o_orderkey, price_cents FROM merged ORDER BY o_orderkey
+    """
+
+
 def ext_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic train/val/test assignment by md5 hash bands
     (80/10/10), aggregated per (split, lang) — reproducible on any
@@ -2913,6 +5366,21 @@ def ext_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy("split", "lang")
     )
+
+
+ORACLE["ext_hash_split"] = """
+        WITH s AS (
+            SELECT CASE
+                WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < 'cccc'
+                    THEN 'train'
+                WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < 'e666'
+                    THEN 'val'
+                ELSE 'test' END AS split, lang
+            FROM documents
+        )
+        SELECT split, lang, COUNT(*) AS n
+        FROM s GROUP BY split, lang ORDER BY split, lang
+    """
 
 
 def ext_stratified_split(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2941,6 +5409,31 @@ def ext_stratified_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("lang", "split")
     )
+
+
+# the oracle IS the naive per-stratum window ranking the scalable
+# filter-and-refine path exists to avoid — hash match proves the
+# order-statistics machinery equals exact ranking
+ORACLE["ext_stratified_split"] = """
+        WITH ranked AS (
+            SELECT doc_id, lang,
+                   ROW_NUMBER() OVER (
+                       PARTITION BY lang
+                       ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id
+                   ) AS r,
+                   COUNT(*) OVER (PARTITION BY lang) AS n
+            FROM documents
+        ), assigned AS (
+            SELECT lang, doc_id,
+                   CASE WHEN r <= FLOOR(n * 0.8 + 0.5) THEN 'train'
+                        WHEN r <= FLOOR(n * 0.9 + 0.5) THEN 'val'
+                        ELSE 'test' END AS split
+            FROM ranked
+        )
+        SELECT lang, split, COUNT(*) AS n,
+               CAST(SUM(doc_id) AS BIGINT) AS id_sum
+        FROM assigned GROUP BY lang, split ORDER BY lang, split
+    """
 
 
 def ext_tfidf_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3015,6 +5508,45 @@ def ext_tfidf_pairs_hashed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# full TF-IDF chain recomputed portably: md5-derived feature hash,
+# ln((N+1)/(df+1)) IDF, L2 normalization, all-pairs cosine — pins
+# the sparse blocked-GEMM join of sparse_near_duplicates
+ORACLE["ext_tfidf_pairs_hashed"] = r"""
+        WITH tok AS (
+            SELECT doc_id,
+                   unnest(regexp_split_to_array(lower(text), '\W+')) AS tok
+            FROM documents
+        ), hashed AS (
+            SELECT doc_id,
+                   CAST(CAST(('0x' || substr(md5(tok), 1, 15)) AS UBIGINT)
+                        % 4096 AS BIGINT) AS idx
+            FROM tok WHERE tok <> ''
+        ), tf AS (
+            SELECT doc_id, idx, CAST(COUNT(*) AS DOUBLE) AS tf
+            FROM hashed GROUP BY 1, 2
+        ), dfreq AS (
+            SELECT idx, CAST(COUNT(*) AS DOUBLE) AS df FROM tf GROUP BY 1
+        ), n AS (
+            SELECT CAST(COUNT(*) AS DOUBLE) AS n_docs FROM documents
+        ), w AS (
+            SELECT tf.doc_id, tf.idx,
+                   tf.tf * ln((n.n_docs + 1) / (dfreq.df + 1)) AS w
+            FROM tf JOIN dfreq USING (idx) CROSS JOIN n
+        ), nrm AS (
+            SELECT doc_id, sqrt(SUM(w * w)) AS nrm FROM w GROUP BY 1
+        ), p AS (
+            SELECT w.doc_id, w.idx, w.w / nrm.nrm AS wn
+            FROM w JOIN nrm USING (doc_id) WHERE nrm.nrm > 0
+        )
+        SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+               ROUND(SUM(a.wn * b.wn), 4) AS cosine
+        FROM p a JOIN p b ON a.idx = b.idx AND a.doc_id < b.doc_id
+        GROUP BY 1, 2
+        HAVING SUM(a.wn * b.wn) >= 0.85
+        ORDER BY 1, 2
+    """
+
+
 def ext_udaf_geomean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom UDAF surface: grouped-agg pandas UDF (geometric mean of
     1+n_chars per lang). Python aggregates have no partial/merge phase —
@@ -3028,6 +5560,13 @@ def ext_udaf_geomean(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.round(geometric_mean_1p("n_chars"), 4).alias("geomean_chars"))
         .orderBy("lang")
     )
+
+
+ORACLE["ext_udaf_geomean"] = """
+        SELECT lang,
+               ROUND(EXP(AVG(LN(1 + n_chars))), 4) AS geomean_chars
+        FROM documents GROUP BY lang ORDER BY lang
+    """
 
 
 def ext_range_window(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3053,6 +5592,17 @@ def ext_range_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("user_id", "event_id")
     )
+
+
+ORACLE["ext_range_window"] = """
+        SELECT user_id, event_id,
+               ROUND(SUM(value) OVER (
+                   PARTITION BY user_id
+                   ORDER BY epoch_us(CAST(ts AS TIMESTAMP))
+                   RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW
+               ), 4) AS hour_sum
+        FROM events ORDER BY user_id, event_id
+    """
 
 
 def ext_bpe_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3085,102 +5635,20 @@ def ext_bpe_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# TPC-H Q12 shape: conditional CASE aggregation over a fact-fact join.
-_SHIPMODE_PRIORITY_SQL = """
-    SELECT l.l_linestatus AS shipmode,
-           CAST(SUM(CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH')
-                    THEN 1 ELSE 0 END) AS BIGINT) AS high_count,
-           CAST(SUM(CASE WHEN o.o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
-                    THEN 1 ELSE 0 END) AS BIGINT) AS low_count
-    FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-    WHERE l.l_shipdate >= o.o_orderdate
-    GROUP BY l.l_linestatus
-    ORDER BY shipmode
-"""
-
-
-def ext_sql_shipmode_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q12 shape: CASE-based conditional counts ride the single
-    partial+final hash agg — one shuffle for both measures."""
-    from mitoscape_spark.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_SHIPMODE_PRIORITY_SQL)
-
-
-# TPC-H Q14 shape: conditional-revenue ratio, one row.
-_PROMO_REVENUE_SQL = """
-    SELECT ROUND(
-        100.0 * SUM(CASE WHEN p.p_type = 'PROMO'
-                    THEN l.l_extendedprice * (1 - l.l_discount)
-                    ELSE 0 END)
-              / SUM(l.l_extendedprice * (1 - l.l_discount)), 4)
-        AS promo_pct
-    FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-"""
-
-
-def ext_sql_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q14 shape: both conditional and total revenue in ONE agg
-    pass (no second scan); part side broadcasts."""
-    from mitoscape_spark.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_PROMO_REVENUE_SQL)
-
-
-# TPC-H Q16 shape: COUNT DISTINCT + NOT IN subquery.
-_PARTS_SUPPLIER_SQL = """
-    SELECT p.p_brand, p.p_type,
-           CAST(COUNT(DISTINCT l.l_suppkey) AS BIGINT) AS supplier_cnt
-    FROM part p JOIN lineitem l ON l.l_partkey = p.p_partkey
-    WHERE p.p_brand <> 'Brand#1'
-      AND l.l_suppkey NOT IN (
-          SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-    GROUP BY p.p_brand, p.p_type
-    ORDER BY supplier_cnt DESC, p.p_brand, p.p_type
-"""
-
-
-def ext_sql_parts_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q16 shape: NOT IN decorrelates to a broadcast null-aware
-    anti join; COUNT DISTINCT goes through the two-level Expand agg."""
-    from mitoscape_spark.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_PARTS_SUPPLIER_SQL)
-
-
-# TPC-H Q21 shape: EXISTS + NOT EXISTS correlated on the same fact.
-_WAITING_SUPPLIER_SQL = """
-    SELECT s.s_name, CAST(COUNT(*) AS BIGINT) AS numwait
-    FROM supplier s
-    JOIN lineitem l1 ON s.s_suppkey = l1.l_suppkey
-    JOIN orders o ON o.o_orderkey = l1.l_orderkey
-    WHERE o.o_orderstatus = 'F'
-      AND l1.l_returnflag = 'R'
-      AND EXISTS (
-          SELECT 1 FROM lineitem l2
-          WHERE l2.l_orderkey = l1.l_orderkey
-            AND l2.l_suppkey <> l1.l_suppkey)
-      AND NOT EXISTS (
-          SELECT 1 FROM lineitem l3
-          WHERE l3.l_orderkey = l1.l_orderkey
-            AND l3.l_suppkey <> l1.l_suppkey
-            AND l3.l_returnflag = 'R')
-    GROUP BY s.s_name
-    ORDER BY numwait DESC, s.s_name
-"""
-
-
-def ext_sql_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q21 shape — the hardest decorrelation in the suite: a
-    semi AND an anti existence join against the same fact table, then
-    agg. Catalyst plans both as hash joins on l_orderkey."""
-    from mitoscape_spark.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_WAITING_SUPPLIER_SQL)
+ORACLE["ext_bpe_tokens"] = (
+    # COALESCE(text,'') mirrors the declared query's NULL-text coalesce
+    # (Spark concat_ws('')/size() vs DuckDB array_to_string/len diverge
+    # on NULL input — round-6 advice item 1)
+    "WITH d AS (SELECT doc_id, COALESCE(text, '') AS text FROM documents)\n"
+    "SELECT doc_id,\n"
+    "       array_to_string(regexp_extract_all(text, '" + _BPE_PAT_SQL
+    + "'), chr(1)) AS bpe_tokens_str,\n"
+    "       len(regexp_extract_all(text, '" + _BPE_PAT_SQL + "'))\n"
+    "           AS n_bpe_tokens,\n"
+    "       len(list_distinct(regexp_extract_all(text, '" + _BPE_PAT_SQL
+    + "'))) AS n_bpe_distinct\n"
+    "FROM d ORDER BY doc_id"
+)
 
 
 def ext_variant_json(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3204,6 +5672,22 @@ def ext_variant_json(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("event_type")
     )
+
+
+ORACLE["ext_variant_json"] = """
+        SELECT event_type,
+               COUNT(*) AS n,
+               MIN(k) AS min_k,
+               MAX(k) AS max_k
+        FROM (
+            SELECT event_type,
+                   CAST(json_extract(props, '$.k') AS INT) AS k
+            FROM events
+        )
+        WHERE k >= 50
+        GROUP BY event_type
+        ORDER BY event_type
+    """
 
 
 def ext_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3231,263 +5715,16 @@ def ext_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------- round-2 TPC-H shapes
+ORACLE["ext_cube"] = """
+        SELECT COALESCE(o_orderstatus, 'ALL') AS status,
+               COALESCE(o_orderpriority, 'ALL') AS priority,
+               COUNT(*) AS n,
+               ROUND(SUM(o_totalprice), 2) AS rev
+        FROM orders
+        GROUP BY CUBE(o_orderstatus, o_orderpriority)
+        ORDER BY status, priority
+    """
 
-_PROFIT_BY_NATION_SQL = """
-    SELECT n.n_name AS nation,
-           CAST(year(o.o_orderdate) AS INT) AS o_year,
-           ROUND(SUM(l.l_extendedprice * (1 - l.l_discount)), 2) AS profit
-    FROM lineitem l
-    JOIN supplier s ON s.s_suppkey = l.l_suppkey
-    JOIN nation n   ON n.n_nationkey = s.s_nationkey
-    JOIN orders o   ON o.o_orderkey = l.l_orderkey
-    JOIN part p     ON p.p_partkey = l.l_partkey
-    WHERE p.p_name LIKE '%bolt%'
-    GROUP BY n.n_name, CAST(year(o.o_orderdate) AS INT)
-    ORDER BY nation, o_year DESC
-"""
-
-
-def ext_sql_profit_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q9 shape: 5-way star join (fact ⋈ 2 dims ⋈ fact ⋈ dim)
-    with a LIKE filter on the part dim and a (nation, year) rollup.
-    Catalyst pushes the LIKE into the part scan, broadcasts the small
-    dims, and reorders the join chain; at 100 TB the only big-big edge
-    is lineitem⋈orders on the key both are naturally clustered by."""
-    from mitoscape_spark.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_PROFIT_BY_NATION_SQL)
-
-
-_CUST_ORDER_DISTRIBUTION_SQL = """
-    SELECT c_count, COUNT(*) AS custdist
-    FROM (
-        SELECT c.c_custkey, COUNT(o.o_orderkey) AS c_count
-        FROM customer c
-        LEFT OUTER JOIN orders o ON c.c_custkey = o.o_custkey
-        GROUP BY c.c_custkey
-    ) t
-    GROUP BY c_count
-    ORDER BY custdist DESC, c_count DESC
-"""
-
-
-def ext_sql_cust_order_distribution(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """TPC-H Q13 shape: outer-join histogram — per-customer order count
-    (LEFT OUTER keeps zero-order customers), then the distribution of
-    those counts. Two cascaded aggregations; the second input is one
-    row per customer, so the heavy shuffle happens exactly once."""
-    from mitoscape_spark.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_CUST_ORDER_DISTRIBUTION_SQL)
-
-
-_TOP_SUPPLIER_SQL = """
-    WITH revenue AS (
-        SELECT l_suppkey AS supplier_no,
-               ROUND(SUM(l_extendedprice * (1 - l_discount)), 2)
-                   AS total_revenue
-        FROM lineitem
-        WHERE l_shipdate >= DATE '1995-01-01'
-          AND l_shipdate < DATE '1996-01-01'
-        GROUP BY l_suppkey
-    )
-    SELECT s.s_suppkey, s.s_name, r.total_revenue
-    FROM supplier s
-    JOIN revenue r ON s.s_suppkey = r.supplier_no
-    WHERE r.total_revenue = (SELECT MAX(total_revenue) FROM revenue)
-    ORDER BY s.s_suppkey
-"""
-
-
-def ext_sql_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q15 shape: CTE revenue view + scalar-MAX subquery over the
-    same CTE. Revenue is rounded INSIDE the CTE so the max-equality
-    compares identically across engines. The CTE is computed twice
-    (once per reference) unless the engine reuses it — the rollup is
-    one reduced row per supplier either way."""
-    from mitoscape_spark.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_TOP_SUPPLIER_SQL)
-
-
-_SMALL_QTY_REVENUE_SQL = """
-    SELECT ROUND(SUM(l.l_extendedprice) / 7.0, 2) AS avg_yearly
-    FROM lineitem l
-    JOIN part p ON p.p_partkey = l.l_partkey
-    WHERE p.p_name LIKE '%bolt%'
-      AND l.l_quantity < (
-          SELECT 0.2 * AVG(l2.l_quantity)
-          FROM lineitem l2
-          WHERE l2.l_partkey = l.l_partkey
-      )
-"""
-
-
-def ext_sql_small_quantity_revenue(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """TPC-H Q17 shape: correlated scalar-AVG subquery against the SAME
-    fact table. Catalyst decorrelates into a per-partkey AVG aggregate
-    joined back — the fact table is scanned twice but never per-row;
-    the naive interpretation (subquery per row) would be O(n²)."""
-    from mitoscape_spark.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_SMALL_QTY_REVENUE_SQL)
-
-
-# TPC-H Q6 shape: pure filter-aggregate, zero joins.
-_FORECAST_REVENUE_SQL = """
-    SELECT ROUND(SUM(l_extendedprice * l_discount), 2) AS revenue
-    FROM lineitem
-    WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-      AND l_shipdate < TIMESTAMP '1997-01-01'
-      AND l_discount BETWEEN 0.03 AND 0.07
-      AND l_quantity < 24
-"""
-
-
-def ext_sql_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q6 shape: every predicate reaches the parquet scan as a
-    PushedFilter (range on shipdate/discount/quantity), then one
-    partial+final agg — the query that exists to measure scan + filter
-    throughput and predicate pushdown."""
-    from mitoscape_spark.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_FORECAST_REVENUE_SQL)
-
-
-# TPC-H Q8 shape: market share — conditional share inside a grouped
-# ratio over a 6-table join tree.
-_MARKET_SHARE_SQL = """
-    SELECT o_year,
-           ROUND(SUM(CASE WHEN supp_nation = 'NATION_2'
-                     THEN volume ELSE 0 END) / SUM(volume), 6)
-               AS mkt_share
-    FROM (
-        SELECT year(o.o_orderdate) AS o_year,
-               l.l_extendedprice * (1 - l.l_discount) AS volume,
-               n2.n_name AS supp_nation
-        FROM lineitem l
-        JOIN orders o ON l.l_orderkey = o.o_orderkey
-        JOIN customer c ON o.o_custkey = c.c_custkey
-        JOIN nation n1 ON c.c_nationkey = n1.n_nationkey
-        JOIN region r ON n1.n_regionkey = r.r_regionkey
-        JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        JOIN nation n2 ON s.s_nationkey = n2.n_nationkey
-        WHERE r.r_name = 'ASIA'
-          AND o.o_orderdate >= TIMESTAMP '1996-01-01'
-          AND o.o_orderdate < TIMESTAMP '1998-01-01'
-    ) shares
-    GROUP BY o_year
-    ORDER BY o_year
-"""
-
-
-def ext_sql_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q8 shape: six-table join tree with every dimension
-    broadcastable; the nation table joins TWICE (customer side filters
-    the region, supplier side labels the share) — alias-correctness
-    under self-referencing dims, then a conditional ratio per year."""
-    from mitoscape_spark.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_MARKET_SHARE_SQL)
-
-
-# TPC-H Q11 shape: HAVING against a scalar subquery over the same agg.
-_IMPORTANT_VOLUME_SQL = """
-    SELECT l.l_partkey,
-           ROUND(SUM(l.l_extendedprice * l.l_quantity), 2) AS value
-    FROM lineitem l
-    JOIN supplier s ON l.l_suppkey = s.s_suppkey
-    JOIN nation n ON s.s_nationkey = n.n_nationkey
-    WHERE n.n_name = 'NATION_3'
-    GROUP BY l.l_partkey
-    HAVING SUM(l.l_extendedprice * l.l_quantity) > (
-        SELECT 0.001 * SUM(l2.l_extendedprice * l2.l_quantity)
-        FROM lineitem l2
-        JOIN supplier s2 ON l2.l_suppkey = s2.s_suppkey
-        JOIN nation n2 ON s2.s_nationkey = n2.n_nationkey
-        WHERE n2.n_name = 'NATION_3'
-    )
-    ORDER BY value DESC, l.l_partkey
-"""
-
-
-def ext_sql_important_volume(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """TPC-H Q11 shape (partsupp stood in by lineitem value — the
-    corpus has no partsupp table): grouped sum filtered by a SCALAR
-    subquery computing a fraction of the global sum. Catalyst plans
-    the subquery once (one extra agg over the same filtered scan) and
-    broadcasts the 1-row threshold into the HAVING filter — never a
-    per-group re-execution."""
-    from mitoscape_spark.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_IMPORTANT_VOLUME_SQL)
-
-
-# TPC-H Q20 shape: nested IN-subquery chain gating a dimension.
-_PROMO_SUPPLIER_SQL = """
-    SELECT s.s_name, s.s_acctbal
-    FROM supplier s
-    JOIN nation n ON s.s_nationkey = n.n_nationkey
-    WHERE n.n_name = 'NATION_1'
-      AND s.s_suppkey IN (
-          SELECT l.l_suppkey
-          FROM lineitem l
-          WHERE l.l_partkey IN (
-              SELECT p_partkey FROM part WHERE p_type = 'PROMO'
-          )
-          GROUP BY l.l_suppkey
-          HAVING SUM(l.l_quantity) > 100
-      )
-    ORDER BY s.s_name
-"""
-
-
-def ext_sql_promo_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q20 shape: a two-level IN-subquery chain (suppliers who
-    moved >100 units of PROMO parts). Both INs decorrelate to
-    semi-joins: part gates lineitem BEFORE its aggregation, the
-    aggregated supplier set semi-joins the dimension — no correlated
-    re-execution anywhere."""
-    from mitoscape_spark.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_PROMO_SUPPLIER_SQL)
-
-
-_STOP_SQL = {
-    "en": "['the','a','of','and','to','in','is','for']",
-    "fr": "['le','la','de','et','un','une','est','pour']",
-    "de": "['der','die','das','und','ein','ist','für','von']",
-    "es": "['el','la','de','y','un','una','es','para']",
-}
-
-# Shared DuckDB CTEs: tokens with 0-based pos, 3-token shingles
-_TOKS = """
-toks AS (
-    SELECT doc_id, string_split(lower(text), ' ') AS t FROM documents
-)
-"""
-_SHINGLES3 = """
-sh AS (
-    SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS shingle
-    FROM toks, UNNEST(range(1, greatest(len(t) - 1, 1))) AS r(i)
-    WHERE len(t) >= 3
-)
-"""
 
 def ext_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 ranked retrieval (operators/bm25.py): top-15 docs for a
@@ -3498,6 +5735,45 @@ def ext_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     return bm25_search(docs, "vector join fast", k=15)
+
+
+ORACLE["ext_bm25_search"] = """
+    WITH toks AS (
+        SELECT doc_id,
+               len(string_split(text, ' ')) AS dl,
+               unnest(string_split(lower(text), ' ')) AS token
+        FROM documents
+    ),
+    postings AS (
+        SELECT token, doc_id, dl, COUNT(*) AS tf
+        FROM toks
+        WHERE token IN ('fast', 'join', 'vector')
+        GROUP BY token, doc_id, dl
+    ),
+    dfs AS (
+        SELECT token, COUNT(DISTINCT doc_id) AS df
+        FROM toks
+        WHERE token IN ('fast', 'join', 'vector')
+        GROUP BY token
+    ),
+    stats AS (
+        SELECT COUNT(*) AS n_docs,
+               AVG(len(string_split(text, ' '))) AS avgdl
+        FROM documents
+    )
+    SELECT doc_id,
+           ROUND(SUM(
+               ln(1 + (n_docs - df + 0.5) / (df + 0.5))
+               * tf * 2.2
+               / (tf + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl))
+           ), 6) AS bm25
+    FROM postings
+    JOIN dfs USING (token)
+    CROSS JOIN stats
+    GROUP BY doc_id
+    ORDER BY bm25 DESC, doc_id
+    LIMIT 15
+"""
 
 
 def ext_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3532,6 +5808,81 @@ def ext_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+ORACLE["ext_triangle_count"] = """
+    WITH e AS (
+        SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
+        FROM lineitem a
+        JOIN lineitem b ON a.l_orderkey = b.l_orderkey
+        WHERE a.l_partkey < b.l_partkey
+    ),
+    tri AS (
+        SELECT e1.u AS a, e1.v AS b, e2.v AS c
+        FROM e e1
+        JOIN e e2 ON e2.u = e1.v
+        JOIN e e3 ON e3.u = e1.u AND e3.v = e2.v
+    )
+    SELECT id, COUNT(*) AS n_triangles
+    FROM (
+        SELECT a AS id FROM tri
+        UNION ALL SELECT b FROM tri
+        UNION ALL SELECT c FROM tri
+    )
+    GROUP BY id
+    ORDER BY n_triangles DESC, id
+    LIMIT 100
+"""
+
+
+def _kcore_oracle_sql(k: int = 3, rounds: int = 16) -> str:
+    """DuckDB restatement of ext_kcore: the peel loop unrolled as
+    ``rounds`` MATERIALIZED CTE pairs (keep_r = nodes with degree ≥ k
+    in e_{r-1}; e_r = edges with both endpoints kept). Over-unrolling
+    past the fixpoint is safe — peeling is monotone, so extra rounds
+    reproduce the same edge set verbatim (the LPA/PageRank unrolling
+    argument). MATERIALIZED stops DuckDB inlining the chain
+    exponentially."""
+    parts = [
+        """e0 AS MATERIALIZED (
+            SELECT u, v FROM (
+                SELECT a.l_partkey AS u, b.l_partkey AS v,
+                       COUNT(*) AS w
+                FROM (SELECT DISTINCT l_orderkey, l_partkey
+                      FROM lineitem) a
+                JOIN (SELECT DISTINCT l_orderkey, l_partkey
+                      FROM lineitem) b
+                  ON a.l_orderkey = b.l_orderkey
+                WHERE a.l_partkey < b.l_partkey
+                GROUP BY 1, 2
+            ) WHERE w >= 2
+        )"""
+    ]
+    for r in range(1, rounds + 1):
+        p = r - 1
+        parts.append(
+            f"""k{r} AS MATERIALIZED (
+            SELECT x FROM (
+                SELECT u AS x FROM e{p} UNION ALL SELECT v FROM e{p}
+            ) GROUP BY x HAVING COUNT(*) >= {k}
+        )"""
+        )
+        parts.append(
+            f"""e{r} AS MATERIALIZED (
+            SELECT e.u, e.v FROM e{p} e
+            JOIN k{r} a ON e.u = a.x JOIN k{r} b ON e.v = b.x
+        )"""
+        )
+    return (
+        "WITH "
+        + ",\n        ".join(parts)
+        + f"""
+        SELECT x AS id, COUNT(*) AS core_degree FROM (
+            SELECT u AS x FROM e{rounds} UNION ALL
+            SELECT v FROM e{rounds}
+        ) GROUP BY x ORDER BY id
+    """
+    )
+
+
 def ext_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-core decomposition (operators/graph.py::k_core): the 3-core
     of the sparsified co-purchase graph (parts sharing ≥ 2 orders) —
@@ -3563,6 +5914,9 @@ def ext_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     return k_core(edges, k=3, max_rounds=16).orderBy("id")
 
 
+ORACLE["ext_kcore"] = _kcore_oracle_sql()
+
+
 def ext_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact frequency heavy hitters (operators/heavyhitters.py): users
     with >= 80 events, via per-partition candidate generation (pigeonhole
@@ -3576,6 +5930,15 @@ def ext_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return exact_heavy_hitters(events, ["user_id"], 80).orderBy("user_id")
 
 
+ORACLE["ext_heavy_hitters"] = """
+        SELECT user_id, COUNT(*) AS n
+        FROM events
+        GROUP BY user_id
+        HAVING COUNT(*) >= 80
+        ORDER BY user_id
+    """
+
+
 def ext_seasonal_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Day-of-week seasonal decomposition + 3-sigma anomaly flags over
     the global daily revenue series (operators/timeseries.py::
@@ -3586,6 +5949,29 @@ def ext_seasonal_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     events = load_table(spark, sf_dir, "events")
     return seasonal_decompose_dow(events, sigma=3.0).orderBy("day")
+
+
+ORACLE["ext_seasonal_dow"] = """
+        WITH daily AS (
+            SELECT CAST(ts AS DATE) AS day, SUM(value) AS total
+            FROM events GROUP BY 1
+        ), d2 AS (
+            SELECT day, CAST(isodow(day) AS INT) AS dow, total FROM daily
+        ), season AS (
+            SELECT dow, AVG(total) AS dow_avg FROM d2 GROUP BY dow
+        ), j AS (
+            SELECT d2.day, d2.dow, d2.total, season.dow_avg,
+                   d2.total - season.dow_avg AS resid
+            FROM d2 JOIN season USING (dow)
+        ), s AS (SELECT STDDEV_SAMP(resid) AS sd FROM j)
+        SELECT day, dow,
+               ROUND(total, 4) AS total,
+               ROUND(dow_avg, 4) AS dow_avg,
+               ROUND(resid, 4) AS resid,
+               CAST(ABS(resid) > 3.0 * s.sd AS INT) AS is_anomaly
+        FROM j, s
+        ORDER BY day
+    """
 
 
 def ext_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3613,87 +5999,26 @@ def ext_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pairs.orderBy("doc_a", "doc_b")
 
 
-_COPURCHASE_SQL = """
-    WITH op AS (
-        SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-    )
-    SELECT a.l_partkey AS part_a, b.l_partkey AS part_b,
-           COUNT(*) AS support
-    FROM op a JOIN op b
-      ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-    GROUP BY a.l_partkey, b.l_partkey
-    HAVING COUNT(*) >= 2
-    ORDER BY support DESC, part_a, part_b
-    LIMIT 200
-"""
-
-
-def ext_copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frequent-itemset first pass (market-basket 2-itemsets): part
-    pairs co-occurring in >= 2 distinct orders. The (order, part)
-    dedup BEFORE the self-join is what keeps the pair space basket-
-    bounded (repeated lines of one part would square into the output);
-    per-order pair fan-out is basket_size², the A-priori cost model.
-    Identical SQL both engines."""
-    from mitoscape_spark.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_COPURCHASE_SQL)
-
-
-_CONCENTRATION_SQL = """
-    WITH cust AS (
-        SELECT o_custkey, SUM(o_totalprice) AS rev
-        FROM orders GROUP BY o_custkey
-    ), ranked AS (
-        SELECT o_custkey, rev,
-               NTILE(10) OVER (ORDER BY rev DESC, o_custkey) AS decile
-        FROM cust
-    ), tot AS (SELECT SUM(rev) AS total FROM cust)
-    SELECT decile,
-           COUNT(*) AS n_customers,
-           ROUND(SUM(rev), 2) AS revenue,
-           ROUND(SUM(rev) / tot.total, 6) AS share
-    FROM ranked, tot
-    GROUP BY decile, tot.total
-    ORDER BY decile
-"""
-
-
-def ext_revenue_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Concentration (Lorenz/decile) report: customers ranked by total
-    spend, split into revenue deciles, each decile's share of total —
-    the who-are-the-whales query every revenue dashboard carries. One
-    agg + one window over the AGGREGATED customer table (never the
-    facts) + a 1-row total broadcast. Identical SQL both engines
-    (deterministic NTILE tie-break by custkey)."""
-    from mitoscape_spark.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_CONCENTRATION_SQL)
-
-
-_GROUPING_SETS_SQL = """
-    SELECT COALESCE(l_returnflag, 'ALL') AS rf,
-           COALESCE(l_linestatus, 'ALL') AS ls,
-           COUNT(*) AS n,
-           ROUND(SUM(l_quantity), 2) AS qty
-    FROM lineitem
-    GROUP BY GROUPING SETS ((l_returnflag, l_linestatus),
-                            (l_returnflag), ())
-    ORDER BY rf, ls
-"""
-
-
-def ext_sql_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Explicit GROUPING SETS (the asymmetric subset cube/rollup can't
-    state): three chosen set combinations in ONE pass via Catalyst's
-    Expand — map-side ×3 replication, one shuffle, no per-set rescans.
-    Identical SQL text runs on DuckDB."""
-    from mitoscape_spark.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_GROUPING_SETS_SQL)
+ORACLE["ext_incremental_dedup"] = f"""
+        WITH {_TOKS}, {_SHINGLES3},
+        sig AS (
+            SELECT doc_id, seed,
+                   MIN(md5(concat(CAST(seed AS VARCHAR), '|', shingle))) AS minhash
+            FROM sh, UNNEST([0,1,2,3,4,5,6,7]) AS s(seed)
+            GROUP BY doc_id, seed
+        ),
+        bands AS (
+            SELECT doc_id, seed // 2 AS band,
+                   string_agg(minhash, ',' ORDER BY seed) AS band_key
+            FROM sig GROUP BY doc_id, seed // 2
+        )
+        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+        FROM bands a JOIN bands b
+          ON a.band = b.band AND a.band_key = b.band_key
+         AND a.doc_id < b.doc_id
+        WHERE b.doc_id >= 400 OR a.doc_id >= 400
+        ORDER BY doc_a, doc_b
+    """
 
 
 def ext_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3710,6 +6035,76 @@ def ext_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     return hybrid_search_rrf(
         docs, emb, "vector join fast", list(qv), k=15, depth=50
     )
+
+
+ORACLE["ext_hybrid_search"] = """
+        WITH toks AS (
+            SELECT doc_id,
+                   len(string_split(text, ' ')) AS dl,
+                   unnest(string_split(lower(text), ' ')) AS token
+            FROM documents
+        ),
+        postings AS (
+            SELECT token, doc_id, dl, COUNT(*) AS tf
+            FROM toks
+            WHERE token IN ('fast', 'join', 'vector')
+            GROUP BY token, doc_id, dl
+        ),
+        dfs AS (
+            SELECT token, COUNT(DISTINCT doc_id) AS df
+            FROM toks
+            WHERE token IN ('fast', 'join', 'vector')
+            GROUP BY token
+        ),
+        stats AS (
+            SELECT COUNT(*) AS n_docs,
+                   AVG(len(string_split(text, ' '))) AS avgdl
+            FROM documents
+        ),
+        lex AS (
+            SELECT doc_id AS id,
+                   ROUND(SUM(
+                       ln(1 + (n_docs - df + 0.5) / (df + 0.5))
+                       * tf * 2.2
+                       / (tf + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl))
+                   ), 6) AS bm25
+            FROM postings
+            JOIN dfs USING (token)
+            CROSS JOIN stats
+            GROUP BY doc_id
+            ORDER BY bm25 DESC, doc_id
+            LIMIT 50
+        ),
+        lexr AS (
+            SELECT id,
+                   CAST(ROW_NUMBER() OVER (ORDER BY bm25 DESC, id) AS INT)
+                       AS r_lex
+            FROM lex
+        ),
+        q AS (
+            SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings
+            WHERE vec_id = 0
+        ),
+        dense AS (
+            SELECT vec_id AS id,
+                   ROUND(list_cosine_similarity(
+                       CAST(embedding AS DOUBLE[]), q.qv), 6) AS cos
+            FROM embeddings, q
+            ORDER BY cos DESC, id LIMIT 50
+        ),
+        denser AS (
+            SELECT id,
+                   CAST(ROW_NUMBER() OVER (ORDER BY cos DESC, id) AS INT)
+                       AS r_dense
+            FROM dense
+        )
+        SELECT COALESCE(l.id, d.id) AS id,
+               ROUND(COALESCE(1.0 / (60 + r_lex), 0)
+                     + COALESCE(1.0 / (60 + r_dense), 0), 6) AS rrf,
+               r_lex, r_dense
+        FROM lexr l FULL OUTER JOIN denser d ON l.id = d.id
+        ORDER BY rrf DESC, id LIMIT 15
+    """
 
 
 def ext_pack_ffd(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3769,6 +6164,16 @@ def ext_pack_ffd_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+ORACLE["ext_pack_ffd_invariants"] = """
+        SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
+               CAST(SUM(len(string_split(text, ' '))) AS BIGINT)
+                   AS total_tokens,
+               0 AS overflow_packs,
+               1 AS lb_ok
+        FROM documents
+    """
+
+
 def ext_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distribution-drift report (operators/drift.py): PSI of the
     post-1997 lineitem slice against the pre-1997 reference, three
@@ -3787,6 +6192,71 @@ def ext_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("col_name")
 
 
+ORACLE["ext_drift_psi"] = """
+        WITH refm AS (
+            SELECT 'l_quantity' AS col_name, CAST(l_quantity AS DOUBLE) AS value
+            FROM lineitem WHERE l_shipdate < TIMESTAMP '1997-01-01'
+            UNION ALL
+            SELECT 'l_extendedprice', CAST(l_extendedprice AS DOUBLE)
+            FROM lineitem WHERE l_shipdate < TIMESTAMP '1997-01-01'
+            UNION ALL
+            SELECT 'l_discount', CAST(l_discount AS DOUBLE)
+            FROM lineitem WHERE l_shipdate < TIMESTAMP '1997-01-01'
+        ), curm AS (
+            SELECT 'l_quantity' AS col_name, CAST(l_quantity AS DOUBLE) AS value
+            FROM lineitem WHERE l_shipdate >= TIMESTAMP '1997-01-01'
+            UNION ALL
+            SELECT 'l_extendedprice', CAST(l_extendedprice AS DOUBLE)
+            FROM lineitem WHERE l_shipdate >= TIMESTAMP '1997-01-01'
+            UNION ALL
+            SELECT 'l_discount', CAST(l_discount AS DOUBLE)
+            FROM lineitem WHERE l_shipdate >= TIMESTAMP '1997-01-01'
+        ), edges AS (
+            SELECT col_name, MIN(value) AS lo, MAX(value) AS hi
+            FROM refm WHERE value IS NOT NULL GROUP BY col_name
+        ), rb AS (
+            SELECT r.col_name,
+                   CASE WHEN (e.hi - e.lo) / 10 <= 0 THEN 0
+                        ELSE CAST(LEAST(GREATEST(FLOOR(
+                            (r.value - e.lo) / ((e.hi - e.lo) / 10)), 0), 9)
+                        AS INT) END AS bin,
+                   COUNT(*) AS n_ref
+            FROM refm r JOIN edges e USING (col_name)
+            WHERE r.value IS NOT NULL
+            GROUP BY 1, 2
+        ), cb AS (
+            SELECT c.col_name,
+                   CASE WHEN (e.hi - e.lo) / 10 <= 0 THEN 0
+                        ELSE CAST(LEAST(GREATEST(FLOOR(
+                            (c.value - e.lo) / ((e.hi - e.lo) / 10)), 0), 9)
+                        AS INT) END AS bin,
+                   COUNT(*) AS n_cur
+            FROM curm c JOIN edges e USING (col_name)
+            WHERE c.value IS NOT NULL
+            GROUP BY 1, 2
+        ), j AS (
+            SELECT COALESCE(rb.col_name, cb.col_name) AS col_name,
+                   COALESCE(rb.bin, cb.bin) AS bin,
+                   COALESCE(n_ref, 0) AS n_ref, COALESCE(n_cur, 0) AS n_cur
+            FROM rb FULL OUTER JOIN cb
+              ON rb.col_name = cb.col_name AND rb.bin = cb.bin
+        ), t AS (
+            SELECT col_name, SUM(n_ref) AS tr, SUM(n_cur) AS tc
+            FROM j GROUP BY col_name
+        )
+        SELECT j.col_name,
+               ROUND(SUM(
+                   (GREATEST(n_cur / t.tc, 1e-6)
+                    - GREATEST(n_ref / t.tr, 1e-6))
+                   * LN(GREATEST(n_cur / t.tc, 1e-6)
+                        / GREATEST(n_ref / t.tr, 1e-6))
+               ), 6) AS psi
+        FROM j JOIN t ON j.col_name = t.col_name
+        GROUP BY j.col_name
+        ORDER BY j.col_name
+    """
+
+
 def ext_drift_categorical(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Categorical-PSI drift (operators/drift.py::
     drift_report_categorical): per-VALUE frequency PSI of the string
@@ -3803,6 +6273,51 @@ def ext_drift_categorical(spark: SparkSession, sf_dir: str) -> DataFrame:
     return drift_report_categorical(ref, cur, ["lang", "source"]).orderBy(
         "col_name"
     )
+
+
+ORACLE["ext_drift_categorical"] = """
+        WITH ref AS (SELECT * FROM documents WHERE doc_id % 2 = 0),
+        cur AS (SELECT * FROM documents WHERE doc_id % 2 = 1),
+        refm AS (
+            SELECT 'lang' AS col_name,
+                   COALESCE(CAST(lang AS VARCHAR), ' __null__') AS value
+            FROM ref
+            UNION ALL
+            SELECT 'source', COALESCE(CAST(source AS VARCHAR), ' __null__')
+            FROM ref
+        ), curm AS (
+            SELECT 'lang' AS col_name,
+                   COALESCE(CAST(lang AS VARCHAR), ' __null__') AS value
+            FROM cur
+            UNION ALL
+            SELECT 'source', COALESCE(CAST(source AS VARCHAR), ' __null__')
+            FROM cur
+        ), rc AS (
+            SELECT col_name, value, COUNT(*) AS n_ref
+            FROM refm GROUP BY 1, 2
+        ), cc AS (
+            SELECT col_name, value, COUNT(*) AS n_cur
+            FROM curm GROUP BY 1, 2
+        ), j AS (
+            SELECT COALESCE(rc.col_name, cc.col_name) AS col_name,
+                   COALESCE(n_ref, 0) AS n_ref, COALESCE(n_cur, 0) AS n_cur
+            FROM rc FULL OUTER JOIN cc
+              ON rc.col_name = cc.col_name AND rc.value = cc.value
+        ), t AS (
+            SELECT col_name, SUM(n_ref) AS tr, SUM(n_cur) AS tc
+            FROM j GROUP BY col_name
+        )
+        SELECT j.col_name,
+               ROUND(SUM(
+                   (GREATEST(n_cur / t.tc, 1e-6)
+                    - GREATEST(n_ref / t.tr, 1e-6))
+                   * LN(GREATEST(n_cur / t.tc, 1e-6)
+                        / GREATEST(n_ref / t.tr, 1e-6))
+               ), 6) AS psi
+        FROM j JOIN t ON j.col_name = t.col_name
+        GROUP BY j.col_name
+        ORDER BY j.col_name
+    """
 
 
 def ext_quality_model(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3847,6 +6362,29 @@ def ext_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("col_a", "col_b")
 
 
+ORACLE["ext_corr_matrix"] = """
+        WITH one AS (
+            SELECT
+                ROUND(corr(l_quantity, l_extendedprice), 4) AS c0,
+                ROUND(corr(l_quantity, l_discount), 4) AS c1,
+                ROUND(corr(l_quantity, l_tax), 4) AS c2,
+                ROUND(corr(l_extendedprice, l_discount), 4) AS c3,
+                ROUND(corr(l_extendedprice, l_tax), 4) AS c4,
+                ROUND(corr(l_discount, l_tax), 4) AS c5
+            FROM lineitem
+        )
+        SELECT col_a, col_b, corr FROM (
+            SELECT 'l_quantity' AS col_a, 'l_extendedprice' AS col_b, c0 AS corr FROM one
+            UNION ALL SELECT 'l_quantity', 'l_discount', c1 FROM one
+            UNION ALL SELECT 'l_quantity', 'l_tax', c2 FROM one
+            UNION ALL SELECT 'l_extendedprice', 'l_discount', c3 FROM one
+            UNION ALL SELECT 'l_extendedprice', 'l_tax', c4 FROM one
+            UNION ALL SELECT 'l_discount', 'l_tax', c5 FROM one
+        )
+        ORDER BY col_a, col_b
+    """
+
+
 def ext_graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Min-hop distances (operators/graph.py::shortest_hops) from
     supplier 1 over the undirected bulk-order supplier–part graph,
@@ -3875,6 +6413,27 @@ def ext_graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return shortest_hops(undirected, sources, max_hops=3).orderBy("id")
 
 
+ORACLE["ext_graph_bfs"] = """
+        WITH e AS (
+            SELECT DISTINCT l_suppkey AS s, l_partkey + 1000000 AS d
+            FROM lineitem WHERE l_quantity >= 48
+        ), ed AS (
+            SELECT s, d FROM e UNION SELECT d, s FROM e
+        ), d0 AS (SELECT CAST(1 AS BIGINT) AS id),
+        h1 AS (SELECT DISTINCT ed.d AS id FROM ed JOIN d0 ON ed.s = d0.id),
+        h2 AS (SELECT DISTINCT ed.d AS id FROM ed JOIN h1 ON ed.s = h1.id),
+        h3 AS (SELECT DISTINCT ed.d AS id FROM ed JOIN h2 ON ed.s = h2.id),
+        lv AS (
+            SELECT id, 0 AS dist FROM d0
+            UNION ALL SELECT id, 1 FROM h1
+            UNION ALL SELECT id, 2 FROM h2
+            UNION ALL SELECT id, 3 FROM h3
+        )
+        SELECT id, CAST(MIN(dist) AS INT) AS dist
+        FROM lv GROUP BY id ORDER BY id
+    """
+
+
 def ext_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image near-duplicate pairs by perceptual hash
     (operators/images.py): decode the synthetic PPM/BMP corpus once
@@ -3899,6 +6458,37 @@ def ext_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = synthetic_decodable_media(spark, docs)
     pairs = phash_near_duplicates(average_hashes(media), max_hamming=3)
     return pairs.orderBy("id_a", "id_b").limit(1000)
+
+
+ORACLE["ext_image_phash"] = """
+        WITH img AS (
+            SELECT doc_id FROM documents WHERE doc_id % 3 IN (1, 2)
+        ), px AS (
+            SELECT doc_id, i,
+                   ((3*i) * (doc_id+7)) % 256
+                 + ((3*i+1) * (doc_id+7)) % 256
+                 + ((3*i+2) * (doc_id+7)) % 256 AS s
+            FROM img, UNNEST(generate_series(0, 63)) AS t(i)
+        ), tot AS (
+            SELECT doc_id, SUM(s) AS ts FROM px GROUP BY doc_id
+        ), bits AS (
+            -- exact-integer form of aHash's gray > mean(gray):
+            -- gray_i = s_i/3, mean = (Σ s_j/3)/64  ⟺  64*s_i > Σ s_j
+            SELECT px.doc_id, px.i,
+                   CASE WHEN 64 * px.s > tot.ts THEN 1 ELSE 0 END AS bit
+            FROM px JOIN tot USING (doc_id)
+        ), pairs AS (
+            SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+                   SUM(CASE WHEN a.bit <> b.bit THEN 1 ELSE 0 END)
+                       AS hamming
+            FROM bits a JOIN bits b
+              ON a.i = b.i AND a.doc_id < b.doc_id
+            GROUP BY 1, 2
+        )
+        SELECT id_a, id_b, CAST(hamming AS INT) AS hamming
+        FROM pairs WHERE hamming <= 3
+        ORDER BY id_a, id_b LIMIT 1000
+    """
 
 
 def ext_video_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3928,6 +6518,53 @@ def ext_video_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pairs.orderBy("id_a", "id_b").limit(1000)
 
 
+ORACLE["ext_video_neardup"] = """
+        WITH frames AS (
+            SELECT doc_id, f,
+                   CASE WHEN doc_id % 4 = 1 AND f = 0
+                        THEN (doc_id - 1 + 100003) * 31 + f*7 + 11
+                        WHEN doc_id % 4 = 1
+                        THEN (doc_id - 1) * 31 + f*7 + 11
+                        ELSE doc_id * 31 + f*7 + 11 END AS m
+            FROM documents, UNNEST([0, 2, 4, 6]) AS t(f)
+        ), px AS (
+            SELECT doc_id, f, i,
+                   ((3*i) * m) % 251
+                 + ((3*i+1) * m) % 251
+                 + ((3*i+2) * m) % 251 AS s
+            FROM frames, UNNEST(generate_series(0, 63)) AS u(i)
+        ), tot AS (
+            SELECT doc_id, f, SUM(s) AS ts FROM px GROUP BY doc_id, f
+        ), bits AS (
+            SELECT px.doc_id, px.f, px.i,
+                   CASE WHEN 64 * px.s > tot.ts
+                        THEN '1' ELSE '0' END AS b
+            FROM px JOIN tot USING (doc_id, f)
+        ), hashes AS (
+            SELECT doc_id, f, STRING_AGG(b, '' ORDER BY i) AS h
+            FROM bits GROUP BY doc_id, f
+        ), sigs AS (
+            SELECT DISTINCT doc_id, h FROM hashes
+        ), sizes AS (
+            SELECT doc_id, COUNT(*) AS n FROM sigs GROUP BY doc_id
+        ), sh AS (
+            SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+                   COUNT(*) AS n_shared
+            FROM sigs a JOIN sigs b
+              ON a.h = b.h AND a.doc_id < b.doc_id
+            GROUP BY 1, 2
+        )
+        SELECT id_a, id_b, CAST(n_shared AS BIGINT) AS shared,
+               ROUND(n_shared * 1.0 / (na.n + nb.n - n_shared), 6)
+                   AS jaccard
+        FROM sh JOIN sizes na ON na.doc_id = sh.id_a
+                JOIN sizes nb ON nb.doc_id = sh.id_b
+        -- Spark filters on the ROUNDED jaccard; mirror exactly
+        WHERE ROUND(n_shared * 1.0 / (na.n + nb.n - n_shared), 6) >= 0.5
+        ORDER BY id_a, id_b LIMIT 1000
+    """
+
+
 def ext_drift_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-stratum PSI (operators/drift.py::drift_report_grouped): does
     any SOURCE's n_chars distribution drift between the first and
@@ -3942,6 +6579,58 @@ def ext_drift_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     return drift_report_grouped(
         ref, cur, "source", ["n_chars"], bins=8
     ).orderBy("source", "col_name")
+
+
+ORACLE["ext_drift_by_source"] = """
+        WITH refm AS (
+            SELECT source AS grp, CAST(n_chars AS DOUBLE) AS value
+            FROM documents WHERE doc_id < 250 AND n_chars IS NOT NULL
+        ), curm AS (
+            SELECT source AS grp, CAST(n_chars AS DOUBLE) AS value
+            FROM documents WHERE doc_id >= 250 AND n_chars IS NOT NULL
+        ), edges AS (
+            SELECT grp, MIN(value) AS lo, MAX(value) AS hi
+            FROM refm GROUP BY grp
+        ), rb AS (
+            SELECT r.grp,
+                   CASE WHEN (e.hi - e.lo) / 8 <= 0 THEN 0
+                        ELSE CAST(LEAST(GREATEST(FLOOR(
+                            (r.value - e.lo) / ((e.hi - e.lo) / 8)), 0), 7)
+                        AS INT) END AS bin,
+                   COUNT(*) AS n_ref
+            FROM refm r JOIN edges e USING (grp)
+            GROUP BY 1, 2
+        ), cb AS (
+            SELECT c.grp,
+                   CASE WHEN (e.hi - e.lo) / 8 <= 0 THEN 0
+                        ELSE CAST(LEAST(GREATEST(FLOOR(
+                            (c.value - e.lo) / ((e.hi - e.lo) / 8)), 0), 7)
+                        AS INT) END AS bin,
+                   COUNT(*) AS n_cur
+            FROM curm c JOIN edges e USING (grp)
+            GROUP BY 1, 2
+        ), j AS (
+            SELECT COALESCE(rb.grp, cb.grp) AS grp,
+                   COALESCE(rb.bin, cb.bin) AS bin,
+                   COALESCE(n_ref, 0) AS n_ref, COALESCE(n_cur, 0) AS n_cur
+            FROM rb FULL OUTER JOIN cb
+              ON rb.grp = cb.grp AND rb.bin = cb.bin
+        ), t AS (
+            SELECT grp, SUM(n_ref) AS tr, SUM(n_cur) AS tc
+            FROM j GROUP BY grp
+        )
+        SELECT j.grp AS source, 'n_chars' AS col_name,
+               ROUND(SUM(
+                   (GREATEST(n_cur / t.tc, 1e-6)
+                    - GREATEST(n_ref / t.tr, 1e-6))
+                   * LN(GREATEST(n_cur / t.tc, 1e-6)
+                        / GREATEST(n_ref / t.tr, 1e-6))
+               ), 6) AS psi
+        FROM j JOIN t ON j.grp = t.grp
+        WHERE t.tr > 0 AND t.tc > 0
+        GROUP BY j.grp
+        ORDER BY source, col_name
+    """
 
 
 def ext_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3964,6 +6653,43 @@ def ext_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
         {"rule": "unique", "cols": ["o_orderkey"]},
     ]
     return validate(orders, rules)
+
+
+ORACLE["ext_expectations"] = """
+        WITH v AS (
+            SELECT 0 AS rule_id, 'not_null' AS rule, 'o_custkey' AS target,
+                   (SELECT COUNT(*) FROM orders WHERE o_custkey IS NULL)
+                       AS n_violations
+            UNION ALL
+            SELECT 1, 'in_range', 'o_totalprice',
+                   (SELECT COUNT(*) FROM orders
+                    WHERE o_totalprice IS NOT NULL
+                      AND (o_totalprice < 1000.0 OR o_totalprice > 400000.0))
+            UNION ALL
+            SELECT 2, 'regex', 'o_orderpriority',
+                   (SELECT COUNT(*) FROM orders
+                    WHERE o_orderpriority IS NOT NULL
+                      AND NOT regexp_matches(o_orderpriority, '^[1-3]-'))
+            UNION ALL
+            SELECT 3, 'accepted_values', 'o_orderstatus',
+                   (SELECT COUNT(*) FROM orders
+                    WHERE o_orderstatus IS NOT NULL
+                      AND o_orderstatus NOT IN ('O', 'F'))
+            UNION ALL
+            SELECT 4, 'expression', 'key_even',
+                   (SELECT COUNT(*) FROM orders
+                    WHERE NOT COALESCE(o_orderkey % 2 = 0, FALSE))
+            UNION ALL
+            SELECT 5, 'unique', 'o_orderkey',
+                   (SELECT COALESCE(SUM(n - 1), 0) FROM (
+                        SELECT COUNT(*) AS n FROM orders
+                        GROUP BY o_orderkey HAVING COUNT(*) > 1))
+        )
+        SELECT rule_id, rule, target,
+               CAST(n_violations AS BIGINT) AS n_violations,
+               CAST(n_violations = 0 AS INT) AS passed
+        FROM v ORDER BY rule_id
+    """
 
 
 def ext_multimodal_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4157,584 +6883,7 @@ def ext_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("id", "is_current", "effective_from")
 
 
-QUERIES = {
-    "ext_window_rank": ext_window_rank,
-    "ext_bm25_search": ext_bm25_search,
-    "ext_heavy_hitters": ext_heavy_hitters,
-    "ext_seasonal_dow": ext_seasonal_dow,
-    "ext_scd2": ext_scd2,
-    "ext_image_phash": ext_image_phash,
-    "ext_graph_bfs": ext_graph_bfs,
-    "ext_corr_matrix": ext_corr_matrix,
-    "ext_quality_model": ext_quality_model,
-    "ext_video_neardup": ext_video_neardup,
-    "ext_drift_psi": ext_drift_psi,
-    "ext_drift_categorical": ext_drift_categorical,
-    "ext_stream_drift": ext_stream_drift,
-    "ext_pack_ffd": ext_pack_ffd,
-    "ext_pack_ffd_invariants": ext_pack_ffd_invariants,
-    "ext_hybrid_search": ext_hybrid_search,
-    "ext_sql_grouping_sets": ext_sql_grouping_sets,
-    "ext_incremental_dedup": ext_incremental_dedup,
-    "ext_audio_neardup": ext_audio_neardup,
-    "ext_multimodal_dedup": ext_multimodal_dedup,
-    "ext_expectations": ext_expectations,
-    "ext_drift_by_source": ext_drift_by_source,
-    "ext_asof_forward": ext_asof_forward,
-    "ext_phrase_search": ext_phrase_search,
-    "ext_proximity_search": ext_proximity_search,
-    "ext_pattern_match": ext_pattern_match,
-    "ext_revenue_concentration": ext_revenue_concentration,
-    "ext_copurchase_pairs": ext_copurchase_pairs,
-    "ext_triangle_count": ext_triangle_count,
-    "ext_kcore": ext_kcore,
-    "ext_table_changes": ext_table_changes,
-    "ext_cluster_balance": ext_cluster_balance,
-    "ext_cluster_balance_invariants": ext_cluster_balance_invariants,
-    "ext_semantic_dedup": ext_semantic_dedup,
-    "ext_theta_overlap": ext_theta_overlap,
-    "ext_delete_vectors": ext_delete_vectors,
-    "ext_communities": ext_communities,
-    "ext_communities_cliques": ext_communities_cliques,
-    "ext_pagerank_ring": ext_pagerank_ring,
-    "ext_leakage_safe_split": ext_leakage_safe_split,
-    "ext_containment": ext_containment,
-    "ext_textnorm": ext_textnorm,
-    "ext_knn_join": ext_knn_join,
-    "ext_knn_join_ivf": ext_knn_join_ivf,
-    "ext_knn_classify": ext_knn_classify,
-    "ext_stratified_split": ext_stratified_split,
-    "ext_incremental_embedding": ext_incremental_embedding,
-    "ext_stream_embedding_dedup": ext_stream_embedding_dedup,
-    "ext_stream_text_dedup": ext_stream_text_dedup,
-    "ext_gopher_rules": ext_gopher_rules,
-    "ext_null_semantics": ext_null_semantics,
-    "ext_k_anonymity": ext_k_anonymity,
-    "ext_string_funcs": ext_string_funcs,
-    "ext_row_ids": ext_row_ids,
-    "ext_grouped_mode": ext_grouped_mode,
-    "ext_sliding_distinct": ext_sliding_distinct,
-    "ext_datetime_funcs": ext_datetime_funcs,
-    "ext_sliding_sum": ext_sliding_sum,
-    "ext_dedup_exact": ext_dedup_exact,
-    "ext_topk_cosine": ext_topk_cosine,
-    "ext_tokenize": ext_tokenize,
-    "ext_minhash_sig": ext_minhash_sig,
-    "ext_minhash_pairs": ext_minhash_pairs,
-    "ext_ngram_jaccard": ext_ngram_jaccard,
-    "ext_dedup_near": ext_dedup_near,
-    "ext_fuzzy_match": ext_fuzzy_match,
-    "ext_simhash": ext_simhash,
-    "ext_embedding_neardup": ext_embedding_neardup,
-    "ext_lang_id": ext_lang_id,
-    "ext_quality": ext_quality,
-    "ext_repetition": ext_repetition,
-    "ext_boilerplate": ext_boilerplate,
-    "ext_quantile_norm": ext_quantile_norm,
-    "ext_weighted_sample": ext_weighted_sample,
-    "ext_fingerprint": ext_fingerprint,
-    "ext_winnow_fingerprint": ext_winnow_fingerprint,
-    "ext_winnow_pairs": ext_winnow_pairs,
-    "ext_cap_per_source": ext_cap_per_source,
-    "ext_dedup_embedding": ext_dedup_embedding,
-    "ext_lm_score": ext_lm_score,
-    "ext_substring_dedup": ext_substring_dedup,
-    "ext_time_travel": ext_time_travel,
-    "ext_snapshot_format": ext_snapshot_format,
-    "ext_incremental_agg": ext_incremental_agg,
-    "ext_zorder": ext_zorder,
-    "ext_jaccard_prefix": ext_jaccard_prefix,
-    "ext_user_trend": ext_user_trend,
-    "ext_bpe_learned": ext_bpe_learned,
-    "ext_bpe_first_merge": ext_bpe_first_merge,
-    "ext_gapfill": ext_gapfill,
-    "ext_gapfill_linear": ext_gapfill_linear,
-    "ext_audio_spectral": ext_audio_spectral,
-    "ext_funnel": ext_funnel,
-    "ext_funnel_windowed": ext_funnel_windowed,
-    "ext_dedup_eval": ext_dedup_eval,
-    "ext_pagerank": ext_pagerank,
-    "ext_ewma": ext_ewma,
-    "ext_entity_resolution": ext_entity_resolution,
-    "ext_group_split": ext_group_split,
-    "ext_ab_test": ext_ab_test,
-    "ext_attribution": ext_attribution,
-    "ext_top_paths": ext_top_paths,
-    "ext_histogram": ext_histogram,
-    "ext_event_transitions": ext_event_transitions,
-    "ext_cohort_retention": ext_cohort_retention,
-    "ext_temperature_mix": ext_temperature_mix,
-    "ext_quality_filter": ext_quality_filter,
-    "ext_chunk_documents": ext_chunk_documents,
-    "ext_term_freq": ext_term_freq,
-    "ext_prep_pipeline": ext_prep_pipeline,
-    "ext_session_window": ext_session_window,
-    "ext_sql_pricing_summary": ext_sql_pricing_summary,
-    "ext_sql_lateral_topn": ext_sql_lateral_topn,
-    "ext_sql_recursive_cte": ext_sql_recursive_cte,
-    "ext_sql_pipe_syntax": ext_sql_pipe_syntax,
-    "ext_sql_shipping_priority": ext_sql_shipping_priority,
-    "ext_sql_local_supplier_volume": ext_sql_local_supplier_volume,
-    "ext_sql_returned_items": ext_sql_returned_items,
-    "ext_sql_volume_shipping": ext_sql_volume_shipping,
-    "ext_sql_order_priority": ext_sql_order_priority,
-    "ext_sql_disjunctive_filter": ext_sql_disjunctive_filter,
-    "ext_asof_join": ext_asof_join,
-    "ext_anti_join": ext_anti_join,
-    "ext_outer_join": ext_outer_join,
-    "ext_set_ops": ext_set_ops,
-    "ext_pivot": ext_pivot,
-    "ext_unpivot": ext_unpivot,
-    "ext_json_extract": ext_json_extract,
-    "ext_array_hof": ext_array_hof,
-    "ext_time_rollup": ext_time_rollup,
-    "ext_sql_correlated_min": ext_sql_correlated_min,
-    "ext_sql_large_orders": ext_sql_large_orders,
-    "ext_sql_idle_rich_customers": ext_sql_idle_rich_customers,
-    "ext_window_funcs": ext_window_funcs,
-    "ext_udtf_bigrams": ext_udtf_bigrams,
-    "ext_robust_z": ext_robust_z,
-    "ext_rollup": ext_rollup,
-    "ext_cube": ext_cube,
-    "ext_variant_json": ext_variant_json,
-    "ext_quantiles": ext_quantiles,
-    "ext_distinct_agg": ext_distinct_agg,
-    "ext_interval_join": ext_interval_join,
-    "ext_sketch_stats": ext_sketch_stats,
-    "ext_ann_ivf": ext_ann_ivf,
-    "ext_ann_lsh": ext_ann_lsh,
-    "ext_ann_pq": ext_ann_pq,
-    "ext_ann_ivfpq": ext_ann_ivfpq,
-    "ext_multimodal_features": ext_multimodal_features,
-    "ext_decontaminate": ext_decontaminate,
-    "ext_pack_sequences": ext_pack_sequences,
-    "ext_sample_mix": ext_sample_mix,
-    "ext_redact": ext_redact,
-    "ext_redact_cc": ext_redact_cc,
-    "ext_profile": ext_profile,
-    "ext_data_quality": ext_data_quality,
-    "ext_merge_upsert": ext_merge_upsert,
-    "ext_hash_split": ext_hash_split,
-    "ext_tfidf_pairs": ext_tfidf_pairs,
-    "ext_tfidf_pairs_hashed": ext_tfidf_pairs_hashed,
-    "ext_udaf_geomean": ext_udaf_geomean,
-    "ext_range_window": ext_range_window,
-    "ext_bpe_tokens": ext_bpe_tokens,
-    "ext_sql_shipmode_priority": ext_sql_shipmode_priority,
-    "ext_sql_promo_revenue": ext_sql_promo_revenue,
-    "ext_sql_parts_supplier": ext_sql_parts_supplier,
-    "ext_sql_waiting_supplier": ext_sql_waiting_supplier,
-    "ext_sql_profit_by_nation": ext_sql_profit_by_nation,
-    "ext_sql_cust_order_distribution": ext_sql_cust_order_distribution,
-    "ext_sql_top_supplier": ext_sql_top_supplier,
-    "ext_sql_small_quantity_revenue": ext_sql_small_quantity_revenue,
-    "ext_sql_forecast_revenue": ext_sql_forecast_revenue,
-    "ext_sql_market_share": ext_sql_market_share,
-    "ext_sql_important_volume": ext_sql_important_volume,
-    "ext_sql_promo_supplier": ext_sql_promo_supplier,
-}
-
-from mitoscape_spark.operators.textstats import BPE_SPLIT_PATTERN as _BPE_PAT
-
-_BPE_PAT_SQL = _BPE_PAT.replace("'", "''")
-_BPE_TOKENS_ORACLE = (
-    # COALESCE(text,'') mirrors the declared query's NULL-text coalesce
-    # (Spark concat_ws('')/size() vs DuckDB array_to_string/len diverge
-    # on NULL input — round-6 advice item 1)
-    "WITH d AS (SELECT doc_id, COALESCE(text, '') AS text FROM documents)\n"
-    "SELECT doc_id,\n"
-    "       array_to_string(regexp_extract_all(text, '" + _BPE_PAT_SQL
-    + "'), chr(1)) AS bpe_tokens_str,\n"
-    "       len(regexp_extract_all(text, '" + _BPE_PAT_SQL + "'))\n"
-    "           AS n_bpe_tokens,\n"
-    "       len(list_distinct(regexp_extract_all(text, '" + _BPE_PAT_SQL
-    + "'))) AS n_bpe_distinct\n"
-    "FROM d ORDER BY doc_id"
-)
-
-_BM25_ORACLE = """
-    WITH toks AS (
-        SELECT doc_id,
-               len(string_split(text, ' ')) AS dl,
-               unnest(string_split(lower(text), ' ')) AS token
-        FROM documents
-    ),
-    postings AS (
-        SELECT token, doc_id, dl, COUNT(*) AS tf
-        FROM toks
-        WHERE token IN ('fast', 'join', 'vector')
-        GROUP BY token, doc_id, dl
-    ),
-    dfs AS (
-        SELECT token, COUNT(DISTINCT doc_id) AS df
-        FROM toks
-        WHERE token IN ('fast', 'join', 'vector')
-        GROUP BY token
-    ),
-    stats AS (
-        SELECT COUNT(*) AS n_docs,
-               AVG(len(string_split(text, ' '))) AS avgdl
-        FROM documents
-    )
-    SELECT doc_id,
-           ROUND(SUM(
-               ln(1 + (n_docs - df + 0.5) / (df + 0.5))
-               * tf * 2.2
-               / (tf + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl))
-           ), 6) AS bm25
-    FROM postings
-    JOIN dfs USING (token)
-    CROSS JOIN stats
-    GROUP BY doc_id
-    ORDER BY bm25 DESC, doc_id
-    LIMIT 15
-"""
-
-_TRIANGLE_ORACLE = """
-    WITH e AS (
-        SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-        FROM lineitem a
-        JOIN lineitem b ON a.l_orderkey = b.l_orderkey
-        WHERE a.l_partkey < b.l_partkey
-    ),
-    tri AS (
-        SELECT e1.u AS a, e1.v AS b, e2.v AS c
-        FROM e e1
-        JOIN e e2 ON e2.u = e1.v
-        JOIN e e3 ON e3.u = e1.u AND e3.v = e2.v
-    )
-    SELECT id, COUNT(*) AS n_triangles
-    FROM (
-        SELECT a AS id FROM tri
-        UNION ALL SELECT b FROM tri
-        UNION ALL SELECT c FROM tri
-    )
-    GROUP BY id
-    ORDER BY n_triangles DESC, id
-    LIMIT 100
-"""
-
-_TABLE_CHANGES_ORACLE = """
-    WITH t AS (
-        SELECT 1 AS to_version, 'insert' AS _change_type,
-               COUNT(*) AS n_rows,
-               CAST(SUM(doc_id) AS BIGINT) AS sum_doc_id
-        FROM documents WHERE doc_id % 4 < 2
-        UNION ALL
-        SELECT 2, 'insert', COUNT(*), CAST(SUM(doc_id) AS BIGINT)
-        FROM documents WHERE doc_id % 4 = 2
-        UNION ALL
-        SELECT 3, 'delete', COUNT(*), CAST(SUM(doc_id) AS BIGINT)
-        FROM documents WHERE doc_id % 8 = 0
-    )
-    SELECT * FROM t ORDER BY to_version, _change_type
-"""
-
-ORACLE = {
-    "ext_image_phash": """
-        WITH img AS (
-            SELECT doc_id FROM documents WHERE doc_id % 3 IN (1, 2)
-        ), px AS (
-            SELECT doc_id, i,
-                   ((3*i) * (doc_id+7)) % 256
-                 + ((3*i+1) * (doc_id+7)) % 256
-                 + ((3*i+2) * (doc_id+7)) % 256 AS s
-            FROM img, UNNEST(generate_series(0, 63)) AS t(i)
-        ), tot AS (
-            SELECT doc_id, SUM(s) AS ts FROM px GROUP BY doc_id
-        ), bits AS (
-            -- exact-integer form of aHash's gray > mean(gray):
-            -- gray_i = s_i/3, mean = (Σ s_j/3)/64  ⟺  64*s_i > Σ s_j
-            SELECT px.doc_id, px.i,
-                   CASE WHEN 64 * px.s > tot.ts THEN 1 ELSE 0 END AS bit
-            FROM px JOIN tot USING (doc_id)
-        ), pairs AS (
-            SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                   SUM(CASE WHEN a.bit <> b.bit THEN 1 ELSE 0 END)
-                       AS hamming
-            FROM bits a JOIN bits b
-              ON a.i = b.i AND a.doc_id < b.doc_id
-            GROUP BY 1, 2
-        )
-        SELECT id_a, id_b, CAST(hamming AS INT) AS hamming
-        FROM pairs WHERE hamming <= 3
-        ORDER BY id_a, id_b LIMIT 1000
-    """,
-    "ext_video_neardup": """
-        WITH frames AS (
-            SELECT doc_id, f,
-                   CASE WHEN doc_id % 4 = 1 AND f = 0
-                        THEN (doc_id - 1 + 100003) * 31 + f*7 + 11
-                        WHEN doc_id % 4 = 1
-                        THEN (doc_id - 1) * 31 + f*7 + 11
-                        ELSE doc_id * 31 + f*7 + 11 END AS m
-            FROM documents, UNNEST([0, 2, 4, 6]) AS t(f)
-        ), px AS (
-            SELECT doc_id, f, i,
-                   ((3*i) * m) % 251
-                 + ((3*i+1) * m) % 251
-                 + ((3*i+2) * m) % 251 AS s
-            FROM frames, UNNEST(generate_series(0, 63)) AS u(i)
-        ), tot AS (
-            SELECT doc_id, f, SUM(s) AS ts FROM px GROUP BY doc_id, f
-        ), bits AS (
-            SELECT px.doc_id, px.f, px.i,
-                   CASE WHEN 64 * px.s > tot.ts
-                        THEN '1' ELSE '0' END AS b
-            FROM px JOIN tot USING (doc_id, f)
-        ), hashes AS (
-            SELECT doc_id, f, STRING_AGG(b, '' ORDER BY i) AS h
-            FROM bits GROUP BY doc_id, f
-        ), sigs AS (
-            SELECT DISTINCT doc_id, h FROM hashes
-        ), sizes AS (
-            SELECT doc_id, COUNT(*) AS n FROM sigs GROUP BY doc_id
-        ), sh AS (
-            SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                   COUNT(*) AS n_shared
-            FROM sigs a JOIN sigs b
-              ON a.h = b.h AND a.doc_id < b.doc_id
-            GROUP BY 1, 2
-        )
-        SELECT id_a, id_b, CAST(n_shared AS BIGINT) AS shared,
-               ROUND(n_shared * 1.0 / (na.n + nb.n - n_shared), 6)
-                   AS jaccard
-        FROM sh JOIN sizes na ON na.doc_id = sh.id_a
-                JOIN sizes nb ON nb.doc_id = sh.id_b
-        -- Spark filters on the ROUNDED jaccard; mirror exactly
-        WHERE ROUND(n_shared * 1.0 / (na.n + nb.n - n_shared), 6) >= 0.5
-        ORDER BY id_a, id_b LIMIT 1000
-    """,
-    "ext_pagerank_ring": """
-        SELECT CAST(n_nationkey AS BIGINT) AS id, 0.04 AS rank
-        FROM nation ORDER BY id
-    """,
-    "ext_leakage_safe_split": """
-        SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
-               1 AS both_splits,
-               CAST(0 AS BIGINT) AS straddling_pairs
-        FROM documents
-    """,
-    "ext_bpe_first_merge": """
-        WITH words AS (
-            SELECT w, CAST(COUNT(*) AS BIGINT) AS n FROM (
-                SELECT UNNEST(regexp_split_to_array(lower(text), '\\s+'))
-                    AS w
-                FROM documents
-            ) WHERE w <> '' GROUP BY w
-            ORDER BY n DESC, w LIMIT 50000
-        ), prs AS (
-            -- word symbols are chars + an '</w>' end marker; adjacent
-            -- pair at position i pairs char i with char i+1 (or the
-            -- marker after the last char)
-            SELECT substr(w, i, 1) AS a,
-                   CASE WHEN i < len(w) THEN substr(w, i + 1, 1)
-                        ELSE '</w>' END AS b,
-                   n
-            FROM words, UNNEST(generate_series(1, len(w))) AS t(i)
-        )
-        SELECT a AS pair_a, b AS pair_b
-        FROM prs GROUP BY a, b
-        -- learner stopping rule: a pair seen fewer than twice is
-        -- memorization, not a merge (learn_merges breaks BEFORE
-        -- emitting it) — without this the oracle would return a row
-        -- on a no-repeats corpus where Spark returns none
-        HAVING SUM(n) >= 2
-        ORDER BY SUM(n) DESC, a DESC, b DESC
-        LIMIT 1
-    """,
-    "ext_stream_text_dedup": f"""
-        WITH {_TOKS}, {_SHINGLES3},
-        sig AS (
-            SELECT doc_id, seed,
-                   MIN(md5(concat(CAST(seed AS VARCHAR), '|', shingle)))
-                       AS minhash
-            FROM sh, UNNEST([0,1,2,3,4,5,6,7]) AS s(seed)
-            GROUP BY doc_id, seed
-        ),
-        bands AS (
-            SELECT doc_id, seed // 2 AS band,
-                   string_agg(minhash, ',' ORDER BY seed) AS band_key
-            FROM sig GROUP BY doc_id, seed // 2
-        )
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM bands a JOIN bands b
-          ON a.band = b.band AND a.band_key = b.band_key
-         AND a.doc_id < b.doc_id
-        ORDER BY doc_a, doc_b
-    """,
-    "ext_stream_embedding_dedup": """
-        SELECT * FROM (
-            SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-                   ROUND(list_cosine_similarity(
-                       CAST(a.embedding AS DOUBLE[]),
-                       CAST(b.embedding AS DOUBLE[])), 6) AS cos
-            FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-        ) WHERE cos >= 0.35
-        ORDER BY id_a, id_b
-    """,
-    "ext_incremental_embedding": """
-        SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-               ROUND(list_cosine_similarity(
-                   CAST(a.embedding AS DOUBLE[]),
-                   CAST(b.embedding AS DOUBLE[])), 6) AS cos
-        FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-        WHERE (a.vec_id >= 300 OR b.vec_id >= 300)
-          AND ROUND(list_cosine_similarity(
-                  CAST(a.embedding AS DOUBLE[]),
-                  CAST(b.embedding AS DOUBLE[])), 6) >= 0.35
-        ORDER BY id_a, id_b
-    """,
-    "ext_knn_join": """
-        WITH pairs AS (
-            SELECT a.vec_id AS id, b.vec_id AS nbr,
-                   ROUND(list_cosine_similarity(
-                       CAST(a.embedding AS DOUBLE[]),
-                       CAST(b.embedding AS DOUBLE[])), 6) AS cos
-            FROM embeddings a JOIN embeddings b
-              ON a.vec_id <> b.vec_id
-        ), ranked AS (
-            SELECT id, nbr, cos,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY id ORDER BY cos DESC, nbr
-                   ) AS rk
-            FROM pairs
-        )
-        SELECT id, nbr, cos FROM ranked WHERE rk <= 5
-        ORDER BY id, cos DESC, nbr
-    """,
-    "ext_knn_classify": """
-        WITH q AS (
-            SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv
-            FROM embeddings WHERE vec_id % 10 = 0
-        ), c AS (
-            SELECT vec_id AS nbr, label,
-                   CAST(embedding AS DOUBLE[]) AS cv
-            FROM embeddings WHERE vec_id % 10 != 0
-        ), scored AS (
-            SELECT qid, nbr, label,
-                   ROUND(list_cosine_similarity(cv, qv), 6) AS cos
-            FROM q, c WHERE qid <> nbr
-        ), ranked AS (
-            SELECT qid, label,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY qid ORDER BY cos DESC, nbr
-                   ) AS rk
-            FROM scored
-        ), votes AS (
-            SELECT qid, label, COUNT(*) AS votes
-            FROM ranked WHERE rk <= 10 GROUP BY qid, label
-        ), winner AS (
-            SELECT qid, label AS pred_label, votes,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY qid ORDER BY votes DESC, label
-                   ) AS vr
-            FROM votes
-        )
-        SELECT qid, pred_label, votes FROM winner WHERE vr = 1
-        ORDER BY qid
-    """,
-    # the oracle IS the naive per-stratum window ranking the scalable
-    # filter-and-refine path exists to avoid — hash match proves the
-    # order-statistics machinery equals exact ranking
-    "ext_stratified_split": """
-        WITH ranked AS (
-            SELECT doc_id, lang,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY lang
-                       ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id
-                   ) AS r,
-                   COUNT(*) OVER (PARTITION BY lang) AS n
-            FROM documents
-        ), assigned AS (
-            SELECT lang, doc_id,
-                   CASE WHEN r <= FLOOR(n * 0.8 + 0.5) THEN 'train'
-                        WHEN r <= FLOOR(n * 0.9 + 0.5) THEN 'val'
-                        ELSE 'test' END AS split
-            FROM ranked
-        )
-        SELECT lang, split, COUNT(*) AS n,
-               CAST(SUM(doc_id) AS BIGINT) AS id_sum
-        FROM assigned GROUP BY lang, split ORDER BY lang, split
-    """,
-    # built from the module's own TEXTNORM_SQL constant — the single
-    # source of truth the normalizer keeps adjacent to its Spark
-    # expression; restating the regexes here would reintroduce the
-    # drift the constant exists to prevent
-    "ext_textnorm": f"""
-        SELECT doc_id, {_TEXTNORM} AS norm_text
-        FROM documents ORDER BY doc_id
-    """,
-    "ext_containment": f"""
-        WITH {_TOKS}, {_SHINGLES3},
-        sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-        inter AS (
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS i
-            FROM sh a JOIN sh b
-              ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-            GROUP BY a.doc_id, b.doc_id
-        )
-        SELECT doc_a, doc_b,
-               ROUND(i * 1.0 / LEAST(na.n, nb.n), 6) AS containment
-        FROM inter
-        JOIN sizes na ON na.doc_id = inter.doc_a
-        JOIN sizes nb ON nb.doc_id = inter.doc_b
-        WHERE ROUND(i * 1.0 / LEAST(na.n, nb.n), 6) >= 0.8
-        ORDER BY doc_a, doc_b
-    """,
-    "ext_communities_cliques": """
-        SELECT CAST(MIN(n_nationkey) AS BIGINT) AS community,
-               CAST(COUNT(*) AS BIGINT) AS n_members
-        FROM nation WHERE n_nationkey <= 11
-        UNION ALL
-        SELECT CAST(MIN(n_nationkey) AS BIGINT),
-               CAST(COUNT(*) AS BIGINT)
-        FROM nation WHERE n_nationkey >= 12
-        ORDER BY community
-    """,
-    "ext_pack_ffd_invariants": """
-        SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
-               CAST(SUM(len(string_split(text, ' '))) AS BIGINT)
-                   AS total_tokens,
-               0 AS overflow_packs,
-               1 AS lb_ok
-        FROM documents
-    """,
-    "ext_cluster_balance_invariants": """
-        SELECT CAST(COUNT(*) AS BIGINT) AS total_assigned,
-               1 AS k_ok,
-               1 AS quota_ok
-        FROM embeddings
-    """,
-    "ext_heavy_hitters": """
-        SELECT user_id, COUNT(*) AS n
-        FROM events
-        GROUP BY user_id
-        HAVING COUNT(*) >= 80
-        ORDER BY user_id
-    """,
-    "ext_seasonal_dow": """
-        WITH daily AS (
-            SELECT CAST(ts AS DATE) AS day, SUM(value) AS total
-            FROM events GROUP BY 1
-        ), d2 AS (
-            SELECT day, CAST(isodow(day) AS INT) AS dow, total FROM daily
-        ), season AS (
-            SELECT dow, AVG(total) AS dow_avg FROM d2 GROUP BY dow
-        ), j AS (
-            SELECT d2.day, d2.dow, d2.total, season.dow_avg,
-                   d2.total - season.dow_avg AS resid
-            FROM d2 JOIN season USING (dow)
-        ), s AS (SELECT STDDEV_SAMP(resid) AS sd FROM j)
-        SELECT day, dow,
-               ROUND(total, 4) AS total,
-               ROUND(dow_avg, 4) AS dow_avg,
-               ROUND(resid, 4) AS resid,
-               CAST(ABS(resid) > 3.0 * s.sd AS INT) AS is_anomaly
-        FROM j, s
-        ORDER BY day
-    """,
-    "ext_scd2": """
+ORACLE["ext_scd2"] = """
         WITH base AS (
             SELECT c_custkey AS id, c_name AS name, c_mktsegment AS seg
             FROM customer
@@ -4772,2414 +6921,7 @@ ORACLE = {
         UNION ALL SELECT * FROM unchanged
         UNION ALL SELECT * FROM opened
         ORDER BY id, is_current, effective_from
-    """,
-    "ext_sql_grouping_sets": _GROUPING_SETS_SQL,
-    "ext_hybrid_search": """
-        WITH toks AS (
-            SELECT doc_id,
-                   len(string_split(text, ' ')) AS dl,
-                   unnest(string_split(lower(text), ' ')) AS token
-            FROM documents
-        ),
-        postings AS (
-            SELECT token, doc_id, dl, COUNT(*) AS tf
-            FROM toks
-            WHERE token IN ('fast', 'join', 'vector')
-            GROUP BY token, doc_id, dl
-        ),
-        dfs AS (
-            SELECT token, COUNT(DISTINCT doc_id) AS df
-            FROM toks
-            WHERE token IN ('fast', 'join', 'vector')
-            GROUP BY token
-        ),
-        stats AS (
-            SELECT COUNT(*) AS n_docs,
-                   AVG(len(string_split(text, ' '))) AS avgdl
-            FROM documents
-        ),
-        lex AS (
-            SELECT doc_id AS id,
-                   ROUND(SUM(
-                       ln(1 + (n_docs - df + 0.5) / (df + 0.5))
-                       * tf * 2.2
-                       / (tf + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl))
-                   ), 6) AS bm25
-            FROM postings
-            JOIN dfs USING (token)
-            CROSS JOIN stats
-            GROUP BY doc_id
-            ORDER BY bm25 DESC, doc_id
-            LIMIT 50
-        ),
-        lexr AS (
-            SELECT id,
-                   CAST(ROW_NUMBER() OVER (ORDER BY bm25 DESC, id) AS INT)
-                       AS r_lex
-            FROM lex
-        ),
-        q AS (
-            SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings
-            WHERE vec_id = 0
-        ),
-        dense AS (
-            SELECT vec_id AS id,
-                   ROUND(list_cosine_similarity(
-                       CAST(embedding AS DOUBLE[]), q.qv), 6) AS cos
-            FROM embeddings, q
-            ORDER BY cos DESC, id LIMIT 50
-        ),
-        denser AS (
-            SELECT id,
-                   CAST(ROW_NUMBER() OVER (ORDER BY cos DESC, id) AS INT)
-                       AS r_dense
-            FROM dense
-        )
-        SELECT COALESCE(l.id, d.id) AS id,
-               ROUND(COALESCE(1.0 / (60 + r_lex), 0)
-                     + COALESCE(1.0 / (60 + r_dense), 0), 6) AS rrf,
-               r_lex, r_dense
-        FROM lexr l FULL OUTER JOIN denser d ON l.id = d.id
-        ORDER BY rrf DESC, id LIMIT 15
-    """,
-    "ext_drift_psi": """
-        WITH refm AS (
-            SELECT 'l_quantity' AS col_name, CAST(l_quantity AS DOUBLE) AS value
-            FROM lineitem WHERE l_shipdate < TIMESTAMP '1997-01-01'
-            UNION ALL
-            SELECT 'l_extendedprice', CAST(l_extendedprice AS DOUBLE)
-            FROM lineitem WHERE l_shipdate < TIMESTAMP '1997-01-01'
-            UNION ALL
-            SELECT 'l_discount', CAST(l_discount AS DOUBLE)
-            FROM lineitem WHERE l_shipdate < TIMESTAMP '1997-01-01'
-        ), curm AS (
-            SELECT 'l_quantity' AS col_name, CAST(l_quantity AS DOUBLE) AS value
-            FROM lineitem WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-            UNION ALL
-            SELECT 'l_extendedprice', CAST(l_extendedprice AS DOUBLE)
-            FROM lineitem WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-            UNION ALL
-            SELECT 'l_discount', CAST(l_discount AS DOUBLE)
-            FROM lineitem WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-        ), edges AS (
-            SELECT col_name, MIN(value) AS lo, MAX(value) AS hi
-            FROM refm WHERE value IS NOT NULL GROUP BY col_name
-        ), rb AS (
-            SELECT r.col_name,
-                   CASE WHEN (e.hi - e.lo) / 10 <= 0 THEN 0
-                        ELSE CAST(LEAST(GREATEST(FLOOR(
-                            (r.value - e.lo) / ((e.hi - e.lo) / 10)), 0), 9)
-                        AS INT) END AS bin,
-                   COUNT(*) AS n_ref
-            FROM refm r JOIN edges e USING (col_name)
-            WHERE r.value IS NOT NULL
-            GROUP BY 1, 2
-        ), cb AS (
-            SELECT c.col_name,
-                   CASE WHEN (e.hi - e.lo) / 10 <= 0 THEN 0
-                        ELSE CAST(LEAST(GREATEST(FLOOR(
-                            (c.value - e.lo) / ((e.hi - e.lo) / 10)), 0), 9)
-                        AS INT) END AS bin,
-                   COUNT(*) AS n_cur
-            FROM curm c JOIN edges e USING (col_name)
-            WHERE c.value IS NOT NULL
-            GROUP BY 1, 2
-        ), j AS (
-            SELECT COALESCE(rb.col_name, cb.col_name) AS col_name,
-                   COALESCE(rb.bin, cb.bin) AS bin,
-                   COALESCE(n_ref, 0) AS n_ref, COALESCE(n_cur, 0) AS n_cur
-            FROM rb FULL OUTER JOIN cb
-              ON rb.col_name = cb.col_name AND rb.bin = cb.bin
-        ), t AS (
-            SELECT col_name, SUM(n_ref) AS tr, SUM(n_cur) AS tc
-            FROM j GROUP BY col_name
-        )
-        SELECT j.col_name,
-               ROUND(SUM(
-                   (GREATEST(n_cur / t.tc, 1e-6)
-                    - GREATEST(n_ref / t.tr, 1e-6))
-                   * LN(GREATEST(n_cur / t.tc, 1e-6)
-                        / GREATEST(n_ref / t.tr, 1e-6))
-               ), 6) AS psi
-        FROM j JOIN t ON j.col_name = t.col_name
-        GROUP BY j.col_name
-        ORDER BY j.col_name
-    """,
-    "ext_drift_categorical": """
-        WITH ref AS (SELECT * FROM documents WHERE doc_id % 2 = 0),
-        cur AS (SELECT * FROM documents WHERE doc_id % 2 = 1),
-        refm AS (
-            SELECT 'lang' AS col_name,
-                   COALESCE(CAST(lang AS VARCHAR), ' __null__') AS value
-            FROM ref
-            UNION ALL
-            SELECT 'source', COALESCE(CAST(source AS VARCHAR), ' __null__')
-            FROM ref
-        ), curm AS (
-            SELECT 'lang' AS col_name,
-                   COALESCE(CAST(lang AS VARCHAR), ' __null__') AS value
-            FROM cur
-            UNION ALL
-            SELECT 'source', COALESCE(CAST(source AS VARCHAR), ' __null__')
-            FROM cur
-        ), rc AS (
-            SELECT col_name, value, COUNT(*) AS n_ref
-            FROM refm GROUP BY 1, 2
-        ), cc AS (
-            SELECT col_name, value, COUNT(*) AS n_cur
-            FROM curm GROUP BY 1, 2
-        ), j AS (
-            SELECT COALESCE(rc.col_name, cc.col_name) AS col_name,
-                   COALESCE(n_ref, 0) AS n_ref, COALESCE(n_cur, 0) AS n_cur
-            FROM rc FULL OUTER JOIN cc
-              ON rc.col_name = cc.col_name AND rc.value = cc.value
-        ), t AS (
-            SELECT col_name, SUM(n_ref) AS tr, SUM(n_cur) AS tc
-            FROM j GROUP BY col_name
-        )
-        SELECT j.col_name,
-               ROUND(SUM(
-                   (GREATEST(n_cur / t.tc, 1e-6)
-                    - GREATEST(n_ref / t.tr, 1e-6))
-                   * LN(GREATEST(n_cur / t.tc, 1e-6)
-                        / GREATEST(n_ref / t.tr, 1e-6))
-               ), 6) AS psi
-        FROM j JOIN t ON j.col_name = t.col_name
-        GROUP BY j.col_name
-        ORDER BY j.col_name
-    """,
-    "ext_corr_matrix": """
-        WITH one AS (
-            SELECT
-                ROUND(corr(l_quantity, l_extendedprice), 4) AS c0,
-                ROUND(corr(l_quantity, l_discount), 4) AS c1,
-                ROUND(corr(l_quantity, l_tax), 4) AS c2,
-                ROUND(corr(l_extendedprice, l_discount), 4) AS c3,
-                ROUND(corr(l_extendedprice, l_tax), 4) AS c4,
-                ROUND(corr(l_discount, l_tax), 4) AS c5
-            FROM lineitem
-        )
-        SELECT col_a, col_b, corr FROM (
-            SELECT 'l_quantity' AS col_a, 'l_extendedprice' AS col_b, c0 AS corr FROM one
-            UNION ALL SELECT 'l_quantity', 'l_discount', c1 FROM one
-            UNION ALL SELECT 'l_quantity', 'l_tax', c2 FROM one
-            UNION ALL SELECT 'l_extendedprice', 'l_discount', c3 FROM one
-            UNION ALL SELECT 'l_extendedprice', 'l_tax', c4 FROM one
-            UNION ALL SELECT 'l_discount', 'l_tax', c5 FROM one
-        )
-        ORDER BY col_a, col_b
-    """,
-    "ext_graph_bfs": """
-        WITH e AS (
-            SELECT DISTINCT l_suppkey AS s, l_partkey + 1000000 AS d
-            FROM lineitem WHERE l_quantity >= 48
-        ), ed AS (
-            SELECT s, d FROM e UNION SELECT d, s FROM e
-        ), d0 AS (SELECT CAST(1 AS BIGINT) AS id),
-        h1 AS (SELECT DISTINCT ed.d AS id FROM ed JOIN d0 ON ed.s = d0.id),
-        h2 AS (SELECT DISTINCT ed.d AS id FROM ed JOIN h1 ON ed.s = h1.id),
-        h3 AS (SELECT DISTINCT ed.d AS id FROM ed JOIN h2 ON ed.s = h2.id),
-        lv AS (
-            SELECT id, 0 AS dist FROM d0
-            UNION ALL SELECT id, 1 FROM h1
-            UNION ALL SELECT id, 2 FROM h2
-            UNION ALL SELECT id, 3 FROM h3
-        )
-        SELECT id, CAST(MIN(dist) AS INT) AS dist
-        FROM lv GROUP BY id ORDER BY id
-    """,
-    "ext_bm25_search": _BM25_ORACLE,
-    "ext_triangle_count": _TRIANGLE_ORACLE,
-    "ext_table_changes": _TABLE_CHANGES_ORACLE,
-    "ext_delete_vectors": """
-        WITH t AS (
-            SELECT 1 AS version, COUNT(*) AS n_docs,
-                   CAST(SUM(doc_id) AS BIGINT) AS sum_doc_id
-            FROM documents
-            UNION ALL
-            SELECT 2, COUNT(*), CAST(SUM(doc_id) AS BIGINT)
-            FROM documents WHERE doc_id % 7 <> 0
-            UNION ALL
-            SELECT 3, COUNT(*), CAST(SUM(doc_id) AS BIGINT)
-            FROM documents WHERE doc_id % 7 <> 0
-            UNION ALL
-            SELECT 4, COUNT(*), CAST(SUM(doc_id) AS BIGINT)
-            FROM documents WHERE doc_id % 7 <> 0
-        )
-        SELECT * FROM t ORDER BY version
-    """,
-    "ext_sliding_distinct": """
-        WITH hours AS (
-            SELECT DISTINCT date_trunc('hour', ts) AS h FROM events
-        )
-        SELECT hours.h,
-               CAST(COUNT(DISTINCT e.user_id) AS BIGINT)
-                   AS n_users_3h
-        FROM hours
-        JOIN events e
-          ON date_trunc('hour', e.ts)
-             BETWEEN hours.h - INTERVAL 2 HOUR AND hours.h
-        GROUP BY hours.h
-        ORDER BY hours.h
-        LIMIT 500
-    """,
-    "ext_grouped_mode": """
-        WITH counts AS (
-            SELECT user_id, event_type, COUNT(*) AS n
-            FROM events GROUP BY user_id, event_type
-        ),
-        ranked AS (
-            SELECT user_id, event_type, n,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY user_id
-                       ORDER BY n DESC, event_type
-                   ) AS rk
-            FROM counts
-        )
-        SELECT user_id, event_type AS mode_type, n AS n_mode
-        FROM ranked WHERE rk = 1
-        ORDER BY user_id
-        LIMIT 1000
-    """,
-    "ext_row_ids": """
-        SELECT o_orderkey,
-               CAST(ROW_NUMBER() OVER (ORDER BY o_orderkey) - 1
-                    AS BIGINT) AS row_id
-        FROM orders
-        ORDER BY o_orderkey
-        LIMIT 1000
-    """,
-    "ext_string_funcs": """
-        SELECT c_custkey,
-               upper(c_name) AS u,
-               length(c_name) AS len,
-               lpad(c_name, 14, '_') AS padded,
-               substr(c_name, 1, 8) AS prefix,
-               regexp_replace(c_name, '[0-9]', '#', 'g') AS masked,
-               reverse(c_name) AS rev,
-               split_part(c_name, '_', 1) AS stem,
-               levenshtein(c_name, 'Customer_1') AS lev
-        FROM customer
-        ORDER BY c_custkey
-        LIMIT 500
-    """,
-    "ext_k_anonymity": """
-        WITH rare AS (
-            SELECT c_nationkey, c_mktsegment,
-                   COUNT(*) AS group_size
-            FROM customer
-            GROUP BY c_nationkey, c_mktsegment
-            HAVING COUNT(*) < 8
-        ),
-        kept AS (
-            SELECT COUNT(*) AS n
-            FROM customer c
-            WHERE NOT EXISTS (
-                SELECT 1 FROM rare r
-                WHERE r.c_nationkey = c.c_nationkey
-                  AND r.c_mktsegment = c.c_mktsegment
-            )
-        )
-        SELECT c_nationkey, c_mktsegment, group_size,
-               CAST(NULL AS BIGINT) AS n_kept_total
-        FROM rare
-        UNION ALL
-        SELECT NULL, NULL, NULL, n FROM kept
-        ORDER BY c_nationkey ASC NULLS LAST, c_mktsegment
-    """,
-    "ext_null_semantics": """
-        WITH ab AS (
-            SELECT event_id,
-                   CASE WHEN value < 20 THEN NULL
-                        ELSE event_type END AS ab,
-                   value
-            FROM events
-        )
-        SELECT ab,
-               COUNT(*) AS n,
-               COUNT(ab) AS n_nonnull_key,
-               CAST(SUM(CASE WHEN ab IS NOT DISTINCT FROM 'click'
-                        THEN 1 ELSE 0 END) AS BIGINT)
-                   AS n_nullsafe_click,
-               ROUND(AVG(value), 6) AS avg_value
-        FROM ab
-        GROUP BY ab
-        ORDER BY ab ASC NULLS FIRST
-    """,
-    "ext_datetime_funcs": """
-        SELECT year(ts) AS y, quarter(ts) AS q, month(ts) AS m,
-               dayofmonth(ts) AS dom,
-               last_day(CAST(ts AS DATE)) AS eom,
-               COUNT(*) AS n
-        FROM events
-        GROUP BY 1, 2, 3, 4, 5
-        ORDER BY y, q, m, dom
-        LIMIT 200
-    """,
-    "ext_gopher_rules": """
-        WITH t AS (
-            SELECT doc_id,
-                   string_split(lower(text), ' ') AS toks,
-                   len(string_split(lower(text), ' ')) AS n,
-                   length(replace(text, ' ', ''))
-                       * 1.0 / len(string_split(lower(text), ' '))
-                       AS mean_len
-            FROM documents
-        ),
-        r AS (
-            SELECT doc_id,
-                   (n >= 20 AND n <= 1000) AS r_wordcount,
-                   (mean_len >= 2.0 AND mean_len <= 12.0) AS r_meanlen,
-                   (len(list_filter(toks,
-                        x -> regexp_matches(x, '^.*[a-z].*$')))
-                        * 1.0 / n >= 0.8) AS r_alpha,
-                   (len(list_intersect(list_distinct(toks),
-                        ['the','a','of','and','to','in','is','for']))
-                        >= 2) AS r_stopwords,
-                   (len(list_distinct(toks)) * 1.0 / n >= 0.2)
-                       AS r_repetition
-            FROM t
-        )
-        SELECT doc_id, r_wordcount, r_meanlen, r_alpha, r_stopwords,
-               r_repetition,
-               (r_wordcount AND r_meanlen AND r_alpha AND r_stopwords
-                AND r_repetition) AS passes
-        FROM r ORDER BY doc_id
-    """,
-    "ext_theta_overlap": """
-        WITH u AS (
-            SELECT DISTINCT event_type, user_id FROM events
-        )
-        SELECT a.event_type AS type_a, b.event_type AS type_b,
-               CAST(COUNT(DISTINCT a.user_id) AS BIGINT) AS n_a,
-               CAST(COUNT(DISTINCT b.user_id) AS BIGINT) AS n_b,
-               CAST(COUNT(DISTINCT CASE WHEN a.user_id = b.user_id
-                    THEN a.user_id END) AS BIGINT) AS n_both,
-               CAST(COUNT(DISTINCT a.user_id)
-                    + COUNT(DISTINCT b.user_id)
-                    - COUNT(DISTINCT CASE WHEN a.user_id = b.user_id
-                          THEN a.user_id END) AS BIGINT) AS n_either
-        FROM u a CROSS JOIN u b
-        WHERE a.event_type < b.event_type
-        GROUP BY 1, 2
-        ORDER BY 1, 2
-    """,
-    # exact below sketch capacity (see ext_sketch_stats docstring):
-    # theta distinct == COUNT(DISTINCT), GK median == quantile_disc
-    "ext_sketch_stats": """
-        SELECT l_returnflag,
-               CAST(COUNT(DISTINCT l_partkey) AS BIGINT) AS nd_parts,
-               quantile_disc(l_quantity, 0.5) AS p50,
-               CAST(COUNT(*) AS BIGINT) AS n
-        FROM lineitem GROUP BY 1 ORDER BY 1
-    """,
-    # full TF-IDF chain recomputed portably: md5-derived feature hash,
-    # ln((N+1)/(df+1)) IDF, L2 normalization, all-pairs cosine — pins
-    # the sparse blocked-GEMM join of sparse_near_duplicates
-    "ext_tfidf_pairs_hashed": r"""
-        WITH tok AS (
-            SELECT doc_id,
-                   unnest(regexp_split_to_array(lower(text), '\W+')) AS tok
-            FROM documents
-        ), hashed AS (
-            SELECT doc_id,
-                   CAST(CAST(('0x' || substr(md5(tok), 1, 15)) AS UBIGINT)
-                        % 4096 AS BIGINT) AS idx
-            FROM tok WHERE tok <> ''
-        ), tf AS (
-            SELECT doc_id, idx, CAST(COUNT(*) AS DOUBLE) AS tf
-            FROM hashed GROUP BY 1, 2
-        ), dfreq AS (
-            SELECT idx, CAST(COUNT(*) AS DOUBLE) AS df FROM tf GROUP BY 1
-        ), n AS (
-            SELECT CAST(COUNT(*) AS DOUBLE) AS n_docs FROM documents
-        ), w AS (
-            SELECT tf.doc_id, tf.idx,
-                   tf.tf * ln((n.n_docs + 1) / (dfreq.df + 1)) AS w
-            FROM tf JOIN dfreq USING (idx) CROSS JOIN n
-        ), nrm AS (
-            SELECT doc_id, sqrt(SUM(w * w)) AS nrm FROM w GROUP BY 1
-        ), p AS (
-            SELECT w.doc_id, w.idx, w.w / nrm.nrm AS wn
-            FROM w JOIN nrm USING (doc_id) WHERE nrm.nrm > 0
-        )
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-               ROUND(SUM(a.wn * b.wn), 4) AS cosine
-        FROM p a JOIN p b ON a.idx = b.idx AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-        HAVING SUM(a.wn * b.wn) >= 0.85
-        ORDER BY 1, 2
-    """,
-    "ext_window_rank": """
-        SELECT o_custkey, o_orderkey, rn FROM (
-            SELECT o_custkey, o_orderkey,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY o_custkey
-                       ORDER BY o_totalprice DESC, o_orderkey
-                   ) AS rn
-            FROM orders
-        ) WHERE rn <= 3 ORDER BY o_custkey, rn
-    """,
-    "ext_sliding_sum": """
-        SELECT user_id, event_id,
-               ROUND(SUM(value) OVER (
-                   PARTITION BY user_id
-                   ORDER BY CAST(ts AS TIMESTAMP), event_id
-                   ROWS BETWEEN 3 PRECEDING AND CURRENT ROW
-               ), 4) AS sliding_sum
-        FROM events ORDER BY user_id, event_id
-    """,
-    "ext_dedup_exact": """
-        SELECT DISTINCT lang, source FROM documents ORDER BY lang, source
-    """,
-    "ext_topk_cosine": """
-        WITH q AS (
-            SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings
-            WHERE vec_id = 0
-        )
-        SELECT vec_id AS id,
-               ROUND(list_cosine_similarity(
-                   CAST(embedding AS DOUBLE[]), q.qv), 6) AS cos
-        FROM embeddings, q
-        WHERE vec_id != 0
-        ORDER BY cos DESC, id LIMIT 10
-    """,
-    "ext_tokenize": """
-        SELECT doc_id,
-               len(string_split(text, ' ')) AS n_ws_tokens,
-               CAST(CEIL(length(text) / 4.0) AS BIGINT) AS n_bpe_est
-        FROM documents ORDER BY doc_id
-    """,
-    "ext_minhash_sig": f"""
-        WITH {_TOKS}, {_SHINGLES3}
-        SELECT doc_id, seed,
-               MIN(md5(concat(CAST(seed AS VARCHAR), '|', shingle))) AS minhash
-        FROM sh, UNNEST([0,1,2,3,4,5,6,7]) AS s(seed)
-        GROUP BY doc_id, seed ORDER BY doc_id, seed
-    """,
-    "ext_drift_by_source": """
-        WITH refm AS (
-            SELECT source AS grp, CAST(n_chars AS DOUBLE) AS value
-            FROM documents WHERE doc_id < 250 AND n_chars IS NOT NULL
-        ), curm AS (
-            SELECT source AS grp, CAST(n_chars AS DOUBLE) AS value
-            FROM documents WHERE doc_id >= 250 AND n_chars IS NOT NULL
-        ), edges AS (
-            SELECT grp, MIN(value) AS lo, MAX(value) AS hi
-            FROM refm GROUP BY grp
-        ), rb AS (
-            SELECT r.grp,
-                   CASE WHEN (e.hi - e.lo) / 8 <= 0 THEN 0
-                        ELSE CAST(LEAST(GREATEST(FLOOR(
-                            (r.value - e.lo) / ((e.hi - e.lo) / 8)), 0), 7)
-                        AS INT) END AS bin,
-                   COUNT(*) AS n_ref
-            FROM refm r JOIN edges e USING (grp)
-            GROUP BY 1, 2
-        ), cb AS (
-            SELECT c.grp,
-                   CASE WHEN (e.hi - e.lo) / 8 <= 0 THEN 0
-                        ELSE CAST(LEAST(GREATEST(FLOOR(
-                            (c.value - e.lo) / ((e.hi - e.lo) / 8)), 0), 7)
-                        AS INT) END AS bin,
-                   COUNT(*) AS n_cur
-            FROM curm c JOIN edges e USING (grp)
-            GROUP BY 1, 2
-        ), j AS (
-            SELECT COALESCE(rb.grp, cb.grp) AS grp,
-                   COALESCE(rb.bin, cb.bin) AS bin,
-                   COALESCE(n_ref, 0) AS n_ref, COALESCE(n_cur, 0) AS n_cur
-            FROM rb FULL OUTER JOIN cb
-              ON rb.grp = cb.grp AND rb.bin = cb.bin
-        ), t AS (
-            SELECT grp, SUM(n_ref) AS tr, SUM(n_cur) AS tc
-            FROM j GROUP BY grp
-        )
-        SELECT j.grp AS source, 'n_chars' AS col_name,
-               ROUND(SUM(
-                   (GREATEST(n_cur / t.tc, 1e-6)
-                    - GREATEST(n_ref / t.tr, 1e-6))
-                   * LN(GREATEST(n_cur / t.tc, 1e-6)
-                        / GREATEST(n_ref / t.tr, 1e-6))
-               ), 6) AS psi
-        FROM j JOIN t ON j.grp = t.grp
-        WHERE t.tr > 0 AND t.tc > 0
-        GROUP BY j.grp
-        ORDER BY source, col_name
-    """,
-    "ext_expectations": """
-        WITH v AS (
-            SELECT 0 AS rule_id, 'not_null' AS rule, 'o_custkey' AS target,
-                   (SELECT COUNT(*) FROM orders WHERE o_custkey IS NULL)
-                       AS n_violations
-            UNION ALL
-            SELECT 1, 'in_range', 'o_totalprice',
-                   (SELECT COUNT(*) FROM orders
-                    WHERE o_totalprice IS NOT NULL
-                      AND (o_totalprice < 1000.0 OR o_totalprice > 400000.0))
-            UNION ALL
-            SELECT 2, 'regex', 'o_orderpriority',
-                   (SELECT COUNT(*) FROM orders
-                    WHERE o_orderpriority IS NOT NULL
-                      AND NOT regexp_matches(o_orderpriority, '^[1-3]-'))
-            UNION ALL
-            SELECT 3, 'accepted_values', 'o_orderstatus',
-                   (SELECT COUNT(*) FROM orders
-                    WHERE o_orderstatus IS NOT NULL
-                      AND o_orderstatus NOT IN ('O', 'F'))
-            UNION ALL
-            SELECT 4, 'expression', 'key_even',
-                   (SELECT COUNT(*) FROM orders
-                    WHERE NOT COALESCE(o_orderkey % 2 = 0, FALSE))
-            UNION ALL
-            SELECT 5, 'unique', 'o_orderkey',
-                   (SELECT COALESCE(SUM(n - 1), 0) FROM (
-                        SELECT COUNT(*) AS n FROM orders
-                        GROUP BY o_orderkey HAVING COUNT(*) > 1))
-        )
-        SELECT rule_id, rule, target,
-               CAST(n_violations AS BIGINT) AS n_violations,
-               CAST(n_violations = 0 AS INT) AS passed
-        FROM v ORDER BY rule_id
-    """,
-    "ext_incremental_dedup": f"""
-        WITH {_TOKS}, {_SHINGLES3},
-        sig AS (
-            SELECT doc_id, seed,
-                   MIN(md5(concat(CAST(seed AS VARCHAR), '|', shingle))) AS minhash
-            FROM sh, UNNEST([0,1,2,3,4,5,6,7]) AS s(seed)
-            GROUP BY doc_id, seed
-        ),
-        bands AS (
-            SELECT doc_id, seed // 2 AS band,
-                   string_agg(minhash, ',' ORDER BY seed) AS band_key
-            FROM sig GROUP BY doc_id, seed // 2
-        )
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM bands a JOIN bands b
-          ON a.band = b.band AND a.band_key = b.band_key
-         AND a.doc_id < b.doc_id
-        WHERE b.doc_id >= 400 OR a.doc_id >= 400
-        ORDER BY doc_a, doc_b
-    """,
-    "ext_minhash_pairs": f"""
-        WITH {_TOKS}, {_SHINGLES3},
-        sig AS (
-            SELECT doc_id, seed,
-                   MIN(md5(concat(CAST(seed AS VARCHAR), '|', shingle))) AS minhash
-            FROM sh, UNNEST([0,1,2,3,4,5,6,7]) AS s(seed)
-            GROUP BY doc_id, seed
-        ),
-        bands AS (
-            SELECT doc_id, seed // 2 AS band,
-                   string_agg(minhash, ',' ORDER BY seed) AS band_key
-            FROM sig GROUP BY doc_id, seed // 2
-        )
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM bands a JOIN bands b
-          ON a.band = b.band AND a.band_key = b.band_key
-         AND a.doc_id < b.doc_id
-        ORDER BY doc_a, doc_b
-    """,
-    "ext_jaccard_prefix": f"""
-        WITH {_TOKS}, {_SHINGLES3},
-        sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-        inter AS (
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS i
-            FROM sh a JOIN sh b
-              ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-            GROUP BY a.doc_id, b.doc_id
-        )
-        SELECT doc_a, doc_b,
-               ROUND(i / (sa.n + sb.n - i), 6) AS jaccard
-        FROM inter
-        JOIN sizes sa ON sa.doc_id = doc_a
-        JOIN sizes sb ON sb.doc_id = doc_b
-        WHERE i / (sa.n + sb.n - i) >= 0.1
-        ORDER BY doc_a, doc_b
-    """,
-    "ext_ngram_jaccard": f"""
-        WITH {_TOKS}, {_SHINGLES3},
-        sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-        inter AS (
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS i
-            FROM sh a JOIN sh b
-              ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-            GROUP BY a.doc_id, b.doc_id
-        )
-        SELECT doc_a, doc_b,
-               ROUND(i / (sa.n + sb.n - i), 6) AS jaccard
-        FROM inter
-        JOIN sizes sa ON sa.doc_id = doc_a
-        JOIN sizes sb ON sb.doc_id = doc_b
-        WHERE i / (sa.n + sb.n - i) >= 0.1
-        ORDER BY doc_a, doc_b
-    """,
-    "ext_fuzzy_match": """
-        WITH b AS (
-            SELECT p_partkey, p_name,
-                   string_split(p_name, ' ')[1] AS blk
-            FROM part
-        )
-        SELECT a.p_partkey AS id_a, b2.p_partkey AS id_b,
-               levenshtein(a.p_name, b2.p_name) AS dist
-        FROM b a JOIN b b2
-          ON a.blk = b2.blk AND a.p_partkey < b2.p_partkey
-        WHERE levenshtein(a.p_name, b2.p_name) BETWEEN 1 AND 3
-        ORDER BY id_a, id_b
-    """,
-    "ext_dedup_near": f"""
-        WITH RECURSIVE {_TOKS}, {_SHINGLES3},
-        sig AS (
-            SELECT doc_id, seed,
-                   MIN(md5(concat(CAST(seed AS VARCHAR), '|', shingle))) AS minhash
-            FROM sh, UNNEST([0,1,2,3,4,5,6,7]) AS s(seed)
-            GROUP BY doc_id, seed
-        ),
-        bands AS (
-            SELECT doc_id, seed // 2 AS band,
-                   string_agg(minhash, ',' ORDER BY seed) AS band_key
-            FROM sig GROUP BY doc_id, seed // 2
-        ),
-        pairs AS (
-            SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-            FROM bands a JOIN bands b
-              ON a.band = b.band AND a.band_key = b.band_key
-             AND a.doc_id < b.doc_id
-        ),
-        edges AS (
-            SELECT doc_a AS s, doc_b AS d FROM pairs
-            UNION
-            SELECT doc_b, doc_a FROM pairs
-        ),
-        reach AS (
-            SELECT s, d FROM edges
-            UNION
-            SELECT r.s, e.d FROM reach r JOIN edges e ON r.d = e.s
-            WHERE r.s != e.d
-        ),
-        comp AS (
-            SELECT s AS id, LEAST(s, MIN(d)) AS component
-            FROM reach GROUP BY s
-        )
-        SELECT doc_id FROM documents d
-        LEFT JOIN comp c ON d.doc_id = c.id AND c.id != c.component
-        WHERE c.id IS NULL
-        ORDER BY doc_id
-    """,
-    "ext_simhash": f"""
-        WITH {_TOKS},
-        tok AS (SELECT doc_id, unnest(t) AS tok FROM toks),
-        hv AS (
-            SELECT doc_id,
-                   (instr('0123456789abcdef', substring(md5(tok), 1, 1)) - 1) * 4096
-                 + (instr('0123456789abcdef', substring(md5(tok), 2, 1)) - 1) * 256
-                 + (instr('0123456789abcdef', substring(md5(tok), 3, 1)) - 1) * 16
-                 + (instr('0123456789abcdef', substring(md5(tok), 4, 1)) - 1) AS hval
-            FROM tok
-        ),
-        votes AS (
-            SELECT doc_id, b,
-                   SUM(CAST(FLOOR(hval / POW(2, b)) AS INT) % 2 * 2 - 1) AS vote
-            FROM hv, UNNEST(range(16)) AS r(b)
-            GROUP BY doc_id, b
-        )
-        SELECT doc_id,
-               CAST(SUM(CASE WHEN vote > 0
-                    THEN CAST(POW(2, b) AS BIGINT) ELSE 0 END) AS BIGINT)
-                   AS simhash
-        FROM votes GROUP BY doc_id ORDER BY doc_id
-    """,
-    "ext_embedding_neardup": """
-        SELECT * FROM (
-            SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-                   ROUND(list_cosine_similarity(
-                       CAST(a.embedding AS DOUBLE[]),
-                       CAST(b.embedding AS DOUBLE[])), 6) AS cos
-            FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-        ) WHERE cos >= 0.35
-        ORDER BY id_a, id_b
-    """,
-    "ext_lang_id": f"""
-        WITH {_TOKS},
-        scored AS (
-            SELECT doc_id, lang,
-                   len(list_intersect(t, stops)) AS hits
-            FROM toks, (VALUES
-                ('en', {_STOP_SQL['en']}),
-                ('fr', {_STOP_SQL['fr']}),
-                ('de', {_STOP_SQL['de']}),
-                ('es', {_STOP_SQL['es']})
-            ) AS p(lang, stops)
-        ),
-        best AS (
-            SELECT doc_id, lang, hits,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY doc_id ORDER BY hits DESC, lang DESC
-                   ) AS rn
-            FROM scored
-        )
-        SELECT doc_id,
-               CASE WHEN hits > 0 THEN lang ELSE 'und' END AS lang_pred,
-               hits AS lang_hits
-        FROM best WHERE rn = 1 ORDER BY doc_id
-    """,
-    "ext_quality": f"""
-        WITH base AS (
-            SELECT doc_id, text,
-                   len(string_split(lower(text), ' ')) AS n_tokens,
-                   length(text) - length(
-                       regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g')
-                   ) AS n_punct,
-                   len(list_intersect(
-                       string_split(lower(text), ' '),
-                       {_STOP_SQL['en']})) AS n_stopwords
-            FROM documents
-        )
-        SELECT doc_id, n_tokens,
-               ROUND((length(text) - n_tokens + 1.0) / n_tokens, 4)
-                   AS avg_word_len,
-               n_punct, n_stopwords,
-               ROUND(
-                   LEAST(n_tokens / 50.0, 1.0) * 0.4
-                   + (1 - LEAST(n_punct / GREATEST(length(text), 1) * 1.0, 1.0)) * 0.3
-                   + LEAST(n_stopwords / 5.0, 1.0) * 0.3, 4) AS quality
-        FROM base ORDER BY doc_id
-    """,
-    "ext_repetition": f"""
-        WITH {_TOKS},
-        base AS (
-            SELECT doc_id,
-                   ROUND(1.0 - len(list_distinct(t)) * 1.0 / len(t), 6)
-                       AS dup_token_frac
-            FROM toks
-        ),
-        big AS (
-            SELECT doc_id, t[i] || ' ' || t[i+1] AS bg
-            FROM toks, UNNEST(range(1, len(t))) AS r(i)
-        ),
-        bgc AS (
-            SELECT doc_id, bg, COUNT(*) AS c FROM big GROUP BY doc_id, bg
-        ),
-        bgm AS (
-            SELECT doc_id, MAX(c) * 1.0 / SUM(c) AS tbf
-            FROM bgc GROUP BY doc_id
-        )
-        SELECT b.doc_id, b.dup_token_frac,
-               ROUND(COALESCE(m.tbf, 0.0), 6) AS top_bigram_frac
-        FROM base b LEFT JOIN bgm m USING (doc_id) ORDER BY b.doc_id
-    """,
-    "ext_weighted_sample": """
-        WITH keyed AS (
-            SELECT source, doc_id, n_chars,
-                   LN((('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 13)
-                        )::BIGINT + 1.0) / 4503599627370497.0)
-                   / n_chars AS wk
-            FROM documents
-            WHERE n_chars IS NOT NULL AND n_chars > 0
-        )
-        SELECT source, doc_id, n_chars FROM keyed
-        QUALIFY ROW_NUMBER() OVER (
-            PARTITION BY source ORDER BY wk DESC, doc_id
-        ) <= 10
-        ORDER BY source, doc_id
-    """,
-    "ext_quantile_norm": """
-        WITH pooled AS (
-            SELECT ROW_NUMBER() OVER (ORDER BY n_chars, doc_id) AS r,
-                   CAST(n_chars AS DOUBLE) AS v
-            FROM documents
-        ), pr AS (
-            SELECT doc_id, source, n_chars,
-                   CAST(FLOOR(
-                       PERCENT_RANK() OVER (
-                           PARTITION BY source ORDER BY n_chars, doc_id
-                       ) * (SELECT COUNT(*) - 1 FROM documents)
-                   ) AS BIGINT) + 1 AS k
-            FROM documents
-        )
-        SELECT p.doc_id, p.source, p.n_chars, l.v AS norm_score
-        FROM pr p JOIN pooled l ON p.k = l.r
-        ORDER BY p.doc_id
-    """,
-    "ext_boilerplate": f"""
-        WITH {_TOKS}, {_SHINGLES3},
-        dfreq AS (
-            SELECT shingle, COUNT(*) AS df FROM sh GROUP BY shingle
-        )
-        SELECT s.doc_id,
-               COUNT(*) AS n_shingles,
-               CAST(SUM(CASE WHEN d.df >= 3 THEN 1 ELSE 0 END)
-                    AS BIGINT) AS n_common,
-               ROUND(SUM(CASE WHEN d.df >= 3 THEN 1 ELSE 0 END) * 1.0
-                     / COUNT(*), 6) AS boilerplate_frac
-        FROM sh s JOIN dfreq d USING (shingle)
-        GROUP BY s.doc_id ORDER BY s.doc_id
-    """,
-    "ext_fingerprint": f"""
-        WITH {_TOKS},
-        sh4 AS (
-            SELECT DISTINCT doc_id, array_to_string(t[i:i+3], ' ') AS shingle
-            FROM toks, UNNEST(range(1, greatest(len(t) - 2, 1))) AS r(i)
-            WHERE len(t) >= 4
-        )
-        SELECT doc_id, MIN(md5(shingle)) AS fingerprint
-        FROM sh4 GROUP BY doc_id ORDER BY doc_id
-    """,
-    "ext_winnow_pairs": f"""
-        WITH {_TOKS},
-        grams AS (
-            SELECT doc_id, i,
-                   md5(array_to_string(t[i:i+2], ' ')) AS h
-            FROM toks, UNNEST(range(1, len(t) - 1)) AS r(i)
-            WHERE len(t) >= 3
-        ),
-        hs AS (
-            SELECT doc_id, list(h ORDER BY i) AS hl
-            FROM grams GROUP BY doc_id
-        ),
-        wins AS (
-            SELECT DISTINCT doc_id, list_min(hl[i:i+3]) AS fp
-            FROM hs, UNNEST(range(1, len(hl) - 2)) AS r(i)
-            WHERE len(hl) >= 4
-        )
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-               CAST(COUNT(*) AS BIGINT) AS shared
-        FROM wins a JOIN wins b
-          ON a.fp = b.fp AND a.doc_id < b.doc_id
-        GROUP BY 1, 2 HAVING COUNT(*) >= 5
-        ORDER BY doc_a, doc_b
-    """,
-    "ext_winnow_fingerprint": f"""
-        WITH {_TOKS},
-        grams AS (
-            SELECT doc_id, i,
-                   md5(array_to_string(t[i:i+2], ' ')) AS h
-            FROM toks, UNNEST(range(1, len(t) - 1)) AS r(i)
-            WHERE len(t) >= 3
-        ),
-        hs AS (
-            SELECT doc_id, list(h ORDER BY i) AS hl
-            FROM grams GROUP BY doc_id
-        ),
-        wins AS (
-            SELECT doc_id, list_min(hl[i:i+3]) AS fp
-            FROM hs, UNNEST(range(1, len(hl) - 2)) AS r(i)
-            WHERE len(hl) >= 4
-        )
-        SELECT DISTINCT doc_id, fp FROM wins ORDER BY doc_id, fp
-    """,
-    "ext_cap_per_source": """
-        SELECT doc_id, source FROM (
-            SELECT doc_id, source,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY source
-                       ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id
-                   ) AS r
-            FROM documents
-        ) t WHERE r <= 20 ORDER BY doc_id
-    """,
-    "ext_dedup_embedding": """
-        WITH RECURSIVE pairs AS (
-            SELECT a.vec_id AS doc_a, b.vec_id AS doc_b
-            FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-            WHERE ROUND(list_cosine_similarity(
-                      CAST(a.embedding AS DOUBLE[]),
-                      CAST(b.embedding AS DOUBLE[])), 6) >= 0.35
-        ),
-        edges AS (
-            SELECT doc_a AS s, doc_b AS d FROM pairs
-            UNION
-            SELECT doc_b, doc_a FROM pairs
-        ),
-        reach AS (
-            SELECT s, d FROM edges
-            UNION
-            SELECT r.s, e.d FROM reach r JOIN edges e ON r.d = e.s
-            WHERE r.s != e.d
-        ),
-        comp AS (
-            SELECT s AS id, LEAST(s, MIN(d)) AS component
-            FROM reach GROUP BY s
-        )
-        SELECT vec_id FROM embeddings e
-        LEFT JOIN comp c ON e.vec_id = c.id AND c.id != c.component
-        WHERE c.id IS NULL
-        ORDER BY vec_id
-    """,
-    "ext_lm_score": f"""
-        WITH {_TOKS},
-        bg AS (
-            SELECT doc_id, t[i] AS w1, t[i + 1] AS w2
-            FROM toks, UNNEST(range(1, len(t))) AS r(i)
-            WHERE len(t) >= 2
-        ),
-        bc AS (SELECT w1, w2, COUNT(*) AS cb FROM bg GROUP BY w1, w2),
-        uc AS (SELECT w1, COUNT(*) AS cu FROM bg GROUP BY w1),
-        v AS (
-            SELECT COUNT(DISTINCT x) AS nv
-            FROM toks, UNNEST(t) AS u(x)
-        )
-        SELECT g.doc_id,
-               COUNT(*) AS n_bigrams,
-               ROUND(AVG(-LN((bc.cb + 0.5) / (uc.cu + 0.5 * v.nv))), 4)
-                   AS nll
-        FROM bg g
-        JOIN bc USING (w1, w2)
-        JOIN uc USING (w1)
-        CROSS JOIN v
-        GROUP BY g.doc_id
-        ORDER BY g.doc_id
-    """,
-    "ext_prep_pipeline": f"""
-        WITH q AS (
-            SELECT doc_id,
-                   LEAST(len(string_split(lower(text), ' ')) / 50.0, 1.0) * 0.4
-                   + (1 - LEAST((length(text) - length(
-                         regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g')))
-                         / GREATEST(length(text), 1) * 1.0, 1.0)) * 0.3
-                   + LEAST(len(list_intersect(
-                         string_split(lower(text), ' '),
-                         {_STOP_SQL['en']})) / 5.0, 1.0) * 0.3 AS quality
-            FROM documents
-        ),
-        kept AS (
-            SELECT d.doc_id, d.text FROM documents d
-            JOIN q ON d.doc_id = q.doc_id
-            WHERE ROUND(q.quality, 4) >= 0.5
-        ),
-        nc AS (
-            SELECT doc_id, string_split(text, ' ') AS t,
-                   GREATEST(CAST(CEIL((len(string_split(text, ' ')) - 8.0)
-                       / 24.0) AS INT), 1) AS n_chunks
-            FROM kept
-        ),
-        chunks AS (
-            SELECT doc_id, len(t[i*24+1 : i*24+32]) AS n_tokens
-            FROM nc, UNNEST(range(n_chunks)) AS r(i)
-        )
-        SELECT doc_id, COUNT(*) AS n_chunks,
-               CAST(SUM(n_tokens) AS BIGINT) AS total_chunk_tokens
-        FROM chunks GROUP BY doc_id ORDER BY doc_id
-    """,
-    "ext_term_freq": """
-        SELECT tok,
-               CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS df,
-               COUNT(*) AS tf
-        FROM (
-            SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok
-            FROM documents
-        )
-        GROUP BY tok
-        ORDER BY df DESC, tok
-        LIMIT 50
-    """,
-    "ext_user_trend": """
-        WITH pts AS (
-            SELECT user_id,
-                   epoch(CAST(ts AS TIMESTAMP)) / 86400.0 AS x,
-                   value AS y
-            FROM events
-        )
-        SELECT user_id,
-               ROUND(regr_slope(y, x), 6) AS slope,
-               ROUND(regr_intercept(y, x), 4) AS intercept,
-               ROUND(regr_r2(y, x), 6) AS r2,
-               COUNT(*) AS n
-        FROM pts GROUP BY user_id ORDER BY user_id
-    """,
-    "ext_gapfill": """
-        WITH bounds AS (
-            SELECT CAST(MIN(CAST(ts AS TIMESTAMP)) AS DATE) AS lo,
-                   CAST(MAX(CAST(ts AS TIMESTAMP)) AS DATE) AS hi
-            FROM events
-        ),
-        spine AS (
-            SELECT u.user_id, CAST(g.d AS DATE) AS day
-            FROM (SELECT DISTINCT user_id FROM events) u
-            CROSS JOIN bounds
-            CROSS JOIN UNNEST(generate_series(
-                CAST(lo AS TIMESTAMP), CAST(hi AS TIMESTAMP),
-                INTERVAL 1 DAY)) AS g(d)
-        ),
-        daily AS (
-            SELECT user_id, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
-                   ROUND(SUM(value), 4) AS total
-            FROM events GROUP BY 1, 2
-        )
-        SELECT s.user_id, s.day, COALESCE(d.total, 0.0) AS total
-        FROM spine s LEFT JOIN daily d
-        ON s.user_id = d.user_id AND s.day = d.day
-        ORDER BY s.user_id, s.day
-    """,
-    "ext_gapfill_linear": """
-        WITH bounds AS (
-            SELECT CAST(MIN(CAST(ts AS TIMESTAMP)) AS DATE) AS lo,
-                   CAST(MAX(CAST(ts AS TIMESTAMP)) AS DATE) AS hi
-            FROM events
-        ),
-        spine AS (
-            SELECT u.user_id, CAST(g.d AS DATE) AS day
-            FROM (SELECT DISTINCT user_id FROM events) u
-            CROSS JOIN bounds
-            CROSS JOIN UNNEST(generate_series(
-                CAST(lo AS TIMESTAMP), CAST(hi AS TIMESTAMP),
-                INTERVAL 1 DAY)) AS g(d)
-        ),
-        daily AS (
-            SELECT user_id, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
-                   ROUND(SUM(value), 4) AS total
-            FROM events GROUP BY 1, 2
-        ),
-        j AS (
-            SELECT s.user_id, s.day, d.total
-            FROM spine s LEFT JOIN daily d
-            ON s.user_id = d.user_id AND s.day = d.day
-        ),
-        x AS (
-            SELECT user_id, day, total,
-                   last_value(total IGNORE NULLS) OVER (
-                       PARTITION BY user_id ORDER BY day
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-                   ) AS pv,
-                   last_value(CASE WHEN total IS NOT NULL THEN day END
-                              IGNORE NULLS) OVER (
-                       PARTITION BY user_id ORDER BY day
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-                   ) AS pd,
-                   first_value(total IGNORE NULLS) OVER (
-                       PARTITION BY user_id ORDER BY day
-                       ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING
-                   ) AS nv,
-                   first_value(CASE WHEN total IS NOT NULL THEN day END
-                               IGNORE NULLS) OVER (
-                       PARTITION BY user_id ORDER BY day
-                       ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING
-                   ) AS nd
-            FROM j
-        )
-        SELECT user_id, day,
-               CASE WHEN total IS NOT NULL THEN total
-                    ELSE ROUND(pv + (nv - pv)
-                               * date_diff('day', pd, day) * 1.0
-                               / date_diff('day', pd, nd), 4) END AS total
-        FROM x ORDER BY user_id, day
-    """,
-    "ext_funnel": """
-        WITH e AS (
-            SELECT user_id AS u, CAST(ts AS TIMESTAMP) AS t, event_type AS s
-            FROM events
-        ),
-        s0 AS (SELECT u, MIN(t) AS tp FROM e WHERE s = 'signup' GROUP BY u),
-        s1 AS (
-            SELECT e.u, MIN(e.t) AS tp FROM e JOIN s0 ON e.u = s0.u
-            WHERE e.s = 'view' AND e.t > s0.tp GROUP BY e.u
-        ),
-        s2 AS (
-            SELECT e.u, MIN(e.t) AS tp FROM e JOIN s1 ON e.u = s1.u
-            WHERE e.s = 'click' AND e.t > s1.tp GROUP BY e.u
-        ),
-        s3 AS (
-            SELECT e.u, MIN(e.t) AS tp FROM e JOIN s2 ON e.u = s2.u
-            WHERE e.s = 'purchase' AND e.t > s2.tp GROUP BY e.u
-        ),
-        counts AS (
-            SELECT 0 AS step_idx, 'signup' AS step,
-                   (SELECT COUNT(*) FROM s0) AS n_users
-            UNION ALL SELECT 1, 'view', (SELECT COUNT(*) FROM s1)
-            UNION ALL SELECT 2, 'click', (SELECT COUNT(*) FROM s2)
-            UNION ALL SELECT 3, 'purchase', (SELECT COUNT(*) FROM s3)
-        )
-        SELECT step_idx, step, n_users,
-               ROUND(n_users * 1.0 / FIRST_VALUE(n_users)
-                     OVER (ORDER BY step_idx), 6) AS frac_of_first
-        FROM counts ORDER BY step_idx
-    """,
-    "ext_funnel_windowed": """
-        WITH e AS (
-            SELECT user_id AS u, CAST(ts AS TIMESTAMP) AS t, event_type AS s
-            FROM events
-        ),
-        c0 AS (
-            SELECT u, t AS t0, t AS tp FROM e WHERE s = 'signup'
-        ),
-        c1 AS (
-            SELECT e.u, c0.t0, MIN(e.t) AS tp
-            FROM e JOIN c0 ON e.u = c0.u
-            WHERE e.s = 'view' AND e.t > c0.tp
-              AND e.t <= c0.t0 + INTERVAL 1 DAY
-            GROUP BY e.u, c0.t0
-        ),
-        c2 AS (
-            SELECT e.u, c1.t0, MIN(e.t) AS tp
-            FROM e JOIN c1 ON e.u = c1.u
-            WHERE e.s = 'click' AND e.t > c1.tp
-              AND e.t <= c1.t0 + INTERVAL 1 DAY
-            GROUP BY e.u, c1.t0
-        ),
-        counts AS (
-            SELECT 0 AS step_idx, 'signup' AS step,
-                   (SELECT COUNT(DISTINCT u) FROM c0) AS n_users
-            UNION ALL SELECT 1, 'view', (SELECT COUNT(DISTINCT u) FROM c1)
-            UNION ALL SELECT 2, 'click', (SELECT COUNT(DISTINCT u) FROM c2)
-        )
-        SELECT step_idx, step, n_users,
-               ROUND(n_users * 1.0 / FIRST_VALUE(n_users)
-                     OVER (ORDER BY step_idx), 6) AS frac_of_first
-        FROM counts ORDER BY step_idx
-    """,
-    "ext_dedup_eval": f"""
-        WITH {_TOKS}, {_SHINGLES3},
-        sig AS (
-            SELECT doc_id, seed,
-                   MIN(md5(concat(CAST(seed AS VARCHAR), '|', shingle))) AS minhash
-            FROM sh, UNNEST([0,1,2,3,4,5,6,7]) AS s(seed)
-            GROUP BY doc_id, seed
-        ),
-        bands AS (
-            SELECT doc_id, seed // 2 AS band,
-                   string_agg(minhash, ',' ORDER BY seed) AS band_key
-            FROM sig GROUP BY doc_id, seed // 2
-        ),
-        predicted AS (
-            SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-            FROM bands a JOIN bands b
-              ON a.band = b.band AND a.band_key = b.band_key
-             AND a.doc_id < b.doc_id
-        ),
-        sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-        inter AS (
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS i
-            FROM sh a JOIN sh b
-              ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-            GROUP BY a.doc_id, b.doc_id
-        ),
-        truth AS (
-            SELECT doc_a, doc_b FROM inter
-            JOIN sizes sa ON sa.doc_id = doc_a
-            JOIN sizes sb ON sb.doc_id = doc_b
-            WHERE i * 1.0 / (sa.n + sb.n - i) >= 0.2
-        ),
-        hit AS (
-            SELECT doc_a, doc_b FROM predicted
-            INTERSECT SELECT doc_a, doc_b FROM truth
-        ),
-        c AS (
-            SELECT (SELECT COUNT(*) FROM predicted) AS n_predicted,
-                   (SELECT COUNT(*) FROM truth) AS n_truth,
-                   (SELECT COUNT(*) FROM hit) AS n_hit
-        )
-        SELECT n_predicted, n_truth, n_hit,
-               ROUND(n_hit * 1.0 / GREATEST(n_predicted, 1), 6) AS precision,
-               ROUND(n_hit * 1.0 / GREATEST(n_truth, 1), 6) AS recall,
-               ROUND(2 * (n_hit * 1.0 / GREATEST(n_predicted, 1))
-                       * (n_hit * 1.0 / GREATEST(n_truth, 1))
-                     / GREATEST(n_hit * 1.0 / GREATEST(n_predicted, 1)
-                                + n_hit * 1.0 / GREATEST(n_truth, 1),
-                                1e-12), 6) AS f1
-        FROM c
-    """,
-    "ext_ewma": """
-        WITH daily AS (
-            SELECT user_id AS key,
-                   CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
-                   ROUND(SUM(value), 4) AS total
-            FROM events GROUP BY 1, 2
-        ),
-        t AS (
-            SELECT key, day, total,
-                   CAST(datediff('day',
-                        MIN(day) OVER (PARTITION BY key), day) AS DOUBLE)
-                       AS tt
-            FROM daily
-        )
-        SELECT key AS user_id, day, total,
-               ROUND(
-                   (SUM(total * POW(0.9, -tt)) OVER w * POW(0.9, tt))
-                   / (SUM(POW(0.9, -tt)) OVER w * POW(0.9, tt)), 6)
-                   AS ewma
-        FROM t
-        WINDOW w AS (PARTITION BY key ORDER BY day
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        ORDER BY user_id, day
-    """,
-    "ext_entity_resolution": """
-        WITH RECURSIVE b AS (
-            SELECT p_partkey, p_name,
-                   string_split(p_name, ' ')[1] AS blk
-            FROM part
-        ),
-        pairs AS (
-            SELECT a.p_partkey AS pa, b2.p_partkey AS pb
-            FROM b a JOIN b b2
-              ON a.blk = b2.blk AND a.p_partkey < b2.p_partkey
-            WHERE levenshtein(a.p_name, b2.p_name) BETWEEN 1 AND 3
-        ),
-        edges AS (
-            SELECT pa AS s, pb AS d FROM pairs
-            UNION
-            SELECT pb, pa FROM pairs
-        ),
-        reach AS (
-            SELECT s, d FROM edges
-            UNION
-            SELECT r.s, e.d FROM reach r JOIN edges e ON r.d = e.s
-            WHERE r.s != e.d
-        ),
-        comp AS (
-            SELECT s AS id, LEAST(s, MIN(d)) AS component
-            FROM reach GROUP BY s
-        )
-        SELECT p_partkey FROM part p
-        LEFT JOIN comp c ON p.p_partkey = c.id AND c.id != c.component
-        WHERE c.id IS NULL
-        ORDER BY p_partkey
-    """,
-    "ext_group_split": """
-        WITH s AS (
-            SELECT user_id,
-                   CASE WHEN substr(md5(CAST(user_id AS VARCHAR)), 1, 4)
-                             < 'cccc'
-                        THEN 'train' ELSE 'test' END AS split
-            FROM events
-        )
-        SELECT split, COUNT(*) AS n_events,
-               CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users
-        FROM s GROUP BY split ORDER BY split
-    """,
-    "ext_ab_test": """
-        WITH per_user AS (
-            SELECT user_id,
-                   CASE WHEN SUM(CASE WHEN event_type = 'purchase'
-                                      THEN 1 ELSE 0 END) >= 14
-                        THEN 1 ELSE 0 END AS converted,
-                   CAST(user_id % 2 AS INT) AS variant
-            FROM events GROUP BY user_id
-        ),
-        by_variant AS (
-            SELECT variant, COUNT(*) AS n, SUM(converted) AS conv
-            FROM per_user GROUP BY variant
-        ),
-        wide AS (
-            SELECT
-                MAX(CASE WHEN variant = 0 THEN n END) AS n0,
-                MAX(CASE WHEN variant = 0 THEN conv END) AS c0,
-                MAX(CASE WHEN variant = 1 THEN n END) AS n1,
-                MAX(CASE WHEN variant = 1 THEN conv END) AS c1
-            FROM by_variant
-        )
-        SELECT n0 AS n_control, n1 AS n_treat,
-               ROUND(c0 * 1.0 / n0, 6) AS rate_control,
-               ROUND(c1 * 1.0 / n1, 6) AS rate_treat,
-               ROUND(((c1 * 1.0 / n1) - (c0 * 1.0 / n0))
-                     / SQRT(((c0 + c1) * 1.0 / (n0 + n1))
-                            * (1 - (c0 + c1) * 1.0 / (n0 + n1))
-                            * (1.0 / n0 + 1.0 / n1)), 6) AS z_score
-        FROM wide
-    """,
-    "ext_attribution": """
-        WITH e AS (
-            SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts,
-                   event_type
-            FROM events
-        ),
-        marked AS (
-            SELECT event_id, user_id, ts, event_type,
-                   LAST_VALUE(CASE WHEN event_type = 'click' THEN ts END
-                              IGNORE NULLS) OVER (
-                       PARTITION BY user_id ORDER BY ts, event_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-                   ) AS click_ts
-            FROM e
-        )
-        SELECT event_id, user_id, ts AS purchase_ts, click_ts,
-               CASE WHEN click_ts IS NOT NULL
-                    THEN epoch(ts) - epoch(click_ts) END AS gap_seconds
-        FROM marked WHERE event_type = 'purchase' ORDER BY event_id
-    """,
-    "ext_top_paths": """
-        WITH e AS (
-            SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts,
-                   event_type
-            FROM events
-        ),
-        seq AS (
-            SELECT event_type AS s1,
-                   LEAD(event_type, 1) OVER w AS s2,
-                   LEAD(event_type, 2) OVER w AS s3
-            FROM e
-            WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        )
-        SELECT s1 || '>' || s2 || '>' || s3 AS path, COUNT(*) AS n
-        FROM seq WHERE s3 IS NOT NULL
-        GROUP BY 1 ORDER BY n DESC, path LIMIT 20
-    """,
-    "ext_histogram": """
-        WITH stats AS (
-            SELECT MIN(o_totalprice) AS lo, MAX(o_totalprice) AS hi
-            FROM orders
-        )
-        SELECT LEAST(GREATEST(CAST(FLOOR(
-                   (o_totalprice - lo) / ((hi - lo) / 20)) AS INT), 0), 19)
-                   AS bin,
-               COUNT(*) AS n
-        FROM orders, stats
-        GROUP BY 1 ORDER BY bin
-    """,
-    "ext_event_transitions": """
-        WITH seq AS (
-            SELECT event_type AS from_type,
-                   LEAD(event_type) OVER (
-                       PARTITION BY user_id
-                       ORDER BY CAST(ts AS TIMESTAMP), event_id
-                   ) AS to_type
-            FROM events
-        ),
-        pairs AS (
-            SELECT from_type, to_type, COUNT(*) AS n
-            FROM seq WHERE to_type IS NOT NULL
-            GROUP BY from_type, to_type
-        )
-        SELECT from_type, to_type, n,
-               ROUND(n * 1.0 / SUM(n) OVER (PARTITION BY from_type), 6) AS p
-        FROM pairs ORDER BY from_type, to_type
-    """,
-    "ext_cohort_retention": """
-        WITH e AS (
-            SELECT user_id AS u,
-                   CAST(date_trunc('week', CAST(ts AS TIMESTAMP)) AS DATE)
-                       AS w
-            FROM events
-        ),
-        cohorts AS (
-            SELECT u, MIN(w) AS cohort_week FROM e GROUP BY u
-        )
-        SELECT cohort_week,
-               CAST(datediff('day', cohort_week, w) // 7 AS INT)
-                   AS week_offset,
-               CAST(COUNT(DISTINCT e.u) AS BIGINT) AS n_users
-        FROM e JOIN cohorts ON e.u = cohorts.u
-        GROUP BY cohort_week, week_offset
-        ORDER BY cohort_week, week_offset
-    """,
-    "ext_zorder": f"""
-        WITH stats AS (
-            SELECT MIN(o_custkey) AS min1, MAX(o_custkey) AS max1,
-                   MIN(o_totalprice) AS min2, MAX(o_totalprice) AS max2
-            FROM orders
-        ),
-        b AS (
-            SELECT o_orderkey,
-                   LEAST(GREATEST(CAST(FLOOR(
-                       (CAST(o_custkey AS DOUBLE) - min1)
-                       / (CASE WHEN max1 - min1 > 0
-                               THEN CAST(max1 - min1 AS DOUBLE)
-                               ELSE 1.0 END) * 256) AS BIGINT),
-                       0), 255) AS b1,
-                   LEAST(GREATEST(CAST(FLOOR(
-                       (o_totalprice - min2)
-                       / (CASE WHEN max2 - min2 > 0
-                               THEN max2 - min2 ELSE 1.0 END) * 256)
-                       AS BIGINT), 0), 255) AS b2
-            FROM orders, stats
-        )
-        SELECT o_orderkey, CAST({_zorder_oracle_expr(8)} AS BIGINT) AS zval
-        FROM b ORDER BY zval, o_orderkey LIMIT 1000
-    """,
-    "ext_incremental_agg": """
-        WITH facts AS (
-            SELECT o_orderpriority,
-                   CAST(ROUND(o_totalprice * 100) AS BIGINT) AS cents
-            FROM orders
-            WHERE NOT (o_orderkey % 10 != 0 AND o_orderkey % 7 = 0)
-        )
-        SELECT o_orderpriority,
-               CAST(SUM(cents) AS BIGINT) AS sum_cents,
-               COUNT(*) AS n
-        FROM facts GROUP BY o_orderpriority ORDER BY o_orderpriority
-    """,
-    "ext_snapshot_format": """
-        SELECT lang, COUNT(*) AS n,
-               CAST(SUM(doc_id) AS BIGINT) AS sum_doc_id
-        FROM documents GROUP BY lang ORDER BY lang
-    """,
-    "ext_time_travel": """
-        WITH v1 AS (SELECT doc_id FROM documents WHERE doc_id % 5 < 2),
-        v2 AS (
-            SELECT doc_id FROM documents WHERE doc_id % 5 < 4
-        ),
-        v3 AS (SELECT doc_id FROM documents WHERE doc_id % 5 = 4)
-        SELECT 1 AS version, COUNT(*) AS n_docs,
-               CAST(SUM(doc_id) AS BIGINT) AS sum_doc_id FROM v1
-        UNION ALL
-        SELECT 2, COUNT(*), CAST(SUM(doc_id) AS BIGINT) FROM v2
-        UNION ALL
-        SELECT 3, COUNT(*), CAST(SUM(doc_id) AS BIGINT) FROM v3
-        ORDER BY version
-    """,
-    "ext_substring_dedup": f"""
-        WITH {_TOKS},
-        grams AS (
-            SELECT doc_id, CAST(i AS INT) AS i,
-                   array_to_string(t[i:i+3], ' ') AS g
-            FROM toks, UNNEST(range(1, greatest(len(t) - 3, 0) + 1)) AS r(i)
-        ),
-        common AS (
-            SELECT g FROM grams GROUP BY g
-            HAVING COUNT(DISTINCT doc_id) >= 2
-        ),
-        covered AS (
-            SELECT DISTINCT doc_id, i + CAST(o AS INT) AS tokpos
-            FROM grams JOIN common USING (g)
-            CROSS JOIN UNNEST(range(4)) AS u(o)
-        ),
-        alltoks AS (
-            SELECT doc_id, CAST(j AS INT) AS tokpos, t[j] AS tok
-            FROM toks, UNNEST(range(1, len(t) + 1)) AS rr(j)
-        ),
-        kept AS (
-            SELECT a.doc_id, a.tokpos, a.tok FROM alltoks a
-            ANTI JOIN covered c
-            ON a.doc_id = c.doc_id AND a.tokpos = c.tokpos
-        ),
-        agg AS (
-            SELECT doc_id,
-                   string_agg(tok, ' ' ORDER BY tokpos) AS clean_text,
-                   COUNT(*) AS n_kept
-            FROM kept GROUP BY doc_id
-        )
-        SELECT d.doc_id,
-               COALESCE(a.clean_text, '') AS clean_text,
-               CAST(len(string_split(lower(d.text), ' '))
-                    - COALESCE(a.n_kept, 0) AS BIGINT) AS n_removed
-        FROM documents d LEFT JOIN agg a USING (doc_id)
-        ORDER BY d.doc_id
-    """,
-    "ext_temperature_mix": """
-        WITH counts AS (
-            SELECT source, COUNT(*) AS n FROM documents GROUP BY source
-        ),
-        bud AS (
-            SELECT source,
-                   CAST(FLOOR(100.0 * POW(n, 0.5)
-                        / SUM(POW(n, 0.5)) OVER ()) AS BIGINT) AS b
-            FROM counts
-        ),
-        ranked AS (
-            SELECT doc_id, source,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY source
-                       ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id
-                   ) AS rk
-            FROM documents
-        )
-        SELECT doc_id, source
-        FROM ranked JOIN bud USING (source)
-        WHERE rk <= b ORDER BY doc_id
-    """,
-    "ext_quality_filter": f"""
-        WITH base AS (
-            SELECT doc_id, source, text,
-                   len(string_split(lower(text), ' ')) AS n_tokens,
-                   length(text) - length(
-                       regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g')
-                   ) AS n_punct,
-                   len(list_intersect(
-                       string_split(lower(text), ' '),
-                       {_STOP_SQL['en']})) AS n_stopwords
-            FROM documents
-        ),
-        scored AS (
-            SELECT doc_id, source,
-                   ROUND(
-                       LEAST(n_tokens / 50.0, 1.0) * 0.4
-                       + (1 - LEAST(n_punct / GREATEST(length(text), 1) * 1.0,
-                                    1.0)) * 0.3
-                       + LEAST(n_stopwords / 5.0, 1.0) * 0.3, 4) AS quality
-            FROM base
-        ),
-        ranked AS (
-            SELECT doc_id, source, quality,
-                   PERCENT_RANK() OVER (
-                       PARTITION BY source
-                       ORDER BY quality DESC, doc_id
-                   ) AS pr
-            FROM scored
-        )
-        SELECT doc_id, source, quality FROM ranked
-        WHERE pr <= 0.5 ORDER BY doc_id
-    """,
-    "ext_chunk_documents": """
-        WITH nc AS (
-            SELECT doc_id, t,
-                   GREATEST(CAST(CEIL((len(t) - 16.0) / 48.0) AS INT), 1)
-                       AS n_chunks
-            FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents)
-        )
-        SELECT doc_id, i AS chunk_idx,
-               array_to_string(t[i*48+1 : i*48+64], ' ') AS chunk,
-               len(t[i*48+1 : i*48+64]) AS n_tokens
-        FROM nc, UNNEST(range(n_chunks)) AS r(i)
-        ORDER BY doc_id, chunk_idx
-    """,
-    "ext_session_window": """
-        WITH e AS (
-            SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, value FROM events
-        ),
-        flagged AS (
-            SELECT user_id, ts, value,
-                   CASE WHEN ts - LAG(ts) OVER w <= INTERVAL 5 MINUTE
-                        THEN 0 ELSE 1 END AS new_session
-            FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts)
-        ),
-        sessions AS (
-            SELECT user_id, ts, value,
-                   SUM(new_session) OVER (
-                       PARTITION BY user_id ORDER BY ts
-                       ROWS UNBOUNDED PRECEDING
-                   ) AS session_id
-            FROM flagged
-        )
-        SELECT user_id,
-               MIN(ts) AS session_start,
-               MAX(ts) + INTERVAL 5 MINUTE AS session_end,
-               COUNT(*) AS n_events,
-               ROUND(SUM(value), 4) AS sum_value
-        FROM sessions GROUP BY user_id, session_id
-        ORDER BY user_id, session_start
-    """,
-    # SQL-path queries: the oracle IS the same SQL (dialect-shared subset)
-    "ext_sql_pricing_summary": _PRICING_SUMMARY_SQL,
-    "ext_sql_lateral_topn": _LATERAL_TOPN_SQL,
-    "ext_sql_recursive_cte": _RECURSIVE_SPINE_SQL,
-    "ext_sql_pipe_syntax": """
-        SELECT o_orderstatus, COUNT(*) AS n,
-               ROUND(SUM(o_totalprice), 2) AS rev
-        FROM orders
-        WHERE o_totalprice > 100000
-        GROUP BY o_orderstatus
-        ORDER BY o_orderstatus
-    """,
-    "ext_sql_shipping_priority": _SHIPPING_PRIORITY_SQL,
-    "ext_sql_local_supplier_volume": _LOCAL_SUPPLIER_VOLUME_SQL,
-    "ext_sql_returned_items": _RETURNED_ITEM_SQL,
-    "ext_sql_volume_shipping": _VOLUME_SHIPPING_SQL,
-    "ext_sql_order_priority": _ORDER_PRIORITY_SQL,
-    "ext_sql_disjunctive_filter": _DISJUNCTIVE_FILTER_SQL,
-    "ext_revenue_concentration": _CONCENTRATION_SQL,
-    "ext_copurchase_pairs": _COPURCHASE_SQL,
-    "ext_pattern_match": """
-        WITH seqs AS (
-            SELECT user_id,
-                   string_agg(event_type, '>' ORDER BY ts, event_id)
-                       AS sequence
-            FROM events GROUP BY user_id
-        )
-        SELECT user_id, sequence FROM seqs
-        WHERE regexp_matches(sequence,
-            '(^|>)signup>((click|view|signup|purchase)>)*purchase(>|$)')
-        ORDER BY user_id
-    """,
-    "ext_proximity_search": """
-        WITH toks AS (
-            SELECT doc_id, string_split(lower(text), ' ') AS t
-            FROM documents
-        ), p AS (
-            SELECT doc_id, i AS pos, t[i + 1] AS token
-            FROM toks, UNNEST(range(len(t))) AS r(i)
-        ), a AS (
-            SELECT doc_id, pos FROM p WHERE token = 'vector'
-        ), b AS (
-            SELECT doc_id, pos FROM p WHERE token = 'slow'
-        )
-        SELECT a.doc_id, CAST(MIN(ABS(a.pos - b.pos)) AS INT) AS min_gap
-        FROM a JOIN b USING (doc_id)
-        WHERE ABS(a.pos - b.pos) <= 5
-        GROUP BY a.doc_id
-        ORDER BY a.doc_id
-    """,
-    "ext_phrase_search": """
-        SELECT doc_id
-        FROM documents
-        WHERE (' ' || lower(text) || ' ') LIKE '% vector join %'
-        ORDER BY doc_id
-    """,
-    "ext_asof_forward": """
-        WITH ranked AS (
-            SELECT o.o_custkey AS user_id, o.o_orderkey, e.event_id,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY o.o_orderkey
-                       ORDER BY e.ts ASC, e.event_id DESC
-                   ) AS rn
-            FROM orders o
-            LEFT JOIN events e
-              ON e.user_id = o.o_custkey
-             AND CAST(e.ts AS TIMESTAMP) >= o.o_orderdate
-        )
-        SELECT user_id, o_orderkey, event_id
-        FROM ranked WHERE rn = 1 ORDER BY o_orderkey
-    """,
-    "ext_asof_join": """
-        WITH ranked AS (
-            SELECT e.event_id, e.user_id, o.o_orderkey,
-                   ROUND(o.o_totalprice, 2) AS o_totalprice,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY e.event_id
-                       ORDER BY o.o_orderdate DESC, o.o_orderkey DESC
-                   ) AS rn
-            FROM events e
-            JOIN orders o
-              ON e.user_id = o.o_custkey
-             AND o.o_orderdate <= CAST(e.ts AS TIMESTAMP)
-        )
-        SELECT event_id, user_id, o_orderkey, o_totalprice
-        FROM ranked WHERE rn = 1 ORDER BY event_id
-    """,
-    "ext_anti_join": """
-        SELECT c_custkey, c_name FROM customer c
-        WHERE NOT EXISTS (
-            SELECT 1 FROM orders o
-            WHERE o.o_custkey = c.c_custkey AND o.o_orderstatus = 'P'
-        )
-        ORDER BY c_custkey
-    """,
-    "ext_outer_join": """
-        WITH c AS (
-            SELECT c_nationkey, COUNT(*) AS nc FROM customer
-            GROUP BY c_nationkey
-        ),
-        s AS (
-            SELECT s_nationkey, COUNT(*) AS ns FROM supplier
-            GROUP BY s_nationkey
-        )
-        SELECT COALESCE(c_nationkey, s_nationkey) AS nationkey,
-               COALESCE(nc, 0) AS nc,
-               COALESCE(ns, 0) AS ns
-        FROM c FULL OUTER JOIN s ON c.c_nationkey = s.s_nationkey
-        ORDER BY nationkey
-    """,
-    "ext_set_ops": """
-        SELECT nationkey, 'both' AS tag FROM (
-            SELECT c_nationkey AS nationkey FROM customer
-            INTERSECT
-            SELECT s_nationkey FROM supplier
-        )
-        UNION ALL
-        SELECT nationkey, 'customers_only' AS tag FROM (
-            SELECT c_nationkey AS nationkey FROM customer
-            EXCEPT
-            SELECT s_nationkey FROM supplier
-        )
-        ORDER BY tag, nationkey
-    """,
-    "ext_pivot": """
-        SELECT n_name,
-               COUNT(*) FILTER (WHERE o_orderstatus = 'F') AS n_f,
-               COUNT(*) FILTER (WHERE o_orderstatus = 'O') AS n_o,
-               COUNT(*) FILTER (WHERE o_orderstatus = 'P') AS n_p
-        FROM orders o
-        JOIN customer c ON o.o_custkey = c.c_custkey
-        JOIN nation n   ON c.c_nationkey = n.n_nationkey
-        GROUP BY n_name ORDER BY n_name
-    """,
-    "ext_unpivot": """
-        SELECT p_partkey, metric, value FROM (
-            SELECT p_partkey, 'size' AS metric,
-                   CAST(p_size AS DOUBLE) AS value FROM part
-            UNION ALL
-            SELECT p_partkey, 'retailprice' AS metric,
-                   CAST(p_retailprice AS DOUBLE) AS value FROM part
-        ) ORDER BY p_partkey, metric
-    """,
-    "ext_json_extract": """
-        SELECT event_type, COUNT(*) AS n,
-               ROUND(AVG(k), 4) AS avg_k,
-               MAX(k) AS max_k
-        FROM (
-            SELECT event_type,
-                   CAST(json_extract_string(props, '$.k') AS INT) AS k
-            FROM events
-        )
-        GROUP BY event_type ORDER BY event_type
-    """,
-    "ext_array_hof": """
-        SELECT vec_id,
-               ROUND(list_sum(list_transform(embedding,
-                     x -> CAST(x AS DOUBLE) * x)), 4) AS sq_norm,
-               CAST(len(list_filter(embedding, x -> x > 0)) AS INT) AS n_pos,
-               ROUND(CAST(list_max(embedding) AS DOUBLE), 4) AS mx
-        FROM embeddings ORDER BY vec_id
-    """,
-    "ext_time_rollup": """
-        SELECT hr, event_type, n,
-               CAST((200 * cents + n) // (2 * n) AS DOUBLE) / 10000
-                   AS avg_value
-        FROM (
-            SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS hr,
-                   event_type, COUNT(*) AS n,
-                   CAST(SUM(CAST(ROUND(value * 100) AS BIGINT))
-                        AS BIGINT) AS cents
-            FROM events GROUP BY 1, 2
-        ) ORDER BY hr, event_type
-    """,
-    "ext_sql_correlated_min": _CORRELATED_MIN_SQL,
-    "ext_sql_large_orders": """
-        SELECT c.c_name, c.c_custkey, o.o_orderkey,
-               ROUND(o.o_totalprice, 2) AS o_totalprice,
-               CAST(SUM(l.l_quantity) AS BIGINT) AS total_qty
-        FROM customer c
-        JOIN orders o   ON c.c_custkey = o.o_custkey
-        JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-        WHERE o.o_orderkey IN (
-            SELECT l_orderkey FROM lineitem
-            GROUP BY l_orderkey HAVING SUM(l_quantity) > 250
-        )
-        GROUP BY c.c_name, c.c_custkey, o.o_orderkey, o.o_totalprice
-        ORDER BY o_totalprice DESC, o.o_orderkey
-    """,
-    "ext_sql_idle_rich_customers": _IDLE_RICH_CUSTOMERS_SQL,
-    "ext_window_funcs": """
-        SELECT o_custkey, o_orderkey,
-               ROUND(LAG(o_totalprice) OVER w, 2)  AS prev_price,
-               ROUND(LEAD(o_totalprice) OVER w, 2) AS next_price,
-               ROUND(FIRST_VALUE(o_totalprice) OVER w, 2) AS first_price,
-               CAST(NTILE(4) OVER w AS INT)        AS quartile,
-               ROUND(PERCENT_RANK() OVER w, 4)     AS pct_rank,
-               ROUND(CUME_DIST() OVER w, 4)        AS cdist
-        FROM orders
-        WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
-        ORDER BY o_custkey, o_orderkey
-    """,
-    "ext_udtf_bigrams": """
-        WITH toks AS (
-            SELECT doc_id, string_split(lower(text), ' ') AS t
-            FROM documents
-        )
-        SELECT doc_id, t[i] || ' ' || t[i + 1] AS bigram
-        FROM toks, UNNEST(range(1, array_length(t))) AS r(i)
-        ORDER BY doc_id, bigram
-        LIMIT 1000
-    """,
-    "ext_robust_z": """
-        WITH stats AS (
-            SELECT user_id, median(value) AS med
-            FROM events GROUP BY user_id
-        ),
-        mads AS (
-            SELECT e.user_id, median(abs(e.value - s.med)) AS mad
-            FROM events e JOIN stats s ON e.user_id = s.user_id
-            GROUP BY e.user_id
-        )
-        SELECT e.user_id, e.event_id,
-               CASE WHEN m.mad = 0 THEN NULL
-                    ELSE ROUND((e.value - s.med) / (1.4826 * m.mad), 4)
-               END AS robust_z
-        FROM events e
-        JOIN stats s ON e.user_id = s.user_id
-        JOIN mads m ON e.user_id = m.user_id
-        ORDER BY e.user_id, e.event_id
-    """,
-    "ext_cube": """
-        SELECT COALESCE(o_orderstatus, 'ALL') AS status,
-               COALESCE(o_orderpriority, 'ALL') AS priority,
-               COUNT(*) AS n,
-               ROUND(SUM(o_totalprice), 2) AS rev
-        FROM orders
-        GROUP BY CUBE(o_orderstatus, o_orderpriority)
-        ORDER BY status, priority
-    """,
-    "ext_variant_json": """
-        SELECT event_type,
-               COUNT(*) AS n,
-               MIN(k) AS min_k,
-               MAX(k) AS max_k
-        FROM (
-            SELECT event_type,
-                   CAST(json_extract(props, '$.k') AS INT) AS k
-            FROM events
-        )
-        WHERE k >= 50
-        GROUP BY event_type
-        ORDER BY event_type
-    """,
-    "ext_rollup": """
-        SELECT COALESCE(n_name, 'ALL') AS n_name,
-               COUNT(*) AS n,
-               ROUND(SUM(c_acctbal), 2) AS bal
-        FROM customer c JOIN nation nt ON c.c_nationkey = nt.n_nationkey
-        GROUP BY ROLLUP(n_name)
-        ORDER BY n_name
-    """,
-    "ext_quantiles": """
-        SELECT l_returnflag,
-               ROUND(quantile_cont(l_quantity, 0.25), 4) AS p25,
-               ROUND(quantile_cont(l_quantity, 0.5), 4) AS p50,
-               ROUND(quantile_cont(l_quantity, 0.75), 4) AS p75
-        FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
-    """,
-    "ext_distinct_agg": """
-        SELECT l_returnflag,
-               CAST(COUNT(DISTINCT l_partkey) AS BIGINT) AS n_parts,
-               ROUND(SUM(DISTINCT l_quantity), 2) AS sdq,
-               COUNT(*) AS n
-        FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
-    """,
-    "ext_interval_join": """
-        SELECT e1.event_id, COUNT(*) AS n
-        FROM events e1
-        JOIN events e2
-          ON e1.user_id = e2.user_id
-         AND CAST(e2.ts AS TIMESTAMP) > CAST(e1.ts AS TIMESTAMP)
-         AND CAST(e2.ts AS TIMESTAMP)
-             <= CAST(e1.ts AS TIMESTAMP) + INTERVAL 1 HOUR
-        GROUP BY e1.event_id ORDER BY e1.event_id
-    """,
-    "ext_decontaminate": f"""
-        WITH {_TOKS}, {_SHINGLES3},
-        bench AS (
-            SELECT DISTINCT shingle FROM sh WHERE doc_id % 20 = 0
-        )
-        SELECT s.doc_id, COUNT(*) AS n_shared
-        FROM sh s JOIN bench b ON s.shingle = b.shingle
-        WHERE s.doc_id % 20 != 0
-        GROUP BY s.doc_id
-        ORDER BY s.doc_id
-    """,
-    "ext_pack_sequences": """
-        WITH t AS (
-            SELECT doc_id,
-                   CAST(len(string_split(lower(text), ' ')) AS BIGINT)
-                       AS n_tokens
-            FROM documents
-        ),
-        offs AS (
-            SELECT doc_id, n_tokens,
-                   CAST(COALESCE(SUM(n_tokens) OVER (
-                       ORDER BY doc_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-                   ), 0) AS BIGINT) AS start_offset
-            FROM t
-        )
-        SELECT doc_id, n_tokens, start_offset,
-               start_offset // 512 AS pack_id
-        FROM offs ORDER BY doc_id
-    """,
-    "ext_sample_mix": """
-        SELECT doc_id, lang FROM documents
-        WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) <
-              CASE WHEN lang = 'en' THEN '4000'
-                   WHEN lang = 'de' THEN '8000'
-                   ELSE 'g' END
-        ORDER BY doc_id
-    """,
-    "ext_redact": """
-        SELECT doc_id,
-               lower(trim(regexp_replace(
-                   regexp_replace(
-                       regexp_replace(
-                           regexp_replace(text,
-                               'https?://[A-Za-z0-9./_%?&=#-]+',
-                               '<URL>', 'g'),
-                           '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}',
-                           '<EMAIL>', 'g'),
-                       '\\+?[0-9][0-9()-]{6,}[0-9]', '<PHONE>', 'g'),
-                   '[ \t\n\r]+', ' ', 'g'))) AS clean,
-               len(regexp_extract_all(text,
-                   'https?://[A-Za-z0-9./_%?&=#-]+')) AS n_url,
-               len(regexp_extract_all(text,
-                   '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}'))
-                   AS n_email,
-               len(regexp_extract_all(text,
-                   '\\+?[0-9][0-9()-]{6,}[0-9]')) AS n_phone
-        FROM documents ORDER BY doc_id
-    """,
-    "ext_profile": """
-        SELECT * FROM (
-            SELECT 'o_orderkey' AS col_name, COUNT(*) AS n_rows,
-                   COUNT(*) - COUNT(o_orderkey) AS n_nulls,
-                   COUNT(DISTINCT o_orderkey) AS n_distinct,
-                   CAST(MIN(o_orderkey) AS VARCHAR) AS min_val,
-                   CAST(MAX(o_orderkey) AS VARCHAR) AS max_val
-            FROM orders
-            UNION ALL
-            SELECT 'o_custkey', COUNT(*), COUNT(*) - COUNT(o_custkey),
-                   COUNT(DISTINCT o_custkey),
-                   CAST(MIN(o_custkey) AS VARCHAR),
-                   CAST(MAX(o_custkey) AS VARCHAR)
-            FROM orders
-            UNION ALL
-            SELECT 'o_orderstatus', COUNT(*),
-                   COUNT(*) - COUNT(o_orderstatus),
-                   COUNT(DISTINCT o_orderstatus),
-                   MIN(o_orderstatus), MAX(o_orderstatus)
-            FROM orders
-            UNION ALL
-            SELECT 'o_orderpriority', COUNT(*),
-                   COUNT(*) - COUNT(o_orderpriority),
-                   COUNT(DISTINCT o_orderpriority),
-                   MIN(o_orderpriority), MAX(o_orderpriority)
-            FROM orders
-        ) ORDER BY col_name
-    """,
-    "ext_data_quality": """
-        SELECT * FROM (
-            SELECT 'not_null:l_orderkey' AS check_name,
-                   COUNT(*) AS n_violations
-            FROM lineitem WHERE l_orderkey IS NULL
-            UNION ALL
-            SELECT 'not_null:l_quantity', COUNT(*)
-            FROM lineitem WHERE l_quantity IS NULL
-            UNION ALL
-            SELECT 'unique:l_orderkey,l_linenumber', COUNT(*) FROM (
-                SELECT 1 FROM lineitem
-                GROUP BY l_orderkey, l_linenumber HAVING COUNT(*) > 1
-            )
-            UNION ALL
-            SELECT 'fk:l_orderkey->o_orderkey', COUNT(*)
-            FROM lineitem l WHERE NOT EXISTS (
-                SELECT 1 FROM orders o WHERE o.o_orderkey = l.l_orderkey
-            )
-            UNION ALL
-            SELECT 'fk:l_partkey->p_partkey', COUNT(*)
-            FROM lineitem l WHERE NOT EXISTS (
-                SELECT 1 FROM part p WHERE p.p_partkey = l.l_partkey
-            )
-        ) ORDER BY check_name
-    """,
-    "ext_merge_upsert": """
-        WITH t AS (
-            SELECT o_orderkey,
-                   CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)
-                       AS price_cents
-            FROM orders
-        ),
-        src AS (
-            SELECT o_orderkey, price_cents * 11 // 10 AS price_cents
-            FROM t WHERE o_orderkey % 10 = 0
-            UNION ALL
-            SELECT o_orderkey + 100000000, price_cents
-            FROM t WHERE o_orderkey % 7 = 3
-        ),
-        merged AS (
-            SELECT * FROM src
-            UNION ALL
-            SELECT t.* FROM t WHERE NOT EXISTS (
-                SELECT 1 FROM src s WHERE s.o_orderkey = t.o_orderkey
-            )
-        )
-        SELECT o_orderkey, price_cents FROM merged ORDER BY o_orderkey
-    """,
-    "ext_hash_split": """
-        WITH s AS (
-            SELECT CASE
-                WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < 'cccc'
-                    THEN 'train'
-                WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < 'e666'
-                    THEN 'val'
-                ELSE 'test' END AS split, lang
-            FROM documents
-        )
-        SELECT split, lang, COUNT(*) AS n
-        FROM s GROUP BY split, lang ORDER BY split, lang
-    """,
-    "ext_udaf_geomean": """
-        SELECT lang,
-               ROUND(EXP(AVG(LN(1 + n_chars))), 4) AS geomean_chars
-        FROM documents GROUP BY lang ORDER BY lang
-    """,
-    "ext_range_window": """
-        SELECT user_id, event_id,
-               ROUND(SUM(value) OVER (
-                   PARTITION BY user_id
-                   ORDER BY epoch_us(CAST(ts AS TIMESTAMP))
-                   RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW
-               ), 4) AS hour_sum
-        FROM events ORDER BY user_id, event_id
-    """,
-    "ext_bpe_tokens": _BPE_TOKENS_ORACLE,
-    "ext_sql_shipmode_priority": _SHIPMODE_PRIORITY_SQL,
-    "ext_sql_promo_revenue": _PROMO_REVENUE_SQL,
-    "ext_sql_parts_supplier": _PARTS_SUPPLIER_SQL,
-    "ext_sql_waiting_supplier": _WAITING_SUPPLIER_SQL,
-    "ext_sql_profit_by_nation": _PROFIT_BY_NATION_SQL,
-    "ext_sql_cust_order_distribution": _CUST_ORDER_DISTRIBUTION_SQL,
-    "ext_sql_top_supplier": _TOP_SUPPLIER_SQL,
-    "ext_sql_small_quantity_revenue": _SMALL_QTY_REVENUE_SQL,
-    "ext_sql_forecast_revenue": _FORECAST_REVENUE_SQL,
-    "ext_sql_market_share": _MARKET_SHARE_SQL,
-    "ext_sql_important_volume": _IMPORTANT_VOLUME_SQL,
-    "ext_sql_promo_supplier": _PROMO_SUPPLIER_SQL,
-    # ext_ann_ivf / ext_ann_lsh: approximate — rows-only (recall-tested
-    # in pytest)
-}
-
-
-def _pagerank_oracle_sql(n_iter: int = 30, damping: float = 0.85) -> str:
-    """Unrolled power iteration for ext_pagerank: one chained CTE per
-    round, each restating EXACTLY the Spark expression —
-    (1-d)/n + d*(inflow + dangling/n) with inflow = Σ rank/outdeg over
-    in-edges and dangling = rank mass of out-degree-0 nodes from the
-    PREVIOUS round. tol=0 on the Spark side fixes the iteration count,
-    so the two engines run the identical float recurrence (subtraction
-    written as ``1.0 - 0.85``, not ``0.15`` — Python computes the lit
-    the same way, and 1.0-0.85 != 0.15 in IEEE doubles)."""
-    its = []
-    for k in range(1, n_iter + 1):
-        its.append(f"""
-        it{k} AS MATERIALIZED (
-            SELECT nd.id,
-                   (1.0 - {damping})/nn.n
-                   + {damping} * (COALESCE(inf.inflow, 0.0) + dang.m/nn.n)
-                   AS rank
-            FROM nodes nd
-            CROSS JOIN nn
-            LEFT JOIN (
-                SELECT e.d AS id, SUM(r.rank / od.deg) AS inflow
-                FROM e JOIN it{k - 1} r ON e.s = r.id
-                       JOIN od ON od.s = e.s
-                GROUP BY e.d
-            ) inf ON inf.id = nd.id
-            CROSS JOIN (
-                SELECT COALESCE(SUM(r.rank), 0.0) AS m FROM it{k - 1} r
-                WHERE r.id NOT IN (SELECT s FROM od)
-            ) dang
-        )""")
-    return f"""
-        WITH seq AS MATERIALIZED (
-            SELECT user_id, event_type,
-                   LEAD(event_type) OVER (
-                       PARTITION BY user_id
-                       ORDER BY CAST(ts AS TIMESTAMP), event_id
-                   ) AS next_type
-            FROM events
-        ), e AS MATERIALIZED (
-            SELECT s, d FROM (
-                SELECT s, d, n, AVG(n) OVER () AS mean_n FROM (
-                    SELECT event_type AS s, next_type AS d,
-                           COUNT(*) AS n
-                    FROM seq WHERE next_type IS NOT NULL
-                    GROUP BY 1, 2
-                )
-            ) WHERE n > mean_n
-        ), nodes AS MATERIALIZED (
-            SELECT DISTINCT id FROM (
-                SELECT s AS id FROM e UNION ALL SELECT d FROM e
-            )
-        ), nn AS MATERIALIZED (
-            SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM nodes
-        ), od AS MATERIALIZED (
-            SELECT s, COUNT(*) AS deg FROM e GROUP BY s
-        ), it0 AS MATERIALIZED (
-            SELECT id, 1.0/nn.n AS rank FROM nodes CROSS JOIN nn
-        ),{",".join(its)}
-        SELECT id, ROUND(rank, 8) AS rank FROM it{n_iter} ORDER BY id
     """
-
-
-ORACLE["ext_pagerank"] = _pagerank_oracle_sql()
-
-
-def _lpa_oracle_sql(n_iter: int = 5) -> str:
-    """Unrolled deterministic label propagation for ext_communities:
-    one materialized CTE per round restating EXACTLY the Spark update —
-    every node adopts its neighborhood's most frequent label (self-vote
-    weight 1), smallest label on ties. All-integer arithmetic, so the
-    match is exact; and because the Spark loop's early exit fires only
-    at a FIXED POINT of the update (changed==0 ⇒ further rounds are
-    identity), unrolling the full max_iter rounds here yields the
-    identical final state no matter when Spark stopped."""
-    its = []
-    for k in range(1, n_iter + 1):
-        its.append(f"""
-        it{k} AS MATERIALIZED (
-            SELECT node AS id, lbl FROM (
-                SELECT node, lbl,
-                       ROW_NUMBER() OVER (
-                           PARTITION BY node ORDER BY n DESC, lbl
-                       ) AS rn
-                FROM (
-                    SELECT node, lbl, COUNT(*) AS n FROM (
-                        SELECT e.a AS node, r.lbl
-                        FROM und e JOIN it{k - 1} r ON e.b = r.id
-                        UNION ALL
-                        SELECT id AS node, lbl FROM it{k - 1}
-                    ) GROUP BY node, lbl
-                )
-            ) WHERE rn = 1
-        )""")
-    return f"""
-        WITH ed AS MATERIALIZED (
-            SELECT DISTINCT l_suppkey AS s, l_partkey + 1000000 AS d
-            FROM lineitem WHERE l_quantity >= 48
-        ), und AS MATERIALIZED (
-            SELECT DISTINCT a, b FROM (
-                SELECT s AS a, d AS b FROM ed
-                UNION ALL
-                SELECT d AS a, s AS b FROM ed
-            )
-        ), it0 AS MATERIALIZED (
-            SELECT DISTINCT a AS id, a AS lbl FROM und
-        ),{",".join(its)}
-        SELECT lbl AS community,
-               CAST(COUNT(*) AS BIGINT) AS n_members
-        FROM it{n_iter}
-        GROUP BY lbl
-        ORDER BY n_members DESC, community
-        LIMIT 25
-    """
-
-
-ORACLE["ext_communities"] = _lpa_oracle_sql()
-
-def _stream_drift_oracle_sql() -> str:
-    """Per-batch drift reports restated from scratch: for each of the
-    two deterministic micro-batches (doc_id < 250 / >= 250), the
-    numeric-histogram PSI of n_chars and the categorical PSI of lang
-    against the full-corpus reference — the same bin/clamp/epsilon
-    arithmetic as the ext_drift_psi / ext_drift_categorical oracles,
-    parameterized by the batch predicate."""
-    blocks = []
-    for b, cond in ((0, "doc_id < 250"), (1, "doc_id >= 250")):
-        blocks.append(f"""
-        SELECT {b} AS batch_id, col_name, psi FROM (
-            WITH refm AS (
-                SELECT CAST(n_chars AS DOUBLE) AS value FROM documents
-                WHERE n_chars IS NOT NULL
-            ), edges AS (
-                SELECT MIN(value) AS lo, MAX(value) AS hi FROM refm
-            ), rb AS (
-                SELECT CASE WHEN (e.hi - e.lo) / 10 <= 0 THEN 0
-                            ELSE CAST(LEAST(GREATEST(FLOOR(
-                                (r.value - e.lo) / ((e.hi - e.lo) / 10)),
-                                0), 9) AS INT) END AS bin,
-                       COUNT(*) AS n_ref
-                FROM refm r CROSS JOIN edges e GROUP BY 1
-            ), cm AS (
-                SELECT CAST(n_chars AS DOUBLE) AS value FROM documents
-                WHERE ({cond}) AND n_chars IS NOT NULL
-            ), cb AS (
-                SELECT CASE WHEN (e.hi - e.lo) / 10 <= 0 THEN 0
-                            ELSE CAST(LEAST(GREATEST(FLOOR(
-                                (c.value - e.lo) / ((e.hi - e.lo) / 10)),
-                                0), 9) AS INT) END AS bin,
-                       COUNT(*) AS n_cur
-                FROM cm c CROSS JOIN edges e GROUP BY 1
-            ), j AS (
-                SELECT COALESCE(rb.bin, cb.bin) AS bin,
-                       COALESCE(n_ref, 0) AS n_ref,
-                       COALESCE(n_cur, 0) AS n_cur
-                FROM rb FULL OUTER JOIN cb ON rb.bin = cb.bin
-            ), t AS (
-                SELECT SUM(n_ref) AS tr, SUM(n_cur) AS tc FROM j
-            ), rc AS (
-                SELECT COALESCE(CAST(lang AS VARCHAR), ' __null__')
-                           AS value,
-                       COUNT(*) AS n_ref
-                FROM documents GROUP BY 1
-            ), cc AS (
-                SELECT COALESCE(CAST(lang AS VARCHAR), ' __null__')
-                           AS value,
-                       COUNT(*) AS n_cur
-                FROM documents WHERE ({cond}) GROUP BY 1
-            ), cj AS (
-                SELECT COALESCE(n_ref, 0) AS n_ref,
-                       COALESCE(n_cur, 0) AS n_cur
-                FROM rc FULL OUTER JOIN cc ON rc.value = cc.value
-            ), ct AS (
-                SELECT SUM(n_ref) AS tr, SUM(n_cur) AS tc FROM cj
-            )
-            SELECT 'n_chars' AS col_name,
-                   ROUND(SUM(
-                       (GREATEST(n_cur / t.tc, 1e-6)
-                        - GREATEST(n_ref / t.tr, 1e-6))
-                       * LN(GREATEST(n_cur / t.tc, 1e-6)
-                            / GREATEST(n_ref / t.tr, 1e-6))
-                   ), 6) AS psi
-            FROM j CROSS JOIN t
-            UNION ALL
-            SELECT 'lang',
-                   ROUND(SUM(
-                       (GREATEST(n_cur / ct.tc, 1e-6)
-                        - GREATEST(n_ref / ct.tr, 1e-6))
-                       * LN(GREATEST(n_cur / ct.tc, 1e-6)
-                            / GREATEST(n_ref / ct.tr, 1e-6))
-                   ), 6)
-            FROM cj CROSS JOIN ct
-        )""")
-    joined = " UNION ALL ".join(blocks)
-    return f"""
-        SELECT batch_id, col_name, psi FROM ({joined})
-        ORDER BY batch_id, col_name
-    """
-
-
-ORACLE["ext_stream_drift"] = _stream_drift_oracle_sql()
-
-
-# Luhn-validated CC redaction: same candidate regex, the Luhn lambda
-# with DuckDB's 1-BASED list_transform index (double on even i ↔
-# Spark's 0-based odd), and — since DuckDB 1.0 lacks list_reduce with
-# an init value — the literal-replace fold runs as a per-doc recursive
-# CTE over the validated candidate list. regexp_replace needs the 'g'
-# flag (DuckDB is first-match by default; Spark is global).
-ORACLE["ext_redact_cc"] = r"""
-    WITH RECURSIVE planted AS (
-        SELECT doc_id,
-               text || CASE
-                   WHEN doc_id % 7 = 0
-                       THEN ' card 4111-1111-1111-1111 thanks'
-                   WHEN doc_id % 11 = 0
-                       THEN ' ref 1234 5678 9012 3456 end'
-                   ELSE '' END AS text
-        FROM documents
-    ), base AS (
-        SELECT doc_id, text,
-               regexp_extract_all(text, '\b(?:\d[ -]?){12,18}\d\b') AS cands
-        FROM planted
-    ), judged AS (
-        SELECT doc_id, text, cands,
-               list_filter(cands, c ->
-                   list_sum(list_transform(
-                       string_split(reverse(
-                           regexp_replace(c, '[ -]', '', 'g')), ''),
-                       (ch, i) -> CASE WHEN i % 2 = 0 THEN
-                               CASE WHEN CAST(ch AS INT) * 2 > 9
-                                    THEN CAST(ch AS INT) * 2 - 9
-                                    ELSE CAST(ch AS INT) * 2 END
-                           ELSE CAST(ch AS INT) END
-                   )) % 10 = 0
-               ) AS valid
-        FROM base
-    ), fold AS (
-        SELECT doc_id, 0 AS k, text AS acc, valid FROM judged
-        UNION ALL
-        SELECT doc_id, k + 1, replace(acc, valid[k + 1], '<CC>'), valid
-        FROM fold WHERE k < len(valid)
-    )
-    SELECT j.doc_id,
-           CAST(len(j.cands) AS BIGINT) AS n_cc_candidates,
-           CAST(len(j.valid) AS BIGINT) AS n_cc,
-           f.acc AS cc_redacted
-    FROM judged j JOIN fold f
-      ON j.doc_id = f.doc_id AND f.k = len(j.valid)
-    ORDER BY j.doc_id
-"""
-
-
-def _ann_lsh_oracle_sql() -> str:
-    """DuckDB restatement of ext_ann_lsh — the one ANN family member
-    whose every parameter is data-INdependent: the sign-LSH hyperplanes
-    are pure functions of a seed (operators/similarity.py:343), so they
-    embed as SQL literals the way any operator constant would, and
-    DuckDB independently re-derives every sign bit, every bucket id
-    (for the corpus AND the query), the OR-of-tables candidate set, and
-    the final cosine top-k. Unlike IVF/PQ (k-means state = a function
-    of the data, so an oracle would have to embed numbers computed by
-    the system under test), this check is end-to-end independent.
-
-    Float caveat: sign(dot) could in principle disagree across engines
-    for a dot within ~1e-13 of zero; dots here are O(1)-scale sums of
-    64 standard-normal products, so the collision probability over the
-    ~32*(N+1) dots at sf0.01 is vanishingly small (and a flip would
-    fail the hash loudly, not silently)."""
-    from mitoscape_spark.operators.similarity import SignRandomProjectionLSH
-
-    lsh = SignRandomProjectionLSH(dim=64, n_planes=4, n_tables=8)
-    rows = []
-    for t in range(lsh.n_tables):
-        for p in range(lsh.n_planes):
-            lits = ", ".join(repr(float(x)) for x in lsh.planes[t, p])
-            rows.append(f"({t}, {1 << p}, CAST([{lits}] AS DOUBLE[]))")
-    values = ",\n            ".join(rows)
-    return f"""
-        WITH q AS (
-            SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings
-            WHERE vec_id = 0
-        ),
-        planes(t, bit, pl) AS (VALUES
-            {values}
-        ),
-        qb AS (
-            SELECT t, SUM(CASE WHEN list_dot_product(q.qv, pl) >= 0
-                               THEN bit ELSE 0 END) AS bucket
-            FROM planes, q GROUP BY t
-        ),
-        cb AS (
-            SELECT e.vec_id, planes.t,
-                   SUM(CASE WHEN list_dot_product(
-                           CAST(e.embedding AS DOUBLE[]), pl) >= 0
-                       THEN bit ELSE 0 END) AS bucket
-            FROM embeddings e, planes
-            WHERE e.vec_id != 0
-            GROUP BY e.vec_id, planes.t
-        ),
-        cand AS (
-            SELECT DISTINCT cb.vec_id
-            FROM cb JOIN qb ON cb.t = qb.t AND cb.bucket = qb.bucket
-        )
-        SELECT e.vec_id AS id,
-               ROUND(list_cosine_similarity(
-                   CAST(e.embedding AS DOUBLE[]), q.qv), 6) AS cos
-        FROM cand, embeddings e, q
-        WHERE e.vec_id = cand.vec_id
-        ORDER BY cos DESC, id LIMIT 10
-    """
-
-
-ORACLE["ext_ann_lsh"] = _ann_lsh_oracle_sql()
-
-
-def _kcore_oracle_sql(k: int = 3, rounds: int = 16) -> str:
-    """DuckDB restatement of ext_kcore: the peel loop unrolled as
-    ``rounds`` MATERIALIZED CTE pairs (keep_r = nodes with degree ≥ k
-    in e_{r-1}; e_r = edges with both endpoints kept). Over-unrolling
-    past the fixpoint is safe — peeling is monotone, so extra rounds
-    reproduce the same edge set verbatim (the LPA/PageRank unrolling
-    argument). MATERIALIZED stops DuckDB inlining the chain
-    exponentially."""
-    parts = [
-        """e0 AS MATERIALIZED (
-            SELECT u, v FROM (
-                SELECT a.l_partkey AS u, b.l_partkey AS v,
-                       COUNT(*) AS w
-                FROM (SELECT DISTINCT l_orderkey, l_partkey
-                      FROM lineitem) a
-                JOIN (SELECT DISTINCT l_orderkey, l_partkey
-                      FROM lineitem) b
-                  ON a.l_orderkey = b.l_orderkey
-                WHERE a.l_partkey < b.l_partkey
-                GROUP BY 1, 2
-            ) WHERE w >= 2
-        )"""
-    ]
-    for r in range(1, rounds + 1):
-        p = r - 1
-        parts.append(
-            f"""k{r} AS MATERIALIZED (
-            SELECT x FROM (
-                SELECT u AS x FROM e{p} UNION ALL SELECT v FROM e{p}
-            ) GROUP BY x HAVING COUNT(*) >= {k}
-        )"""
-        )
-        parts.append(
-            f"""e{r} AS MATERIALIZED (
-            SELECT e.u, e.v FROM e{p} e
-            JOIN k{r} a ON e.u = a.x JOIN k{r} b ON e.v = b.x
-        )"""
-        )
-    return (
-        "WITH "
-        + ",\n        ".join(parts)
-        + f"""
-        SELECT x AS id, COUNT(*) AS core_degree FROM (
-            SELECT u AS x FROM e{rounds} UNION ALL
-            SELECT v FROM e{rounds}
-        ) GROUP BY x ORDER BY id
-    """
-    )
-
-
-ORACLE["ext_kcore"] = _kcore_oracle_sql()
 
 
 def ext_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7198,20 +6940,6 @@ def ext_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("p_partkey")
 
 
-def ext_drift_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """E-round5: exact two-sample Kolmogorov–Smirnov distance between
-    the click and purchase `value` distributions — the binning-free
-    companion to ext_drift_psi. CDFs via the two-phase prefix sum;
-    cost scales with distinct-value cardinality, not rows."""
-    from mitoscape_spark.operators.drift import ks_statistic
-
-    events = load_table(spark, sf_dir, "events")
-    return ks_statistic(events, "value", "event_type", "click", "purchase")
-
-
-QUERIES["ext_skyline"] = ext_skyline
-QUERIES["ext_drift_ks"] = ext_drift_ks
-
 ORACLE["ext_skyline"] = """
     SELECT p_partkey, p_retailprice, p_size
     FROM part p
@@ -7223,6 +6951,18 @@ ORACLE["ext_skyline"] = """
     )
     ORDER BY p_partkey
 """
+
+
+def ext_drift_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """E-round5: exact two-sample Kolmogorov–Smirnov distance between
+    the click and purchase `value` distributions — the binning-free
+    companion to ext_drift_psi. CDFs via the two-phase prefix sum;
+    cost scales with distinct-value cardinality, not rows."""
+    from mitoscape_spark.operators.drift import ks_statistic
+
+    events = load_table(spark, sf_dir, "events")
+    return ks_statistic(events, "value", "event_type", "click", "purchase")
+
 
 ORACLE["ext_drift_ks"] = """
     WITH s AS (
@@ -7256,8 +6996,6 @@ def ext_pmi_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source", "rank"
     )
 
-
-QUERIES["ext_pmi_tokens"] = ext_pmi_tokens
 
 ORACLE["ext_pmi_tokens"] = """
     WITH toks AS (
@@ -7301,8 +7039,6 @@ def ext_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return zipf_fit(docs)
 
-
-QUERIES["ext_zipf_slope"] = ext_zipf_slope
 
 ORACLE["ext_zipf_slope"] = """
     WITH toks AS (
@@ -7367,8 +7103,6 @@ def ext_dp_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("nation")
 
 
-QUERIES["ext_dp_revenue"] = ext_dp_revenue
-
 ORACLE["ext_dp_revenue"] = """
     WITH j AS (
         SELECT n.n_name AS nation, o.o_custkey AS cust,
@@ -7417,8 +7151,6 @@ def ext_bloom_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_orderkey",
     )
 
-
-QUERIES["ext_bloom_join"] = ext_bloom_join
 
 ORACLE["ext_bloom_join"] = """
     WITH bk AS (
@@ -7479,8 +7211,6 @@ def ext_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     return novelty_fractions(docs, n=3).orderBy("doc_id")
 
 
-QUERIES["ext_novelty"] = ext_novelty
-
 ORACLE["ext_novelty"] = f"""
     WITH {_TOKS}, {_SHINGLES3},
     first AS (
@@ -7505,8 +7235,6 @@ def ext_heaps_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return heaps_curve(docs).orderBy("doc_id")
 
-
-QUERIES["ext_heaps_curve"] = ext_heaps_curve
 
 ORACLE["ext_heaps_curve"] = """
     WITH toks AS (
@@ -7565,8 +7293,6 @@ def ext_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("p_partkey")
     )
 
-
-QUERIES["ext_countmin"] = ext_countmin
 
 ORACLE["ext_countmin"] = """
     WITH keys AS (
@@ -7632,8 +7358,6 @@ def ext_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return retrieval_metrics(runs, qrels, k=10)
 
-
-QUERIES["ext_retrieval_eval"] = ext_retrieval_eval
 
 ORACLE["ext_retrieval_eval"] = """
     WITH pairs AS (
@@ -7701,8 +7425,6 @@ def ext_drift_wasserstein(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["ext_drift_wasserstein"] = ext_drift_wasserstein
-
 ORACLE["ext_drift_wasserstein"] = """
     WITH s AS (
         SELECT CAST(value AS DOUBLE) AS v,
@@ -7751,8 +7473,6 @@ def ext_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("rel_err"),
     )
 
-
-QUERIES["ext_hll_distinct"] = ext_hll_distinct
 
 ORACLE["ext_hll_distinct"] = """
     WITH h AS (
@@ -7854,8 +7574,6 @@ def ext_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["ext_rfm_segments"] = ext_rfm_segments
-
 ORACLE["ext_rfm_segments"] = """
     WITH cust AS (
         SELECT o_custkey,
@@ -7935,8 +7653,6 @@ def ext_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["ext_hard_negatives"] = ext_hard_negatives
-
 ORACLE["ext_hard_negatives"] = """
     WITH pairs AS (
         SELECT a.vec_id AS id, b.vec_id AS nbr,
@@ -7995,8 +7711,6 @@ def ext_negative_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
         salt="neg",
     ).orderBy("qid", "draw_order")
 
-
-QUERIES["ext_negative_sampling"] = ext_negative_sampling
 
 ORACLE["ext_negative_sampling"] = """
     WITH corpus AS (
@@ -8066,8 +7780,6 @@ def ext_stream_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["ext_stream_countmin"] = ext_stream_countmin
-
 ORACLE["ext_stream_countmin"] = """
     WITH keys AS (
         SELECT l_partkey AS key FROM lineitem
@@ -8109,8 +7821,6 @@ def ext_stream_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["ext_stream_hll"] = ext_stream_hll
-
 ORACLE["ext_stream_hll"] = """
     WITH h AS (
         SELECT md5(CAST(o_custkey AS VARCHAR)) AS hx
@@ -8151,8 +7861,6 @@ def ext_winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return winsorized_stats(docs, "source", "n_chars").orderBy("source")
 
-
-QUERIES["ext_winsorized_stats"] = ext_winsorized_stats
 
 ORACLE["ext_winsorized_stats"] = """
     WITH clean AS (
@@ -8234,8 +7942,6 @@ def ext_minhash_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("doc_a", "doc_b")
     )
 
-
-QUERIES["ext_minhash_accuracy"] = ext_minhash_accuracy
 
 ORACLE["ext_minhash_accuracy"] = f"""
     WITH {_TOKS}, {_SHINGLES3},
@@ -8324,39 +8030,6 @@ def ext_hll_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def ext_join_size_est(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """E-round5: self-join cardinality estimation from two KB-scale
-    Count-Min sketches — the AMS inner-product estimate of
-    |lineitem ⋈ lineitem| on l_partkey (= Σ f(v)², the blowup number
-    for the co-purchase self-join) next to the exact answer, WITHOUT
-    executing the join."""
-    from mitoscape_spark.operators.countmin import (
-        countmin_build,
-        countmin_inner_product,
-    )
-
-    lineitem = load_table(spark, sf_dir, "lineitem")
-    sk = countmin_build(lineitem, "l_partkey", width=1024, depth=4)
-    sk = sk.transform(pin)  # both estimator sides read it
-    est = countmin_inner_product(sk, sk)
-    truth = (
-        lineitem.where(F.col("l_partkey").isNotNull())
-        .groupBy("l_partkey")
-        .agg(F.count(F.lit(1)).alias("_c"))
-        .agg(
-            F.sum(F.col("_c") * F.col("_c"))
-            .cast("long")
-            .alias("true_join_size")
-        )
-    )
-    return truth.crossJoin(F.broadcast(est)).select(
-        "true_join_size", "cms_join_size"
-    )
-
-
-QUERIES["ext_hll_grouped"] = ext_hll_grouped
-QUERIES["ext_join_size_est"] = ext_join_size_est
-
 ORACLE["ext_hll_grouped"] = """
     WITH h AS (
         SELECT o_orderpriority AS grp,
@@ -8410,6 +8083,37 @@ ORACLE["ext_hll_grouped"] = """
     ORDER BY o_orderpriority
 """
 
+
+def ext_join_size_est(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """E-round5: self-join cardinality estimation from two KB-scale
+    Count-Min sketches — the AMS inner-product estimate of
+    |lineitem ⋈ lineitem| on l_partkey (= Σ f(v)², the blowup number
+    for the co-purchase self-join) next to the exact answer, WITHOUT
+    executing the join."""
+    from mitoscape_spark.operators.countmin import (
+        countmin_build,
+        countmin_inner_product,
+    )
+
+    lineitem = load_table(spark, sf_dir, "lineitem")
+    sk = countmin_build(lineitem, "l_partkey", width=1024, depth=4)
+    sk = sk.transform(pin)  # both estimator sides read it
+    est = countmin_inner_product(sk, sk)
+    truth = (
+        lineitem.where(F.col("l_partkey").isNotNull())
+        .groupBy("l_partkey")
+        .agg(F.count(F.lit(1)).alias("_c"))
+        .agg(
+            F.sum(F.col("_c") * F.col("_c"))
+            .cast("long")
+            .alias("true_join_size")
+        )
+    )
+    return truth.crossJoin(F.broadcast(est)).select(
+        "true_join_size", "cms_join_size"
+    )
+
+
 ORACLE["ext_join_size_est"] = """
     WITH keys AS (
         SELECT l_partkey AS key FROM lineitem
@@ -8444,21 +8148,6 @@ def ext_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     return token_entropy(docs).orderBy("source")
 
 
-def ext_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """E-round5: Jensen-Shannon divergence of each source's token
-    distribution from the whole corpus — smoothing-free domain
-    similarity (absent tokens contribute closed-form half-ln2 mass)."""
-    from mitoscape_spark.operators.textstats import (
-        js_divergence_by_group,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    return js_divergence_by_group(docs).orderBy("source")
-
-
-QUERIES["ext_token_entropy"] = ext_token_entropy
-QUERIES["ext_js_divergence"] = ext_js_divergence
-
 ORACLE["ext_token_entropy"] = """
     WITH toks AS (
         SELECT source AS grp,
@@ -8479,6 +8168,19 @@ ORACLE["ext_token_entropy"] = """
     GROUP BY c.grp, t.n
     ORDER BY source
 """
+
+
+def ext_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """E-round5: Jensen-Shannon divergence of each source's token
+    distribution from the whole corpus — smoothing-free domain
+    similarity (absent tokens contribute closed-form half-ln2 mass)."""
+    from mitoscape_spark.operators.textstats import (
+        js_divergence_by_group,
+    )
+
+    docs = load_table(spark, sf_dir, "documents")
+    return js_divergence_by_group(docs).orderBy("source")
+
 
 ORACLE["ext_js_divergence"] = """
     WITH toks AS (
@@ -8531,8 +8233,6 @@ def ext_coverage_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return coverage_depth(iv, "start_day", "end_day").orderBy("pos")
 
-
-QUERIES["ext_coverage_depth"] = ext_coverage_depth
 
 ORACLE["ext_coverage_depth"] = """
     WITH iv AS (
@@ -8591,8 +8291,6 @@ def ext_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["ext_gini"] = ext_gini
-
 ORACLE["ext_gini"] = """
     WITH cust AS (
         SELECT o_custkey,
@@ -8640,8 +8338,6 @@ def ext_decay_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("o_custkey")
     )
 
-
-QUERIES["ext_decay_agg"] = ext_decay_agg
 
 ORACLE["ext_decay_agg"] = """
     WITH anchor AS (
@@ -8705,8 +8401,6 @@ def ext_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["ext_burstiness"] = ext_burstiness
-
 ORACLE["ext_burstiness"] = """
     WITH gaps AS (
         SELECT user_id,
@@ -8760,8 +8454,6 @@ def ext_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return adamic_adar_scores(edges, min_common=2).orderBy("u", "v")
 
-
-QUERIES["ext_link_prediction"] = ext_link_prediction
 
 ORACLE["ext_link_prediction"] = """
     WITH op AS (
@@ -8834,6 +8526,33 @@ def ext_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+ORACLE["ext_welch_ttest"] = """
+    WITH s AS (
+        SELECT (event_type = 'click') AS a, value
+        FROM events
+        WHERE event_type IN ('click', 'purchase')
+          AND value IS NOT NULL
+    ), agg AS (
+        SELECT SUM(CASE WHEN a THEN 1 ELSE 0 END) AS n1,
+               SUM(CASE WHEN a THEN 0 ELSE 1 END) AS n2,
+               AVG(CASE WHEN a THEN value END) AS m1,
+               AVG(CASE WHEN NOT a THEN value END) AS m2,
+               VAR_SAMP(CASE WHEN a THEN value END) AS v1,
+               VAR_SAMP(CASE WHEN NOT a THEN value END) AS v2
+        FROM s
+    )
+    SELECT CAST(n1 AS BIGINT) AS n_click,
+           CAST(n2 AS BIGINT) AS n_purchase,
+           ROUND(m1 - m2, 4) AS mean_diff,
+           ROUND((m1 - m2) / SQRT(v1 / n1 + v2 / n2), 4) AS t_stat,
+           ROUND(((v1 / n1 + v2 / n2) * (v1 / n1 + v2 / n2))
+                 / ((v1 / n1) * (v1 / n1) / (n1 - 1)
+                    + (v2 / n2) * (v2 / n2) / (n2 - 1)), 2)
+               AS welch_df
+    FROM agg
+"""
+
+
 def ext_mahalanobis(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E-round5: multivariate anomaly gate — diagonal-covariance
     Mahalanobis distance over (quantity, price, discount): d² = Σ z².
@@ -8860,35 +8579,6 @@ def ext_mahalanobis(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.max("_d2"), 2).alias("max_d2"),
     )
 
-
-QUERIES["ext_welch_ttest"] = ext_welch_ttest
-QUERIES["ext_mahalanobis"] = ext_mahalanobis
-
-ORACLE["ext_welch_ttest"] = """
-    WITH s AS (
-        SELECT (event_type = 'click') AS a, value
-        FROM events
-        WHERE event_type IN ('click', 'purchase')
-          AND value IS NOT NULL
-    ), agg AS (
-        SELECT SUM(CASE WHEN a THEN 1 ELSE 0 END) AS n1,
-               SUM(CASE WHEN a THEN 0 ELSE 1 END) AS n2,
-               AVG(CASE WHEN a THEN value END) AS m1,
-               AVG(CASE WHEN NOT a THEN value END) AS m2,
-               VAR_SAMP(CASE WHEN a THEN value END) AS v1,
-               VAR_SAMP(CASE WHEN NOT a THEN value END) AS v2
-        FROM s
-    )
-    SELECT CAST(n1 AS BIGINT) AS n_click,
-           CAST(n2 AS BIGINT) AS n_purchase,
-           ROUND(m1 - m2, 4) AS mean_diff,
-           ROUND((m1 - m2) / SQRT(v1 / n1 + v2 / n2), 4) AS t_stat,
-           ROUND(((v1 / n1 + v2 / n2) * (v1 / n1 + v2 / n2))
-                 / ((v1 / n1) * (v1 / n1) / (n1 - 1)
-                    + (v2 / n2) * (v2 / n2) / (n2 - 1)), 2)
-               AS welch_df
-    FROM agg
-"""
 
 ORACLE["ext_mahalanobis"] = """
     WITH stats AS (
@@ -8956,8 +8646,6 @@ def ext_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("cohort_month", "month_offset")
     )
 
-
-QUERIES["ext_cohort_ltv"] = ext_cohort_ltv
 
 ORACLE["ext_cohort_ltv"] = """
     WITH o AS (
@@ -9043,8 +8731,6 @@ def ext_cumulative_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         "day"
     )
 
-
-QUERIES["ext_cumulative_users"] = ext_cumulative_users
 
 ORACLE["ext_cumulative_users"] = """
     WITH h AS (
@@ -9149,8 +8835,6 @@ def ext_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["ext_cusum"] = ext_cusum
-
 ORACLE["ext_cusum"] = """
     WITH daily AS (
         SELECT event_type, CAST(ts AS DATE) AS day,
@@ -9192,8 +8876,6 @@ def ext_weighted_sample_wr(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, "n_chars", k=20, id_col="doc_id", salt="wr"
     ).orderBy("draw_order")
 
-
-QUERIES["ext_weighted_sample_wr"] = ext_weighted_sample_wr
 
 ORACLE["ext_weighted_sample_wr"] = """
     WITH rows_ AS (
@@ -9262,8 +8944,6 @@ def ext_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return kaplan_meier(per_cust).orderBy("duration")
 
-
-QUERIES["ext_kaplan_meier"] = ext_kaplan_meier
 
 ORACLE["ext_kaplan_meier"] = """
     WITH ranked AS (
@@ -9360,8 +9040,6 @@ def ext_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["ext_benford"] = ext_benford
-
 ORACLE["ext_benford"] = """
     WITH digits AS (
         SELECT CAST(substr(CAST(CAST(ROUND(o_totalprice * 100, 0)
@@ -9432,8 +9110,6 @@ def ext_drift_ks_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["ext_drift_ks_grouped"] = ext_drift_ks_grouped
-
 ORACLE["ext_drift_ks_grouped"] = """
     WITH s AS (
         SELECT event_type, value AS v,
@@ -9492,6 +9168,26 @@ def ext_impute(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+ORACLE["ext_impute"] = """
+    WITH holed AS (
+        SELECT event_type,
+               CASE WHEN event_id % 7 = 0 THEN NULL ELSE value END
+                   AS value
+        FROM events
+    ), fill AS (
+        SELECT ROUND(quantile_cont(value, 0.5), 6) AS f FROM holed
+    )
+    SELECT event_type,
+           CAST(COUNT(*) AS BIGINT) AS n,
+           CAST(SUM(CASE WHEN value IS NULL THEN 1 ELSE 0 END)
+                AS BIGINT) AS n_imputed,
+           ROUND(AVG(COALESCE(value, fill.f)), 4) AS avg_after_impute
+    FROM holed, fill
+    GROUP BY event_type
+    ORDER BY event_type
+"""
+
+
 def ext_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E-round5: leave-one-out target encoding of order priority
     against order value (smoothing m=10) — the high-cardinality
@@ -9509,6 +9205,23 @@ def ext_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     return enc.select(
         "o_orderkey", "o_orderpriority", F.col("o_orderpriority__te")
     ).orderBy("o_orderkey")
+
+
+ORACLE["ext_target_encoding"] = """
+    WITH grp AS (
+        SELECT o_orderpriority,
+               SUM(o_totalprice) AS sy,
+               COUNT(o_totalprice) AS ny
+        FROM orders GROUP BY o_orderpriority
+    ), gm AS (SELECT AVG(o_totalprice) AS m FROM orders)
+    SELECT o.o_orderkey, o.o_orderpriority,
+           ROUND((g.sy - COALESCE(o.o_totalprice, 0.0) + 10.0 * gm.m)
+                 / (g.ny - CASE WHEN o.o_totalprice IS NOT NULL
+                                THEN 1 ELSE 0 END + 10.0), 6)
+               AS o_orderpriority__te
+    FROM orders o JOIN grp g USING (o_orderpriority), gm
+    ORDER BY o.o_orderkey
+"""
 
 
 def ext_discretize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9536,45 +9249,6 @@ def ext_discretize(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("bin")
     )
 
-
-QUERIES["ext_impute"] = ext_impute
-QUERIES["ext_target_encoding"] = ext_target_encoding
-QUERIES["ext_discretize"] = ext_discretize
-
-ORACLE["ext_impute"] = """
-    WITH holed AS (
-        SELECT event_type,
-               CASE WHEN event_id % 7 = 0 THEN NULL ELSE value END
-                   AS value
-        FROM events
-    ), fill AS (
-        SELECT ROUND(quantile_cont(value, 0.5), 6) AS f FROM holed
-    )
-    SELECT event_type,
-           CAST(COUNT(*) AS BIGINT) AS n,
-           CAST(SUM(CASE WHEN value IS NULL THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_imputed,
-           ROUND(AVG(COALESCE(value, fill.f)), 4) AS avg_after_impute
-    FROM holed, fill
-    GROUP BY event_type
-    ORDER BY event_type
-"""
-
-ORACLE["ext_target_encoding"] = """
-    WITH grp AS (
-        SELECT o_orderpriority,
-               SUM(o_totalprice) AS sy,
-               COUNT(o_totalprice) AS ny
-        FROM orders GROUP BY o_orderpriority
-    ), gm AS (SELECT AVG(o_totalprice) AS m FROM orders)
-    SELECT o.o_orderkey, o.o_orderpriority,
-           ROUND((g.sy - COALESCE(o.o_totalprice, 0.0) + 10.0 * gm.m)
-                 / (g.ny - CASE WHEN o.o_totalprice IS NOT NULL
-                                THEN 1 ELSE 0 END + 10.0), 6)
-               AS o_orderpriority__te
-    FROM orders o JOIN grp g USING (o_orderpriority), gm
-    ORDER BY o.o_orderkey
-"""
 
 ORACLE["ext_discretize"] = """
     WITH ranked AS (
@@ -9657,6 +9331,35 @@ def ext_chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+ORACLE["ext_chi2_independence"] = """
+    WITH obs AS (
+        SELECT event_type AS a,
+               dayofweek(CAST(ts AS TIMESTAMP)) + 1 AS b,
+               COUNT(*) AS o
+        FROM events GROUP BY 1, 2
+    ), ma AS (SELECT a, SUM(o) AS na FROM obs GROUP BY a),
+    mb AS (SELECT b, SUM(o) AS nb FROM obs GROUP BY b),
+    t AS (SELECT SUM(o) AS n FROM obs),
+    cells AS (
+        SELECT (o.o - (ma.na * 1.0 * mb.nb / t.n))
+               * (o.o - (ma.na * 1.0 * mb.nb / t.n))
+               / (ma.na * 1.0 * mb.nb / t.n) AS term,
+               t.n AS n
+        FROM obs o JOIN ma USING (a) JOIN mb USING (b), t
+    ), dims AS (
+        SELECT COUNT(DISTINCT a) AS r, COUNT(DISTINCT b) AS c
+        FROM obs
+    )
+    SELECT ROUND(SUM(term), 4) AS chi2,
+           CAST((dims.r - 1) * (dims.c - 1) AS BIGINT) AS dof,
+           ROUND(SQRT(SUM(term)
+                 / (MAX(n) * LEAST(dims.r - 1, dims.c - 1))), 6)
+               AS cramers_v
+    FROM cells, dims
+    GROUP BY dims.r, dims.c
+"""
+
+
 def ext_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E-round5: association rules from the co-purchase 2-itemsets —
     confidence = supp(a,b)/supp(a) and lift = confidence/P(b) for both
@@ -9720,37 +9423,6 @@ def ext_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return rules.orderBy("antecedent", "consequent")
 
-
-QUERIES["ext_chi2_independence"] = ext_chi2_independence
-QUERIES["ext_association_rules"] = ext_association_rules
-
-ORACLE["ext_chi2_independence"] = """
-    WITH obs AS (
-        SELECT event_type AS a,
-               dayofweek(CAST(ts AS TIMESTAMP)) + 1 AS b,
-               COUNT(*) AS o
-        FROM events GROUP BY 1, 2
-    ), ma AS (SELECT a, SUM(o) AS na FROM obs GROUP BY a),
-    mb AS (SELECT b, SUM(o) AS nb FROM obs GROUP BY b),
-    t AS (SELECT SUM(o) AS n FROM obs),
-    cells AS (
-        SELECT (o.o - (ma.na * 1.0 * mb.nb / t.n))
-               * (o.o - (ma.na * 1.0 * mb.nb / t.n))
-               / (ma.na * 1.0 * mb.nb / t.n) AS term,
-               t.n AS n
-        FROM obs o JOIN ma USING (a) JOIN mb USING (b), t
-    ), dims AS (
-        SELECT COUNT(DISTINCT a) AS r, COUNT(DISTINCT b) AS c
-        FROM obs
-    )
-    SELECT ROUND(SUM(term), 4) AS chi2,
-           CAST((dims.r - 1) * (dims.c - 1) AS BIGINT) AS dof,
-           ROUND(SQRT(SUM(term)
-                 / (MAX(n) * LEAST(dims.r - 1, dims.c - 1))), 6)
-               AS cramers_v
-    FROM cells, dims
-    GROUP BY dims.r, dims.c
-"""
 
 ORACLE["ext_association_rules"] = """
     WITH op AS (
@@ -9837,8 +9509,6 @@ def ext_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("threshold")
     )
 
-
-QUERIES["ext_dedup_threshold_sweep"] = ext_dedup_threshold_sweep
 
 ORACLE["ext_dedup_threshold_sweep"] = f"""
     WITH {_TOKS}, {_SHINGLES3},
@@ -9960,6 +9630,29 @@ def ext_graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+ORACLE["ext_graph_assortativity"] = """
+    WITH op AS (
+        SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
+    ), e AS (
+        SELECT a.l_partkey AS u, b.l_partkey AS v
+        FROM op a JOIN op b
+          ON a.l_orderkey = b.l_orderkey
+         AND a.l_partkey < b.l_partkey
+        GROUP BY 1, 2 HAVING COUNT(*) >= 2
+    ), sym AS (
+        SELECT u, v FROM e UNION ALL SELECT v, u FROM e
+    ), deg AS (
+        SELECT u AS z, COUNT(*) AS d FROM sym GROUP BY u
+    )
+    SELECT CAST(COUNT(*) AS BIGINT) AS n_directed_edges,
+           ROUND(CORR(CAST(du.d AS DOUBLE), CAST(dv.d AS DOUBLE)), 6)
+               AS assortativity
+    FROM sym s
+    JOIN deg du ON s.u = du.z
+    JOIN deg dv ON s.v = dv.z
+"""
+
+
 def ext_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E-round5: global clustering coefficient = 3·triangles / wedges
     of the co-purchase graph — how much of the neighborhood structure
@@ -10011,31 +9704,6 @@ def ext_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["ext_graph_assortativity"] = ext_graph_assortativity
-QUERIES["ext_clustering_coefficient"] = ext_clustering_coefficient
-
-ORACLE["ext_graph_assortativity"] = """
-    WITH op AS (
-        SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-    ), e AS (
-        SELECT a.l_partkey AS u, b.l_partkey AS v
-        FROM op a JOIN op b
-          ON a.l_orderkey = b.l_orderkey
-         AND a.l_partkey < b.l_partkey
-        GROUP BY 1, 2 HAVING COUNT(*) >= 2
-    ), sym AS (
-        SELECT u, v FROM e UNION ALL SELECT v, u FROM e
-    ), deg AS (
-        SELECT u AS z, COUNT(*) AS d FROM sym GROUP BY u
-    )
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_directed_edges,
-           ROUND(CORR(CAST(du.d AS DOUBLE), CAST(dv.d AS DOUBLE)), 6)
-               AS assortativity
-    FROM sym s
-    JOIN deg du ON s.u = du.z
-    JOIN deg dv ON s.v = dv.z
-"""
-
 ORACLE["ext_clustering_coefficient"] = """
     WITH op AS (
         SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
@@ -10075,8 +9743,6 @@ def ext_distance_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     return embedding_distance_histogram(emb, n_bins=40).orderBy("bin")
 
-
-QUERIES["ext_distance_histogram"] = ext_distance_histogram
 
 ORACLE["ext_distance_histogram"] = """
     WITH pairs AS (
@@ -10124,8 +9790,6 @@ def ext_stream_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id long, source string",
     )
 
-
-QUERIES["ext_stream_sample"] = ext_stream_sample
 
 ORACLE["ext_stream_sample"] = """
     SELECT doc_id, source
@@ -10183,8 +9847,6 @@ def ext_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("doc_id", "rank")
     )
 
-
-QUERIES["ext_keywords"] = ext_keywords
 
 ORACLE["ext_keywords"] = """
     WITH toks AS (
@@ -10252,8 +9914,6 @@ def ext_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(m4 / (m2 * m2) - 3.0, 4).alias("excess_kurtosis"),
     ).orderBy("event_type")
 
-
-QUERIES["ext_moments"] = ext_moments
 
 ORACLE["ext_moments"] = """
     WITH s AS (
@@ -10323,8 +9983,6 @@ def ext_forecast_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("event_type")
     )
 
-
-QUERIES["ext_forecast_eval"] = ext_forecast_eval
 
 ORACLE["ext_forecast_eval"] = """
     WITH daily AS (
@@ -10399,8 +10057,6 @@ def ext_seasonality_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("event_type")
     )
 
-
-QUERIES["ext_seasonality_strength"] = ext_seasonality_strength
 
 ORACLE["ext_seasonality_strength"] = """
     WITH daily AS (
@@ -10487,8 +10143,6 @@ def ext_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["ext_mann_whitney"] = ext_mann_whitney
-
 ORACLE["ext_mann_whitney"] = """
     WITH s AS (
         SELECT value AS v,
@@ -10564,8 +10218,6 @@ def ext_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["ext_spearman"] = ext_spearman
-
 ORACLE["ext_spearman"] = """
     WITH li AS (
         SELECT l_quantity AS q, l_extendedprice AS p
@@ -10632,8 +10284,6 @@ def ext_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("event_type", "lag")
     )
 
-
-QUERIES["ext_autocorrelation"] = ext_autocorrelation
 
 ORACLE["ext_autocorrelation"] = """
     WITH daily AS (
@@ -10722,8 +10372,6 @@ def ext_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("auc"),
     )
 
-
-QUERIES["ext_auc"] = ext_auc
 
 ORACLE["ext_auc"] = """
     WITH toks AS (
@@ -10821,8 +10469,6 @@ def ext_wilson_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["ext_wilson_ci"] = ext_wilson_ci
-
 ORACLE["ext_wilson_ci"] = """
     WITH counts AS (
         SELECT event_type, COUNT(*) AS k FROM events
@@ -10866,46 +10512,6 @@ ORACLE["ext_wilson_ci"] = """
 
 _PQL_M, _PQL_K, _PQL_D, _PQL_SEED = 8, 16, 64, 1234
 _IVFL_N, _IVFL_PROBE, _IVFL_SEED = 8, 3, 4321
-
-
-def ext_ann_pq_literal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PQ ADC top-k with literal (seeded, data-independent) codebooks —
-    the oracle-checkable twin of ext_ann_pq: same encode/ADC/topk code
-    path, quantizer state swapped for literals DuckDB also gets."""
-    from mitoscape_spark.operators.similarity import (
-        PQIndex,
-        literal_pq_codebooks,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    query = emb.where(F.col("vec_id") == 0).select("embedding").head()[0]
-    pq = PQIndex(m=_PQL_M, k=_PQL_K)
-    pq.codebooks = literal_pq_codebooks(_PQL_M, _PQL_K, _PQL_D, _PQL_SEED)
-    codes = pq.encode(emb.where(F.col("vec_id") != 0))
-    return pq.topk(codes, list(query), k=10)
-
-
-def ext_ann_ivfpq_literal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVFxPQ with literal coarse centroids + codebooks: cell
-    assignment, n_probe pruning, and the ADC scan all re-derived by the
-    DuckDB oracle from the same seeded literals."""
-    from mitoscape_spark.operators.similarity import (
-        IVFPQIndex,
-        literal_ivf_centroids,
-        literal_pq_codebooks,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    query = emb.where(F.col("vec_id") == 0).select("embedding").head()[0]
-    idx = IVFPQIndex(
-        n_centroids=_IVFL_N, n_probe=_IVFL_PROBE, m=_PQL_M, k=_PQL_K
-    )
-    idx.ivf.centroids = literal_ivf_centroids(_IVFL_N, _PQL_D, _IVFL_SEED)
-    idx.pq.codebooks = literal_pq_codebooks(
-        _PQL_M, _PQL_K, _PQL_D, _PQL_SEED
-    )
-    index = idx.encode(emb.where(F.col("vec_id") != 0))
-    return idx.topk(index, list(query), k=10)
 
 
 def _pq_literal_oracle_parts() -> tuple[str, int]:
@@ -11034,9 +10640,49 @@ def _ann_pq_literal_oracle_sql(with_ivf: bool) -> str:
     """
 
 
-QUERIES["ext_ann_pq_literal"] = ext_ann_pq_literal
-QUERIES["ext_ann_ivfpq_literal"] = ext_ann_ivfpq_literal
+def ext_ann_pq_literal(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PQ ADC top-k with literal (seeded, data-independent) codebooks —
+    the oracle-checkable twin of ext_ann_pq: same encode/ADC/topk code
+    path, quantizer state swapped for literals DuckDB also gets."""
+    from mitoscape_spark.operators.similarity import (
+        PQIndex,
+        literal_pq_codebooks,
+    )
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    query = emb.where(F.col("vec_id") == 0).select("embedding").head()[0]
+    pq = PQIndex(m=_PQL_M, k=_PQL_K)
+    pq.codebooks = literal_pq_codebooks(_PQL_M, _PQL_K, _PQL_D, _PQL_SEED)
+    codes = pq.encode(emb.where(F.col("vec_id") != 0))
+    return pq.topk(codes, list(query), k=10)
+
+
 ORACLE["ext_ann_pq_literal"] = _ann_pq_literal_oracle_sql(with_ivf=False)
+
+
+def ext_ann_ivfpq_literal(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVFxPQ with literal coarse centroids + codebooks: cell
+    assignment, n_probe pruning, and the ADC scan all re-derived by the
+    DuckDB oracle from the same seeded literals."""
+    from mitoscape_spark.operators.similarity import (
+        IVFPQIndex,
+        literal_ivf_centroids,
+        literal_pq_codebooks,
+    )
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    query = emb.where(F.col("vec_id") == 0).select("embedding").head()[0]
+    idx = IVFPQIndex(
+        n_centroids=_IVFL_N, n_probe=_IVFL_PROBE, m=_PQL_M, k=_PQL_K
+    )
+    idx.ivf.centroids = literal_ivf_centroids(_IVFL_N, _PQL_D, _IVFL_SEED)
+    idx.pq.codebooks = literal_pq_codebooks(
+        _PQL_M, _PQL_K, _PQL_D, _PQL_SEED
+    )
+    index = idx.encode(emb.where(F.col("vec_id") != 0))
+    return idx.topk(index, list(query), k=10)
+
+
 ORACLE["ext_ann_ivfpq_literal"] = _ann_pq_literal_oracle_sql(with_ivf=True)
 
 
@@ -11060,7 +10706,6 @@ def ext_multimodal_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
     return decode_invariants(media).orderBy("media_id")
 
 
-QUERIES["ext_multimodal_invariants"] = ext_multimodal_invariants
 # closed-form restatement of the decode: see sources/multimodal.py —
 # WAV decode is ((i*(2*doc_id+1)) % 65536) >> 8 over i=0..255; PPM/BMP
 # pixels are (i*(doc_id+7)) % 256 over i=0..191 (BMP's bottom-up BGR
@@ -11091,3 +10736,10 @@ ORACLE["ext_multimodal_invariants"] = """
     )
     SELECT * FROM wav UNION ALL SELECT * FROM img ORDER BY media_id
 """
+
+
+# the declared queries: every ext_* function above, in definition order,
+# then one _run_sql per _SQL_TEXT entry
+QUERIES = {n: f for n, f in globals().items() if n.startswith("ext_")} | {
+    n: partial(_run_sql, sql) for n, sql in _SQL_TEXT.items()
+}

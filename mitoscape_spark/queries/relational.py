@@ -21,10 +21,14 @@ shuffle lands, and why the plan survives a 1000-executor deployment.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mitoscape_spark.catalog import load_table
+
+ORACLE: dict[str, str] = {}
 
 
 # When True (default — the declared-query harness collects every row
@@ -74,6 +78,11 @@ def q01(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+ORACLE["q01"] = """
+        SELECT r_regionkey AS id, r_name AS name FROM region ORDER BY id
+    """
+
+
 # Q02 — conjunctive filter (P1/P3). All three predicates push down to the
 # parquet scan (PushedFilters); row-group statistics prune at scale.
 def q02(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -94,6 +103,13 @@ def q02(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+ORACLE["q02"] = """
+        SELECT l_orderkey, l_linenumber FROM lineitem
+        WHERE l_quantity > 30 AND l_discount >= 0.05 AND l_returnflag = 'R'
+        ORDER BY l_orderkey, l_linenumber
+    """
+
+
 # Q03 — inner equi-join (J1, the reference's MT⋈NT feature join,
 # MTClassifierModel.scala:83). Filter on orders pushes below the join;
 # both sides are fact-sized so Catalyst picks sort-merge/shuffled-hash,
@@ -107,6 +123,14 @@ def q03(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("o_orderkey", "c_name")
         .transform(_present, "o_orderkey")
     )
+
+
+ORACLE["q03"] = """
+        SELECT o.o_orderkey, c.c_name
+        FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
+        WHERE o.o_totalprice > 100000
+        ORDER BY o.o_orderkey
+    """
 
 
 # Q04 — left-semi join (J2/J3, the reference's read-name writeback filter,
@@ -125,6 +149,16 @@ def q04(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+ORACLE["q04"] = """
+        SELECT c_custkey, c_name FROM customer c
+        WHERE EXISTS (
+            SELECT 1 FROM orders o
+            WHERE o.o_custkey = c.c_custkey AND o.o_orderstatus = 'F'
+        )
+        ORDER BY c_custkey
+    """
+
+
 # Q05 — groupBy + sums (A1, the per-read hash agg, BamReader.scala:69-76).
 # Catalyst plans partial (map-side) + final hash aggregation, so the
 # shuffle carries one row per (partition, key), not per input row.
@@ -139,6 +173,15 @@ def q05(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .transform(_present, "l_orderkey")
     )
+
+
+ORACLE["q05"] = """
+        SELECT l_orderkey,
+               ROUND(SUM(l_quantity), 2) AS sq,
+               CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS sp,
+               COUNT(*) AS n
+        FROM lineitem GROUP BY l_orderkey ORDER BY l_orderkey
+    """
 
 
 # Q06 — groupBy + collect_list (A2, BamReader.scala:138-146). collect_list
@@ -158,6 +201,13 @@ def q06(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+ORACLE["q06"] = """
+        SELECT l_orderkey,
+               array_to_string(list_sort(list(l_linenumber)), ',') AS lines
+        FROM lineitem GROUP BY l_orderkey ORDER BY l_orderkey
+    """
+
+
 # Q07 — union + global avg/stddev_samp (U1/A4: the pooled MapQ stats,
 # MTClassifierModel.scala:128-136). Spark union == UNION ALL (bag).
 # Single-row global agg: partial agg per partition, one-row final.
@@ -171,6 +221,16 @@ def q07(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.avg("v"), 4).alias("m"),
         F.round(F.stddev_samp("v"), 4).alias("sd"),
     )
+
+
+ORACLE["q07"] = """
+        SELECT ROUND(AVG(v), 4) AS m, ROUND(STDDEV_SAMP(v), 4) AS sd
+        FROM (
+            SELECT c_acctbal AS v FROM customer
+            UNION ALL
+            SELECT s_acctbal FROM supplier
+        )
+    """
 
 
 # Q08 — z-score normalization (P9/A4, NormalizeMapQ,
@@ -193,6 +253,14 @@ def q08(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+ORACLE["q08"] = """
+        SELECT c_custkey,
+               ROUND((c_acctbal - (SELECT AVG(c_acctbal) FROM customer))
+                     / (SELECT STDDEV_SAMP(c_acctbal) FROM customer), 4) AS z
+        FROM customer ORDER BY c_custkey
+    """
+
+
 # Q09 — broadcast dimension join + group-sum (J5/J6 pattern: the LD/NUMT
 # dimension lookups, LD.scala:59-67). nation is tiny → explicit
 # F.broadcast, the Catalyst equivalent of the reference's hand-rolled
@@ -210,6 +278,13 @@ def q09(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.round(F.sum("c_acctbal"), 2).alias("bal"))
         .transform(_present, "n_name")
     )
+
+
+ORACLE["q09"] = """
+        SELECT n.n_name, ROUND(SUM(c.c_acctbal), 2) AS bal
+        FROM customer c JOIN nation n ON c.c_nationkey = n.n_nationkey
+        GROUP BY n.n_name ORDER BY n.n_name
+    """
 
 
 # Q10 — pairwise combinations within group (A3, the per-read LD pair
@@ -271,6 +346,17 @@ def q10(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+ORACLE["q10"] = """
+        SELECT a.l_orderkey,
+               COUNT(*) AS pairs,
+               CAST(SUM(CAST(ROUND(a.l_quantity * b.l_quantity) AS BIGINT)) AS BIGINT) AS s
+        FROM lineitem a
+        JOIN lineitem b
+          ON a.l_orderkey = b.l_orderkey AND a.l_linenumber < b.l_linenumber
+        GROUP BY a.l_orderkey ORDER BY a.l_orderkey
+    """
+
+
 # Q11 — literal / null / cast projection (P7/P8/F3,
 # MTClassifierModel.scala:86,122-124). Pure map job.
 def q11(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -286,6 +372,15 @@ def q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+ORACLE["q11"] = """
+        SELECT p_partkey,
+               CAST(0.5 AS DOUBLE) AS label,
+               CAST(NULL AS DOUBLE) AS missing,
+               CAST(ROUND(p_retailprice * 100000) AS BIGINT) AS scaled
+        FROM part ORDER BY p_partkey
+    """
+
+
 # Q12 — greatest-of (A5 analog: row-wise max over the probability vector,
 # MTClassifierModel.scala:95-109 — there via vector_to_array + array_max).
 def q12(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -297,6 +392,12 @@ def q12(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .transform(_present, "o_orderkey")
     )
+
+
+ORACLE["q12"] = """
+        SELECT o_orderkey, GREATEST(o_totalprice, 150000.0) AS mx
+        FROM orders ORDER BY o_orderkey
+    """
 
 
 # Q13 — interval/range join (J6 intended semantics: alignment-vs-NUMT
@@ -350,6 +451,18 @@ def q13(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+ORACLE["q13"] = """
+        SELECT e1.event_id, COUNT(*) AS n
+        FROM events e1
+        JOIN events e2
+          ON e1.user_id = e2.user_id
+         AND CAST(e2.ts AS TIMESTAMP) > CAST(e1.ts AS TIMESTAMP)
+         AND CAST(e2.ts AS TIMESTAMP)
+             <= CAST(e1.ts AS TIMESTAMP) + INTERVAL 1 HOUR
+        GROUP BY e1.event_id ORDER BY e1.event_id
+    """
+
+
 # Q14 — string split + explode (F8 analog: the MD-tag parse emits an
 # array<string> that downstream ops explode). LATERAL VIEW explode is a
 # generator inside whole-stage codegen — no Python.
@@ -365,6 +478,15 @@ def q14(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+ORACLE["q14"] = """
+        SELECT doc_id, x
+        FROM documents, UNNEST(string_split(text, ' ')) AS t(x)
+        WHERE length(x) > 5
+        ORDER BY doc_id, x
+        LIMIT 1000
+    """
+
+
 # Q15 — global sort + top-k (O1). Spark plans TakeOrderedAndProject:
 # per-partition top-k then a k-row merge on the driver — no full sort of
 # 100 TB ever materializes.
@@ -377,117 +499,11 @@ def q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES = {
-    "q01": q01,
-    "q02": q02,
-    "q03": q03,
-    "q04": q04,
-    "q05": q05,
-    "q06": q06,
-    "q07": q07,
-    "q08": q08,
-    "q09": q09,
-    "q10": q10,
-    "q11": q11,
-    "q12": q12,
-    "q13": q13,
-    "q14": q14,
-    "q15": q15,
-}
-
-ORACLE = {
-    "q01": """
-        SELECT r_regionkey AS id, r_name AS name FROM region ORDER BY id
-    """,
-    "q02": """
-        SELECT l_orderkey, l_linenumber FROM lineitem
-        WHERE l_quantity > 30 AND l_discount >= 0.05 AND l_returnflag = 'R'
-        ORDER BY l_orderkey, l_linenumber
-    """,
-    "q03": """
-        SELECT o.o_orderkey, c.c_name
-        FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-        WHERE o.o_totalprice > 100000
-        ORDER BY o.o_orderkey
-    """,
-    "q04": """
-        SELECT c_custkey, c_name FROM customer c
-        WHERE EXISTS (
-            SELECT 1 FROM orders o
-            WHERE o.o_custkey = c.c_custkey AND o.o_orderstatus = 'F'
-        )
-        ORDER BY c_custkey
-    """,
-    "q05": """
-        SELECT l_orderkey,
-               ROUND(SUM(l_quantity), 2) AS sq,
-               CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS sp,
-               COUNT(*) AS n
-        FROM lineitem GROUP BY l_orderkey ORDER BY l_orderkey
-    """,
-    "q06": """
-        SELECT l_orderkey,
-               array_to_string(list_sort(list(l_linenumber)), ',') AS lines
-        FROM lineitem GROUP BY l_orderkey ORDER BY l_orderkey
-    """,
-    "q07": """
-        SELECT ROUND(AVG(v), 4) AS m, ROUND(STDDEV_SAMP(v), 4) AS sd
-        FROM (
-            SELECT c_acctbal AS v FROM customer
-            UNION ALL
-            SELECT s_acctbal FROM supplier
-        )
-    """,
-    "q08": """
-        SELECT c_custkey,
-               ROUND((c_acctbal - (SELECT AVG(c_acctbal) FROM customer))
-                     / (SELECT STDDEV_SAMP(c_acctbal) FROM customer), 4) AS z
-        FROM customer ORDER BY c_custkey
-    """,
-    "q09": """
-        SELECT n.n_name, ROUND(SUM(c.c_acctbal), 2) AS bal
-        FROM customer c JOIN nation n ON c.c_nationkey = n.n_nationkey
-        GROUP BY n.n_name ORDER BY n.n_name
-    """,
-    "q10": """
-        SELECT a.l_orderkey,
-               COUNT(*) AS pairs,
-               CAST(SUM(CAST(ROUND(a.l_quantity * b.l_quantity) AS BIGINT)) AS BIGINT) AS s
-        FROM lineitem a
-        JOIN lineitem b
-          ON a.l_orderkey = b.l_orderkey AND a.l_linenumber < b.l_linenumber
-        GROUP BY a.l_orderkey ORDER BY a.l_orderkey
-    """,
-    "q11": """
-        SELECT p_partkey,
-               CAST(0.5 AS DOUBLE) AS label,
-               CAST(NULL AS DOUBLE) AS missing,
-               CAST(ROUND(p_retailprice * 100000) AS BIGINT) AS scaled
-        FROM part ORDER BY p_partkey
-    """,
-    "q12": """
-        SELECT o_orderkey, GREATEST(o_totalprice, 150000.0) AS mx
-        FROM orders ORDER BY o_orderkey
-    """,
-    "q13": """
-        SELECT e1.event_id, COUNT(*) AS n
-        FROM events e1
-        JOIN events e2
-          ON e1.user_id = e2.user_id
-         AND CAST(e2.ts AS TIMESTAMP) > CAST(e1.ts AS TIMESTAMP)
-         AND CAST(e2.ts AS TIMESTAMP)
-             <= CAST(e1.ts AS TIMESTAMP) + INTERVAL 1 HOUR
-        GROUP BY e1.event_id ORDER BY e1.event_id
-    """,
-    "q14": """
-        SELECT doc_id, x
-        FROM documents, UNNEST(string_split(text, ' ')) AS t(x)
-        WHERE length(x) > 5
-        ORDER BY doc_id, x
-        LIMIT 1000
-    """,
-    "q15": """
+ORACLE["q15"] = """
         SELECT l_orderkey, l_extendedprice FROM lineitem
         ORDER BY l_extendedprice DESC, l_orderkey LIMIT 100
-    """,
-}
+    """
+
+
+# the declared queries: every qNN function above, in definition order
+QUERIES = {n: f for n, f in globals().items() if re.fullmatch(r"q\d\d", n)}

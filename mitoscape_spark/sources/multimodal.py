@@ -475,21 +475,6 @@ def resize_images(media: DataFrame, width: int, height: int) -> DataFrame:
     return media.mapInPandas(run, media.schema)
 
 
-def resize_stub(media: DataFrame, width: int, height: int) -> DataFrame:
-    """Metadata-only resize (payload untouched) — kept for opaque
-    formats; ``resize_images`` above really resamples PPM/BMP."""
-    return media.withColumn(
-        "meta",
-        F.struct(
-            F.lit(width).alias("width"),
-            F.lit(height).alias("height"),
-            F.col("meta.sample_rate").alias("sample_rate"),
-            F.col("meta.n_frames").alias("n_frames"),
-            F.col("meta.format").alias("format"),
-        ),
-    )
-
-
 def frame_sample(
     media: DataFrame, every_n: int = 2, max_frames: int | None = None
 ) -> DataFrame:

@@ -62,6 +62,34 @@ def test_funnel_frac_of_first(spark):
     assert rows["b"]["frac_of_first"] == 0.25
 
 
+def test_funnel_null_users_count_at_no_stage(spark):
+    """Events with a NULL user count at no stage of either funnel, and
+    the other users' counts are the ones they have without them."""
+    from mitoscape_spark.operators.funnel import funnel_counts_windowed
+
+    users = [
+        (1, 1, 0, "a"), (1, 1, 1, "b"), (1, 1, 2, "c"),
+        (2, 1, 0, "a"), (2, 1, 1, "b"),
+        (3, 1, 0, "a"),
+    ]
+    # NULL-user events that would complete every stage if they counted
+    nulls = [(None, 1, 0, "a"), (None, 1, 1, "b"), (None, 1, 2, "c"),
+             (None, 1, 3, "a"), (None, 1, 4, "b")]
+    ev = _ev(spark, users + nulls)
+    steps = ["a", "b", "c"]
+    for out in (
+        funnel_counts(ev, steps),
+        funnel_counts_windowed(ev, steps, 10**6),
+    ):
+        got = [
+            (r["step"], r["n_users"], r["frac_of_first"])
+            for r in out.orderBy("step_idx").collect()
+        ]
+        # users 1-3 alone: 3 reach a, 2 reach b, 1 reaches c
+        assert got == [("a", 3, 1.0), ("b", 2, 0.666667),
+                       ("c", 1, 0.333333)]
+
+
 def test_funnel_empty_steps_raises(spark):
     with pytest.raises(ValueError, match="at least one step"):
         funnel_counts(_ev(spark, []), [])

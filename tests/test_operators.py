@@ -1379,9 +1379,12 @@ def test_connected_components_byte_bound_routes_fat_string_ids(spark, monkeypatc
     review finding)."""
     from mitoscape_spark.operators import dedup as D
 
-    # 4 edges x 2 ids x 30 MiB chars x 4 overhead factor ≈ 960 MiB
-    # estimated driver peak > the 640 MiB budget
-    fat = "k" * (30 * 1024 * 1024)
+    # the gate compares an estimate with the budget, so a 64 KiB budget
+    # and 4 edges x 2 ids x 16 KiB chars x 4 overhead factor ≈ 512 KiB
+    # estimated driver peak exercise the same branch as GiB-scale ids
+    # against the real budget
+    monkeypatch.setattr(D, "CC_DRIVER_MAX_BYTES", 64 * 1024)
+    fat = "k" * (16 * 1024)
     pairs = spark.createDataFrame(
         [
             (fat + "1", fat + "2"),

@@ -57,6 +57,35 @@ def test_registry_is_the_disjoint_union_in_declaration_order(monkeypatch):
     assert not spawned, spawned
 
 
+def test_each_oracle_sits_under_its_query():
+    """Layout contract: a query file declares each query once. No
+    QUERIES/ORACLE dict literal lists them a second time, and every
+    ``ORACLE["name"] = ...`` statement directly follows ``def name``
+    (extensions' pure-SQL queries are one name -> SQL table instead)."""
+    for path in sorted(Path(registry.__file__).parent.glob("*.py")):
+        if path.name == "__init__.py":
+            continue
+        body = ast.parse(path.read_text()).body
+        for prev, node in zip(body, body[1:]):
+            if not isinstance(node, (ast.Assign, ast.AnnAssign)):
+                continue
+            targets = getattr(node, "targets", None) or [node.target]
+            target = targets[0]
+            if isinstance(target, ast.Name):
+                assert not (
+                    target.id in ("QUERIES", "ORACLE")
+                    and isinstance(node.value, ast.Dict)
+                    and node.value.keys
+                ), (path.name, target.id, "dict literal")
+            elif isinstance(target, ast.Subscript) and (
+                ast.unparse(target.value) == "ORACLE"
+            ):
+                name = target.slice.value
+                assert (
+                    isinstance(prev, ast.FunctionDef) and prev.name == name
+                ), (path.name, name, "oracle not directly under its def")
+
+
 def test_query_files_never_import_each_other():
     """Style contract: query files stay import-disjoint; shared helpers
     belong in operators/."""

@@ -1,7 +1,8 @@
 """Pure-Python pieces of the measurement tools (tools/serial_floor.py):
 the interval-union helper IS the instrument behind PERF.md's serial
 floor decomposition — pin its merge semantics so a regression can't
-silently skew the exec/floor split.
+silently skew the exec/floor split. Also checks that every
+mitoscape_spark name the tools import resolves.
 """
 
 from __future__ import annotations
@@ -25,6 +26,42 @@ def _ts(sec: float) -> str:
     whole = int(sec)
     frac = int(round((sec - whole) * 1000))
     return f"2026-08-14T21:00:{whole:02d}.{frac:03d}GMT"
+
+
+def test_tools_mitoscape_imports_resolve():
+    """Every mitoscape_spark name a tool imports exists, checked without
+    a Spark session: the probes import queries and helpers by name
+    (extension query functions, domain._fixture_model), so a registry
+    or module reshuffle would otherwise break them silently."""
+    import ast
+    import importlib
+    import importlib.util
+    from pathlib import Path
+
+    tools = Path(__file__).resolve().parent.parent / "tools"
+    checked, missing = 0, []
+    for path in sorted(tools.glob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.ImportFrom) and (
+                node.module or ""
+            ).startswith("mitoscape_spark"):
+                mod = importlib.import_module(node.module)
+                for alias in node.names:
+                    checked += 1
+                    name = f"{node.module}.{alias.name}"
+                    # `from pkg import submodule` imports it on demand
+                    if not hasattr(mod, alias.name) and not (
+                        hasattr(mod, "__path__")
+                        and importlib.util.find_spec(name) is not None
+                    ):
+                        missing.append(f"{path.name}: {name}")
+            elif isinstance(node, ast.Import):
+                for alias in node.names:
+                    if alias.name.startswith("mitoscape_spark"):
+                        checked += 1
+                        importlib.import_module(alias.name)
+    assert not missing, missing
+    assert checked > 0
 
 
 def test_merged_window_disjoint_sums():
