@@ -6,6 +6,10 @@ Differences from the reference, all deliberate:
     pins the decoded alignments, feature table and survivors — the
     reference re-parses the BAMs for every action (SURVEY.md §4.1) —
     and releases those pins itself if the pass fails;
+  * the feature table reads each input in one per-read aggregate and
+    parses MD once: LD pairs are enumerated inside each read's row and
+    NUMT hits are summed in the NT aggregate (no self-join, no join
+    back);
   * the model may be passed as a ``concurrent.futures.Future``: the
     reference loads the RF before it reads any input, while ``classify``
     waits for the load only once the feature table is materialised;
@@ -64,16 +68,26 @@ def build_feature_table(
 ) -> DataFrame:
     """``MTClassifierModel.DF`` (``MTClassifierModel.scala:71-87``):
     MT features ⋈ NT features on Read (inner), literal label, pooled
-    MapQ z-normalization, cached. An empty MT side gives an empty table
-    (the reference exits; ``MTClassifierModel.scala:77-80``).
+    MapQ z-normalization, cached and materialised before it returns.
+    The join is pinned while the table is built, so the pooled stats and
+    the z-scores read one copy of it, and released once the table holds
+    its own. An empty MT side gives an empty table (the reference
+    exits; ``MTClassifierModel.scala:77-80``).
     """
     mt = pairwise_ld_score(mt_features(mt_aln, genome_relative), ld)
     nt = nt_features(nt_aln, numts, compat_chrom_sum=compat_chrom_sum)
     joined = (
-        mt.join(nt, "Read", "inner")
-        .withColumn("label", F.lit(label))
+        mt.join(nt, "Read", "inner").withColumn("label", F.lit(label)).persist()
     )
-    return normalize_mapq(joined).cache()
+    features = normalize_mapq(joined).cache()
+    try:
+        features.count()
+    except BaseException:
+        features.unpersist()
+        raise
+    finally:
+        joined.unpersist()
+    return features
 
 
 def classify(

@@ -9,9 +9,11 @@ features).
 
 Plan shape: validity filter (pushed to the scan) → JVM-side tag
 extraction → one Arrow pandas-UDF pass for the MD parse (MT only) →
-partial+final hash aggregation per read. The per-read groupBy is the
-hot shuffle at scale; multi-mapped reads make hot keys, which AQE's
-skew-join/partition splitting absorbs (session.py).
+partial+final hash aggregation per read, one per side: the NT side
+sums its NUMT hits in the same aggregate as its alignment rows. The
+per-read groupBy is the hot shuffle at scale; multi-mapped reads make
+hot keys, which AQE's skew-join/partition splitting absorbs
+(session.py).
 """
 
 from __future__ import annotations
@@ -106,26 +108,29 @@ def nt_features(
     NUMTOverlaps = NUMT interval score (dropped entirely by the
     reference's positional-binding bug; exposed here).
 
-    ``numts``: optional NUMT interval dimension (chrom/start/end/score);
-    scored via pipeline.numt (broadcast interval join).
+    ``numts``: optional NUMT interval dimension (chrom/start/end/score).
+    Its hits (pipeline.numt.numt_hits, a broadcast interval join) are
+    unioned with the alignment rows, one row per (alignment, NUMT) with
+    only ``numt_score`` set, so one per-read aggregate sums both and each
+    alignment adds each of its NUMTs' scores once.
     """
-    from mitoscape_spark.pipeline.numt import numt_overlap_score
+    from mitoscape_spark.pipeline.numt import numt_hits
 
-    valid = _tag_columns(valid_alignments(nt_aln))
-    if numts is not None:
-        valid = numt_overlap_score(
-            valid, numts, compat_chrom_sum=compat_chrom_sum
-        )
-    else:
-        valid = valid.withColumn("numt_score", F.lit(0.0))
-    per_alignment = valid.select(
+    valid = valid_alignments(nt_aln)
+    per_alignment = _tag_columns(valid).select(
         F.col("read_name").alias("Read"),
         F.col("mapq").alias("NTMapQ"),
         F.col("nh").alias("NTNumAlignments"),
         F.col("nm").alias("NTEditDist"),
         F.col("xq").alias("NTScore"),
-        F.col("numt_score"),
+        F.lit(0.0).alias("numt_score"),
     )
+    if numts is not None:
+        hits = numt_hits(valid, numts, compat_chrom_sum).select(
+            F.col("read_name").alias("Read"), "numt_score"
+        )
+        per_alignment = per_alignment.unionByName(hits, allowMissingColumns=True)
+    # sum() skips the hit rows' null columns
     return (
         per_alignment.groupBy("Read")
         .agg(

@@ -6,7 +6,9 @@ The reference collects an 88k-row table to the driver, broadcasts a
 ``Dataset.map``. Spark-first rewrite: keep the table distributed,
 normalize pairs to a canonical (least, greatest) key, and let Catalyst
 run a **broadcast hash join** — identical semantics, no driver-side
-collect, and the 100 TB side never moves.
+collect, and the 100 TB side never moves. A read's pairs are
+enumerated inside its own row (higher-order functions), so scoring
+adds no self-join and no shuffle to the per-read aggregate it reads.
 
 Symmetric lookup (``LD.scala:59-67``: try (v1,v2), then (v2,v1), else
 0) becomes: canonicalize both the dimension and the probe pairs; when
@@ -18,7 +20,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import Window as W
 
 LD_SCALE = 100_000
 
@@ -45,7 +46,7 @@ def normalize_ld(ld: DataFrame) -> DataFrame:
     double→int cast in Spark truncates identically. Zero scores are
     dropped (``LD.scala:49``). Duplicate canonical keys keep the entry
     whose original order was (least, greatest) — the reference probes
-    (v1,v2) before (v2,v1).
+    (v1,v2) before (v2,v1) — with one ``min_by`` per key.
     """
     scored = (
         ld.withColumn("ld", (F.col("r") * LD_SCALE).cast("int"))
@@ -58,44 +59,41 @@ def normalize_ld(ld: DataFrame) -> DataFrame:
             "ld",
         )
     )
-    w = W.partitionBy("v1", "v2").orderBy("_swapped")
-    return (
-        scored.withColumn("_rank", F.row_number().over(w))
-        .where(F.col("_rank") == 1)
-        .select("v1", "v2", "ld")
-    )
+    return scored.groupBy("v1", "v2").agg(F.min_by("ld", "_swapped").alias("ld"))
 
 
 def pairwise_ld_score(mt_features: DataFrame, ld: DataFrame) -> DataFrame:
     """Per-read LD score: sum of LD over all C(n,2) unordered variant
     pairs of the read's variant list (``BamReader.scala:198-203``).
 
-    Plan: posexplode the variant array → self-join on (Read, pos1<pos2)
-    to form combinations → broadcast-join the canonicalized LD dim →
-    per-read sum. Reads with <2 variants or no scored pair get LD=0 via
-    the left join back onto the feature table.
+    Plan: each row's pairs are enumerated in place with higher-order
+    functions (element i with every later element, as a canonical
+    (least, greatest) key) → ``explode_outer`` → broadcast left join to
+    the LD dim → sum per row. Reads with <2 variants or no scored pair
+    keep their row with LD=0. The re-group is on the feature columns,
+    which include ``Read``: on a per-read aggregate the input is already
+    hash-partitioned on ``Read``, so it runs in the same stage.
     """
-    exploded = mt_features.select(
-        "Read", F.posexplode("Variants").alias("pos", "v")
+    variants = F.col("Variants")
+    n = F.size(variants)
+    pairs = F.flatten(
+        F.transform(
+            F.sequence(F.lit(1), n - 1),
+            lambda i: F.transform(
+                F.slice(variants, i + 1, n - i),
+                lambda w: F.struct(
+                    F.least(F.element_at(variants, i), w).alias("v1"),
+                    F.greatest(F.element_at(variants, i), w).alias("v2"),
+                ),
+            ),
+        )
     )
-    a = exploded.alias("a")
-    b = exploded.alias("b")
-    pairs = a.join(
-        b,
-        (F.col("a.Read") == F.col("b.Read"))
-        & (F.col("a.pos") < F.col("b.pos")),
-    ).select(
-        F.col("a.Read").alias("Read"),
-        F.least("a.v", "b.v").alias("v1"),
-        F.greatest("a.v", "b.v").alias("v2"),
-    )
-    scores = (
-        pairs.join(F.broadcast(ld), ["v1", "v2"], "inner")
-        .groupBy("Read")
-        .agg(F.sum("ld").alias("LD"))
-    )
+    keys = [c for c in mt_features.columns if c != "Variants"]
+    pair = F.explode_outer(F.when(n >= 2, pairs)).alias("p")
     return (
-        mt_features.join(scores, "Read", "left")
-        .withColumn("LD", F.coalesce(F.col("LD"), F.lit(0)).cast("long"))
-        .drop("Variants")
+        mt_features.select(*keys, pair)
+        .select(*keys, "p.v1", "p.v2")
+        .join(F.broadcast(ld), ["v1", "v2"], "left")
+        .groupBy(*keys)
+        .agg(F.coalesce(F.sum("ld"), F.lit(0)).cast("long").alias("LD"))
     )

@@ -1,10 +1,13 @@
 """MapQ z-normalization (reference ``NormalizeMapQ``,
 ``MTClassifierModel.scala:119-144``).
 
-Pooled mean/stddev over the union of MT and NT MapQ columns, then
-z-score both. The reference pulls the one-row stats to the driver with
-``.first()``; we broadcast-cross-join the 1-row aggregate instead — no
-driver round-trip, and the fact table streams through a map stage.
+Pooled mean/stddev over both MapQ columns, then z-score both. The
+pool is one scan of the input (each row's two values exploded), so a
+pinned input (pipeline.classify pins the MT⋈NT join) is read once for
+the stats and once for the z-scores. The reference pulls the one-row
+stats to the driver with ``.first()``; we broadcast-cross-join the
+1-row aggregate instead — no driver round-trip, and the fact table
+streams through a map stage.
 
 Empty input reproduces the reference's guard
 (``MTClassifierModel.scala:121-124``) with no extra action: the stats
@@ -24,9 +27,7 @@ def normalize_mapq(
     nt_col: str = "NTMapQ",
 ) -> DataFrame:
     """Replace mt_col/nt_col with pooled z-scores (both as double)."""
-    pooled = joined.select(F.col(mt_col).alias("MapQ")).unionAll(
-        joined.select(F.col(nt_col).alias("MapQ"))
-    )
+    pooled = joined.select(F.explode(F.array(mt_col, nt_col)).alias("MapQ"))
     stats = pooled.agg(
         F.avg("MapQ").alias("_mean"), F.stddev_samp("MapQ").alias("_sd")
     )

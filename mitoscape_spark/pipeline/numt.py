@@ -9,7 +9,10 @@ as-written per-chromosome sum.
 
 Scale: the NUMT dimension is tiny (tens of rows) → broadcast, the
 range predicate is a join residual, the alignment side never shuffles.
-For big-big interval joins use operators.intervals (binned rewrite).
+``numt_hits`` emits one row per (alignment, scored NUMT), so a per-read
+aggregate (pipeline.features.nt_features) sums the hits in the same
+``groupBy`` as the alignment rows, with no join back. For big-big
+interval joins use operators.intervals (binned rewrite).
 """
 
 from __future__ import annotations
@@ -20,16 +23,20 @@ from pyspark.sql import functions as F
 DEFAULT_READ_LENGTH = 100
 
 
-def numt_overlap_score(
+def numt_hits(
     aln: DataFrame,
     numts: DataFrame,
     compat_chrom_sum: bool = False,
     read_length: int = DEFAULT_READ_LENGTH,
 ) -> DataFrame:
-    """Add ``numt_score`` = sum of scores of overlapping NUMTs (0 if none).
+    """One row per (alignment, NUMT it scores against): ``aln``'s
+    columns plus that NUMT's ``numt_score``; alignments with no NUMT
+    have no row.
 
     ``aln`` needs columns chrom/start; overlap uses
     [start, start+read_length) vs the NUMT's [start, end].
+    ``compat_chrom_sum`` matches every NUMT on the alignment's
+    chromosome, whatever its position.
     """
     n = numts.select(
         F.col("chrom").alias("_n_chrom"),
@@ -37,37 +44,39 @@ def numt_overlap_score(
         F.col("end").alias("_n_end"),
         F.col("score").alias("_n_score"),
     )
-    if compat_chrom_sum:
-        per_chrom = n.groupBy("_n_chrom").agg(
-            F.sum("_n_score").alias("_chrom_score")
-        )
-        return (
-            aln.join(
-                F.broadcast(per_chrom),
-                aln["chrom"] == per_chrom["_n_chrom"],
-                "left",
-            )
-            .withColumn(
-                "numt_score",
-                F.coalesce(F.col("_chrom_score"), F.lit(0.0)).cast("double"),
-            )
-            .drop("_n_chrom", "_chrom_score")
-        )
-
-    aln_end = F.col("start") + F.lit(read_length)
-    overlaps = (
-        aln.join(
-            F.broadcast(n),
-            (aln["chrom"] == n["_n_chrom"])
+    on = aln["chrom"] == n["_n_chrom"]
+    if not compat_chrom_sum:
+        on = (
+            on
             & (F.col("start") <= F.col("_n_end"))
-            & (aln_end >= F.col("_n_start")),
-            "inner",
+            & (F.col("start") + F.lit(read_length) >= F.col("_n_start"))
         )
-        .groupBy("chrom", "start", "read_name")
-        .agg(F.sum("_n_score").alias("_overlap_score"))
+    return aln.join(F.broadcast(n), on, "inner").select(
+        *aln.columns, F.col("_n_score").cast("double").alias("numt_score")
+    )
+
+
+def numt_overlap_score(
+    aln: DataFrame,
+    numts: DataFrame,
+    compat_chrom_sum: bool = False,
+    read_length: int = DEFAULT_READ_LENGTH,
+) -> DataFrame:
+    """Add ``numt_score`` = sum of scores of overlapping NUMTs (0 if none)
+    to every alignment.
+
+    The score depends only on (chrom, start), so it is summed once per
+    distinct position and joined back on it: alignments that share a
+    position each get the position's score, not a multiple of it.
+    """
+    positions = aln.select("chrom", "start").distinct()
+    scores = (
+        numt_hits(positions, numts, compat_chrom_sum, read_length)
+        .groupBy("chrom", "start")
+        .agg(F.sum("numt_score").alias("_overlap_score"))
     )
     return (
-        aln.join(overlaps, ["chrom", "start", "read_name"], "left")
+        aln.join(scores, ["chrom", "start"], "left")
         .withColumn(
             "numt_score",
             F.coalesce(F.col("_overlap_score"), F.lit(0.0)).cast("double"),

@@ -2667,7 +2667,10 @@ ORACLE["ext_funnel"] = """
             SELECT user_id AS u, CAST(ts AS TIMESTAMP) AS t, event_type AS s
             FROM events
         ),
-        s0 AS (SELECT u, MIN(t) AS tp FROM e WHERE s = 'signup' GROUP BY u),
+        s0 AS (
+            SELECT u, MIN(t) AS tp FROM e
+            WHERE s = 'signup' AND u IS NOT NULL GROUP BY u
+        ),
         s1 AS (
             SELECT e.u, MIN(e.t) AS tp FROM e JOIN s0 ON e.u = s0.u
             WHERE e.s = 'view' AND e.t > s0.tp GROUP BY e.u

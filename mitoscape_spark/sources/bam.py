@@ -85,15 +85,23 @@ def read_alignments_bam(
     per-file), then decode each split in its own task via mapInPandas.
 
     Parallelism is per-split *within* files, not just per-file — the
-    property that matters when single BAMs are tens of GB. The parquet
-    path above remains the steady-state 100 TB answer (columnar,
-    prunable); this is the ingest edge of that pipeline.
+    property that matters when single BAMs are tens of GB. The split
+    table is parallelized one split per partition, so the decode tasks
+    start without a shuffle; a one-split input is planned as a single
+    partition, as its decode runs in one task. The parquet path above
+    remains the steady-state 100 TB answer (columnar, prunable); this is
+    the ingest edge of that pipeline.
     """
     paths = [path] if isinstance(path, str) else list(path)
     splits = plan_bam_splits(spark, paths, records_per_split)
     splits_df = spark.createDataFrame(
-        splits, "bam_path: string, vstart: long, vend: long"
-    ).repartition(max(len(splits), 1))
+        spark.sparkContext.parallelize(splits, max(len(splits), 1)),
+        "bam_path: string, vstart: long, vend: long",
+    )
+    if len(splits) <= 1:
+        # moves no data; it tells the planner that a one-split decode is
+        # one partition, so aggregates and joins on it add no exchange
+        splits_df = splits_df.coalesce(1)
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from mitoscape_spark.sources.bamcodec import decode_range

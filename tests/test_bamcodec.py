@@ -150,6 +150,13 @@ def test_spark_bam_scan_end_to_end(spark, tmp_path):
         "variants", md_variants_udf(F.col("md"), F.col("seq"), F.lit(0))
     )
     assert with_variants.where("size(variants) >= 1").count() == 600
+    # one split per partition; a one-split file is planned as one
+    # partition, so an aggregate on its decode adds no exchange
+    assert df.rdd.getNumPartitions() == 6
+    one = read_alignments_bam(spark, paths[2], records_per_split=100)
+    per_read = one.groupBy("read_name").count()._jdf.queryExecution()
+    assert "Exchange" not in per_read.executedPlan().toString()
+    assert one.count() == 100
 
 
 _REFS = ["chrM", "chr1", "chr2"]

@@ -300,6 +300,63 @@ def test_classify_decodes_each_bam_once(spark, cli_inputs):
         result.unpersist()
 
 
+def _plan_nodes(spark, node, seen=None) -> list:
+    """Every node under ``node`` (through ``_plan_children``), each
+    cached relation's plan once: a pin is computed once however many
+    scans read it."""
+    seen = set() if seen is None else seen
+    if node.nodeName() == "InMemoryRelation":
+        key = spark._jvm.java.lang.System.identityHashCode(node.cacheBuilder())
+        if key in seen:
+            return [node]
+        seen.add(key)
+    nodes = [node]
+    for child in _plan_children(node):
+        nodes += _plan_nodes(spark, child, seen)
+    return nodes
+
+
+def test_feature_table_plan_reads_each_input_once(spark, cli_inputs):
+    """The feature table's plan parses MD once, has no window and no
+    sort-merge join, scans the MT alignment pin once, and feeds each BAM
+    decode its splits without a shuffle."""
+    from mitoscape_spark.pipeline.classify import classify
+    from mitoscape_spark.pipeline.ld import ld_scores_table
+    from mitoscape_spark.pipeline.ml import load_pipeline_model
+    from mitoscape_spark.sources.bam import read_alignments_bam
+
+    root = cli_inputs
+    assert (root / "model").is_dir(), "train test must run first"
+    mt = read_alignments_bam(spark, str(root / "sample_MT.bam"))
+    result = classify(
+        mt,
+        read_alignments_bam(spark, str(root / "sample_NT.bam")),
+        ld_scores_table(spark, str(root / "ld.tsv")),
+        load_numts(spark, str(root / "numts.tsv")),
+        model=load_pipeline_model(str(root / "model")),
+    )
+    try:
+        result.features.count()
+        nodes = _plan_nodes(spark, result.features._jdf.queryExecution().executedPlan())
+        names = Counter(n.nodeName() for n in nodes)
+        assert names["ArrowEvalPython"] == 1
+        assert names["Window"] == 0
+        assert names["SortMergeJoin"] == 0
+        for scan in nodes:
+            if scan.nodeName() == "MapInPandas" and "scan(" in scan.simpleString(5):
+                below = [n.simpleString(5) for n in _plan_nodes(spark, scan)]
+                assert not [s for s in below if "REPARTITION_BY_NUM" in s], below
+        mt_name = str(mt._jdf.queryExecution().analyzed().output().apply(0))
+        mt_scans = [
+            n for n in nodes
+            if n.nodeName() == "InMemoryTableScan"
+            and str(n.relation().output().apply(0)) == mt_name
+        ]
+        assert len(mt_scans) == 1, f"{len(mt_scans)} scans of the MT pin"
+    finally:
+        result.unpersist()
+
+
 def test_cli_evaluate_accuracy_threshold(spark, cli_inputs):
     rc = main(
         [

@@ -90,6 +90,31 @@ def test_funnel_null_users_count_at_no_stage(spark):
                        ("c", 1, 0.333333)]
 
 
+def test_ext_funnel_oracle_skips_null_users(spark, tmp_path):
+    """``ext_funnel`` and its DuckDB oracle agree on NULL users: user 1
+    and a NULL user sign up, the NULL user then views; both engines
+    count one signup and no view."""
+    import duckdb
+
+    from mitoscape_spark.queries.extensions import ORACLE, QUERIES
+
+    events = tmp_path / "events.parquet"
+    rows = [(1, 1, 0, "signup"), (None, 1, 0, "signup"), (None, 1, 1, "view")]
+    _ev(spark, rows).write.parquet(str(events))
+    got = {
+        r["step"]: r["n_users"]
+        for r in QUERIES["ext_funnel"](spark, str(tmp_path)).collect()
+    }
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW events AS SELECT * FROM read_parquet('{events}/*.parquet')"
+    )
+    want = {r[1]: r[2] for r in con.execute(ORACLE["ext_funnel"]).fetchall()}
+    con.close()
+    assert got["signup"] == want["signup"] == 1
+    assert got["view"] == want["view"] == 0
+
+
 def test_funnel_empty_steps_raises(spark):
     with pytest.raises(ValueError, match="at least one step"):
         funnel_counts(_ev(spark, []), [])

@@ -138,6 +138,26 @@ def test_numt_interval_vs_compat(spark):
     assert compat["r3"] == 0.0
 
 
+def test_numt_score_counts_each_alignment_once(spark):
+    """Both mates of a fragment no longer than the read share (chrom,
+    start): each alignment adds its NUMT's score once, so the read gets
+    2 × 0.5, not 2² × 0.5, under both scoring modes."""
+    from mitoscape_spark.sources.bam import ALIGNMENT_SCHEMA
+
+    mate = ("r1", "1", 1000, 60, "NM:i:0 NH:i:1 XQ:i:40", "ACGT", "4",
+            True, True, True, True, False)
+    aln = spark.createDataFrame([mate, mate], ALIGNMENT_SCHEMA)
+    numts = spark.createDataFrame(
+        [("1", 900, 1200, 0.5)], ["chrom", "start", "end", "score"]
+    )
+    for compat in (False, True):
+        (row,) = nt_features(aln, numts, compat_chrom_sum=compat).collect()
+        assert row.NUMTOverlaps == pytest.approx(1.0)
+        assert (row.NTMapQ, row.NTNumAlignments, row.NTScore) == (120, 2, 80)
+        per_alignment = numt_overlap_score(aln, numts, compat_chrom_sum=compat)
+        assert [r.numt_score for r in per_alignment.collect()] == [0.5, 0.5]
+
+
 def test_normalize_mapq_pooled(spark):
     df = spark.createDataFrame(
         [("r1", 10.0, 30.0), ("r2", 20.0, 40.0)],

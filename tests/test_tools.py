@@ -64,6 +64,31 @@ def test_tools_mitoscape_imports_resolve():
     assert checked > 0
 
 
+def test_plan_capture_writes_locations_relative_to_the_checkout():
+    """tools/plan_capture.py dumps the same bytes from two checkouts:
+    a file index under the checkout is written relative to it, paths
+    elsewhere and other lines are kept as they are."""
+    from plan_capture import relative_locations
+
+    plan = (
+        "(1) Scan parquet spark_catalog.default.bench_lineitem\n"
+        "Location: InMemoryFileIndex [file:{root}/spark-warehouse/bench_lineitem]\n"
+        "Location: InMemoryFileIndex [file:/data/sf0.1/orders.parquet, "
+        "file:{root}/spark-warehouse/t]\n"
+        "Output: file:{root}/x\n"
+    )
+    want = (
+        "(1) Scan parquet spark_catalog.default.bench_lineitem\n"
+        "Location: InMemoryFileIndex [spark-warehouse/bench_lineitem]\n"
+        "Location: InMemoryFileIndex [file:/data/sf0.1/orders.parquet, "
+        "spark-warehouse/t]\n"
+        "Output: file:{root}/x\n"
+    )
+    for root in ("/checkouts/a", "/checkouts/b/"):
+        got = relative_locations(plan.format(root=root.rstrip("/")), root)
+        assert got == want.format(root=root.rstrip("/"))
+
+
 def test_merged_window_disjoint_sums():
     jobs = [_job(_ts(1), _ts(2)), _job(_ts(5), _ts(7))]
     assert abs(_merged_window_sec(jobs) - 3.0) < 1e-6

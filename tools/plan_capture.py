@@ -29,6 +29,26 @@ import time
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, HERE)
 
+_FILE_PATH = re.compile(r"file:(/[^,\]\s]+)")
+
+
+def relative_locations(plan: str, root: str = HERE) -> str:
+    """``plan`` with each ``file:`` path under ``root`` on its
+    ``Location: InMemoryFileIndex`` lines rewritten relative to
+    ``root``, so the same plan dumps to the same bytes from any
+    checkout and working directory."""
+
+    def rel(m: re.Match) -> str:
+        path = m.group(1)
+        if path.startswith(root.rstrip("/") + "/"):
+            return os.path.relpath(path, root)
+        return m.group(0)
+
+    return "\n".join(
+        _FILE_PATH.sub(rel, line) if "Location: InMemoryFileIndex" in line else line
+        for line in plan.split("\n")
+    )
+
 
 def main() -> int:
     ap = argparse.ArgumentParser()
@@ -65,6 +85,9 @@ def main() -> int:
             "spark.sql.files.maxPartitionBytes": mpb,
             "spark.scheduler.mode": "FAIR",
             "spark.locality.wait": "0",
+            # the bucketed lineitem lives under the checkout, not the
+            # working directory, so relative_locations can strip it
+            "spark.sql.warehouse.dir": os.path.join(HERE, "spark-warehouse"),
         },
     )
     if not args.no_bucketed:
@@ -90,10 +113,10 @@ def main() -> int:
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
             df.explain("formatted")
+        plan = relative_locations(buf.getvalue())
         path = os.path.join(args.out, f"{name}{args.suffix}.txt")
         with open(path, "w") as fh:
-            fh.write(buf.getvalue())
-        plan = buf.getvalue()
+            fh.write(plan)
         # 'ReusedExchange' contains the substring 'Exchange'; subtract so
         # the headline number is actual shuffles, not shuffles + reuses
         # (round-11 ADVICE item 5)
