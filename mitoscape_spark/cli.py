@@ -24,7 +24,9 @@ Deliberate differences from the reference CLI:
     threads while the driver reads the MT input, and the pipeline waits
     for the model only once the feature table is materialised (the
     reference loads it before reading any input); the threads inherit
-    the caller's job group and tags;
+    the caller's job group and tags. The loaded model is kept for the
+    session while its directory is unchanged, so a later pass resolves
+    the load at once; the model is shared and is not mutated;
   * a ``.bam`` output takes its reference dictionary from a ``.bam``
     MT input's header, as the reference's ``saveAsSam`` writes the
     input's sequence dictionary; parquet and SAM inputs carry no

@@ -14,7 +14,6 @@ from mitoscape_spark.pipeline.features import (
 )
 from mitoscape_spark.pipeline.ld import ld_scores_table, pairwise_ld_score
 from mitoscape_spark.pipeline.normalize import normalize_mapq
-from mitoscape_spark.pipeline.numt import numt_overlap_score
 
 __all__ = [
     "MT_FEATURES",
@@ -25,5 +24,4 @@ __all__ = [
     "ld_scores_table",
     "pairwise_ld_score",
     "normalize_mapq",
-    "numt_overlap_score",
 ]

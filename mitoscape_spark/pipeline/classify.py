@@ -12,7 +12,11 @@ Differences from the reference, all deliberate:
     back);
   * the model may be passed as a ``concurrent.futures.Future``: the
     reference loads the RF before it reads any input, while ``classify``
-    waits for the load only once the feature table is materialised;
+    waits for the load only once the feature table is materialised; it
+    only reads the model, which ``ml.load_pipeline_model`` shares
+    across the passes of a session;
+  * only ``prob <= 0`` skips scoring (``MTClassify.scala:161``): an
+    empty feature table is scored like any other, to no survivors;
   * the LD/NUMT dimensions stay distributed and broadcast-join
     (no driver collect);
   * inner join on Read matches the reference's actual (not commented)
@@ -105,7 +109,8 @@ def classify(
 
     ``model``: a fitted PipelineModel, or a ``Future`` of one that is
     resolved only once the feature table is materialised, so a load
-    submitted before the call runs beside the decode; if None,
+    submitted before the call runs beside the decode; the model is only
+    read, never mutated (a loaded one is shared per session); if None,
     ``training`` (labeled feature table) is required and an RF is
     trained on the fly. Uncached inputs are pinned before the feature
     table is planned; release the pins with ``ClassifyResult.unpersist``.
@@ -125,13 +130,12 @@ def classify(
             mt_aln, nt_aln, ld, numts, genome_relative=genome_relative
         )
         held.append(features)
-        skip = features.isEmpty() or prob <= 0
         if isinstance(model, Future):
             model = model.result()
         if model is None:
             model = train_rf(training)
 
-        if skip:
+        if prob <= 0:
             # reference skips classification entirely (MTClassify.scala:161)
             survivors = features.select("Read")
         else:

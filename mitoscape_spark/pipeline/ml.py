@@ -6,16 +6,22 @@ model persistence (same parquet+JSON layout the reference's
 ``MTClassifierModel.RF.tar`` uses), max-probability extraction via
 ``vector_to_array`` + ``array_max`` (no UDF — reference does a
 ``df.map`` row pass, ``MTClassifierModel.scala:95-109``).
+``load_pipeline_model`` keeps one loaded model per Spark application
+and model directory, so the models it returns are shared and must not
+be mutated.
 """
 
 from __future__ import annotations
+
+import os
+import threading
 
 from pyspark.ml import Pipeline, PipelineModel
 from pyspark.ml.classification import GBTClassifier, RandomForestClassifier
 from pyspark.ml.evaluation import MulticlassClassificationEvaluator
 from pyspark.ml.feature import RFormula
 from pyspark.ml.functions import vector_to_array
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 MT_LABEL = 0.0  # true mitochondrial read     (MTClassifierModel.scala:36)
@@ -86,8 +92,47 @@ def train_gbt(
     return _strip_summary(model, model_path)
 
 
+# (application id, absolute model directory) -> (directory stamp, model)
+_MODELS: dict[tuple[str, str], tuple[tuple, PipelineModel]] = {}
+_MODELS_LOCK = threading.Lock()
+
+
+def _dir_stamp(path: str) -> tuple:
+    """(relative path, size, mtime_ns) of every file under ``path``."""
+    stamp = []
+    for root, _, files in os.walk(path):
+        for name in files:
+            full = os.path.join(root, name)
+            st = os.stat(full)
+            stamp.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
+    return tuple(sorted(stamp))
+
+
 def load_pipeline_model(model_path: str) -> PipelineModel:
-    return PipelineModel.load(model_path)
+    """The PipelineModel saved at ``model_path``, loaded once per Spark
+    application: a later call from the same application returns the
+    same object while no file under the directory has changed path,
+    size or mtime. A changed directory or a new application (a restarted
+    session) loads again; entries of other applications are dropped.
+    The returned model is shared, so callers must not mutate it. A path
+    that is not a local directory is loaded every time (a missing one
+    raises as ``PipelineModel.load`` does).
+    """
+    if not os.path.isdir(model_path):
+        return PipelineModel.load(model_path)
+    app = SparkSession.active().sparkContext.applicationId
+    key = (app, os.path.abspath(model_path))
+    stamp = _dir_stamp(key[1])
+    with _MODELS_LOCK:
+        for stale in [k for k in _MODELS if k[0] != app]:
+            del _MODELS[stale]
+        hit = _MODELS.get(key)
+    if hit is not None and hit[0] == stamp:
+        return hit[1]
+    model = PipelineModel.load(model_path)
+    with _MODELS_LOCK:
+        _MODELS[key] = (stamp, model)
+    return model
 
 
 def max_probability(predictions: DataFrame) -> DataFrame:

@@ -54,32 +54,3 @@ def numt_hits(
     return aln.join(F.broadcast(n), on, "inner").select(
         *aln.columns, F.col("_n_score").cast("double").alias("numt_score")
     )
-
-
-def numt_overlap_score(
-    aln: DataFrame,
-    numts: DataFrame,
-    compat_chrom_sum: bool = False,
-    read_length: int = DEFAULT_READ_LENGTH,
-) -> DataFrame:
-    """Add ``numt_score`` = sum of scores of overlapping NUMTs (0 if none)
-    to every alignment.
-
-    The score depends only on (chrom, start), so it is summed once per
-    distinct position and joined back on it: alignments that share a
-    position each get the position's score, not a multiple of it.
-    """
-    positions = aln.select("chrom", "start").distinct()
-    scores = (
-        numt_hits(positions, numts, compat_chrom_sum, read_length)
-        .groupBy("chrom", "start")
-        .agg(F.sum("numt_score").alias("_overlap_score"))
-    )
-    return (
-        aln.join(scores, ["chrom", "start"], "left")
-        .withColumn(
-            "numt_score",
-            F.coalesce(F.col("_overlap_score"), F.lit(0.0)).cast("double"),
-        )
-        .drop("_overlap_score")
-    )

@@ -180,36 +180,101 @@ def test_cli_classify_failed_pass_releases_its_pins(spark, cli_inputs):
     assert cache.isEmpty(), "a failed classify left cached data in the session"
 
 
-def test_cli_classify_jobs_keep_callers_job_group(spark, cli_inputs):
+def _in_group(sc, group, fn):
+    sc.setJobGroup(group, group)
+    try:
+        return fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def _job_names(sc, job_ids) -> list[str]:
+    """Call-site names ("first at ReadWrite.scala:1058") of finished jobs."""
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = sc._jsc.sc().statusStore()
+    return [store.job(j).name() for j in sorted(job_ids)]
+
+
+def test_cli_classify_jobs_keep_callers_job_group(spark, cli_inputs, tmp_path):
     """Every job a classify pass submits, from the worker threads that
     load the model and plan the NT splits too, carries the caller's job
-    group, so cancelling or attributing work by group reaches all of it."""
+    group, so cancelling or attributing work by group reaches all of it.
+    The pass reads a fresh copy of the model, so the load really runs."""
+    import shutil
+
     root = cli_inputs
     assert (root / "model").is_dir(), "train test must run first"
+    model = shutil.copytree(root / "model", tmp_path / "model")
     sc = spark.sparkContext
     tracker = sc.statusTracker()
 
-    def in_group(group, fn):
-        sc.setJobGroup(group, group)
-        try:
-            return fn()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
-
     def marker_job_id():
-        in_group("job_id_marker", lambda: sc.parallelize([0], 1).count())
+        _in_group(sc, "job_id_marker", lambda: sc.parallelize([0], 1).count())
         sc._jsc.sc().listenerBus().waitUntilEmpty()
         return max(tracker.getJobIdsForGroup("job_id_marker"))
 
     first = marker_job_id()
-    argv = _bam_pair_argv(root, "grouped.parquet")
-    assert in_group("g", lambda: main(argv, spark=spark)) == 0
+    argv = _bam_pair_argv(root, "grouped.parquet", model)
+    assert _in_group(sc, "g", lambda: main(argv, spark=spark)) == 0
     last = marker_job_id()
     during = set(range(first + 1, last))
     assert during, "the pass ran no jobs"
+    assert any("ReadWrite.scala" in n for n in _job_names(sc, during)), (
+        "the pass did not load the model"
+    )
     orphaned = during - set(tracker.getJobIdsForGroup("g"))
     assert not orphaned, f"jobs outside the caller's job group: {sorted(orphaned)}"
+
+
+def test_cli_classify_second_pass_reuses_loaded_model(spark, cli_inputs):
+    """A second pass on one session scores with the model the first pass
+    loaded: it runs no model-load job and keeps the same survivors."""
+    root = cli_inputs
+    assert (root / "model").is_dir(), "train test must run first"
+    sc = spark.sparkContext
+
+    def survivors(out):
+        df = spark.read.parquet(str(root / out))
+        return {r.read_name for r in df.select("read_name").collect()}
+
+    assert main(_bam_pair_argv(root, "pass1.parquet"), spark=spark) == 0
+    argv = _bam_pair_argv(root, "pass2.parquet")
+    assert _in_group(sc, "second_pass", lambda: main(argv, spark=spark)) == 0
+    names = _job_names(sc, sc.statusTracker().getJobIdsForGroup("second_pass"))
+    assert names, "the pass ran no jobs"
+    assert not [n for n in names if "ReadWrite.scala" in n], names
+    assert survivors("pass2.parquet") == survivors("pass1.parquet")
+
+
+def test_cli_classify_invalid_mt_input_has_no_survivors(spark, cli_inputs, capsys):
+    """An MT input whose alignments all fail the validity filter gives
+    an empty feature table: scoring it (or skipping the model at
+    ``--prob 0``) gives 0 survivors, raises nothing and leaves no cache."""
+    from pyspark.sql import functions as F
+
+    root = cli_inputs
+    assert (root / "model").is_dir(), "train test must run first"
+    invalid = str(root / "invalid_MT.parquet")
+    spark.read.parquet(str(root / "sample_MT.parquet")).withColumn(
+        "primary_alignment", F.lit(False)
+    ).write.mode("overwrite").parquet(invalid)
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    for prob in ("0.5", "0"):
+        argv = [
+            "classify",
+            "--mt", invalid,
+            "--nt", str(root / "sample_NT.parquet"),
+            "--ld", str(root / "ld.tsv"),
+            "--numt", str(root / "numts.tsv"),
+            "--model", str(root / "model"),
+            "--out", str(root / f"invalid_{prob}.parquet"),
+            "--prob", prob,
+        ]
+        assert main(argv, spark=spark) == 0
+        assert "classify: 0 surviving reads" in capsys.readouterr().out
+        assert cache.isEmpty(), "classify left cached data in the session"
 
 
 def test_cli_classify_bam_out_keeps_input_header(spark, cli_inputs):

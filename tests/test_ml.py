@@ -53,6 +53,128 @@ def test_model_persistence_roundtrip(labeled, model, tmp_path_factory):
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
 
 
+def _predictions(model, df):
+    return sorted(
+        map(tuple, model.transform(df).select("Read", "prediction", "probability").collect())
+    )
+
+
+def test_load_pipeline_model_memo_returns_loaded_model(model, tmp_path):
+    path = str(tmp_path / "rf")
+    model.write().save(path)
+    first = load_pipeline_model(path)
+    assert load_pipeline_model(path) is first
+    assert load_pipeline_model(str(tmp_path / "." / "rf")) is first
+
+
+def test_load_pipeline_model_memo_reloads_an_overwritten_model(
+    labeled, model, tmp_path
+):
+    """Saving another model over the directory changes its stamp: the
+    next call returns that model, not the memoized one."""
+    from pyspark.ml import Pipeline, PipelineModel
+    from pyspark.ml.classification import RandomForestClassifier
+    from pyspark.ml.feature import RFormula
+
+    from mitoscape_spark.pipeline.ml import FORMULA
+
+    path = str(tmp_path / "rf")
+    model.write().save(path)
+    first = load_pipeline_model(path)
+    small = Pipeline(
+        stages=[
+            RFormula(formula=FORMULA, featuresCol="features", labelCol="label"),
+            RandomForestClassifier(numTrees=3, maxDepth=2, seed=3),
+        ]
+    ).fit(labeled)
+    small.write().overwrite().save(path)
+    second = load_pipeline_model(path)
+    assert second is not first
+    assert second.stages[-1].getNumTrees == 3
+    sample = labeled.limit(30)
+    assert _predictions(second, sample) == _predictions(PipelineModel.load(path), sample)
+    assert load_pipeline_model(path) is second
+
+
+def test_load_pipeline_model_missing_path_raises_and_stores_nothing(tmp_path):
+    from mitoscape_spark.pipeline import ml
+
+    before = dict(ml._MODELS)
+    with pytest.raises(Exception, match="no_such_model"):
+        load_pipeline_model(str(tmp_path / "no_such_model"))
+    assert ml._MODELS == before
+
+
+def test_load_pipeline_model_memo_is_per_application(spark, model, tmp_path, monkeypatch):
+    """A new Spark application (a restarted session) loads the model
+    again, and the entries of the application before it are dropped."""
+    from pyspark import SparkContext
+
+    from mitoscape_spark.pipeline import ml
+
+    path = str(tmp_path / "rf")
+    model.write().save(path)
+    first = load_pipeline_model(path)
+    app = spark.sparkContext.applicationId
+    monkeypatch.setattr(SparkContext, "applicationId", property(lambda sc: "other-app"))
+    other = load_pipeline_model(path)
+    assert other is not first
+    assert {a for a, _ in ml._MODELS} == {"other-app"}
+    monkeypatch.undo()
+    again = load_pipeline_model(path)
+    assert again is not first and again is not other
+    assert {a for a, _ in ml._MODELS} == {app}
+
+
+def test_load_pipeline_model_memo_under_concurrent_callers(spark, model, tmp_path):
+    """More threads than the cores this process may use miss on one
+    directory at once: each gets a loaded model, and the memo ends with
+    one entry that later calls return."""
+    import os
+    import sys
+    import threading
+
+    from pyspark import inheritable_thread_target
+
+    from mitoscape_spark.pipeline import ml
+
+    path = str(tmp_path / "rf")
+    model.write().save(path)
+    n = 2 * len(os.sched_getaffinity(0))
+    start = threading.Barrier(n)
+    got, errors = [], []
+
+    def call():
+        start.wait(timeout=60)
+        try:
+            got.append(load_pipeline_model(path))
+        except Exception as e:  # reported by the assertion below
+            errors.append(e)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [
+            threading.Thread(target=inheritable_thread_target(spark)(call))
+            for _ in range(n)
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads), "a load did not finish"
+    assert not errors, errors
+    assert len(got) == n
+    memo = load_pipeline_model(path)
+    assert any(m is memo for m in got)
+    assert [k for k in ml._MODELS if k[1] == os.path.abspath(path)] == [
+        (spark.sparkContext.applicationId, os.path.abspath(path))
+    ]
+    assert load_pipeline_model(path) is memo
+
+
 def test_reference_model_artifact_loads_and_scores(spark, tmp_path):
     """API-parity proof: the reference's persisted Spark 3.0.0 RF
     artifact (src/universal/MTClassifierModel.RF.tar — SURVEY.md §1.1

@@ -17,7 +17,7 @@ from mitoscape_spark.pipeline.classify import build_feature_table, classify
 from mitoscape_spark.pipeline.features import mt_features, nt_features
 from mitoscape_spark.pipeline.ld import normalize_ld, pairwise_ld_score
 from mitoscape_spark.pipeline.normalize import normalize_mapq
-from mitoscape_spark.pipeline.numt import numt_overlap_score
+from mitoscape_spark.pipeline.numt import numt_hits
 
 
 @pytest.fixture(scope="module")
@@ -112,6 +112,17 @@ def test_pairwise_ld_symmetric(spark):
     assert out == {"r1": 70000, "r2": 50000, "r3": 0}
 
 
+def _numt_scores(aln, numts, compat_chrom_sum=False):
+    """Each alignment with its ``numt_hits`` scores summed (0 if none)."""
+    aln = aln.withColumn("_aln", F.monotonically_increasing_id())
+    sums = (
+        numt_hits(aln, numts, compat_chrom_sum)
+        .groupBy("_aln")
+        .agg(F.sum("numt_score").alias("numt_score"))
+    )
+    return aln.join(sums, "_aln", "left").fillna(0.0, ["numt_score"])
+
+
 def test_numt_interval_vs_compat(spark):
     aln = spark.createDataFrame(
         [("1", 1000, "r1"), ("1", 500_000, "r2"), ("2", 1000, "r3")],
@@ -123,14 +134,14 @@ def test_numt_interval_vs_compat(spark):
     )
     intended = {
         r.read_name: r.numt_score
-        for r in numt_overlap_score(aln, numts).collect()
+        for r in _numt_scores(aln, numts).collect()
     }
     assert intended["r1"] == pytest.approx(0.5)
     assert intended["r2"] == pytest.approx(0.25)
     assert intended["r3"] == 0.0
     compat = {
         r.read_name: r.numt_score
-        for r in numt_overlap_score(aln, numts, compat_chrom_sum=True).collect()
+        for r in _numt_scores(aln, numts, compat_chrom_sum=True).collect()
     }
     # as-written reference: whole-chromosome sum regardless of position
     assert compat["r1"] == pytest.approx(0.75)
@@ -154,7 +165,7 @@ def test_numt_score_counts_each_alignment_once(spark):
         (row,) = nt_features(aln, numts, compat_chrom_sum=compat).collect()
         assert row.NUMTOverlaps == pytest.approx(1.0)
         assert (row.NTMapQ, row.NTNumAlignments, row.NTScore) == (120, 2, 80)
-        per_alignment = numt_overlap_score(aln, numts, compat_chrom_sum=compat)
+        per_alignment = _numt_scores(aln, numts, compat_chrom_sum=compat)
         assert [r.numt_score for r in per_alignment.collect()] == [0.5, 0.5]
 
 
