@@ -57,7 +57,6 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import sys
 import time
 
@@ -106,9 +105,11 @@ def duckdb_control_seconds(sf_dir: str, rounds: int = 3) -> float:
 
 
 def main() -> int:
+    from mitoscape_spark.queries.relational import QUERIES
+    from mitoscape_spark.session import bench_session, scale_factor
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1)) if m else -1.0
+    sf = scale_factor(sf_dir)
 
     # ---- quiet-window gate (round-9 verdict item 3): the r7/r8 load
     # stamps showed a shared box swings the figures 2-3x between quiet
@@ -143,81 +144,10 @@ def main() -> int:
 
     # bench gate = the oracle-checked headline set (BASELINE.md measures
     # DuckDB on Q01–Q15); domain/extension ops are correctness-gated via
-    # the driver's queries() run instead.
-    from mitoscape_spark.catalog import load_table, register_layout_override
-    from mitoscape_spark.queries.relational import QUERIES
-    from mitoscape_spark.session import get_spark
-    from mitoscape_spark.sources.bucketed import write_bucketed
-
-    # workload-sized shuffles: tiny scale factors don't need one
-    # partition per core (env override wins; clusters set their own)
-    os.environ.setdefault(
-        "SPARK_GRAFT_SHUFFLE_PARTITIONS", "8" if sf <= 0.5 else "32"
-    )
-    # AQE sized to the workload like the shuffle partitions above: its
-    # runtime re-planning costs a fixed per-stage materialization that
-    # only pays off when there is something to adapt (skew, mis-sized
-    # partitions). At bench SFs partitions are pre-sized and skew-free,
-    # so adaptive is off here (measured ~20% of wall-clock, PERF.md);
-    # the session default everywhere else stays ON — at 100 TB it is
-    # the skew-join and broadcast-conversion safety net.
-    aqe = os.environ.get("SPARK_GRAFT_AQE", "false" if sf <= 0.5 else "true")
-    # scan-split sizing: bench inputs are single ~1–10 MB parquet files;
-    # the default 128 MB split (plus 4 MB file-open padding) serializes
-    # each scan onto ~3 cores. 2 MB splits spread the scan+partial-agg
-    # over the machine; clusters reading 128 MB-row-group files keep the
-    # default (env override wins).
-    mpb = os.environ.get(
-        "SPARK_GRAFT_MAX_PARTITION_BYTES", "2m" if sf <= 0.5 else "128m"
-    )
-    # serial-floor shave attempt (round-6 verdict item 4) — measured,
-    # kept OFF. The 2-job queries' extra ~26 ms broadcast-job launch is
-    # irreducible in this Spark build: even a driver-local dim relation
-    # still broadcast-materializes through a parallelize+collect job
-    # (LocalTableScanExec does not override executeCollectIterator —
-    # tools/local_dim_probe.py, PERF.md §19). Disabling implicit
-    # broadcasts (threshold -1) merges q03/q04 into one job and wins in
-    # ISOLATED single-query runs (q03 0.252→0.200, q04 0.160→0.120)
-    # but loses in the full bench mix in BOTH A/B orders (q03
-    # 0.31→0.49 concurrent; serial 3.08→4.05): the extra shuffle
-    # stage's barrier costs the mix more than the small overlappable
-    # broadcast job. Knob stays for re-measurement on other hardware.
-    auto_bcast = os.environ.get("SPARK_GRAFT_AUTO_BROADCAST", "10485760")
-    spark = get_spark(
-        "bench",
-        extra_conf={
-            "spark.sql.adaptive.enabled": aqe,
-            "spark.sql.files.maxPartitionBytes": mpb,
-            "spark.sql.autoBroadcastJoinThreshold": auto_bcast,
-            # the adaptive threshold must track the static one: with AQE
-            # on, a runtime re-plan converts sort-merge joins back to
-            # broadcast using THIS knob, so a hardcoded value would
-            # silently defeat SPARK_GRAFT_AUTO_BROADCAST=-1 in exactly
-            # the re-measurement scenario the knob exists for (round-7
-            # advice item 2)
-            "spark.sql.adaptive.autoBroadcastJoinThreshold": auto_bcast,
-            # independent queries share the cluster fairly; pools are
-            # created on demand per query thread
-            "spark.scheduler.mode": "FAIR",
-            # fixed-size local cluster: tasks can't gain locality by
-            # waiting, so don't let the delay scheduler hold them
-            "spark.locality.wait": "0",
-        },
-    )
-
-    # ---- ingest layout (untimed, once): bucketed fact table ----------
-    # 8 buckets ≡ the workload-sized shuffle-partition count; a real
-    # deployment picks buckets ≈ cluster write parallelism at ingest.
-    use_bucketed = os.environ.get("SPARK_GRAFT_BUCKETED", "1") != "0"
-    if use_bucketed:
-        try:
-            li = load_table(spark, sf_dir, "lineitem")
-            write_bucketed(li, "bench_lineitem", "l_orderkey", n_buckets=8)
-            register_layout_override(
-                spark, sf_dir, "lineitem", "bench_lineitem"
-            )
-        except Exception as exc:  # noqa: BLE001
-            print(f"bench: bucketed layout skipped: {exc}", file=sys.stderr)
+    # the driver's queries() run instead. The session is sized to the
+    # workload and serves lineitem bucketed (session.bench_session has
+    # the measured rationale for each value).
+    spark = bench_session(sf_dir, "bench")
 
     n_inflight = int(os.environ.get("SPARK_GRAFT_BENCH_CONCURRENCY", "6"))
 

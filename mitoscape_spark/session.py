@@ -18,6 +18,8 @@ cluster topology.
 from __future__ import annotations
 
 import os
+import re
+import sys
 
 from pyspark.sql import SparkSession
 
@@ -99,6 +101,80 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def scale_factor(sf_dir: str) -> float:
+    """The scale factor a corpus directory is named for (``.../sf0.1``
+    → 0.1), or -1.0 when its name carries none."""
+    m = re.search(r"sf([0-9.]+)", sf_dir)
+    return float(m.group(1)) if m else -1.0
+
+
+def bench_session(sf_dir: str, app_name: str) -> SparkSession:
+    """The session bench.py times the declared queries in, sized to the
+    corpus at ``sf_dir``, with lineitem served bucketed (see
+    :func:`bucket_lineitem`). Every value has an env override; a cluster
+    submitter sets its own.
+
+    * Shuffle partitions: 8 at bench scale factors (≤ 0.5), else 32 —
+      at a few hundred MB a partition of a few MB is enough.
+    * AQE off at bench scale factors: its per-stage re-plan costs a fixed
+      materialization that only pays off when there is something to
+      adapt, and bench partitions are pre-sized and skew-free (measured
+      ~20% of wall-clock, PERF.md). Elsewhere it stays on as the
+      skew-join and broadcast-conversion safety net.
+    * 2 MB scan splits at bench scale factors: the inputs are single
+      1–10 MB parquet files, and the default 128 MB split serializes each
+      scan onto ~3 cores.
+    * Broadcast threshold 10 MB, the same for AQE's runtime re-plan, so
+      SPARK_GRAFT_AUTO_BROADCAST=-1 really disables implicit broadcasts.
+      Disabling them was measured (PERF.md §19): it merges q03/q04 into
+      one job and wins in isolated runs, but loses in the full bench mix
+      in both A/B orders, because the extra shuffle stage's barrier
+      costs more than the small overlappable broadcast job.
+    * FAIR scheduling: independent queries share the cores fairly, pools
+      are created on demand per query thread.
+    * No locality wait: a fixed-size local cluster cannot gain locality
+      by waiting.
+    """
+    sf = scale_factor(sf_dir)
+    os.environ.setdefault("SPARK_GRAFT_SHUFFLE_PARTITIONS", "8" if sf <= 0.5 else "32")
+    aqe = os.environ.get("SPARK_GRAFT_AQE", "false" if sf <= 0.5 else "true")
+    mpb = os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "2m" if sf <= 0.5 else "128m")
+    auto_bcast = os.environ.get("SPARK_GRAFT_AUTO_BROADCAST", "10485760")
+    spark = get_spark(
+        app_name,
+        extra_conf={
+            "spark.sql.adaptive.enabled": aqe,
+            "spark.sql.files.maxPartitionBytes": mpb,
+            "spark.sql.autoBroadcastJoinThreshold": auto_bcast,
+            "spark.sql.adaptive.autoBroadcastJoinThreshold": auto_bcast,
+            "spark.scheduler.mode": "FAIR",
+            "spark.locality.wait": "0",
+        },
+    )
+    bucket_lineitem(spark, sf_dir, app_name)
+    return spark
+
+
+def bucket_lineitem(spark: SparkSession, sf_dir: str, app_name: str) -> None:
+    """Rewrite ``sf_dir``'s lineitem once (untimed, like any ingest) as a
+    table bucketed and sorted on ``l_orderkey`` and serve it to every
+    query through a catalog layout override: the per-key aggregations
+    (q05/q06/q10) then plan no exchange. 8 buckets match the
+    workload-sized shuffle partitions. SPARK_GRAFT_BUCKETED=0 disables
+    it; a failure is reported on stderr and the queries read parquet."""
+    if os.environ.get("SPARK_GRAFT_BUCKETED", "1") == "0":
+        return
+    from mitoscape_spark.catalog import load_table, register_layout_override
+    from mitoscape_spark.sources.bucketed import write_bucketed
+
+    try:
+        li = load_table(spark, sf_dir, "lineitem")
+        write_bucketed(li, "bench_lineitem", "l_orderkey", n_buckets=8)
+        register_layout_override(spark, sf_dir, "lineitem", "bench_lineitem")
+    except Exception as exc:  # noqa: BLE001
+        print(f"{app_name}: bucketed layout skipped: {exc}", file=sys.stderr)
 
 
 def stop_spark() -> None:

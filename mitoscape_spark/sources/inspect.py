@@ -6,9 +6,7 @@ min/max statistics written into parquet footers — this operator reads
 JUST the footers (no row groups decoded) across the whole table, one
 task per file, and returns them as a DataFrame you can aggregate:
 "what fraction of row groups would a predicate on col X prune" becomes
-a query, not a guess. tools/layout_bench.py does this measurement for
-one column pair; this generalizes it to any table/column as an engine
-surface.
+a query, not a guess, for any table and column.
 
 Scale: footer reads are O(KB) per file regardless of file size; the
 file list is distributed via mapInPandas, so a million-file table

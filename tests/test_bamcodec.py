@@ -113,6 +113,7 @@ def test_spark_bam_scan_end_to_end(spark, tmp_path):
         index_record_voffsets,
         write_bam,
     )
+    from mitoscape_spark.trace import trace
 
     paths = []
     for f, n in enumerate((300, 300, 100)):
@@ -122,14 +123,9 @@ def test_spark_bam_scan_end_to_end(spark, tmp_path):
         paths.append(p)
     # planning is one Spark job (no shuffle), splits in input-file order
     # with exactly the record-boundary bounds of the index pass
-    sc = spark.sparkContext
-    sc.setJobGroup("plan_bam_splits_probe", "plan_bam_splits_probe")
-    try:
+    with trace(spark, "plan_bam_splits_probe") as rec:
         splits = plan_bam_splits(spark, paths, records_per_split=100)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    jobs = sc.statusTracker().getJobIdsForGroup("plan_bam_splits_probe")
-    assert len(jobs) == 1, f"expected one job, saw {len(jobs)}"
+    assert len(rec.job_ids) == 1, f"expected one job, saw {len(rec.job_ids)}"
     expected = []
     for p in paths:
         checkpoints, end = index_record_voffsets(p, every_n=100)

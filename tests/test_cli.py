@@ -12,6 +12,7 @@ import pytest
 from mitoscape_spark.cli import load_numts, main
 from mitoscape_spark.pipeline import fixtures
 from mitoscape_spark.sources.bam import ALIGNMENT_SCHEMA, write_alignments_bam
+from mitoscape_spark.trace import trace
 
 ALIGNMENT_COLUMNS = [f.name for f in ALIGNMENT_SCHEMA.fields]
 
@@ -180,23 +181,26 @@ def test_cli_classify_failed_pass_releases_its_pins(spark, cli_inputs):
     assert cache.isEmpty(), "a failed classify left cached data in the session"
 
 
-def _in_group(sc, group, fn):
-    sc.setJobGroup(group, group)
-    try:
-        return fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
+@pytest.fixture
+def model_loads(monkeypatch):
+    """Model directories ``PipelineModel.load`` is called on through
+    ``mitoscape_spark.pipeline.ml`` (a pass-through that records them)."""
+    from mitoscape_spark.pipeline import ml
+
+    calls: list[str] = []
+    real = ml.PipelineModel
+
+    class Counted(real):
+        @classmethod
+        def load(cls, path):
+            calls.append(str(path))
+            return real.load(path)
+
+    monkeypatch.setattr(ml, "PipelineModel", Counted)
+    return calls
 
 
-def _job_names(sc, job_ids) -> list[str]:
-    """Call-site names ("first at ReadWrite.scala:1058") of finished jobs."""
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    store = sc._jsc.sc().statusStore()
-    return [store.job(j).name() for j in sorted(job_ids)]
-
-
-def test_cli_classify_jobs_keep_callers_job_group(spark, cli_inputs, tmp_path):
+def test_cli_classify_jobs_keep_callers_job_group(spark, cli_inputs, tmp_path, model_loads):
     """Every job a classify pass submits, from the worker threads that
     load the model and plan the NT splits too, carries the caller's job
     group, so cancelling or attributing work by group reaches all of it.
@@ -206,44 +210,41 @@ def test_cli_classify_jobs_keep_callers_job_group(spark, cli_inputs, tmp_path):
     root = cli_inputs
     assert (root / "model").is_dir(), "train test must run first"
     model = shutil.copytree(root / "model", tmp_path / "model")
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
 
     def marker_job_id():
-        _in_group(sc, "job_id_marker", lambda: sc.parallelize([0], 1).count())
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        return max(tracker.getJobIdsForGroup("job_id_marker"))
+        with trace(spark, "job_id_marker") as rec:
+            spark.sparkContext.parallelize([0], 1).count()
+        return max(rec.job_ids)
 
     first = marker_job_id()
     argv = _bam_pair_argv(root, "grouped.parquet", model)
-    assert _in_group(sc, "g", lambda: main(argv, spark=spark)) == 0
+    with trace(spark, "g") as rec:
+        assert main(argv, spark=spark) == 0
     last = marker_job_id()
     during = set(range(first + 1, last))
     assert during, "the pass ran no jobs"
-    assert any("ReadWrite.scala" in n for n in _job_names(sc, during)), (
-        "the pass did not load the model"
-    )
-    orphaned = during - set(tracker.getJobIdsForGroup("g"))
+    assert len(model_loads) >= 1, "the pass did not load the model"
+    orphaned = during - set(rec.job_ids)
     assert not orphaned, f"jobs outside the caller's job group: {sorted(orphaned)}"
 
 
-def test_cli_classify_second_pass_reuses_loaded_model(spark, cli_inputs):
+def test_cli_classify_second_pass_reuses_loaded_model(spark, cli_inputs, model_loads):
     """A second pass on one session scores with the model the first pass
-    loaded: it runs no model-load job and keeps the same survivors."""
+    loaded: it loads no model and keeps the same survivors."""
     root = cli_inputs
     assert (root / "model").is_dir(), "train test must run first"
-    sc = spark.sparkContext
 
     def survivors(out):
         df = spark.read.parquet(str(root / out))
         return {r.read_name for r in df.select("read_name").collect()}
 
     assert main(_bam_pair_argv(root, "pass1.parquet"), spark=spark) == 0
+    model_loads.clear()
     argv = _bam_pair_argv(root, "pass2.parquet")
-    assert _in_group(sc, "second_pass", lambda: main(argv, spark=spark)) == 0
-    names = _job_names(sc, sc.statusTracker().getJobIdsForGroup("second_pass"))
-    assert names, "the pass ran no jobs"
-    assert not [n for n in names if "ReadWrite.scala" in n], names
+    with trace(spark, "second_pass") as rec:
+        assert main(argv, spark=spark) == 0
+    assert rec.job_ids, "the pass ran no jobs"
+    assert model_loads == [], model_loads
     assert survivors("pass2.parquet") == survivors("pass1.parquet")
 
 

@@ -291,22 +291,20 @@ def test_collect_stage_counts_orders_and_single_action(spark):
     from pyspark.sql import functions as F
 
     from mitoscape_spark.operators.funnel import _collect_stage_counts
+    from mitoscape_spark.trace import trace
 
     aggs = [
         spark.range(n).select(F.count(F.lit(1)).alias("n"))
         for n in (5, 0, 3, 7)
     ]
-    sc = spark.sparkContext
     # one-job property holds under the bench session shape (AQE off at
     # bench SFs); with AQE on each union branch re-plans as its own job
     prev = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        sc.setJobGroup("stage_counts_probe", "stage_counts_probe")
-        got = _collect_stage_counts(aggs)
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        jobs = sc.statusTracker().getJobIdsForGroup("stage_counts_probe")
+        with trace(spark, "stage_counts_probe") as rec:
+            got = _collect_stage_counts(aggs)
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", prev)
     assert got == [5, 0, 3, 7]
-    assert len(jobs) == 1, f"expected one job, saw {len(jobs)}"
+    assert len(rec.job_ids) == 1, f"expected one job, saw {len(rec.job_ids)}"
